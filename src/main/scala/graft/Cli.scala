@@ -19,19 +19,21 @@ import graft.sync.{HighlightStore, Sync}
   *   graft.Cli sync --backfill --pages-dir D --store S --ckpt C [--pooled [--chunk-words N]]
   *   graft.Cli sync --since 2024-01-01T00:00:00Z --pages-dir D --store S --ckpt C
   *   graft.Cli refresh --pages-dir D --store S --ckpt C [--lex-index L]
-  *     [--ivf-index I] [--hnsw-index H] [--graph-index G[,G2,...]
+  *     [--ivf-index I] [--graph-index G[,G2,...]
   *      [--graph-entry-ivf I[,I2,...]]]
-  *   graft.Cli index --store S --out D [--type ivf|graph|hnsw|lexical]
+  *   graft.Cli index --store S --out D
+  *     [--type ivf|ivfpq|graph|graph-codes|lexical]
   *     [--cells 64] [--fp16 true] [--attrs c1,c2] [--graph-k 5] [--buckets N]
   *     [--shards N|auto]   (graph: one-call sharded gateway + MANIFEST)
   *   graft.Cli export --store S --out D [--shard-tokens 2048]
   *   graft.Cli curate --docs D.parquet --out O [--quality 0.6] [--lm-threshold -6.0]
   *     [--lm-store L] [--mix-alpha A --mix-frac F] [--shard-tokens 2048] [--report-only]
   *   graft.Cli search "query text" --k 5 --store S [--source-type T] [--hybrid true] [--mmr 0.3]
-  *   graft.Cli serve --store S [--ivf-index I | --pq-index P [--pq-refine 8]
-  *     | --graph-index G[,G2,...] [--graph-entry-ivf I[,I2,...]] [--graph-resident]
-  *     | --hnsw-index H]
-  *     [--graph-ef 20] [--graph-hops 3] [--nprobe 4]
+  *   graft.Cli serve --store S [--ivf-index I | --pq-index P [--pq-refine 64]
+  *     | --graph-index G[,G2,...] [--graph-entry-ivf I[,I2,...]] [--graph-ef 20]]
+  *     [--nprobe 4]
+  *     (--graph-index always serves the resident code walk: one dir with
+  *      its code sidecar, a comma-separated shard list, or a MANIFEST root)
   *   graft.Cli health
   */
 object Cli {
@@ -77,6 +79,99 @@ object Cli {
       .filter(_ != dim)
       .map(d => s"store embeddings are $d-dim but the configured embedder " +
         s"is $dim-dim; pass --embed-dim $d (or GRAFT_EMBEDDER_DIM=$d)")
+
+  /** The dense index `serve` routes requests through, behind a
+    * generation-checked handle that follows rebuilds and refreshes, or
+    * None for the store scan. Left = the exit code of a start-up
+    * refusal, already explained on stderr. Three modes:
+    *  - `--ivf-index`: the fp16 IVF probe, one pruned job a request;
+    *    filtered requests stay on the index when its cells carry the
+    *    referenced attr columns, else fall back to the store scan;
+    *  - `--pq-index`: IVFADC codes + exact fp16 refine, cosine-scored
+    *    (the default-mode promotion of SCALE.md §r11);
+    *  - `--graph-index`: the resident code walk — topology and codes
+    *    held in memory, one exact re-rank job a request (SCALE.md §r13).
+    *    One dir serves through [[graft.similarity.Knn.ResidentGraphIndex]];
+    *    a comma-separated shard list, or a root carrying a sharded
+    *    gateway MANIFEST (`index --type graph --shards N`), through the
+    *    fan-and-merge [[graft.similarity.Knn.ShardedResidentIndex]].
+    *    `--graph-entry-ivf` pairs with the listed dirs positionally. */
+  private[graft] def denseIndex(spark: SparkSession, cfg: GraftConfig)
+      : Either[Int, Option[() => graft.similarity.Knn.DenseIndex]] = {
+    import graft.similarity.Knn
+    def refuse(code: Int, msg: String) = { System.err.println(msg); Left(code) }
+    def split(csv: String) = csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+    // graph node ids are the store's numeric string ids cast long at
+    // build; idOf maps winners back so rehydration joins on the store's
+    // own key type
+    val idOf = (id: Long) => id.toString
+    (cfg.graphIndexDir, cfg.pqIndexDir, cfg.ivfIndexDir) match {
+      case (Some(g), _, _) =>
+        val manifest =
+          if (g.contains(',')) None
+          else Knn.ShardedResidentIndex.loadManifest(spark, g)
+        val dirs = manifest.fold(split(g))(_.map(_._1))
+        val entries: Seq[Option[String]] = manifest.map(_.map(_._2))
+          .getOrElse(cfg.graphEntryIvfDir.fold(
+            Seq.fill(dirs.length)(Option.empty[String]))(
+            split(_).map(Some(_))))
+        if (entries.length != dirs.length)
+          return refuse(2, s"--graph-entry-ivf lists ${entries.length} " +
+            s"IVF dirs for ${dirs.length} graph dirs — entry IVFs pair " +
+            "with --graph-index positionally")
+        dirs.zip(entries).foreach { case (d, e) =>
+          if (!Knn.graphIndexReady(d))
+            return refuse(1, s"no adjacency index at $d (build one with " +
+              "`graft.Cli index --type graph` or drop --graph-index)")
+          if (!Knn.graphCodesReady(d))
+            return refuse(1, s"no pq-code sidecar at $d/pqcodes for " +
+              "--graph-index (build with `graft.Cli index --type graph " +
+              "--codes true`, or `--type graph-codes` over the existing " +
+              "layout)")
+          e.filterNot(Knn.ivfIndexReady).foreach { ivf =>
+            return refuse(1, s"no IVF index at $ivf for --graph-entry-ivf " +
+              "(build one with `graft.Cli index` or drop the flag)")
+          }
+        }
+        if (dirs.length == 1) {
+          val h = Knn.ResidentGraphIndex.reloading(spark, dirs.head,
+            entries.head, cfg.graphEf, idOf = idOf)
+          Right(Some(() => h.get))
+        } else {
+          val h = Knn.ShardedResidentIndex.reloading(spark,
+            dirs.zip(entries), cfg.graphEf, idOf = idOf)
+          Right(Some(() => h.get))
+        }
+      case (_, Some(d), _) =>
+        if (!Knn.ivfPqIndexReady(d))
+          return refuse(1, s"no IVFADC index at $d (build one with " +
+            "Knn.ivfPqBuildIndex(refine=true) or drop --pq-index)")
+        val h = Knn.IvfPqIndex.reloading(spark, d)
+        if (!h.get.hasRefine)
+          return refuse(1, s"IVFADC index at $d has no refine payload — " +
+            "rebuild with ivfPqBuildIndex(refine=true)")
+        // hasRefine is RE-CHECKED per request, not just here: the
+        // reloading handle follows rebuilds, and a later generation
+        // committed without the refine payload must become a
+        // descriptive serving error (surfaced as an SSE/JSON-RPC error
+        // frame), not asDense's bare require failure
+        Right(Some(() => {
+          val idx = h.get
+          if (!idx.hasRefine) throw new IllegalStateException(
+            s"IVFADC index at $d was rebuilt without its refine payload; " +
+            "rebuild with ivfPqBuildIndex(refine=true) or restart serve " +
+            "without --pq-index")
+          idx.asDense(cfg.pqRefine)
+        }))
+      case (_, _, Some(d)) =>
+        if (!Knn.ivfIndexReady(d))
+          return refuse(1, s"no IVF index at $d " +
+            "(build one with Knn.ivfBuildIndex or drop --ivf-index)")
+        val h = Knn.IvfIndex.reloading(spark, d)
+        Right(Some(() => h.get))
+      case _ => Right(None)
+    }
+  }
 
   def run(args: Array[String], spark: SparkSession,
       env: Map[String, String] = sys.env): Int = args.toSeq match {
@@ -149,8 +244,7 @@ object Cli {
     case "refresh" +: rest =>
       val f = flags(rest)
       val resolved = GraftConfig.resolve(
-        f -- Seq("lex-index", "ivf-index", "hnsw-index", "graph-index",
-          "graph-entry-ivf"),
+        f -- Seq("lex-index", "ivf-index", "graph-index", "graph-entry-ivf"),
         env, GraftConfig.Command.Sync,
         pooledFlag = rest.contains("--pooled"))
       resolved match {
@@ -163,8 +257,8 @@ object Cli {
           } else {
             // --graph-index a,b,... (shard order!) routes the delta by
             // the build's pmod rule and refreshes each touched shard —
-            // the maintenance half of `serve --graph-index a,b
-            // --graph-resident`. --graph-entry-ivf pairs positionally
+            // the maintenance half of `serve --graph-index a,b`.
+            // --graph-entry-ivf pairs positionally
             // (each shard's entry IVF follows its shard's slice).
             val graphArg = f.get("graph-index").toSeq
               .flatMap(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
@@ -195,7 +289,6 @@ object Cli {
               cfg.storeDir, cfg.checkpointDir.get,
               lexIndexDir = f.get("lex-index"),
               ivfIndexDir = f.get("ivf-index"),
-              hnswIndexDir = f.get("hnsw-index"),
               graphIndexDir = graphDirs match {
                 case Seq(one) if entryIvfs.isEmpty && manifest.isEmpty =>
                   Some(one)
@@ -271,7 +364,8 @@ object Cli {
     // store columns into the cells so `serve --ivf-index` can keep
     // FILTERED queries on the probe (q132's contract); --fp16 halves
     // the at-rest cells.
-    //   graft.Cli index --store S --out D [--type ivf|graph|hnsw|lexical]
+    //   graft.Cli index --store S --out D
+    //     [--type ivf|ivfpq|graph|graph-codes|lexical]
     //     ivf:     [--cells 64] [--iters 2] [--train-every 5] [--fp16 true]
     //              [--attrs col1,col2,…]
     //     ivfpq:   [--cells 64] [--iters 2] [--train-every 5] [--pq-m 8]
@@ -280,32 +374,31 @@ object Cli {
     //               --pq-index` requires; --opq-sweeps > 0 learns the
     //               OPQ rotation and builds in rotated space)
     //     graph:   [--graph-k 5] [--cells 64] [--nprobe 2] [--buckets 64]
-    //              [--fp16 true]   (flat beam-walk serving: --graph-index)
+    //              [--fp16 true]
     //              [--shards N|auto [--codec pq|int8] [--attrs c1,c2]]
     //                (pmod-split sharded gateway: per-shard adjacency +
     //                 codes + entry IVF under one root MANIFEST that
-    //                 `serve --graph-index <root> --graph-resident` and
+    //                 `serve --graph-index <root>` and
     //                 `refresh --graph-index <root>` consume)
     //              [--codes true [--codec pq|int8] [--pq-m 64]
-    //               [--pq-ksub 256]] (+code sidecar: --graph-resident)
+    //               [--pq-ksub 256]] (+the code sidecar `serve
+    //                 --graph-index` needs)
     //     graph-codes: [--codec pq|int8] [--pq-m 64] [--pq-ksub 256]
     //                    (sidecar-only rebuild over an existing layout)
-    //     hnsw:    [--graph-k 5] [--levels 2] [--upper-m 3] [--cells 64]
-    //              [--nprobe 2] [--buckets 16] [--fp16 true]
     //     lexical: [--buckets 64]
     case "index" +: rest =>
       val f = flags(rest)
       (f.get("store"), f.get("out")) match {
         case (Some(storeDir), Some(out)) =>
           val typ = f.getOrElse("type", "ivf")
-          if (!Seq("ivf", "ivfpq", "graph", "graph-codes", "hnsw", "lexical")
+          if (!Seq("ivf", "ivfpq", "graph", "graph-codes", "lexical")
               .contains(typ)) {
             System.err.println(s"--type must be ivf, ivfpq, graph, " +
-              s"graph-codes, hnsw or lexical, got '$typ'")
+              s"graph-codes or lexical, got '$typ'")
             return 2
           }
           val badInts = Seq("cells", "iters", "train-every", "graph-k",
-              "nprobe", "buckets", "levels", "upper-m", "pq-m", "pq-ksub")
+              "nprobe", "buckets", "pq-m", "pq-ksub")
             .flatMap(k => f.get(k).filter(_.toIntOption.forall(_ <= 0))
               .map(v => s"--$k must be a positive integer, got '$v'"))
           if (badInts.nonEmpty) { badInts.foreach(System.err.println); return 2 }
@@ -411,8 +504,7 @@ object Cli {
                   // (the ResidentGraphIndex.load refusal points here) —
                   // pmod-split shards, each with adjacency + code
                   // sidecar + entry IVF, plus the root MANIFEST that
-                  // `serve --graph-index <root> --graph-resident`
-                  // consumes. `auto` sizes the shard count from the
+                  // `serve --graph-index <root>` consumes. `auto` sizes the shard count from the
                   // live corpus against the resident budget.
                   f.get("shards").foreach { sv =>
                     val live = df.filter(col("embedding").isNotNull).count()
@@ -484,7 +576,7 @@ object Cli {
                     "embedding", "id", out, buckets = gbuckets,
                     fp16 = fp16)
                   // --codes true: also build the pq-code sidecar that
-                  // `serve --graph-resident` needs (one narrow pass;
+                  // `serve --graph-index` needs (one narrow pass;
                   // rebuild after refresh/append — the resident load
                   // refuses a sidecar that no longer covers the live set)
                   val codes = f.get("codes").contains("true")
@@ -542,32 +634,6 @@ object Cli {
                   println(Json.write(Map("indexed" -> out,
                     "type" -> "graph-codes", "codec" -> codecV,
                     "pq_m" -> pm, "pq_ksub" -> intOf("pq-ksub", 256))))
-                  0
-                case "hnsw" =>
-                  if (!numericIdsOk()) return 2
-                  val gk = intOf("graph-k", 5)
-                  val nprobe = intOf("nprobe", 2)
-                  val corpus = df.filter(col("embedding").isNotNull)
-                    .select(col("id").cast("long").as("id"), col("embedding"))
-                  // per-layer celled construction: upper layers are
-                  // geometrically small, so cells clamp per layer (a
-                  // 3-node top layer trains 1 cell = the exact graph)
-                  val graphFn = (sub: org.apache.spark.sql.DataFrame,
-                      m: Int) => {
-                    val ln = sub.count()
-                    val c = math.max(1, math.min(cells, (ln / 4).toInt))
-                    graft.similarity.Knn.cellKnnGraph(sub, "embedding",
-                      "id", topK = m, cells = c,
-                      iters = intOf("iters", 2),
-                      nprobe = math.min(nprobe, c))
-                  }
-                  graft.similarity.Knn.buildHnswIndex(corpus, "embedding",
-                    "id", out, maxLevel = intOf("levels", 2),
-                    upperM = intOf("upper-m", 3), k0 = gk,
-                    buckets = intOf("buckets", 16), fp16 = fp16,
-                    graphFn = Some(graphFn))
-                  println(Json.write(Map("indexed" -> out, "type" -> "hnsw",
-                    "graph_k" -> gk, "levels" -> intOf("levels", 2))))
                   0
                 case "lexical" =>
                   graft.text.TextRank.buildLexicalIndex(df, "text", "id",
@@ -722,8 +788,7 @@ object Cli {
 
     case "serve" +: rest =>
       val f = flags(rest)
-      val cfg = GraftConfig.resolve(f, env, GraftConfig.Command.Serve,
-        graphResidentFlag = rest.contains("--graph-resident")) match {
+      val cfg = GraftConfig.resolve(f, env, GraftConfig.Command.Serve) match {
         case Left(errs) => errs.foreach(System.err.println); return 2
         case Right(c)   => c
       }
@@ -734,202 +799,14 @@ object Cli {
           dimMismatch(df, cfg.embedder.dim).foreach { msg =>
             System.err.println(msg); return 2
           }
+          val denseOpt = denseIndex(spark, cfg) match {
+            case Left(code) => return code
+            case Right(d)   => d
+          }
           // the reloading warm handle pins the AT-REST relation (encoded
           // bytes for an fp16 store) per resolved version — request plans
           // hit the cache as a subplan — and follows sync/refresh commits
-          // live, releasing the superseded version's cache on swap.
-          // --ivf-index serves queries through the IVF probe (also
-          // generation-checked) with store rehydration of the k winners;
-          // filtered requests stay on the index when its cells carry the
-          // referenced attr columns (ivfBuildIndex attrCols, with
-          // adaptive probe widening), else they fall back to the store
-          // scan
-          // --pq-index is the compressed dense path (IVFADC codes +
-          // exact fp16 refine, cosine-scored — the r11 default-mode
-          // promotion): same gateway contract, ~192× less probe I/O,
-          // two pruned jobs per request instead of one
-          // --graph-index is the graph-ANN serving mode (the flat beam
-          // walk that PASSED the 20-user gate — 388 ms p95 fixed-entry,
-          // 356 ms with --graph-entry-ivf's zero-job query-near entries;
-          // SCALE.md §r12): same gateway contract, 1 + hops bucket-
-          // pruned point reads per request. Filtered requests fall back
-          // to the store scan (a walk reads edge rows, not attr cells).
-          // --graph-index accepts a COMMA-SEPARATED shard list under
-          // --graph-resident: one adjacency+sidecar per shard, served
-          // through the fan-and-merge ShardedResidentIndex (the path a
-          // corpus past the per-replica residency budget takes —
-          // Knn.ShardedResidentIndex's scaladoc). --graph-entry-ivf
-          // then pairs positionally (entries are node ids, which only
-          // resolve in their own shard).
-          val denseOpt: Option[() => graft.similarity.Knn.DenseIndex] =
-            cfg.graphIndexDir match {
-              // a single dir that carries a sharded-gateway MANIFEST
-              // (`index --type graph --shards N`) expands to its shard
-              // list — the one-flag serving form
-              case Some(root) if !root.contains(',') &&
-                  graft.similarity.Knn.ShardedResidentIndex
-                    .loadManifest(spark, root).isDefined =>
-                if (!cfg.graphResident) {
-                  System.err.println("a sharded gateway root (MANIFEST " +
-                    s"at $root) needs --graph-resident")
-                  return 2
-                }
-                val dirs = graft.similarity.Knn.ShardedResidentIndex
-                  .loadManifest(spark, root).get
-                dirs.foreach { case (s0, e) =>
-                  if (!graft.similarity.Knn.graphIndexReady(s0) ||
-                      !graft.similarity.Knn.graphCodesReady(s0)) {
-                    System.err.println(s"manifest shard $s0 is missing " +
-                      "its adjacency index or pq-code sidecar (rebuild " +
-                      "with `graft.Cli index --type graph --shards N`)")
-                    return 1
-                  }
-                  e.foreach { ivf =>
-                    if (!graft.similarity.Knn.ivfIndexReady(ivf)) {
-                      System.err.println(s"manifest shard $s0 names a " +
-                        s"missing entry IVF at $ivf")
-                      return 1
-                    }
-                  }
-                }
-                val h = graft.similarity.Knn.ShardedResidentIndex.reloading(
-                  spark, dirs, cfg.graphEf,
-                  idOf = (id: Long) => id.toString)
-                Some(() => h.get)
-              case Some(dd) if dd.contains(',') =>
-                val shards = dd.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-                if (!cfg.graphResident) {
-                  System.err.println("a sharded --graph-index list needs " +
-                    "--graph-resident (the job-walk mode serves one layout)")
-                  return 2
-                }
-                shards.foreach { s0 =>
-                  if (!graft.similarity.Knn.graphIndexReady(s0) ||
-                      !graft.similarity.Knn.graphCodesReady(s0)) {
-                    System.err.println(s"shard $s0 is missing its adjacency " +
-                      "index or pq-code sidecar (build each shard with " +
-                      "`graft.Cli index --type graph --codes true`)")
-                    return 1
-                  }
-                }
-                val entries: Seq[Option[String]] = cfg.graphEntryIvfDir match {
-                  case None => Seq.fill(shards.length)(None)
-                  case Some(ee) =>
-                    val es = ee.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-                    if (es.length != shards.length) {
-                      System.err.println(s"--graph-entry-ivf lists " +
-                        s"${es.length} IVF dirs for ${shards.length} shards " +
-                        "— entry IVFs pair with shards positionally")
-                      return 2
-                    }
-                    es.foreach { e =>
-                      if (!graft.similarity.Knn.ivfIndexReady(e)) {
-                        System.err.println(s"no IVF index at $e for " +
-                          "--graph-entry-ivf")
-                        return 1
-                      }
-                    }
-                    es.map(Some(_))
-                }
-                val h = graft.similarity.Knn.ShardedResidentIndex.reloading(
-                  spark, shards.zip(entries), cfg.graphEf,
-                  idOf = (id: Long) => id.toString)
-                Some(() => h.get)
-              case Some(d) =>
-                if (!graft.similarity.Knn.graphIndexReady(d)) {
-                  System.err.println(s"no adjacency index at $d (build one " +
-                    "with `graft.Cli index --type graph` or drop --graph-index)")
-                  return 1
-                }
-                cfg.graphEntryIvfDir.foreach { e =>
-                  if (!graft.similarity.Knn.ivfIndexReady(e)) {
-                    System.err.println(s"no IVF index at $e for " +
-                      "--graph-entry-ivf (build one with `graft.Cli index` " +
-                      "or drop the flag for fixed-entry walks)")
-                    return 1
-                  }
-                }
-                // graph node ids are the store's numeric string ids cast
-                // long at build; idOf maps winners back so rehydration
-                // joins on the store's own key type
-                if (cfg.graphResident) {
-                  // --graph-resident: the walk runs driver-side over the
-                  // pq-code sidecar (best-first, natural termination —
-                  // --graph-hops does not apply) and the one Spark job
-                  // per request is the exact re-rank of the ef shortlist
-                  // (SCALE.md §r13: multi-hop-as-jobs prices at seconds
-                  // on navigable data; this is the serving answer)
-                  if (!graft.similarity.Knn.graphCodesReady(d)) {
-                    System.err.println(s"no pq-code sidecar at $d/pqcodes " +
-                      "for --graph-resident (build with `graft.Cli index " +
-                      "--type graph --codes true`, or `--type graph-codes` " +
-                      "over the existing layout)")
-                    return 1
-                  }
-                  val h = graft.similarity.Knn.ResidentGraphIndex.reloading(
-                    spark, d, cfg.graphEntryIvfDir, cfg.graphEf,
-                    idOf = (id: Long) => id.toString)
-                  Some(() => h.get)
-                } else {
-                  val h = graft.similarity.Knn.GraphIndex.reloading(spark, d,
-                    cfg.graphEntryIvfDir, cfg.graphEf, cfg.graphHops,
-                    idOf = (id: Long) => id.toString)
-                  Some(() => h.get)
-                }
-              case None => cfg.hnswIndexDir match {
-              case Some(d) =>
-                // --hnsw-index serves the layered stack: the resident
-                // upper descent resolves a query-near layer-0 entry with
-                // ZERO Spark jobs (r13 — HnswIndex.load holds upper
-                // layers driver-side under a node budget), so a request
-                // is the flat walk's 1 + hops pruned reads with entry
-                // quality the flat mode can't match at corpus scale
-                if (!graft.similarity.Knn.hnswIndexReady(spark, d)) {
-                  System.err.println(s"no hnsw stack at $d (build one " +
-                    "with `graft.Cli index --type hnsw` or drop --hnsw-index)")
-                  return 1
-                }
-                val h = graft.similarity.Knn.HnswIndex.reloading(spark, d)
-                Some(() => h.get.asDense(cfg.graphEf, cfg.graphHops,
-                  idOf = (id: Long) => id.toString))
-              case None => cfg.pqIndexDir match {
-              case Some(d) =>
-                if (!graft.similarity.Knn.ivfPqIndexReady(d)) {
-                  System.err.println(s"no IVFADC index at $d (build one " +
-                    "with Knn.ivfPqBuildIndex(refine=true) or drop --pq-index)")
-                  return 1
-                }
-                val h = graft.similarity.Knn.IvfPqIndex.reloading(spark, d)
-                if (!h.get.hasRefine) {
-                  System.err.println(s"IVFADC index at $d has no refine " +
-                    "payload — rebuild with ivfPqBuildIndex(refine=true)")
-                  return 1
-                }
-                // hasRefine is RE-CHECKED per request, not just here: the
-                // reloading handle follows rebuilds, and a later generation
-                // committed without the refine payload must become a
-                // descriptive serving error (surfaced as an SSE/JSON-RPC
-                // error frame), not asDense's bare require failure
-                Some(() => {
-                  val idx = h.get
-                  if (!idx.hasRefine) throw new IllegalStateException(
-                    s"IVFADC index at $d was rebuilt without its refine " +
-                    "payload; rebuild with ivfPqBuildIndex(refine=true) " +
-                    "or restart serve without --pq-index")
-                  idx.asDense(cfg.pqRefine)
-                })
-              case None => cfg.ivfIndexDir.map { d =>
-                if (!graft.similarity.Knn.ivfIndexReady(d)) {
-                  System.err.println(s"no IVF index at $d " +
-                    "(build one with Knn.ivfBuildIndex or drop --ivf-index)")
-                  return 1
-                }
-                val h = graft.similarity.Knn.IvfIndex.reloading(spark, d)
-                () => h.get
-              }
-            }
-          }
-          }
+          // live, releasing the superseded version's cache on swap
           val storeHandle = HighlightStore.reloadingWarm(spark, cfg.storeDir)
           val gw = new SearchGateway(() => storeHandle.get.serving,
             cfg.embedder, denseOpt, cfg.nprobe)

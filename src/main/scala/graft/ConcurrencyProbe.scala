@@ -38,11 +38,12 @@ import org.apache.spark.sql.functions._
   * env: CONC_VECS (default 200000), CONC_USERS (default 20),
   * CONC_REQS per user (default 10), CONC_MODE (`dense` — the default
   * serving mode, PQ codes + fp16 cosine refine; `ivf`, `brute`, `pq`,
-  * `filtered`, `graph`, `resident` (the driver-resident code walk —
-  * CONC_RESIDENT_EF default 64, CONC_RESIDENT_CODEC pq|int8,
+  * `filtered`, `routed`, `resident` (the in-memory code walk
+  * `Cli serve --graph-index` serves — CONC_GRAPH_K graph out-degree
+  * default 5, CONC_RESIDENT_EF default 64, CONC_RESIDENT_CODEC pq|int8,
   * CONC_RESIDENT_M/CONC_RESIDENT_KSUB pq dials,
-  * CONC_RESIDENT_REBUILD=1 forces a sidecar rebuild), `hnsw`,
-  * `hybrid`, `lex`, or `both` =
+  * CONC_RESIDENT_REBUILD=1 forces a sidecar rebuild, CONC_ENTRY=ivf
+  * seeds walks from IVF cells), `hybrid`, `lex`, or `both` =
   * dense + ivf + hybrid + brute), CONC_CELLS
   * (default 64), CONC_NPROBE (default 4), CONC_DENSE_REFINE (default 64),
   * CONC_THINK_MS (mean think time; default 1000 = locust's
@@ -321,77 +322,10 @@ object ConcurrencyProbe {
       }
     }
 
-    if (mode("graph")) {
-      // graph-ANN serving: the 5-NN graph builds once via the CELLED
-      // construction (cellKnnGraph — each vector shuffles nprobe times
-      // into its probed cells, pairs score inside cell equi-joins), then
-      // persists as the bucket-partitioned adjacency index; each request
-      // walks the beam as 1 + hops partition-pruned point reads. At this
-      // corpus's 3072-dim width NN-Descent is NOT the build path: its
-      // proposal joins carry both endpoint vectors, ~80 M proposals ×
-      // 24 KB ≈ 2 TB of shuffle per round (measured to fill the disk);
-      // the celled build's big exchange is n·nprobe vector rows ≈ 5 GB.
-      // Descent remains the right construction at moderate dims or over
-      // PQ/fp16-compressed codes. The per-request job count (1+hops) is
-      // the honest cost of graph traversal on a planner-bound runtime —
-      // the dial against ivf's 1 job is hops, not bytes (every read
-      // touches only the frontier's edge rows).
-      val hops = sys.env.getOrElse("CONC_GRAPH_HOPS", "3").toInt
-      val ef = sys.env.getOrElse("CONC_GRAPH_EF", "20").toInt
-      // graph out-degree — the recall dial that costs storage + per-hop
-      // read width instead of jobs (CONC_GRAPH_K=10 doubles the edge
-      // rows a frontier read returns; job count is unchanged)
-      val gk = sys.env.getOrElse("CONC_GRAPH_K", "5").toInt
-      val indexDir = graft.fixtures.Fp16Corpus.workRoot +
-        s"/adjserve3072$ftag-n$n-k$gk"
-      if (!new java.io.File(s"$indexDir/CURRENT").isFile) {
-        val fp32 = corpus.select(col("vec_id").as("id"),
-          graft.functions.fp16_decode(col("emb16")).as("embedding"))
-        val edges = graft.similarity.Knn.cellKnnGraph(
-            fp32, "embedding", "id", topK = gk,
-            cells = (n / 800).max(8L).toInt, iters = 2, nprobe = 2)
-          .select(col("id_a"), col("id_b"))
-        graft.similarity.Knn.buildAdjacencyIndex(edges, fp32, "embedding",
-          "id", indexDir, buckets = 64)
-      }
-      // CONC_ENTRY=ivf seeds each walk from the query's own region via
-      // the driver-local centroid probe (Knn.ivfGraphEntries) — the
-      // zero-extra-job alternative to the HNSW upper descent, whose
-      // maxLevel·upperHops extra jobs measured 1028 ms p95 where this
-      // shape serves ~390 ms (SCALE.md §r12)
-      val entryIvf =
-        if (!sys.env.get("CONC_ENTRY").contains("ivf")) None
-        else {
-          val cellsK = sys.env.getOrElse("CONC_CELLS", "64").toInt
-          val ivfDir = graft.fixtures.Fp16Corpus.workRoot +
-            s"/ivfserve3072$ftag-n$n-c$cellsK"
-          if (!graft.similarity.Knn.ivfIndexReady(ivfDir)) {
-            val fp32 = corpus.select(col("vec_id").as("id"),
-              graft.functions.fp16_decode(col("emb16")).as("embedding"))
-            graft.similarity.Knn.ivfBuildIndex(fp32, "embedding", "id",
-              ivfDir, k = cellsK, iters = 2,
-              trainFilter = col("id") % (n / 500).max(1L) === 0, fp16 = true)
-          }
-          Some(ivfDir)
-        }
-      // the PRODUCT path: the same Knn.GraphIndex the gateway routes for
-      // `Cli serve --graph-index` (fixed min-id entry, or --graph-entry-ivf)
-      val index = graft.similarity.Knn.GraphIndex.load(spark, indexDir,
-        entryIvf, ef = ef, hops = hops)
-      val tag = if (entryIvf.isDefined) ",entry=ivf" else ",entry=fixed"
-      recall10(spark, corpus, n, s"graph(k=$gk,ef=$ef,hops=$hops$tag)", qvec) {
-        qv => index.servingTopK(qv, 10, 0, None).map(_.getLong(0)) }
-      run(spark, s"graph(k=$gk,ef=$ef,hops=$hops$tag)", n, users,
-        reqsPerUser) { seed =>
-          val qv = qvec(seed)
-          require(index.servingTopK(qv, 10, 0, None).nonEmpty)
-      }
-    }
-
     if (mode("resident")) {
       // the resident-code walk (Knn.ResidentGraphIndex — `Cli serve
-      // --graph-index G --graph-resident`): topology + m-byte PQ codes
-      // driver-resident, the FULL best-first graph search runs at ~µs
+      // --graph-index G`): topology + m-byte PQ codes held in memory,
+      // the FULL best-first graph search runs at ~µs
       // per expansion (no hop cap — natural termination), and the one
       // Spark job per request is the bucket-pruned exact re-rank of the
       // ef shortlist. This is the serving answer to the manifold
@@ -403,6 +337,9 @@ object ConcurrencyProbe {
       val ef = sys.env.getOrElse("CONC_RESIDENT_EF", "64").toInt
       val indexDir = graft.fixtures.Fp16Corpus.workRoot +
         s"/adjserve3072$ftag-n$n-k$gk"
+      // the CELLED construction (cellKnnGraph): at 3072 dims NN-Descent's
+      // proposal joins carry both endpoint vectors (~2 TB of shuffle a
+      // round at 200 k), while the celled build shuffles n·nprobe rows
       if (!new java.io.File(s"$indexDir/CURRENT").isFile) {
         val fp32 = corpus.select(col("vec_id").as("id"),
           graft.functions.fp16_decode(col("emb16")).as("embedding"))
@@ -449,57 +386,6 @@ object ConcurrencyProbe {
       run(spark, lbl, n, users, reqsPerUser) { seed =>
           val qv = qvec(seed)
           require(index.servingTopK(qv, 10, 0, None).nonEmpty)
-      }
-    }
-
-    if (mode("hnsw")) {
-      // layered graph-ANN serving: the `graph` mode plus the HNSW upper
-      // layers — every layer built with the celled construction (see the
-      // `graph` mode note; at 3072-dim use nnDescentGraphCompressed for
-      // descent builds — int8/PQ rounds, SCALE.md r12), served from
-      // per-layer adjacency layouts. Since r13 the upper layers load
-      // DRIVER-RESIDENT (HnswIndex.load's node budget), so the descent
-      // costs ZERO Spark jobs and a request is the flat walk's 1 + hops
-      // pruned reads — r12's measured 2.1×-over-gate job tax (p95
-      // 1028 ms vs the flat 388 same-phase, ~640 ms for 4 descent jobs)
-      // is structurally gone. upperHops is now a CONVERGENCE cap on the
-      // per-layer greedy descent (resident moves are driver flops, ~µs)
-      // — default 64, effectively run-to-local-minimum, the entry
-      // quality the job-priced descent could never afford.
-      val hops = sys.env.getOrElse("CONC_GRAPH_HOPS", "3").toInt
-      val ef = sys.env.getOrElse("CONC_GRAPH_EF", "20").toInt
-      val upperHops = sys.env.getOrElse("CONC_HNSW_UPPERHOPS", "64").toInt
-      // layer-0 out-degree: must sit at or above the corpus's INTRINSIC
-      // dimension for greedy walks to have an escape direction (the
-      // manifold fixture's L=8 needs k0 ≥ 8; degree 5 strands the beam)
-      val k0 = sys.env.getOrElse("CONC_HNSW_K0", "5").toInt
-      val indexDir = graft.fixtures.Fp16Corpus.workRoot +
-        s"/hnswserve3072$ftag-n$n-k$k0"
-      // layers build CONCURRENTLY (no single pointer is a completion
-      // marker) — the order-independent ready probe guards the rebuild
-      if (!graft.similarity.Knn.hnswIndexReady(spark, indexDir)) {
-        val fp32 = corpus.select(col("vec_id").as("id"),
-          graft.functions.fp16_decode(col("emb16")).as("embedding"))
-        graft.similarity.Knn.buildHnswIndex(fp32, "embedding", "id",
-          indexDir, maxLevel = 2, upperM = math.max(5, k0), k0 = k0,
-          buckets = 64,
-          graphFn = Some { (df, m) =>
-            val sz = df.count()
-            graft.similarity.Knn.cellKnnGraph(df, "embedding", "id",
-              topK = m, cells = (sz / 800).max(8L).toInt, iters = 2,
-              nprobe = 2)
-          })
-      }
-      val index = graft.similarity.Knn.HnswIndex.load(spark, indexDir)
-      recall10(spark, corpus, n,
-        s"hnsw(k=$k0,ef=$ef,hops=$hops,upperHops=$upperHops)", qvec) { qv =>
-          index.search(qv, 10, ef, hops, upperHops)
-            .collect().map(_.getLong(0)).toSeq }
-      run(spark, s"hnsw(k=$k0,ef=$ef,hops=$hops,upperHops=$upperHops)", n,
-        users, reqsPerUser) { seed =>
-          val qv = qvec(seed)
-          index.search(qv, k = 10, ef = ef, hops = hops,
-            upperHops = upperHops).collect()
       }
     }
 

@@ -31,10 +31,7 @@ final case class GraftConfig(
     pooledChunkWords: Option[Int] = None,
     graphIndexDir: Option[String] = None,
     graphEntryIvfDir: Option[String] = None,
-    graphEf: Int = GraftConfig.DefaultGraphEf,
-    graphHops: Int = GraftConfig.DefaultGraphHops,
-    hnswIndexDir: Option[String] = None,
-    graphResident: Boolean = false) {
+    graphEf: Int = GraftConfig.DefaultGraphEf) {
 
   /** The embedder this configuration describes. */
   def embedder: graft.embed.Embedder =
@@ -57,16 +54,12 @@ object GraftConfig {
     * since the chunked shortlist) for deployments that want it. */
   val DefaultPqRefine = 64
 
-  /** Beam width for `--graph-index` serving when `--graph-ef` is
-    * omitted: the gate-measured config (ef=20, hops=3 at k=10 — p95
-    * 388 ms fixed-entry / 356 ms ivf-entry, SCALE.md §r12). The serving
-    * walk widens ef to k automatically when a request's k exceeds it. */
+  /** Shortlist width for `--graph-index` serving when `--graph-ef` is
+    * omitted: the resident walk keeps the ef best codes-scored nodes
+    * and re-ranks them exactly in its one Spark job, so ef is the
+    * recall dial and costs local flops, not jobs. The walk widens ef
+    * to k automatically when a request's k exceeds it. */
   val DefaultGraphEf = 20
-
-  /** Walk depth for `--graph-index` serving when `--graph-hops` is
-    * omitted — each hop is one bucket-pruned point-read job, so hops is
-    * the latency dial (the gate config). */
-  val DefaultGraphHops = 3
 
   /** `--pooled` chunk width when `--chunk-words` is omitted: 256 words
     * ≈ a few hundred tokens per chunk — small enough that every chunk
@@ -105,36 +98,20 @@ object GraftConfig {
     val denseModes = Seq(
       "IVF_INDEX_DIR (--ivf-index)" -> config.ivfIndexDir,
       "PQ_INDEX_DIR (--pq-index)" -> config.pqIndexDir,
-      "GRAPH_INDEX_DIR (--graph-index)" -> config.graphIndexDir,
-      "HNSW_INDEX_DIR (--hnsw-index)" -> config.hnswIndexDir)
+      "GRAPH_INDEX_DIR (--graph-index)" -> config.graphIndexDir)
       .collect { case (n, Some(_)) => n }
     if (denseModes.size > 1)
       errs += denseModes.mkString(" and ") +
         " are mutually exclusive — the gateway serves through ONE dense index"
     // graph-walk knobs pair with --graph-index the way pq-refine pairs
     // with --pq-index: validated only when the graph path is selected
-    if (config.graphIndexDir.isDefined || config.hnswIndexDir.isDefined) {
-      if (config.graphEf < 1)
-        errs += "GRAPH_EF (--graph-ef / GRAFT_GRAPH_EF) must be a positive " +
-          s"beam width, got ${config.graphEf}"
-      if (config.graphHops < 1)
-        errs += "GRAPH_HOPS (--graph-hops / GRAFT_GRAPH_HOPS) must be a " +
-          s"positive hop count, got ${config.graphHops}"
-    }
-    // entry selection pairs with the FLAT walk only — the hnsw stack's
-    // entry is its own upper-layer descent
+    if (config.graphIndexDir.isDefined && config.graphEf < 1)
+      errs += "GRAPH_EF (--graph-ef / GRAFT_GRAPH_EF) must be a positive " +
+        s"beam width, got ${config.graphEf}"
     if (config.graphEntryIvfDir.isDefined && config.graphIndexDir.isEmpty)
       errs += "GRAPH_ENTRY_IVF (--graph-entry-ivf) requires " +
         "GRAPH_INDEX_DIR (--graph-index) — it selects walk entries for " +
-        "the flat graph serving mode (the hnsw stack descends its own " +
-        "upper layers)"
-    // the resident walk serves the flat adjacency layout's pq-code
-    // sidecar — it has no meaning without --graph-index
-    if (config.graphResident && config.graphIndexDir.isEmpty)
-      errs += "GRAPH_RESIDENT (--graph-resident) requires " +
-        "GRAPH_INDEX_DIR (--graph-index) — it serves the adjacency " +
-        "layout's driver-resident code walk (build the sidecar with " +
-        "`Cli index --type graph --codes true`)"
+        "the graph serving mode"
     config.pooledChunkWords.foreach { cw =>
       if (cw < 1)
         errs += "CHUNK_WORDS (--chunk-words / GRAFT_CHUNK_WORDS) must be " +
@@ -184,8 +161,7 @@ object GraftConfig {
   def resolve(flags: Map[String, String], env: Map[String, String],
       command: Command,
       fp16Flag: Boolean = false,
-      pooledFlag: Boolean = false,
-      graphResidentFlag: Boolean = false): Either[List[String], GraftConfig] = {
+      pooledFlag: Boolean = false): Either[List[String], GraftConfig] = {
     import Command._
     val norm = env.map { case (k, v) => k.toUpperCase -> v }
     def e(key: String): Option[String] = norm.get(s"GRAFT_$key")
@@ -208,8 +184,7 @@ object GraftConfig {
         "ivf-index" -> portsInScope, "nprobe" -> portsInScope,
         "pq-index" -> portsInScope, "pq-refine" -> portsInScope,
         "graph-index" -> portsInScope, "graph-entry-ivf" -> portsInScope,
-        "graph-ef" -> portsInScope, "graph-hops" -> portsInScope,
-        "hnsw-index" -> portsInScope))
+        "graph-ef" -> portsInScope))
       if (!ok && flags.contains(flag))
         errs += s"--$flag is not a ${command.name} option"
     val fp16 = fp16Flag || (if (!syncInScope) false
@@ -267,29 +242,12 @@ object GraftConfig {
       graphEntryIvfDir = if (portsInScope)
         str("graph-entry-ivf", "GRAPH_ENTRY_IVF") else None,
       graphEf = if (portsInScope) int("graph-ef", "GRAPH_EF", DefaultGraphEf)
-        else DefaultGraphEf,
-      graphHops = if (portsInScope) int("graph-hops", "GRAPH_HOPS",
-        DefaultGraphHops) else DefaultGraphHops,
-      hnswIndexDir = if (portsInScope) str("hnsw-index", "HNSW_INDEX_DIR")
-        else None,
-      graphResident = graphResidentFlag || (portsInScope &&
-        (e("GRAPH_RESIDENT") match {
-          case None => false
-          case Some(v) => v.toLowerCase match {
-            case "true" | "1"  => true
-            case "false" | "0" => false
-            case other =>
-              errs += s"GRAFT_GRAPH_RESIDENT must be true/false, got " +
-                s"'$other'"; false
-          }
-        })))
-    // explicit walk-knob flags without the graph mode are a silent drop
+        else DefaultGraphEf)
+    // an explicit walk-knob flag without the graph mode is a silent drop
     // (the env-only form is ignored garbage, like ambient GRAFT_PQ_REFINE)
-    if (candidate.graphIndexDir.isEmpty && candidate.hnswIndexDir.isEmpty)
-      Seq("graph-ef", "graph-hops").filter(flags.contains).foreach { fl =>
-        errs += s"--$fl requires --graph-index or --hnsw-index (it dials " +
-          "the graph serving walk)"
-      }
+    if (candidate.graphIndexDir.isEmpty && flags.contains("graph-ef"))
+      errs += "--graph-ef requires --graph-index (it dials the graph " +
+        "serving walk)"
     (errs.result(), validated(candidate)) match {
       case (Nil, v)         => v
       case (es, Left(more)) => Left(es ++ more)

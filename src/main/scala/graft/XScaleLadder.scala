@@ -72,23 +72,24 @@ object XScaleLadder {
         catch { case e: Throwable =>
           System.err.println(s"[ladder] $name prime failed: $e") }
         spark.sparkContext.setJobDescription(s"ladder: $name (timed)")
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, dataDir).count() }
-        catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = Bench.timedRun(name) {
+          SparkEntry.queries(name)(spark, dataDir).count() }
         samples(name) = dt :: samples.getOrElse(name, Nil)
         spark.sparkContext.setJobDescription(null)
       }
     }
     def f(v: Double): String = "%.3f".format(v)
-    val mins = names.map(n => n -> samples(n).min)
-    val qs = mins.map { case (k, v) => "\"" + k + "\":" + f(v) }
+    // a row with any failed pass is reported only under `failed`
+    val (failed, timedNames) = names.partition(n => samples(n).exists(_.isNaN))
+    val qs = timedNames.map(k => "\"" + k + "\":" + f(samples(k).min))
       .mkString("{", ",", "}")
-    val passes = names.map { case k =>
-      "\"" + k + "\":[" + samples(k).reverse.map(f).mkString(",") + "]"
+    val passes = names.map { k =>
+      "\"" + k + "\":[" + samples(k).reverse
+        .map(v => if (v.isNaN) "null" else f(v)).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    val failedList = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val calibs = calibSamples.reverse.map(f).mkString("[", ",", "]")
-    println(s"""{"metric":"ladder","cpus":$cpus,"dir":"$dataDir","runs":$runs,"calib_passes":$calibs,"queries_min":$qs,"samples":$passes}""")
+    println(s"""{"metric":"ladder","cpus":$cpus,"dir":"$dataDir","runs":$runs,"calib_passes":$calibs,"queries_min":$qs,"failed":$failedList,"samples":$passes}""")
     spark.stop()
   }
 }

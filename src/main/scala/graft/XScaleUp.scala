@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of a testdata directory for the r17 scaling
@@ -16,9 +16,13 @@ import org.apache.spark.sql.functions._
   *    cross-replica shingles are DISJOINT — dedup/LM work scales
   *    linearly with the corpus instead of quadratically via synthetic
   *    cross-replica near-duplicates; n_chars recomputed.
-  *  - embeddings: vec_id shifts; replica i > 0 sign-flips dims where
-  *    (dim + i) % 7 < 2 — norm-preserving (cosine geometry intact),
-  *    far from the original (no synthetic exact-duplicate pairs).
+  *  - embeddings: vec_id shifts; replica i > 0 sign-flips dims j where
+  *    (31·j + i) mod 61 < 17 — norm-preserving (cosine geometry intact),
+  *    ~28 % of dims flipped, far from the original. 31 is invertible
+  *    mod 61, so over any 61 consecutive dims the mask is a distinct
+  *    shift for every i mod 61: replicas 1..60 all differ from each
+  *    other and from the original at any width ≥ 61 (no synthetic
+  *    exact-duplicate pairs), which caps `factor` at 61.
   *  - lineitem/orders/customer: order and customer keys shift together
   *    (FK-consistent); dims (region/nation/part/supplier) and events
   *    copy through unchanged, so key lookups still resolve.
@@ -29,9 +33,17 @@ import org.apache.spark.sql.functions._
   * <factor>
   */
 object XScaleUp {
+  /** Replicas past 60 would repeat an earlier replica's sign mask. */
+  val MaxFactor = 61
+
+  /** Whether replica `i` sign-flips embedding dim `j` (see above). */
+  private def flipped(j: Column, i: Int): Column =
+    pmod(j * 31 + lit(i), lit(61)) < 17
+
   def replicate(spark: SparkSession, srcDir: String, outDir: String,
       factor: Int): Unit = {
-    require(factor >= 1, s"factor must be >= 1, got $factor")
+    require(factor >= 1 && factor <= MaxFactor,
+      s"factor must be in [1, $MaxFactor], got $factor")
     def src(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")
     def write(df: DataFrame, name: String): Unit =
@@ -60,8 +72,7 @@ object XScaleUp {
       else emb.select(
         (col("vec_id") + lit(i * vecShift)).as("vec_id"),
         transform(col("embedding"), (x, j) =>
-          when(pmod(j + lit(i), lit(7)) < 2, -x).otherwise(x))
-          .as("embedding"),
+          when(flipped(j, i), -x).otherwise(x)).as("embedding"),
         col("label"))
     }.reduce(_ unionByName _), "embeddings")
 

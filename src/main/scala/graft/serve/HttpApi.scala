@@ -27,7 +27,8 @@ final class HttpApi(
     port: Int = 0) {
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
+  private val executor = java.util.concurrent.Executors.newCachedThreadPool()
+  server.setExecutor(executor)
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -185,5 +186,7 @@ final class HttpApi(
   })
 
   def start(): HttpApi = { server.start(); this }
-  def shutdown(): Unit = server.stop(0)
+  /** Stop the server, then its handler pool — as [[McpServer.shutdown]]
+    * does — so idle handler threads do not keep the JVM alive. */
+  def shutdown(): Unit = { server.stop(0); executor.shutdown() }
 }

@@ -2737,7 +2737,9 @@ object Knn {
     // siblings' ACTIVE jobs instead of letting them run on (and commit)
     // after the build is already doomed
     val group = s"hnsw-build-$indexDir"
-    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // the ROOT cause: the first failure, which cancels the group — the
+    // siblings it cancels fail too, but later, and only as suppressed
+    val rootCause = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     try {
       val layers = (0 to maxLevel).map { l =>
         scala.concurrent.Future {
@@ -2748,7 +2750,7 @@ object Knn {
             // a sibling already failed: don't start new jobs for a
             // stack that is about to be deleted (cancelJobGroup only
             // reaches jobs that are running at cancel time)
-            if (failed.get()) throw new IllegalStateException(
+            if (rootCause.get() != null) throw new IllegalStateException(
               s"buildHnswIndex: sibling layer failed, layer $l aborted")
             val sub = (if (l == 0) lev else lev.filter(col("level") >= l))
               .select(col("id").as(keyCol), col("v").as(vecCol))
@@ -2757,7 +2759,7 @@ object Knn {
             buildAdjacencyIndex(edges, sub, vecCol, keyCol,
               s"$indexDir/layer$l", buckets, fp16)
           } catch { case e: Throwable =>
-            if (failed.compareAndSet(false, true))
+            if (rootCause.compareAndSet(null, e))
               spark.sparkContext.cancelJobGroup(group)
             throw e
           } finally spark.sparkContext.clearJobGroup()
@@ -2768,7 +2770,10 @@ object Knn {
       // under indexDir when the failure path cleans it up
       val done = layers.map(f => scala.util.Try(scala.concurrent.Await
         .result(f, scala.concurrent.duration.Duration.Inf)))
-      done.collectFirst { case scala.util.Failure(e) => e }.foreach { e =>
+      val failures = done.collect { case scala.util.Failure(e) => e }
+      if (failures.nonEmpty) {
+        val root = Option(rootCause.get()).getOrElse(failures.head)
+        failures.filterNot(_ eq root).foreach(root.addSuppressed)
         // no partial stack survives a failed build: remove meta and every
         // layer dir (committed or half-written) so ready-probes and
         // rebuild guards see a clean absence, not a torn index
@@ -2780,7 +2785,7 @@ object Knn {
         rm(new java.io.File(s"$indexDir/meta"))
         (0 to maxLevel).foreach(l =>
           rm(new java.io.File(s"$indexDir/layer$l")))
-        throw e
+        throw root
       }
     } finally pool.shutdown()
   }
@@ -2858,73 +2863,6 @@ object Knn {
       newNodes = Some(newNodes.select(col("id"))))
   }
 
-  /** Delete nodes from EVERY layer of a [[buildHnswIndex]] stack — the
-    * takedown path the reference's upsert semantics require of every
-    * serving artifact (db/supabase_ops.py:148-166): one
-    * [[adjDeleteIndex]] tombstone per layer (level sets nest, and a
-    * tombstone for an id a layer never held masks nothing, so all
-    * layers get the same batch), O(batch) total.
-    *
-    * Entry safety: if the meta-pinned entry node is in the batch, the
-    * meta rewrites FIRST to the smallest surviving top-layer member —
-    * any top-layer node is a valid entry — and only then do the
-    * tombstones commit. A reader between the two writes sees the new
-    * entry against the old (still-serving) layers, which is valid;
-    * the reverse order would serve a deleted entry whose self-row the
-    * masked layer no longer has. An emptied top layer refuses: that
-    * stack needs a rebuild at a lower maxLevel, not a masked serve.
-    *
-    * `revived`: keys in the batch that the caller will IMMEDIATELY
-    * re-append (the delete-then-append refresh flow — a changed doc's
-    * old neighborhood is masked, its new vector re-links at the SAME
-    * deterministic [[hnswLevel]]). Those keys count as survivors for
-    * the entry choice and the empty-top-layer guard, so a delta that
-    * covers every top-layer member (e.g. a corpus-wide re-embed) no
-    * longer aborts the refresh. Trade-off, documented: a reader between
-    * the tombstone commit and the re-append may descend from a masked
-    * entry — a degraded (possibly empty) walk, never a crash — which
-    * is why only the refresh flow passes `revived`. */
-  def hnswDeleteIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ids: DataFrame, idCol: String,
-      revived: Option[DataFrame] = None,
-      revivedIdCol: String = "id"): Unit = {
-    val meta = spark.read.parquet(s"$indexDir/meta").head()
-    val maxLevel = meta.getAs[Int]("max_level")
-    val entry = meta.getAs[Long]("entry")
-    val dead = ids.select(col(idCol).cast("long").as("id")).distinct()
-      .localCheckpoint() // meta + N pointer commits re-read it
-    // entry choice / guard only: a dead-but-reviving key keeps (or can
-    // take) the entry slot because the append right after this call
-    // restores its self-row at the same level. Tombstones below still
-    // use the FULL dead set — the old neighborhood must be masked.
-    val effDead = revived.fold(dead)(r => dead.join(
-      r.select(col(revivedIdCol).cast("long").as("id")).distinct(),
-      Seq("id"), "left_anti"))
-    if (effDead.filter(col("id") === entry).limit(1).count() > 0) {
-      val top = AdjIndex.load(spark, s"$indexDir/layer$maxLevel").relation
-      val next = top.filter(col("src") === col("dst"))
-        .join(effDead.select(col("id").as("src")), Seq("src"), "left_anti")
-        .agg(min(col("src"))).head()
-      if (next.isNullAt(0)) throw new IllegalStateException(
-        s"hnswDeleteIndex: delete would empty layer$maxLevel — rebuild " +
-        "the stack (lower maxLevel) instead of masking its last entry")
-      spark.range(1)
-        .select(lit(maxLevel).as("max_level"), lit(next.getLong(0)).as("entry"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-    }
-    (0 to maxLevel).foreach(l =>
-      adjDeleteIndex(spark, s"$indexDir/layer$l", dead, "id"))
-  }
-
-  /** [[adjCompactIndex]] per layer — folds a stack's accumulated
-    * append/delete segments back to one per layer. */
-  def hnswCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    val maxLevel = spark.read.parquet(s"$indexDir/meta").head()
-      .getAs[Int]("max_level")
-    (0 to maxLevel).foreach(l => adjCompactIndex(spark, s"$indexDir/layer$l"))
-  }
-
   /** Structured-Streaming micro-batch maintenance of the HNSW stack:
     * each batch inserts via [[hnswAppendIndex]] — the same foreachBatch
     * discipline as the IVF/lexical/LM streams. The stack must exist
@@ -2938,14 +2876,6 @@ object Knn {
       if (!batch.isEmpty) hnswAppendIndex(batch, vecCol, keyCol, indexDir)
     }
 
-  /** Serving handle over a [[buildHnswIndex]] layout — the full HNSW
-    * query: greedy width-1 descent through each upper layer's
-    * [[AdjIndex]] (ef = k = 1, `upperHops` hops — every hop one
-    * bucket-pruned point read), then the ef-beam over layer 0 from
-    * wherever the descent landed. maxLevel·upperHops + 1 + hops tiny
-    * jobs per request, none corpus-sized; scores carry the index's
-    * storage precision (fp16 by default), exactly [[AdjIndex.search]]'s
-    * contract per layer. */
   /** One upper layer held driver-side: out-adjacency plus each member's
     * stored vector (fp16 blob or fp32 array — scored with the SAME
     * double-accumulation kernels the distributed walk's column
@@ -2992,6 +2922,13 @@ object Knn {
     }
   }
 
+  /** Query handle over a [[buildHnswIndex]] layout — the full HNSW
+    * query behind the q145 batch operator: greedy width-1 descent
+    * through each in-memory upper layer (zero Spark jobs), then
+    * the ef-beam over layer 0's [[AdjIndex]] from wherever the descent
+    * landed — 1 + hops bucket-pruned point reads. Scores carry the
+    * index's storage precision (fp16 by default), exactly
+    * [[AdjIndex.search]]'s contract. */
   final class HnswIndex private (layers: IndexedSeq[AdjIndex],
       val entryId: Long, maxLevel: Int,
       resident: Map[Int, ResidentLayer]) {
@@ -3012,49 +2949,23 @@ object Knn {
       }
       layers(0).search(queryVec, k, ef, hops, entryId = cur)
     }
-
-    /** The layered stack behind the [[DenseIndex]] contract —
-      * [[GraphIndex]]'s sibling for `Cli serve --hnsw-index`. The
-      * resident upper descent costs ZERO Spark jobs, so a request is
-      * 1 + hops bucket-pruned point reads — the flat walk's
-      * gate-passing job shape — with the entry resolved by the full
-      * multi-layer descent instead of a fixed node or an IVF sidecar.
-      * `upperHops` caps the per-layer greedy descent; resident moves
-      * are driver flops, so the cap is a convergence bound, not a
-      * latency dial (descent stops early when no neighbor improves).
-      * `attrColumns` is empty — a walk reads edge rows, not attribute
-      * cells — so the gateway routes filtered requests to the store. */
-    def asDense(ef: Int, hops: Int, upperHops: Int = 64,
-        idOf: Long => Any = identity[Long] _): DenseIndex = new DenseIndex {
-      val attrColumns: Seq[String] = Nil
-      def servingTopK(queryVec: Array[Float], k: Int, nprobe: Int,
-          filter: Option[Column]): Array[org.apache.spark.sql.Row] = {
-        require(filter.isEmpty, "HnswIndex cannot evaluate attribute " +
-          "predicates; the gateway must route filtered requests to the store")
-        search(queryVec, k, math.max(ef, k), hops, upperHops)
-          .collect()
-          .map(r => org.apache.spark.sql.Row(idOf(r.getLong(0)),
-            r.getDouble(1)))
-      }
-    }
   }
 
   object HnswIndex {
     /** Upper-layer residency budget (total nodes across levels ≥ 1)
       * when [[load]]'s caller does not size it: 250 k nodes ≈ 1.5 GB
-      * of driver heap at 3072-dim fp16 (and 32 MB at the 64-dim CLI
-      * default) — centroid-sidecar-sized state, not a dataset. */
+      * of heap at 3072-dim fp16 (32 MB at 64 dims) —
+      * centroid-sidecar-sized state, not a dataset. */
     val DefaultResidentNodes = 250000L
 
-    /** Load the serving stack. Upper layers are held DRIVER-RESIDENT,
+    /** Load the stack. Upper layers are held RESIDENT in the heap,
       * top-down, while their cumulative node count fits
       * `residentNodes`: the upper descent then costs ZERO Spark jobs
-      * per request — the whole request is 1 + hops bucket-pruned reads,
-      * the same job shape as the flat [[GraphIndex]] walk that passed
-      * the 20-user serving gate at 388 ms p95, where the per-job
-      * descent's maxLevel·upperHops extra point-reads measured 1028 ms
-      * (2.1× OVER the gate; SCALE.md §r12 — job count, not bytes, is
-      * what a planner-bound runtime pays for).
+      * per query — the whole query is 1 + hops bucket-pruned reads,
+      * where a per-job descent's maxLevel·upperHops extra point-reads
+      * measured 1028 ms p95 against 388 ms for the flat walk (SCALE.md
+      * §r12 — job count, not bytes, is what a planner-bound runtime
+      * pays for).
       *
       * A level past the budget — and every level below it, keeping the
       * resident set a contiguous top — is SKIPPED during descent, not
@@ -3143,22 +3054,6 @@ object Knn {
       new HnswIndex(layers, meta.getAs[Long]("entry"), maxLevel,
         resident.result())
     }
-
-    /** [[load]] behind a generation check spanning EVERY layer's pointer
-      * plus the meta sidecar — an append/compaction on any layer (via
-      * [[appendAdjacencyIndex]] on `layer<ℓ>`) serves at the next
-      * request, [[graft.sync.Reloading]]'s contract for the stack. */
-    def reloading(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-        minCheckIntervalMs: Long = 0L): graft.sync.Reloading[HnswIndex] = {
-      val maxLevel = spark.read.parquet(s"$indexDir/meta")
-        .head().getAs[Int]("max_level")
-      graft.sync.Reloading.withFingerprint(() =>
-        ((0 to maxLevel).map(l => graft.sync.Reloading.fingerprintOf(
-            spark, s"$indexDir/layer$l", Nil)) :+
-          graft.sync.Reloading.fingerprintOf(spark, indexDir, Seq("meta")))
-          .mkString("||"),
-        minCheckIntervalMs)(load(spark, indexDir))
-    }
   }
 
   /** Whether a [[buildAdjacencyIndex]] layout has committed at `indexDir`
@@ -3181,83 +3076,6 @@ object Knn {
       (0 to maxLevel).forall(l =>
         new java.io.File(s"$indexDir/layer$l/CURRENT").isFile)
     }
-
-  /** Graph-ANN serving behind the [[DenseIndex]] contract — the flat
-    * beam walk over a persistent [[buildAdjacencyIndex]] layout, so
-    * `--graph-index` is a gateway deployment choice exactly like the
-    * fp16-IVF and IVFADC modes (this is the mode that PASSED the
-    * 20-user serving gate at 388 ms p95 fixed-entry / 356 ms ivf-entry,
-    * where the layered HNSW descent's per-request job tax failed it —
-    * SCALE.md §r12). Per request: 1 + hops bucket-pruned point-read
-    * jobs, plus ZERO for entry selection ([[GraphEntries]] is driver
-    * arithmetic when `entries` is given; otherwise the fixed entry
-    * resolved once at load).
-    *
-    * `attrColumns` is empty by construction — a beam walk reads edge
-    * rows, not attribute-carrying cells, so [[graft.serve.SearchGateway]]
-    * routes every filtered request to the store scan (the plan that can
-    * evaluate the predicate) and only filterless top-k lands here.
-    *
-    * `idOf` maps the graph's long node ids back to the caller's key
-    * domain (the highlight store keys by numeric STRING ids; the CLI
-    * passes `_.toString` so rehydration joins on the store's own type). */
-  final class GraphIndex private[Knn] (adj: AdjIndex,
-      entries: Option[GraphEntries], fixedEntry: Long,
-      ef: Int, hops: Int, idOf: Long => Any) extends DenseIndex {
-    val attrColumns: Seq[String] = Nil
-    /** ≤ k (id, score) rows by (score, id); `nprobe` is ignored — the
-      * graph mode's recall dials are ef and hops, fixed per deployment
-      * (widening ef per request would change the walk's job shape). */
-    def servingTopK(queryVec: Array[Float], k: Int, nprobe: Int,
-        filter: Option[Column]): Array[org.apache.spark.sql.Row] = {
-      require(filter.isEmpty, "GraphIndex cannot evaluate attribute " +
-        "predicates; the gateway must route filtered requests to the store")
-      val entry = entries.fold(fixedEntry)(_.entryFor(queryVec))
-      adj.search(queryVec, k, math.max(ef, k), hops, entry)
-        .collect()
-        .map(r => org.apache.spark.sql.Row(idOf(r.getLong(0)), r.getDouble(1)))
-    }
-  }
-
-  object GraphIndex {
-    /** Serving handle over an adjacency layout. `entryIvfDir` opts into
-      * query-near entry selection via [[ivfGraphEntries]] (an IVF index
-      * over the same corpus — zero extra jobs per request); without it
-      * every walk starts from the index's min live node id, resolved
-      * here with one narrow job. */
-    def load(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-        entryIvfDir: Option[String] = None, ef: Int = 20, hops: Int = 3,
-        idOf: Long => Any = identity[Long] _): GraphIndex = {
-      require(ef >= 1 && hops >= 1,
-        s"GraphIndex: need ef >= 1 and hops >= 1, got ef=$ef hops=$hops")
-      val adj = AdjIndex.load(spark, indexDir)
-      val entries = entryIvfDir.map(d => ivfGraphEntries(spark, d))
-      val fixed =
-        if (entries.isDefined) -1L
-        else adj.relation.agg(min(col("src"))).head() match {
-          case r if r.isNullAt(0) => throw new IllegalStateException(
-            s"GraphIndex: adjacency index at $indexDir has no live nodes")
-          case r => r.getLong(0)
-        }
-      new GraphIndex(adj, entries, fixed, ef, hops, idOf)
-    }
-
-    /** [[load]] behind a generation check spanning the adjacency
-      * pointer AND (when given) the entry IVF's — a refresh of either
-      * serves at the next request, and the fixed entry / entry table
-      * re-resolve against the new generation. */
-    def reloading(spark: org.apache.spark.sql.SparkSession,
-        indexDir: String, entryIvfDir: Option[String] = None,
-        ef: Int = 20, hops: Int = 3, idOf: Long => Any = identity[Long] _,
-        minCheckIntervalMs: Long = 0L)
-        : graft.sync.Reloading[GraphIndex] =
-      graft.sync.Reloading.withFingerprint(() =>
-        (graft.sync.Reloading.fingerprintOf(spark, indexDir, Seq("meta")) +:
-          entryIvfDir.toSeq.map(d => graft.sync.Reloading
-            .fingerprintOf(spark, d, Seq("centroids"))))
-          .mkString("||"),
-        minCheckIntervalMs)(load(spark, indexDir, entryIvfDir, ef, hops, idOf))
-  }
 
   // ------------------------------------ resident-code graph serving
 
@@ -3636,14 +3454,14 @@ object Knn {
     * 3072-dim; the default `maxResidentNodes` bound (2 M) caps pq
     * state at centroid-sidecar scale and int8 at a documented ~7 GB
     * ceiling a serving driver sizes for. Past the budget [[load]]
-    * REFUSES (the job walk and the IVF modes remain); at true corpus
+    * REFUSES (the IVF modes remain); at true corpus
     * scale the resident walk is a per-replica shard choice, not a
     * single-driver structure — the same posture as [[HnswIndex.load]]'s
     * resident upper layers.
     *
-    * `attrColumns` is empty — the walk reads resident codes, not
-    * attribute cells — so the gateway routes filtered requests to the
-    * store scan, [[GraphIndex]]'s exact contract. */
+    * `attrColumns` lists the layout's self-row attr columns; for an
+    * attr-less layout it is empty, so the gateway routes filtered
+    * requests to the store scan. */
   final class ResidentGraphIndex private[Knn] (adj: AdjIndex,
       ids: Array[Long], nbrs: Array[Array[Int]], codes: Array[Array[Byte]],
       codebooks: Array[Array[Array[Float]]], codec: String,
@@ -3785,8 +3603,8 @@ object Knn {
 
     /** ≤ k (id, score) rows by (score, id); `nprobe` is ignored — the
       * recall dial is ef, fixed per deployment (widened to k when a
-      * request asks for more rows than the deployed beam, GraphIndex's
-      * contract — ef bounds the shortlist, never the row count). One
+      * request asks for more rows than the deployed beam — ef bounds
+      * the shortlist, never the row count). One
       * Spark job. */
     def servingTopK(queryVec: Array[Float], k: Int, nprobe: Int,
         filter: Option[Column]): Array[org.apache.spark.sql.Row] = {
@@ -3902,12 +3720,12 @@ object Knn {
         s"ResidentGraphIndex: adjacency index at $indexDir has no live nodes")
       require(liveCount <= maxResidentNodes,
         s"ResidentGraphIndex: $liveCount live nodes exceed the resident " +
-          s"budget $maxResidentNodes — serve --graph-index (job walk), or " +
-          "split the corpus into per-shard layouts behind " +
+          s"budget $maxResidentNodes — split the corpus into per-shard " +
+          "layouts behind " +
           "ShardedResidentIndex (fan-and-merge; each shard stays inside " +
           "this budget): one call, `graft.Cli index --type graph " +
           "--shards N` (or `--shards auto`), then `serve --graph-index " +
-          "<root> --graph-resident`")
+          "<root>`")
       // two narrow jobs, both collected as PRIMITIVES: the load
       // transient must price like the steady state (~16 B an edge), not
       // like boxed Rows (~100+ B each) — at the 2 M-node budget the Row

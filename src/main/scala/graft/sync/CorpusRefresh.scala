@@ -93,7 +93,6 @@ object CorpusRefresh {
       ivfIndexDir: Option[String] = None,
       vecCol: String = "embedding",
       maxSegments: Int = DefaultMaxSegments,
-      hnswIndexDir: Option[String] = None,
       graphIndexDir: Option[String] = None,
       codesDriftRatio: Double = DefaultCodesDriftRatio,
       graphShardDirs: Seq[(String, Option[String])] = Nil): DataFrame = {
@@ -136,7 +135,7 @@ object CorpusRefresh {
       // new codes segment (int8 needs no training; pq encodes against
       // the frozen base codebooks) — the ResidentGraphIndex load
       // contract refuses a sidecar that no longer covers the live set,
-      // so a refresh without this pass would stop --graph-resident
+      // so a refresh without this pass would stop --graph-index
       // serving at the next reload instead of serving stale vectors.
       // Tombstoned ids need no sidecar work (the resident load keys
       // codes by the adjacency relation's LIVE set). The O(corpus)
@@ -198,25 +197,6 @@ object CorpusRefresh {
             }
           }
         }
-      }
-      // the HNSW stack under the same delete-then-append discipline:
-      // every delta key is tombstoned from every layer (entry re-pinned
-      // if deleted), then added+changed nodes re-insert via the bulk
-      // HNSW insertion — a changed doc's old neighborhood is masked, its
-      // new vector links fresh. Fan-out check on layer 0 (the big one —
-      // upper layers accrue segments at the same rate or slower).
-      hnswIndexDir.foreach { dir =>
-        // added+changed keys re-append right below at the same
-        // deterministic level, so they count as survivors for the
-        // entry choice — a delta touching every top-layer member
-        // (corpus-wide re-embed) refreshes instead of aborting
-        graft.similarity.Knn.hnswDeleteIndex(spark, dir, deltaKeys, keyCol,
-          revived = Some(upserts.select(col(keyCol))),
-          revivedIdCol = keyCol)
-        if (!upserts.isEmpty)
-          graft.similarity.Knn.hnswAppendIndex(upserts, vecCol, keyCol, dir)
-        if (overThreshold(s"$dir/layer0"))
-          graft.similarity.Knn.hnswCompactIndex(spark, dir)
       }
       // store LAST: it is the delta's baseline, so a crash anywhere above
       // leaves a re-run deriving the same delta and healing the indexes.

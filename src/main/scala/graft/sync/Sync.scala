@@ -420,7 +420,6 @@ object Sync {
       now: () => Instant = () => Instant.now(),
       spoolDir: Option[String] = None,
       pooledChunkWords: Option[Int] = None,
-      hnswIndexDir: Option[String] = None,
       graphIndexDir: Option[String] = None,
       graphShardDirs: Seq[(String, Option[String])] = Nil): Map[String, Long] =
     timed {
@@ -431,7 +430,7 @@ object Sync {
           embedder, version = now().toEpochMilli, pooledChunkWords)
         val delta = CorpusRefresh.refresh(spark, snapshot, "text", "id",
           storeDir, lexIndexDir = lexIndexDir, ivfIndexDir = ivfIndexDir,
-          hnswIndexDir = hnswIndexDir, graphIndexDir = graphIndexDir,
+          graphIndexDir = graphIndexDir,
           graphShardDirs = graphShardDirs)
         val counts = delta.groupBy(col("status")).count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -12,6 +12,15 @@ class CliSpec extends SparkTestBase {
        |"tags":[{"name":"t"}],"highlighted_at":"2024-02-01T08:00:00Z",
        |"updated_at":"2024-02-01T08:00:00Z"}]}]}""".stripMargin.replace("\n", "")
 
+  /** Exit code + everything written to `System.err` meanwhile. */
+  private def captureErr(f: => Int): (Int, String) = {
+    val bos = new ByteArrayOutputStream()
+    val old = System.err
+    System.setErr(new PrintStream(bos, true))
+    try (scala.util.Try(f).getOrElse(-1), bos.toString)
+    finally System.setErr(old)
+  }
+
   private def capture(f: => Int): (Int, String) = {
     val bos = new ByteArrayOutputStream()
     val code = Console.withOut(new PrintStream(bos)) {
@@ -134,7 +143,7 @@ class CliSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-cli-graph").toString
     val pages1 = s"$dir/pages1"; val pages2 = s"$dir/pages2"
     val store = s"$dir/store"; val ckpt = s"$dir/ckpt"
-    val graph = s"$dir/graph"; val hnsw = s"$dir/hnsw"; val lexi = s"$dir/lex"
+    val graph = s"$dir/graph"; val lexi = s"$dir/lex"
     Files.createDirectories(java.nio.file.Paths.get(pages1))
     Files.createDirectories(java.nio.file.Paths.get(pages2))
     // numeric string ids — the Readwise id domain the graph family's
@@ -154,93 +163,79 @@ class CliSpec extends SparkTestBase {
     assert(capture(Cli.run(Array("sync", "--backfill", "--pages-dir", pages1,
       "--store", store, "--ckpt", ckpt), spark))._1 == 0)
 
-    // bad --type fails fast
-    assert(capture(Cli.run(Array("index", "--store", store, "--out", graph,
-      "--type", "bogus"), spark))._1 == 2)
+    // bad --type fails fast; hnsw is no longer an index type
+    Seq("bogus", "hnsw").foreach { t =>
+      assert(capture(Cli.run(Array("index", "--store", store, "--out", graph,
+        "--type", t), spark))._1 == 2, t)
+    }
 
-    // flat graph index via the CLI
+    // graph index via the CLI
     val (cg, outg) = capture(Cli.run(Array("index", "--store", store,
       "--out", graph, "--type", "graph", "--graph-k", "3", "--cells", "2",
       "--buckets", "4"), spark))
     assert(cg == 0, outg)
     assert(outg.contains("\"type\":\"graph\""), outg)
     assert(graft.similarity.Knn.graphIndexReady(graph))
+    // `serve --graph-index` is the resident walk: without the code
+    // sidecar it refuses at start-up and names the sidecar-only build
+    val (cs, errs) = captureErr(Cli.run(Array("serve", "--store", store,
+      "--graph-index", graph), spark))
+    assert(cs == 1 && errs.contains("--type graph-codes"), errs)
 
-    // the serve path: gateway + GraphIndex returns store rows keyed by
-    // the STORE's string ids (the idOf round-trip), best match first
-    val embedder = graft.embed.Embedder.Default
-    def gw(idx: graft.similarity.Knn.DenseIndex) =
-      new graft.serve.SearchGateway(
-        () => graft.sync.HighlightStore.read(spark, store).get, embedder,
-        Some(() => idx), 4)
-    def ask(g: graft.serve.SearchGateway, q: String, k: Int) = {
-      val Right(p) = graft.serve.SearchParams.fromHttp(q, k): @unchecked
-      g.search(p).toSeq
-    }
-    val gi = graft.similarity.Knn.GraphIndex.load(spark, graph,
-      ef = 8, hops = 3, idOf = (id: Long) => id.toString)
-    val rows = ask(gw(gi), "spark joins and shuffles", 3)
-    assert(rows.nonEmpty && rows.head("id") == "1", rows.map(_("id")))
-    assert(rows.head.contains("score") && rows.head.contains("text"))
-
-    // filtered requests fall back to the store scan (a walk carries no
-    // attr columns) — they still serve, from the one plan that can
-    // evaluate the predicate
-    val Right(fp) = graft.serve.SearchParams.fromHttp(
-      "spark joins and shuffles", 3, sourceType = Some("books")): @unchecked
-    assert(gw(gi).search(fp).toSeq.nonEmpty)
-
-    // delete: tombstone node 1; the walk stops serving it on reload
+    // delete: tombstone node 1 before the sidecar exists
     import spark.implicits._
     graft.similarity.Knn.adjDeleteIndex(spark, graph,
       Seq(1L).toDF("id"), "id")
-    val gi2 = graft.similarity.Knn.GraphIndex.load(spark, graph,
-      ef = 8, hops = 3, idOf = (id: Long) => id.toString)
-    val rows2 = ask(gw(gi2), "spark joins and shuffles", 3)
-    assert(rows2.nonEmpty && !rows2.exists(_("id") == "1"),
-      rows2.map(_("id")))
 
-    // the resident-code walk (`serve --graph-resident`): sidecar-only
-    // rebuild over the EXISTING (tombstoned) layout via --type
-    // graph-codes, then the gateway serves through ResidentGraphIndex —
-    // same contract, deleted node stays gone, one refine job a request
+    // sidecar-only build over the EXISTING (tombstoned) layout via
+    // --type graph-codes; then `serve --graph-index G`, with no other
+    // flag, serves through ResidentGraphIndex — store rows keyed by the
+    // STORE's string ids (the idOf round-trip), deleted node gone
     val (cc, outc) = capture(Cli.run(Array("index", "--store", store,
       "--out", graph, "--type", "graph-codes", "--pq-m", "8",
       "--pq-ksub", "4"), spark))
     assert(cc == 0, outc)
     assert(outc.contains("\"type\":\"graph-codes\""), outc)
     assert(graft.similarity.Knn.graphCodesReady(graph))
-    val ri = graft.similarity.Knn.ResidentGraphIndex.load(spark, graph,
-      ef = 8, idOf = (id: Long) => id.toString)
-    val rowsR = ask(gw(ri), "spark shuffles and joins again", 3)
+    val embedder = graft.embed.Embedder.Default
+    def gw(idx: () => graft.similarity.Knn.DenseIndex) =
+      new graft.serve.SearchGateway(
+        () => graft.sync.HighlightStore.read(spark, store).get, embedder,
+        Some(idx), 4)
+    def ask(g: graft.serve.SearchGateway, q: String, k: Int) = {
+      val Right(p) = graft.serve.SearchParams.fromHttp(q, k): @unchecked
+      g.search(p).toSeq
+    }
+    val Right(Some(served)) = Cli.denseIndex(spark,
+      GraftConfig(store, graphIndexDir = Some(graph), graphEf = 8)): @unchecked
+    assert(served().isInstanceOf[graft.similarity.Knn.ResidentGraphIndex])
+    val rowsR = ask(gw(served), "spark shuffles and joins again", 3)
     assert(rowsR.nonEmpty && rowsR.head("id") == "2", rowsR.map(_("id")))
+    assert(rowsR.head.contains("score") && rowsR.head.contains("text"))
     assert(!rowsR.exists(_("id") == "1"), rowsR.map(_("id")))
-    // filtered requests fall back to the store scan here too
-    assert(gw(ri).search(fp).toSeq.nonEmpty)
+    // filtered requests fall back to the store scan (an attr-less
+    // layout) — they still serve, from the one plan that can evaluate
+    // the predicate
+    val Right(fp) = graft.serve.SearchParams.fromHttp(
+      "spark joins and shuffles", 3, sourceType = Some("books")): @unchecked
+    assert(gw(served).search(fp).toSeq.nonEmpty)
     // graph-codes over a missing layout names the fix
     assert(capture(Cli.run(Array("index", "--store", store,
       "--out", s"$graph-none", "--type", "graph-codes"), spark))._1 == 1)
 
-    // sharded --graph-index list (`serve --graph-index a,b
-    // --graph-resident`): the list is resident-only, every shard must
-    // be ready, and the gateway serves through the fan-and-merge
-    // handle with the same string-id round-trip
+    // sharded --graph-index list (`serve --graph-index a,b`): every
+    // shard must be ready, and the gateway serves through the
+    // fan-and-merge handle with the same string-id round-trip
     assert(capture(Cli.run(Array("serve", "--store", store,
-      "--graph-index", s"$graph,$graph-none"), spark))._1 == 2)
-    assert(capture(Cli.run(Array("serve", "--store", store,
-      "--graph-index", s"$graph,$graph-none", "--graph-resident"),
-      spark))._1 == 1)
+      "--graph-index", s"$graph,$graph-none"), spark))._1 == 1)
     val sh = graft.similarity.Knn.ShardedResidentIndex.load(spark,
       Seq(graph -> None), ef = 8, idOf = (id: Long) => id.toString)
-    val rowsS = ask(gw(sh), "spark shuffles and joins again", 3)
+    val rowsS = ask(gw(() => sh), "spark shuffles and joins again", 3)
     assert(rowsS.nonEmpty && rowsS.head("id") == "2", rowsS.map(_("id")))
     assert(!rowsS.exists(_("id") == "1"), rowsS.map(_("id")))
 
-    // hnsw stack via the CLI, then `refresh --hnsw-index` drives it:
+    // `refresh --graph-index` maintains the layout and its sidecar:
     // id 5 removed upstream, id 2 edited, id 9 added
-    assert(capture(Cli.run(Array("index", "--store", store, "--out", hnsw,
-      "--type", "hnsw", "--graph-k", "3", "--levels", "1", "--cells", "2",
-      "--buckets", "4"), spark))._1 == 0)
     val texts2 = texts.filterNot(_._1 == "5").map {
       case ("2", _) => "2" -> "spark shuffles edited zebra content"
       case other => other
@@ -249,7 +244,7 @@ class CliSpec extends SparkTestBase {
       Files.writeString(java.nio.file.Paths.get(pages2, f"page$i%02d.json"),
         pageJson(id, tx)) }
     val (cr, outr) = capture(Cli.run(Array("refresh", "--pages-dir", pages2,
-      "--store", store, "--ckpt", ckpt, "--hnsw-index", hnsw), spark))
+      "--store", store, "--ckpt", ckpt, "--graph-index", graph), spark))
     assert(cr == 0, outr)
     assert(outr.contains("\"added\":1") && outr.contains("\"changed\":1")
       && outr.contains("\"removed\":1"), outr)
@@ -258,33 +253,13 @@ class CliSpec extends SparkTestBase {
     assert(capture(Cli.run(Array("refresh", "--pages-dir", pages2,
       "--store", store, "--ckpt", ckpt, "--graph-index", graph,
       "--graph-entry-ivf", "a,b"), spark))._1 == 2)
-    val idx = graft.similarity.Knn.HnswIndex.load(spark, hnsw)
-    val got9 = idx.search(embedder.embed("brand new quokka highlight"),
-      k = 3, ef = 12, hops = 4).collect()
-    assert(got9.nonEmpty && got9.head.getLong(0) == 9L, got9.toSeq)
-    val got5 = idx.search(embedder.embed("gardening tips for tomato plants"),
-      k = 8, ef = 16, hops = 4).collect()
-    assert(got5.nonEmpty && got5.forall(_.getLong(0) != 5L), got5.toSeq)
-
-    // the refreshed stack's layer0 is itself a --graph-index target:
-    // the gate-passing flat walk over the maintained graph
-    val gl0 = graft.similarity.Knn.GraphIndex.load(spark, s"$hnsw/layer0",
-      ef = 12, hops = 4, idOf = (id: Long) => id.toString)
-    val rows9 = ask(gw(gl0), "brand new quokka highlight", 1)
+    // the serving handle follows the refresh: the added doc serves, the
+    // removed one does not
+    val rows9 = ask(gw(served), "brand new quokka highlight", 1)
     assert(rows9.nonEmpty && rows9.head("id") == "9", rows9.map(_("id")))
-
-    // --hnsw-index serving: the stack behind the DenseIndex contract
-    // (asDense — the resident upper descent picks the entry, zero
-    // jobs), through the same gateway; filtered requests fall back
-    assert(graft.similarity.Knn.hnswIndexReady(spark, hnsw))
-    val hd = graft.similarity.Knn.HnswIndex.load(spark, hnsw)
-      .asDense(ef = 12, hops = 4, idOf = (id: Long) => id.toString)
-    val rowsH = ask(gw(hd), "brand new quokka highlight", 1)
-    assert(rowsH.nonEmpty && rowsH.head("id") == "9", rowsH.map(_("id")))
-    val Right(fh) = graft.serve.SearchParams.fromHttp(
-      "brand new quokka highlight", 2, sourceType = Some("books")): @unchecked
-    assert(gw(hd).search(fh).toSeq.nonEmpty)
-    assert(!graft.similarity.Knn.hnswIndexReady(spark, graph + "-missing"))
+    val rows5 = ask(gw(served), "gardening tips for tomato plants", 8)
+    assert(rows5.nonEmpty && !rows5.exists(_("id") == "5"),
+      rows5.map(_("id")))
 
     // lexical index via the CLI serves the refreshed corpus
     assert(capture(Cli.run(Array("index", "--store", store, "--out", lexi,
@@ -349,10 +324,11 @@ class CliSpec extends SparkTestBase {
       "spark shuffles and joins again", 3): @unchecked
     val rows = gw.search(p).toSeq
     assert(rows.nonEmpty && rows.head("id") == "2", rows.map(_("id")))
-    // serve refuses a manifest root without --graph-resident (the job
-    // walk serves one layout)
-    assert(capture(Cli.run(Array("serve", "--store", store,
-      "--graph-index", root), spark))._1 == 2)
+    // `serve --graph-index <root>` expands the manifest to that handle
+    val Right(Some(rootServed)) = Cli.denseIndex(spark,
+      GraftConfig(store, graphIndexDir = Some(root))): @unchecked
+    assert(rootServed().isInstanceOf[
+      graft.similarity.Knn.ShardedResidentIndex])
     // refresh --graph-index <root> expands the manifest and routes the
     // delta to its pmod shard; the re-loaded gateway serves the new doc
     val pages2 = s"$dir/pages2"
@@ -396,8 +372,6 @@ class CliSpec extends SparkTestBase {
       "--store", s"$dir/store", "--ckpt", s"$dir/ckpt"), spark))._1 == 0)
     assert(capture(Cli.run(Array("index", "--store", s"$dir/store",
       "--out", s"$dir/g", "--type", "graph"), spark))._1 == 2)
-    assert(capture(Cli.run(Array("index", "--store", s"$dir/store",
-      "--out", s"$dir/h", "--type", "hnsw"), spark))._1 == 2)
   }
 
   test("export writes shard dirs and prints the manifest; bad flags fail fast") {

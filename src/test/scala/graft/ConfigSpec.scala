@@ -66,9 +66,8 @@ class ConfigSpec extends AnyFunSuite {
     assert(e2.exists(_.contains("mutually exclusive")), e2)
     // walk knobs validate only when the graph path is selected
     val Left(e3) = GraftConfig.validated(GraftConfig("/s",
-      graphIndexDir = Some("/g"), graphEf = 0, graphHops = -1)): @unchecked
-    assert(e3.exists(_.contains("GRAPH_EF")) &&
-      e3.exists(_.contains("GRAPH_HOPS")), e3)
+      graphIndexDir = Some("/g"), graphEf = 0)): @unchecked
+    assert(e3.exists(_.contains("GRAPH_EF")), e3)
     assert(GraftConfig.validated(GraftConfig("/s", graphEf = 0)).isRight)
     // entry selection pairs with the graph mode
     val Left(e4) = GraftConfig.validated(GraftConfig("/s",
@@ -76,10 +75,10 @@ class ConfigSpec extends AnyFunSuite {
     assert(e4.exists(_.contains("requires")), e4)
     assert(GraftConfig.validated(GraftConfig("/s",
       graphIndexDir = Some("/g"), graphEntryIvfDir = Some("/i"))).isRight)
-    // defaults are the gate-measured config
+    // the default shortlist width
     val c = GraftConfig.orThrow(GraftConfig.validated(
       GraftConfig("/s", graphIndexDir = Some("/g"))))
-    assert(c.graphEf == 20 && c.graphHops == 3)
+    assert(c.graphEf == 20)
     // resolve: explicit walk-knob flags without the mode are rejected,
     // ambient env garbage is not
     val Left(e5) = GraftConfig.resolve(Map("graph-ef" -> "8"),
@@ -95,73 +94,11 @@ class ConfigSpec extends AnyFunSuite {
       Map.empty, GraftConfig.Command.Search): @unchecked
     assert(e6.exists(_.contains("--graph-index is not a search option")), e6)
     // env-layered serve config resolves the graph mode end-to-end
-    val Right(r) = GraftConfig.resolve(Map("graph-hops" -> "4"),
+    val Right(r) = GraftConfig.resolve(Map.empty,
       Map("GRAFT_STORE_DIR" -> "/s", "GRAFT_GRAPH_INDEX_DIR" -> "/g",
         "GRAFT_GRAPH_EF" -> "40"),
       GraftConfig.Command.Serve): @unchecked
-    assert(r.graphIndexDir.contains("/g") && r.graphEf == 40
-      && r.graphHops == 4)
-  }
-
-  test("graph-resident: requires the graph mode; env form parses and validates") {
-    // the resident walk serves the flat layout's pq-code sidecar — no
-    // meaning without --graph-index
-    val Left(e1) = GraftConfig.validated(GraftConfig("/s",
-      graphResident = true)): @unchecked
-    assert(e1.exists(e => e.contains("GRAPH_RESIDENT")
-      && e.contains("GRAPH_INDEX_DIR")), e1)
-    assert(GraftConfig.validated(GraftConfig("/s",
-      graphIndexDir = Some("/g"), graphResident = true)).isRight)
-    // flag layer (value-less, like --pooled) composes with the mode
-    val Right(r1) = GraftConfig.resolve(
-      Map("store" -> "/s", "graph-index" -> "/g"), Map.empty,
-      GraftConfig.Command.Serve, graphResidentFlag = true): @unchecked
-    assert(r1.graphResident)
-    // env layer parses true/false and rejects garbage
-    val Right(r2) = GraftConfig.resolve(Map("store" -> "/s",
-      "graph-index" -> "/g"), Map("GRAFT_GRAPH_RESIDENT" -> "1"),
-      GraftConfig.Command.Serve): @unchecked
-    assert(r2.graphResident)
-    val Left(e2) = GraftConfig.resolve(Map("store" -> "/s",
-      "graph-index" -> "/g"), Map("GRAFT_GRAPH_RESIDENT" -> "maybe"),
-      GraftConfig.Command.Serve): @unchecked
-    assert(e2.exists(_.contains("GRAFT_GRAPH_RESIDENT")), e2)
-    // ambient env garbage outside serve scope stays ignored
-    assert(GraftConfig.resolve(Map("store" -> "/s"),
-      Map("GRAFT_GRAPH_RESIDENT" -> "junk", "GRAFT_STORE_DIR" -> "/s"),
-      GraftConfig.Command.Search).isRight)
-  }
-
-  test("hnsw serving mode: exclusivity, walk knobs apply, entry-ivf rejected") {
-    // hnsw joins the one-dense-index rule
-    val Left(e1) = GraftConfig.validated(GraftConfig("/s",
-      graphIndexDir = Some("/g"), hnswIndexDir = Some("/h"))): @unchecked
-    assert(e1.exists(e => e.contains("mutually exclusive")
-      && e.contains("HNSW_INDEX_DIR")), e1)
-    val Left(e2) = GraftConfig.validated(GraftConfig("/s",
-      pqIndexDir = Some("/p"), hnswIndexDir = Some("/h"))): @unchecked
-    assert(e2.exists(_.contains("mutually exclusive")), e2)
-    // the shared walk knobs validate under the hnsw mode too
-    val Left(e3) = GraftConfig.validated(GraftConfig("/s",
-      hnswIndexDir = Some("/h"), graphEf = 0)): @unchecked
-    assert(e3.exists(_.contains("GRAPH_EF")), e3)
-    // entry-ivf pairs with the FLAT walk only — the stack descends its
-    // own upper layers
-    val Left(e4) = GraftConfig.validated(GraftConfig("/s",
-      hnswIndexDir = Some("/h"), graphEntryIvfDir = Some("/i"))): @unchecked
-    assert(e4.exists(_.contains("GRAPH_ENTRY_IVF")), e4)
-    // walk-knob flags are accepted with --hnsw-index
-    val Right(r) = GraftConfig.resolve(
-      Map("graph-ef" -> "32", "graph-hops" -> "4"),
-      Map("GRAFT_STORE_DIR" -> "/s", "GRAFT_HNSW_INDEX_DIR" -> "/h"),
-      GraftConfig.Command.Serve): @unchecked
-    assert(r.hnswIndexDir.contains("/h") && r.graphEf == 32
-      && r.graphHops == 4)
-    // serve-scoped like the other index flags
-    val Left(e5) = GraftConfig.resolve(
-      Map("store" -> "/s", "hnsw-index" -> "/h"),
-      Map.empty, GraftConfig.Command.Search): @unchecked
-    assert(e5.exists(_.contains("--hnsw-index is not a search option")), e5)
+    assert(r.graphIndexDir.contains("/g") && r.graphEf == 40)
   }
 
   test("sync matrix: PAGES_DIR without CHECKPOINT_DIR refuses; with it, validates") {

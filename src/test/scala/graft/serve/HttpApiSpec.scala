@@ -3,6 +3,8 @@ package graft.serve
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 class HttpApiSpec extends AnyFunSuite {
@@ -28,6 +30,24 @@ class HttpApiSpec extends AnyFunSuite {
       .POST(HttpRequest.BodyPublishers.ofString(body))
       .header("Content-Type", "application/json").build(),
       HttpResponse.BodyHandlers.ofString())
+
+  test("shutdown releases the handler threads instead of idling them for 60 s") {
+    // the threads that ran requests belong to the API's executor: after
+    // shutdown they must exit promptly, or an idle cached pool keeps the
+    // JVM alive for its 60 s keep-alive
+    val handlers = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val api = new HttpApi({ p =>
+      handlers.add(Thread.currentThread()); fakeSearch(p) }).start()
+    val c = HttpClient.newHttpClient()
+    val codes = (1 to 3).map(_ => post(c, api.boundPort, "/search",
+      """{"q":"spark","k":1}""").statusCode())
+    assert(codes.forall(_ == 200), codes)
+    api.shutdown()
+    assert(!handlers.isEmpty)
+    handlers.forEach(_.join(5000))
+    val alive = handlers.asScala.filter(_.isAlive)
+    assert(alive.isEmpty, alive.map(_.getName))
+  }
 
   test("POST /search returns a results envelope") {
     withApi { (c, port) =>

@@ -1,5 +1,7 @@
 package graft.similarity
 
+import java.util.concurrent.TimeUnit
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -131,39 +133,6 @@ class AdjIndexSpec extends SparkTestBase {
       val want = l0.search(qs.head, k = 5, ef = 12, hops = 3,
         entryId = idx.entryId).collect().toSeq
       assert(got == want, s"$got vs $want")
-    } finally rmTree(dir)
-  }
-
-  test("HnswIndex.reloading: a layer-0 append serves at the next request") {
-    val sub = emb.filter($"vec_id" < 300)
-      .select($"vec_id".cast("long").as("vec_id"), $"embedding")
-    val dir = java.nio.file.Files.createTempDirectory("hnswre").toString + "/i"
-    try {
-      Knn.buildHnswIndex(sub, "embedding", "vec_id", dir, maxLevel = 2,
-        upperM = 3, k0 = 5, buckets = 8, fp16 = false)
-      val h = Knn.HnswIndex.reloading(spark, dir)
-      val before = h.get.search(qv, k = 10, ef = 20, hops = 4).collect()
-      // stable generation: the same loaded instance, no spurious reloads
-      assert(h.get eq h.get)
-      // append a new node that duplicates the query vector, linked both
-      // ways to the current top hits — reachable in one hop from nodes
-      // the beam already visits
-      val top = before.take(3).map(_.getLong(0))
-      val withNew = sub.unionByName(
-        Seq((1000L, qv.toSeq)).toDF("vec_id", "embedding"))
-      val newEdges = top.flatMap(t => Seq((t, 1000L), (1000L, t)))
-        .toSeq.toDF("id_a", "id_b")
-      Knn.appendAdjacencyIndex(newEdges, withNew, "embedding", "vec_id",
-        s"$dir/layer0",
-        newNodes = Some(Seq(1000L).toDF("vec_id")))
-      // qv IS node 7's vector, so 7 and the appended 1000 tie at score 0
-      // and (score, id) puts 7 first — the new node must be served at
-      // the exact-duplicate score right behind it
-      val after = h.get.search(qv, k = 10, ef = 20, hops = 4).collect()
-      val newRow = after.find(_.getLong(0) == 1000L)
-      assert(newRow.exists(_.getDouble(1) < 1e-9),
-        s"appended node not served: ${after.toSeq}")
-      assert(!before.exists(_.getLong(0) == 1000L))
     } finally rmTree(dir)
   }
 
@@ -380,104 +349,35 @@ class AdjIndexSpec extends SparkTestBase {
     } finally { rmTree(del); rmTree(ref) }
   }
 
-  test("hnswDeleteIndex: masks every layer, re-pins a deleted entry, compaction folds the stack") {
-    val dir = java.nio.file.Files.createTempDirectory("hnswdel").toString + "/h"
-    try {
-      Knn.buildHnswIndex(emb, "embedding", "vec_id", dir,
-        maxLevel = 2, upperM = 3, k0 = 5, buckets = 8)
-      val meta0 = spark.read.parquet(s"$dir/meta").head()
-      val entry0 = meta0.getAs[Long]("entry")
-      // delete a non-entry batch: results never contain a dead id, and
-      // every layer's relation is masked
-      val dead = emb.filter($"vec_id" % 11 === 4 && $"vec_id" =!= entry0)
-        .select($"vec_id")
-      val deadSet = dead.as[Long].collect().toSet
-      Knn.hnswDeleteIndex(spark, dir, dead, "vec_id")
-      val got = Knn.HnswIndex.load(spark, dir)
-        .search(qv, k = 5, ef = 12, hops = 3, upperHops = 3).collect()
-      assert(got.nonEmpty && got.forall(r => !deadSet(r.getLong(0))))
-      (0 to 2).foreach { l =>
-        val rel = Knn.AdjIndex.load(spark, s"$dir/layer$l").relation
-        assert(rel.filter($"src".isin(deadSet.toSeq: _*) ||
-          $"dst".isin(deadSet.toSeq: _*)).isEmpty, s"layer$l not masked")
-      }
-      // deleting the ENTRY re-pins meta to the smallest surviving
-      // top-layer member before the tombstones land
-      Knn.hnswDeleteIndex(spark, dir,
-        spark.range(entry0, entry0 + 1).toDF("vec_id"), "vec_id")
-      val meta1 = spark.read.parquet(s"$dir/meta").head()
-      assert(meta1.getAs[Long]("entry") != entry0)
-      val top = Knn.AdjIndex.load(spark, s"$dir/layer2").relation
-      assert(top.filter($"src" === $"dst")
-        .agg(org.apache.spark.sql.functions.min($"src")).head().getLong(0)
-        == meta1.getAs[Long]("entry"))
-      assert(Knn.HnswIndex.load(spark, dir)
-        .search(qv, k = 5, ef = 12, hops = 3, upperHops = 3)
-        .collect().nonEmpty)
-      // compaction folds every layer to one segment; the walk survives
-      val before = Knn.HnswIndex.load(spark, dir)
-        .search(qv, k = 5, ef = 12, hops = 3, upperHops = 3)
-        .collect().toSeq
-      Knn.hnswCompactIndex(spark, dir)
-      (0 to 2).foreach { l => assert(
-        graft.sync.SegmentedIndex.resolve(spark, s"$dir/layer$l").get.size == 1) }
-      assert(Knn.HnswIndex.load(spark, dir)
-        .search(qv, k = 5, ef = 12, hops = 3, upperHops = 3)
-        .collect().toSeq == before)
-    } finally { rmTree(dir) }
-  }
-
-  test("hnswDeleteIndex(revived): a delta covering the whole top layer refreshes instead of aborting") {
-    val dir = java.nio.file.Files.createTempDirectory("hnswrev").toString + "/h"
-    try {
-      Knn.buildHnswIndex(emb, "embedding", "vec_id", dir,
-        maxLevel = 2, upperM = 3, k0 = 5, buckets = 8)
-      val entry0 = spark.read.parquet(s"$dir/meta").head().getAs[Long]("entry")
-      val topIds = Knn.AdjIndex.load(spark, s"$dir/layer2").relation
-        .filter($"src" === $"dst").select($"src".as("vec_id")).distinct()
-      assert(topIds.count() > 0)
-      // the corpus-wide re-embed shape: EVERY top-layer member is in the
-      // delta as a "changed" doc. Without revived, the guard refuses —
-      // a bare delete really would strand the stack entry-less.
-      assertThrows[IllegalStateException](
-        Knn.hnswDeleteIndex(spark, dir, topIds, "vec_id"))
-      // with revived = the same keys (they re-append right after at the
-      // same deterministic level), the delete proceeds and the entry is
-      // KEPT (dead-but-reviving): the append below restores its self-row
-      Knn.hnswDeleteIndex(spark, dir, topIds, "vec_id",
-        revived = Some(topIds), revivedIdCol = "vec_id")
-      assert(spark.read.parquet(s"$dir/meta").head()
-        .getAs[Long]("entry") == entry0)
-      val batch = emb.join(topIds, Seq("vec_id"), "left_semi")
-      Knn.hnswAppendIndex(batch, "embedding", "vec_id", dir)
-      val got = Knn.HnswIndex.load(spark, dir)
-        .search(qv, k = 5, ef = 12, hops = 3, upperHops = 3).collect()
-      assert(got.nonEmpty)
-      // the re-appended entry's self-row is live again in the top layer
-      assert(Knn.AdjIndex.load(spark, s"$dir/layer2").relation
-        .filter($"src" === entry0 && $"dst" === entry0).count() == 1L)
-    } finally { rmTree(dir) }
-  }
-
   test("buildHnswIndex failure is clean: no partial layer dirs, rebuild works") {
     val sub = emb.filter($"vec_id" < 300)
     val root = java.nio.file.Files.createTempDirectory("hnswfail").toString
     val dir = root + "/i"
     try {
-      // layers build CONCURRENTLY: throw only in the upper-layer graphs
-      // (m == upperM) so layer 0 (m == k0) can run — and possibly
-      // commit — before the failure surfaces. The cleanup contract is
-      // that NOTHING survives, committed sibling layers included.
+      // layers build CONCURRENTLY: the upper-layer graphs (m == upperM)
+      // throw only once layer 0 (m == k0) holds a running Spark job, so
+      // the root failure always cancels an in-flight sibling — whose
+      // cancellation must surface as suppressed, never as the cause.
+      // The cleanup contract is that NOTHING survives.
       val boom = new RuntimeException("upper layer boom")
       val ex = intercept[RuntimeException] {
         Knn.buildHnswIndex(sub, "embedding", "vec_id", dir, maxLevel = 2,
           upperM = 3, k0 = 5, buckets = 8, fp16 = false,
           graphFn = Some { (df, m) =>
-            if (m == 3) throw boom
+            if (m == 3) {
+              HnswFailGate.layer0Running.await(60, TimeUnit.SECONDS)
+              throw boom
+            }
+            // one task that blocks until the group cancel interrupts it
+            spark.range(1).rdd.foreach { _ =>
+              HnswFailGate.layer0Running.countDown()
+              Thread.sleep(60000)
+            }
             Knn.knnGraph(df, "embedding", "vec_id", topK = m)
           })
       }
-      assert(ex.getMessage == "upper layer boom")
+      assert(ex eq boom, ex)
+      assert(ex.getSuppressed.exists(_ ne boom), ex.getSuppressed.toSeq)
       // no torn stack: every layer dir AND meta are gone, the ready
       // probe reports absent, and no stale CURRENT pointer survives for
       // a workRoot-style rebuild guard to trust
@@ -496,4 +396,11 @@ class AdjIndexSpec extends SparkTestBase {
         .search(qv, k = 5, ef = 12, hops = 3).collect().nonEmpty)
     } finally rmTree(root)
   }
+}
+
+/** Orders [[AdjIndexSpec]]'s failed-build case: a task of layer 0's job
+  * opens it, so the upper layers fail only while that job runs. A
+  * top-level object, so tasks reach it in-JVM instead of serializing it. */
+object HnswFailGate {
+  val layer0Running = new java.util.concurrent.CountDownLatch(1)
 }

@@ -49,7 +49,7 @@ class ResidentGraphSpec extends SparkTestBase {
       val shortlist = idx.walk(qv, 32)
       assert(shortlist.length == 32)
       // a request wider than the deployed ef widens the walk instead of
-      // silently under-returning (GraphIndex's max(ef, k) contract)
+      // silently under-returning (the max(ef, k) contract)
       assert(idx.servingTopK(qv, 40, 0, None).length == 40)
       val sc = spark.sparkContext
       val before = sc.statusTracker.getJobIdsForGroup(null).length
@@ -69,7 +69,7 @@ class ResidentGraphSpec extends SparkTestBase {
         .collect().map(r => org.apache.spark.sql.Row(r.getLong(0),
           r.getDouble(1))).toSeq
       assert(got == want, s"$got vs $want")
-      // residency budget: past it, load refuses toward the job walk
+      // residency budget: past it, load refuses toward the sharded gateway
       val e = intercept[IllegalArgumentException] {
         Knn.ResidentGraphIndex.load(spark, dir, maxResidentNodes = 10L)
       }

@@ -91,54 +91,6 @@ class CorpusRefreshSpec extends SparkTestBase {
     } finally { Seq(store, lex, ivf, lexRef, ivfRef).foreach(rmrf) }
   }
 
-  test("refresh drives the HNSW stack: removals vanish, changes re-serve their new vector, adds findable, fan-out compacts") {
-    val store = tmp("cr4-store"); val hnsw = tmp("cr4-hnsw")
-    try {
-      HighlightStore.writeAtomic(snapA, store)
-      graft.similarity.Knn.buildHnswIndex(snapA, "embedding", "doc_id",
-        hnsw, maxLevel = 1, upperM = 3, k0 = 5, buckets = 4)
-      CorpusRefresh.refresh(spark, snapB, "text", "doc_id", store,
-        hnswIndexDir = Some(hnsw)).unpersist()
-      val idx = graft.similarity.Knn.HnswIndex.load(spark, hnsw)
-      // the changed doc serves its NEW vector (own-query distance ~0 at
-      // fp16); the removed doc appears in no walk
-      val got23 = idx.search(vec(23L, 5), k = 5, ef = 10, hops = 3).collect()
-      assert(got23.head.getLong(0) == 23L && got23.head.getDouble(1) < 1e-3,
-        got23.toSeq.toString)
-      val got7 = idx.search(vec(7L, 0), k = 10, ef = 20, hops = 4).collect()
-      assert(got7.nonEmpty && got7.forall(_.getLong(0) != 7L))
-      // every added node landed with its self-row AND reverse in-edges
-      // (day-one reachability from its neighborhood). vec() collides
-      // mod 13 — the corpus is exact-duplicate clusters, between which
-      // a beam walk legitimately can't travel — so insertion is gated
-      // on the relation, not on a cross-cluster walk (AdjIndexSpec
-      // gates walk-reachability on a non-degenerate corpus)
-      val rel0 = graft.similarity.Knn.AdjIndex
-        .load(spark, s"$hnsw/layer0").relation
-      (60L to 64L).foreach { i =>
-        assert(rel0.filter($"src" === i && $"dst" === i).count() == 1,
-          s"added $i has no self-row")
-        assert(rel0.filter($"dst" === i && $"src" =!= i).count() >= 1,
-          s"no reverse edge into added $i")
-      }
-      // a further refresh past the fan-out threshold compacts every
-      // layer back to one segment and the walk still serves
-      val snapC = snap((0L until 60L).filterNot(_ == 7L) ++ (60L to 64L),
-        Set(11L, 23L, 40L))
-      CorpusRefresh.refresh(spark, snapC, "text", "doc_id", store,
-        hnswIndexDir = Some(hnsw), maxSegments = 2).unpersist()
-      (0 to 1).foreach { l => assert(
-        SegmentedIndex.resolve(spark, s"$hnsw/layer$l").get.size == 1,
-        s"layer$l did not compact") }
-      assert(graft.similarity.Knn.HnswIndex.load(spark, hnsw)
-        .search(vec(40L, 5), k = 5, ef = 10, hops = 3).collect().nonEmpty)
-      val relC = graft.similarity.Knn.AdjIndex
-        .load(spark, s"$hnsw/layer0").relation
-      assert(relC.filter($"src" === 40L && $"dst" === 40L).count() == 1,
-        "changed 40 not re-inserted after compaction")
-    } finally { Seq(store, hnsw).foreach(rmrf) }
-  }
-
   test("refresh drives the flat graph + code sidecar: resident serving follows the delta") {
     val store = tmp("cr6-store"); val g = tmp("cr6-graph") + "/i"
     try {
@@ -148,11 +100,11 @@ class CorpusRefreshSpec extends SparkTestBase {
       graft.similarity.Knn.buildAdjacencyIndex(edges, snapA, "embedding",
         "doc_id", g, buckets = 4)
       graft.similarity.Knn.buildGraphCodes(spark, g, codec = "int8")
-      // ivf alongside, as `Cli serve --graph-resident --graph-entry-ivf`
-      // deploys it: this corpus is exact-duplicate clusters with no
-      // inter-cluster gradient (the hnsw test's documented degeneracy),
-      // so entry selection — not the walk — must land queries in their
-      // own cluster; the refresh maintains both artifacts in one pass
+      // ivf alongside, as `Cli serve --graph-index --graph-entry-ivf`
+      // deploys it: vec() collides mod 13, so this corpus is
+      // exact-duplicate clusters with no inter-cluster gradient, and
+      // entry selection — not the walk — must land queries in their own
+      // cluster; the refresh maintains both artifacts in one pass
       val ivf = tmp("cr6-ivf") + "/i"
       graft.similarity.Knn.ivfBuildIndex(snapA, "embedding", "doc_id",
         ivf, k = 8, iters = 2, trainFilter = col("doc_id") % 5 === 0,

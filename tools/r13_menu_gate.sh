@@ -12,8 +12,7 @@ env CONC_MODE=dense,filtered CONC_USERS=1 CONC_REQS=1 CONC_RECALL_QS=0 \
   sbt -batch "runMain graft.ConcurrencyProbe" 2>&1 |
   grep -E "CONCURRENCY3072" >> $log
 echo "== menu (one phase) ==" >> $log
-env CONC_MODE=dense,ivf,filtered,graph,hnsw,hybrid,lex,brute \
-  CONC_GRAPH_K=10 CONC_ENTRY=ivf CONC_RECALL_QS=0 \
+env CONC_MODE=dense,ivf,filtered,hybrid,lex,brute CONC_RECALL_QS=0 \
   sbt -batch "runMain graft.ConcurrencyProbe" 2>&1 |
   grep -E "CONCURRENCY3072" >> $log
 echo "== dense refine=128 ==" >> $log

@@ -3,7 +3,7 @@
 # (CONC_MODE=resident) at the locust protocol with the dense default
 # and ivf as in-phase controls. int8 is the promoted codec (near-
 # lossless walk distances); the pq rows price the scale codec's
-# fidelity cost. Protocol as r13_manifold_gate.sh: prebuild with a
+# fidelity cost. Protocol as r13_menu_gate.sh: prebuild with a
 # minimal pass, then measure each menu in ONE fresh JVM / one phase.
 set -x
 cd /root/repo
