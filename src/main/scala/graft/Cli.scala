@@ -44,6 +44,44 @@ object Cli {
         k.stripPrefix("--") -> v
     }.toMap
 
+  /** The flags each subcommand reads. */
+  private val readFlags: Map[String, Set[String]] = {
+    val config = Set("store", "embed-dim")
+    val syncIn = config ++ Set("pages-dir", "ckpt", "pooled", "chunk-words")
+    Map(
+      "health" -> Set.empty[String],
+      "sync" -> (syncIn ++ Set("backfill", "since", "fp16")),
+      "refresh" -> (syncIn ++
+        Set("lex-index", "ivf-index", "graph-index", "graph-entry-ivf")),
+      "search" -> (config ++ Set("k", "source-type", "author", "tags",
+        "from", "to", "hybrid", "mmr")),
+      "index" -> Set("store", "out", "type", "cells", "iters", "train-every",
+        "fp16", "attrs", "graph-k", "nprobe", "buckets", "pq-m", "pq-ksub",
+        "opq-sweeps", "shards", "codec", "codes"),
+      "export" -> Set("store", "out", "shard-tokens"),
+      "curate" -> Set("docs", "out", "quality", "lm-threshold", "lm-store",
+        "mix-alpha", "mix-frac", "shard-tokens", "report-only"),
+      "serve" -> (config ++ Set("http-port", "mcp-port", "ivf-index",
+        "pq-index", "pq-refine", "nprobe", "graph-index", "graph-entry-ivf",
+        "graph-ef")))
+  }
+
+  /** A command line carrying a flag its subcommand does not read — the
+    * refusal message naming it. An unread flag is a misspelling or a
+    * removed option; ignoring it would run something the user did not
+    * ask for (a removed serving mode falling back to the store scan). */
+  private object UnreadFlag {
+    def unapply(args: Seq[String]): Option[String] = args match {
+      case cmd +: rest if readFlags.contains(cmd) =>
+        // search's query text is positional, never a flag
+        (if (cmd == "search") rest.drop(1) else rest)
+          .find(a => a.startsWith("--") &&
+            !readFlags(cmd)(a.stripPrefix("--")))
+          .map(a => s"$a is not a $cmd option")
+      case _ => None
+    }
+  }
+
   /** Pages-from-directory transport: file N is page N; the "cursor" is the
     * next file index, mirroring nextPageCursor chaining. */
   private[graft] def dirClient(dir: String): ExportClient = {
@@ -100,6 +138,12 @@ object Cli {
       : Either[Int, Option[() => graft.similarity.Knn.DenseIndex]] = {
     import graft.similarity.Knn
     def refuse(code: Int, msg: String) = { System.err.println(msg); Left(code) }
+    // the store check's counterpart for the index: a query embedded at
+    // another width would be scored by a truncated dot product
+    def widthRefusal(d: String, dim: Int) =
+      refuse(2, s"index at $d holds $dim-dim vectors but the configured " +
+        s"embedder is ${cfg.embedderDim}-dim; pass --embed-dim $dim (or " +
+        s"GRAFT_EMBEDDER_DIM=$dim) or rebuild the index")
     def split(csv: String) = csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
     // graph node ids are the store's numeric string ids cast long at
     // build; idOf maps winners back so rehydration joins on the store's
@@ -150,6 +194,7 @@ object Cli {
         if (!h.get.hasRefine)
           return refuse(1, s"IVFADC index at $d has no refine payload — " +
             "rebuild with ivfPqBuildIndex(refine=true)")
+        if (h.get.dim != cfg.embedderDim) return widthRefusal(d, h.get.dim)
         // hasRefine is RE-CHECKED per request, not just here: the
         // reloading handle follows rebuilds, and a later generation
         // committed without the refine payload must become a
@@ -168,6 +213,7 @@ object Cli {
           return refuse(1, s"no IVF index at $d " +
             "(build one with Knn.ivfBuildIndex or drop --ivf-index)")
         val h = Knn.IvfIndex.reloading(spark, d)
+        if (h.get.dim != cfg.embedderDim) return widthRefusal(d, h.get.dim)
         Right(Some(() => h.get))
       case _ => Right(None)
     }
@@ -175,6 +221,10 @@ object Cli {
 
   def run(args: Array[String], spark: SparkSession,
       env: Map[String, String] = sys.env): Int = args.toSeq match {
+    case UnreadFlag(msg) =>
+      System.err.println(msg)
+      2
+
     case Seq("health", _*) =>
       println(Json.write(Health.check(spark)))
       0

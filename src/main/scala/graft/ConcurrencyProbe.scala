@@ -196,7 +196,7 @@ object ConcurrencyProbe {
     if (mode("filtered")) {
       // attribute-filtered serving (q132's shape under the gate): the
       // cells carry a label attr and every request filters on it via
-      // searchAdaptive. At CONC_FILTER_MOD=10 the predicate keeps ~10%
+      // servingTopK's widening ladder. At CONC_FILTER_MOD=10 the predicate keeps ~10%
       // of each probed cell — selective enough that post-hoc filtering
       // of 10 winners would starve, dense enough that the adaptive
       // probe almost never widens: the request stays ONE pruned job
@@ -221,7 +221,7 @@ object ConcurrencyProbe {
       run(spark, s"filtered(cells=$cellsK,nprobe=$nprobe,mod=$fmod)", n,
         users, reqsPerUser) { seed =>
           val qv = qvec(seed)
-          index.searchAdaptiveRows(qv, k = 10, nprobe = nprobe,
+          index.servingTopK(qv, k = 10, nprobe = nprobe,
             Some(col("label") === seed % fmod))
       }
     }
@@ -230,8 +230,8 @@ object ConcurrencyProbe {
       // the NARROW-predicate case `filtered` mode's comment prices by
       // implication (raise the modulus → the widening ladder): a
       // predicate matching ~n/nmod ≈ 10 rows starves every probe, so
-      // searchAdaptive burns log₂(cells) widening jobs per request to
-      // arrive at the exhaustive scan. servingTopKRouted — the
+      // servingTopK's ladder burns log₂(cells) widening jobs per
+      // request to arrive at the exhaustive scan. servingTopKRouted — the
       // gateway's filtered default — measures the match count (one
       // column-pruned job) and routes STRAIGHT to the pruned scan: two
       // jobs flat. Both run here same-phase, so the ladder tax is one
@@ -254,7 +254,7 @@ object ConcurrencyProbe {
       run(spark, s"routed_ladder(cells=$cellsK,nprobe=$nprobe,mod=$nmod)",
         n, users, reqsPerUser) { seed =>
           val qv = qvec(seed)
-          index.searchAdaptiveRows(qv, k = 10, nprobe = nprobe,
+          index.servingTopK(qv, k = 10, nprobe = nprobe,
             Some(col("nlabel") === seed % nmod))
       }
       run(spark, s"routed(cells=$cellsK,nprobe=$nprobe,mod=$nmod)",

@@ -671,7 +671,8 @@ object SparkEntry {
           iters = 2, trainFilter = col("vec_id") % 5 === 0)
       val qv = e.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).toArray
-      val probe = Knn.ivfSearchIndex(s, indexDir, qv, k = 10, nprobe = 2)
+      val probe = Knn.IvfIndex.load(s, indexDir)
+        .search(qv, k = 10, nprobe = 2)
       val exact = Knn.topK(e, "embedding", qv, 10, "vec_id")
         .select(col("vec_id").as("id"), lit(true).as("in_exact"))
       probe.join(exact, Seq("id"), "left")
@@ -707,7 +708,8 @@ object SparkEntry {
           iters = 2, trainFilter = col("vec_id") % 5 === 0, fp16 = true)
       val qv = e.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).toArray
-      val probe = Knn.ivfSearchIndex(s, indexDir, qv, k = 10, nprobe = 2)
+      val probe = Knn.IvfIndex.load(s, indexDir)
+        .search(qv, k = 10, nprobe = 2)
       val exact = Knn.topK(e, "embedding", qv, 10, "vec_id")
         .select(col("vec_id").as("id"), lit(true).as("in_exact"))
       probe.join(exact, Seq("id"), "left")
@@ -1517,7 +1519,8 @@ object SparkEntry {
       }
       val qv = e.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).toArray
-      val probe = Knn.ivfSearchIndex(s, indexDir, qv, k = 10, nprobe = 2)
+      val probe = Knn.IvfIndex.load(s, indexDir)
+        .search(qv, k = 10, nprobe = 2)
       val exact = Knn.topK(e, "embedding", qv, 10, "vec_id")
         .select(col("vec_id").as("id"), lit(true).as("in_exact"))
       probe.join(exact, Seq("id"), "left")
@@ -2469,8 +2472,8 @@ object SparkEntry {
       val qv = e.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).toArray
       val cond = col("label") % 3 === 1
-      val probe = Knn.ivfSearchIndex(s, indexDir, qv, k = 10, nprobe = 2,
-        filter = Some(cond))
+      val probe = Knn.IvfIndex.load(s, indexDir).search(qv, k = 10,
+        nprobe = 2, filter = Some(cond))
       val exact = Knn.topK(e.filter(cond), "embedding", qv, 10, "vec_id")
         .select(col("vec_id").as("id"), lit(true).as("in_exact"))
       probe.join(exact, Seq("id"), "left")

@@ -17,7 +17,7 @@ import scala.util.control.NonFatal
   *  - one JSON-RPC response per result row, `id` echoed as a string
   *    ("null" when the request had none), empty result set → single `[]`;
   *  - framing errors → -32700, protocol errors → -32600 (null id),
-  *    internal errors → -32603;
+  *    internal errors → -32603 with the cause's message as `data`;
   *  - graceful shutdown: stop accepting, then close in-flight connections
   *    after a drain timeout (server.py:231-294).
   *
@@ -96,9 +96,12 @@ final class McpServer(
       case e: McpProtocolException =>
         tryWrite(out, McpFraming.errorResponse(
           JsonRpcErrorCodes.InvalidRequest, e.getMessage))
-      case NonFatal(_) =>
+      case NonFatal(e) =>
+        // the cause rides as error.data: a client must be able to tell a
+        // failed index read from a bad query without the server's log
         tryWrite(out, McpFraming.errorResponse(
-          JsonRpcErrorCodes.InternalError, "Internal server error", requestId))
+          JsonRpcErrorCodes.InternalError, "Internal server error", requestId,
+          data = Some(Option(e.getMessage).getOrElse(e.getClass.getName))))
     }
   }
 

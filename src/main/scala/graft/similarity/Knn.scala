@@ -1333,11 +1333,6 @@ object Knn {
     graft.sync.SegmentedIndex.commit(spark, indexDir, existing :+ seg)
   }
 
-  /** Probe a persistent IVF index: the query picks its `nprobe` nearest
-    * cells from the k-row centroid sidecar (driver-side, like the query
-    * vector itself — k centroids are literals, not data), and the cell
-    * scan carries `centroid_id IN (probed…)` as a PartitionFilter: only
-    * the probed directories are read. Returns in-cell exact top-k. */
   /** Index health profile — the RE-TRAIN TRIGGER the frozen-geometry
     * maintenance contract defers to: per live cell (tombstones already
     * subtracted), member count and mean cosine residual to the frozen
@@ -1368,137 +1363,39 @@ object Knn {
       .orderBy(col("centroid_id"))
   }
 
-  /** `filter`: optional metadata predicate over the index's attr
-    * columns (see [[ivfBuildIndex]]'s `attrCols`), applied INSIDE the
-    * pruned cell scan — it reaches the parquet reader as a data filter
-    * on the probed partitions, so selective predicates cut scan work
-    * instead of starving the post-hoc result. */
-  def ivfSearchIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      queryVec: Array[Float], k: Int, nprobe: Int,
-      filter: Option[Column] = None): DataFrame = {
-    val probed = spark.read.parquet(s"$indexDir/centroids")
-      .select(col("centroid_id"),
-        cosine_distance(col("cvec"), typedLit(queryVec)).as("cdist"))
-      .orderBy(col("cdist").asc, col("centroid_id").asc)
-      .limit(nprobe)
-      .collect().map(_.getLong(0)).toSeq
-    require(probed.nonEmpty,
-      s"IVF index at $indexDir has an empty centroids sidecar")
-    // filter on the raw partition column with IN-list literals of its
-    // INFERRED type so the predicate lands in PartitionFilters — the type
-    // depends on session config (INT normally; STRING when partition-column
-    // type inference is off, and mistyped literals would silently match
-    // nothing); surface the canonical LONG type afterwards
-    val cells = readCells(spark, indexDir)
-    val inList: Seq[Any] =
-      cells.schema("centroid_id").dataType match {
-        case org.apache.spark.sql.types.IntegerType => probed.map(_.toInt)
-        case org.apache.spark.sql.types.LongType => probed
-        case _ => probed.map(_.toString)
-      }
-    // fp16 cells score through the fused one-pass decode+cosine kernel —
-    // the blob never widens to ARRAY<FLOAT> (schema-sniffed, so one probe
-    // path serves both layouts)
-    val score =
-      if (cells.columns.contains("emb16"))
-        graft.functions.fp16_cosine_distance(col("emb16"), typedLit(queryVec))
-      else cosine_distance(col("v"), typedLit(queryVec))
-    val scored = filter
-      .foldLeft(cells.filter(col("centroid_id").isin(inList: _*)))(
-        _ filter _)
-      .withColumn("score", score)
-    // a SOAR-spilled layout can hold BOTH copies of a vector inside the
-    // probed cells — collapse on a map-side-combinable min over narrow
-    // (id, score, cell) rows (the IvfIndex.search shape) so effective k
-    // is k distinct vectors, never k/2 + duplicates; unspilled indexes
-    // keep the untouched single-job plan
-    val ranked =
-      if (ivfSpillMeta(spark, indexDir).isEmpty) scored
-        .select(col("id"),
-          col("centroid_id").cast("long").as("centroid_id"), col("score"))
-      else scored.groupBy(col("id"))
-        .agg(min(col("score")).as("score"),
-          min(col("centroid_id").cast("long")).as("centroid_id"))
-        .select(col("id"), col("centroid_id"), col("score"))
-    ranked
-      .orderBy(col("score").asc, col("id").asc)
-      .limit(k)
-      .select(col("id"), col("centroid_id"), col("score"))
-  }
-
   /** Cost-ROUTED filtered search — the strategy picker every filtered
     * ANN deployment otherwise hardcodes: measure the predicate's match
     * count, then either
-    *  - `route = "scan"` (matches ≤ `bruteThreshold`): ONE exhaustive
-    *    filtered scan over the index — exact by construction. A rare
+    *  - `route = "scan"` (matches ≤ `bruteThreshold`): ONE full-width
+    *    filtered probe over the index — exact by construction. A rare
     *    predicate is the case where the probe ladder pays worst: cells
-    *    hold ~no matches, so [[IvfIndex.searchAdaptive]] burns
-    *    log₂(cells) widening jobs to arrive at exactly this plan, and
-    *    recall before the last widening is luck. The scan reads the
-    *    attr column first (parquet row-group stats prune on the
-    *    predicate), so "exhaustive" costs matching row groups, not the
-    *    corpus;
+    *    hold ~no matches, so widening burns log₂(cells) jobs to arrive
+    *    at exactly this plan, and recall before the last widening is
+    *    luck. The scan reads the attr column first (parquet row-group
+    *    stats prune on the predicate), so "exhaustive" costs matching
+    *    row groups, not the corpus;
     *  - `route = "probe"` (matches > threshold): the standard pruned
-    *    probe ([[ivfSearchIndex]]) — plentiful matches mean the probed
-    *    cells hold ≥ k of them and pruning pays.
-    * The count job reads ONLY the predicate's columns (column pruning);
-    * at 100 TB replace it with a per-cell attr-stats sidecar read (the
-    * [[ivfCellStats]] discipline) — the routing CONTRACT is the same:
-    * route on measured selectivity, never folklore. Returns
+    *    probe ([[IvfIndex.search]] at `nprobe`) — plentiful matches mean
+    *    the probed cells hold ≥ k of them and pruning pays.
+    * The count job reads ONLY the predicate's columns (column pruning)
+    * and counts DISTINCT vectors on a SOAR-spilled layout; the serving
+    * edge prices from the build-time attr-stats sidecar instead
+    * ([[IvfServing.servingTopKRouted]]) — the routing CONTRACT is the
+    * same: route on measured selectivity, never folklore. Returns
     * (id, centroid_id, score, route), the route constant per request —
     * oracle-gated end-to-end (q159: the replay computes the same count,
     * takes the same CASE branch, and must produce the same rows). */
   def ivfRoutedSearchIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queryVec: Array[Float], k: Int, nprobe: Int,
       filter: Column, bruteThreshold: Long): DataFrame = {
-    val cells = readCells(spark, indexDir)
-    // a SOAR-spilled layout holds every vector twice: the selectivity
-    // measurement must count DISTINCT vectors (a plain count() reads 2×
-    // the true match count and mis-routes near the threshold), and the
-    // scan branch must collapse the copies before limit(k) — otherwise
-    // effective k halves and callers see duplicate ids
-    val spilled = ivfSpillMeta(spark, indexDir).isDefined
-    val matched = cells.filter(filter)
-    val matches =
-      if (spilled) matched.agg(countDistinct(col("id"))).head().getLong(0)
-      else matched.count()
-    if (matches <= bruteThreshold) {
-      val score =
-        if (cells.columns.contains("emb16"))
-          graft.functions.fp16_cosine_distance(col("emb16"),
-            typedLit(queryVec))
-        else cosine_distance(col("v"), typedLit(queryVec))
-      val scored = matched.withColumn("score", score)
-      val ranked =
-        if (!spilled) scored.select(col("id"),
-          col("centroid_id").cast("long").as("centroid_id"), col("score"))
-        else scored.groupBy(col("id"))
-          .agg(min(col("score")).as("score"),
-            min(col("centroid_id").cast("long")).as("centroid_id"))
-          .select(col("id"), col("centroid_id"), col("score"))
-      ranked
-        .orderBy(col("score").asc, col("id").asc)
-        .limit(k)
-        .select(col("id"), col("centroid_id"), col("score"),
-          lit("scan").as("route"))
-    } else
-      // ivfSearchIndex carries its own spill dedup, so the probe branch
-      // returns distinct ids on either layout
-      ivfSearchIndex(spark, indexDir, queryVec, k, nprobe, Some(filter))
-        .withColumn("route", lit("probe"))
+    val index = IvfIndex.load(spark, indexDir)
+    probeWidths[DataFrame](index.numCells, nprobe,
+        Some(index.measuredMatches(filter) -> bruteThreshold), _ => false) {
+      (width, full) => index.search(queryVec, k, width, Some(filter))
+        .withColumn("route", lit(if (full) "scan" else "probe"))
+    }
   }
 
-  /** Serving handle over a persistent IVF index: the k-row centroid
-    * sidecar is collected ONCE at load and lives on the driver (it is
-    * query-plan state, like a query vector — k × dim floats), so each
-    * request costs exactly one Spark job: probe selection is local
-    * arithmetic, and the cell scan carries `centroid_id IN (probed…)` as a
-    * PartitionFilter. [[Knn.ivfSearchIndex]] re-reads the sidecar per call
-    * (the one-shot / verification form); under concurrent serving that is
-    * one extra job per request for data that never changes — this handle
-    * is the steady-state shape. Schema-sniffs fp16 cells and scores them
-    * through the fused decode+cosine kernel. Thread-safe: all mutable
-    * state is constructed at load. */
   /** What the serving edge needs from a dense ANN index, independent of
     * its storage layout — [[SearchGateway]] routes filterless and
     * attr-filtered requests through this so the default dense mode is a
@@ -1531,14 +1428,159 @@ object Knn {
       servingTopK(queryVec, k, nprobe, Some(filter))
   }
 
-  final class IvfIndex private (spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[(Long, Array[Float])],
-      cells: DataFrame, inListType: org.apache.spark.sql.types.DataType,
-      fp16: Boolean, spilled: Boolean,
-      indexDir: Option[String] = None) extends DenseIndex {
+  /** The probe-width policy of every IVF request — the ONE place both
+    * layouts ([[IvfServing]]) and [[ivfRoutedSearchIndex]] decide how
+    * many cells a request reads. `attempt(width, full)` runs one probe
+    * over the `width` nearest cells; `full` marks the routed pass.
+    *  - route: `priced` = Some((matches, threshold)) with matches ≤
+    *    threshold (inclusive) goes STRAIGHT to one full-width attempt —
+    *    exact by construction, and the plan the ladder reaches only
+    *    after log₂(cells) starved attempts;
+    *  - ladder: otherwise start at `nprobe` (clamped to [1, cells]) and
+    *    DOUBLE the width while `starved(result)` and cells remain — a
+    *    selective predicate can leave fewer than k matches in the
+    *    nearest cells (filtered-ANN recall starvation), and the worst
+    *    case degrades to the full-width scan that is the only correct
+    *    answer there. */
+  private def probeWidths[A](numCells: Int, nprobe: Int,
+      priced: Option[(Long, Long)], starved: A => Boolean)(
+      attempt: (Int, Boolean) => A): A =
+    if (priced.exists { case (matches, threshold) => matches <= threshold })
+      attempt(numCells, true)
+    else {
+      var width = math.max(1, math.min(nprobe, numCells))
+      var res = attempt(width, false)
+      while (width < numCells && starved(res)) {
+        width = math.min(width * 2, numCells)
+        res = attempt(width, false)
+      }
+      res
+    }
+
+  /** Cell ids as literals of the cells' partition-column type, so
+    * `centroid_id IN (…)` lands in PartitionFilters and un-probed cell
+    * directories are never listed. The type is INFERRED from the
+    * directory names and depends on session config (INT normally;
+    * STRING when partition-column type inference is off) — mistyped
+    * literals would silently match nothing. */
+  private def cellLiterals(cellIds: Seq[Long],
+      partType: org.apache.spark.sql.types.DataType): Seq[Any] =
+    partType match {
+      case org.apache.spark.sql.types.IntegerType => cellIds.map(_.toInt)
+      case org.apache.spark.sql.types.LongType => cellIds
+      case _ => cellIds.map(_.toString)
+    }
+
+  /** [[DenseIndex]] over an IVF cell layout — the serving policy
+    * [[IvfIndex]] and [[IvfPqIndex.asDense]] share. Each layout supplies
+    * only its per-attempt probe ([[probeRows]]); the width policy
+    * ([[probeWidths]]), the predicate pricing and the query-width check
+    * live here once. Pricing state is collected lazily, once per
+    * instance. */
+  sealed abstract class IvfServing(indexDir: String, cells: DataFrame,
+      spilled: Boolean) extends DenseIndex {
 
     /** Number of cells in the frozen geometry — the nprobe ceiling. */
+    def numCells: Int
+
+    /** Vector width of the frozen geometry — the only query width the
+      * index can score (a narrower dot product would truncate). */
+    def dim: Int
+
+    /** One probe over the `width` nearest cells, collected: ≤ k
+      * `(id, score)` rows ordered by (score, id). */
+    protected def probeRows(queryVec: Array[Float], k: Int, width: Int,
+        filter: Option[Column]): Array[org.apache.spark.sql.Row]
+
+    /** One pruned probe filterless; filtered, the widening ladder. */
+    def servingTopK(queryVec: Array[Float], k: Int, nprobe: Int,
+        filter: Option[Column]): Array[org.apache.spark.sql.Row] = {
+      checkWidth(queryVec)
+      probeWidths[Array[org.apache.spark.sql.Row]](numCells, nprobe, None,
+          rows => filter.nonEmpty && rows.length < k) {
+        (width, _) => probeRows(queryVec, k, width, filter)
+      }
+    }
+
+    /** [[DenseIndex.servingTopKRouted]]: price the predicate — an
+      * equality on a stats-covered attr reads its match count from the
+      * build-time sidecar (FREE: driver map lookup, the 100-TB routing
+      * contract), anything else measures it ([[measuredMatches]]) —
+      * then
+      *  - matches ≤ nprobe·avgCellRows → ONE full-width probe (exact by
+      *    construction; fewer vector rows than even the first probe
+      *    attempt would touch, and none of the ladder's widenings);
+      *  - otherwise → the widening ladder, which now starts with
+      *    enough matches in reach that widening is rare.
+      * After deletes the sidecar counts are upper bounds (tombstones
+      * don't subtract), which only biases the route toward the ladder —
+      * both branches stay exact; compaction re-exacts them. */
+    override def servingTopKRouted(queryVec: Array[Float], k: Int,
+        nprobe: Int, filter: Column): Array[org.apache.spark.sql.Row] = {
+      checkWidth(queryVec)
+      val matches = statsPrice(attrStats, filter)
+        .getOrElse(measuredMatches(filter))
+      val threshold =
+        (avgCellRows * math.max(1, math.min(nprobe, numCells))).toLong
+      probeWidths[Array[org.apache.spark.sql.Row]](numCells, nprobe,
+          Some(matches -> threshold), _.length < k) {
+        (width, _) => probeRows(queryVec, k, width, Some(filter))
+      }
+    }
+
+    /** Refuse a query of another width BEFORE any Spark job: the
+      * scoring kernels would otherwise truncate to the shorter operand
+      * and rank rows by a meaningless number. */
+    private def checkWidth(queryVec: Array[Float]): Unit =
+      require(queryVec.length == dim,
+        s"query vector is ${queryVec.length}-dim but the index at " +
+          s"$indexDir is $dim-dim; embed queries at the index's width")
+
+    /** The predicate's match count, measured: one scan of ONLY its
+      * columns (vectors never read), counting DISTINCT vectors on a
+      * SOAR-spilled layout (a plain count reads 2× and mis-routes near
+      * the threshold). */
+    private[Knn] def measuredMatches(filter: Column): Long = {
+      val matched = cells.filter(filter)
+      if (spilled) matched.agg(countDistinct(col("id"))).head().getLong(0)
+      else matched.count()
+    }
+
+    /** Mean vectors per cell — the routing yardstick: a probe attempt
+      * at width w reads ~w·avgCellRows rows, so a predicate matching
+      * fewer than that is cheaper to scan outright. */
+    private lazy val avgCellRows: Double =
+      measuredMatches(lit(true)).toDouble / math.max(1, numCells)
+
+    /** Build-time attr stats, aggregated to the driver: covered-column
+      * set + global `(column, value) → distinct match count` (exactly
+      * ÷2 on a spilled layout, where every id holds two copies).
+      * ≤ AttrStatsMaxValues entries per column by the sidecar's cap, so
+      * this is query-plan-sized state like the centroids. None when any
+      * live segment predates the sidecar — routing then measures. */
+    private lazy val attrStats
+        : Option[(Set[String], Map[(String, String), Long])] =
+      collectAttrStats(cells.sparkSession, indexDir,
+        if (spilled) 2L else 1L)
+  }
+
+  /** Serving handle over a persistent IVF index: the k-row centroid
+    * sidecar is collected ONCE at load and lives on the driver (it is
+    * query-plan state, like a query vector — k × dim floats), so each
+    * request costs exactly one Spark job: probe selection is local
+    * arithmetic, and the cell scan carries `centroid_id IN (probed…)` as
+    * a PartitionFilter — only the probed directories are read.
+    * Schema-sniffs fp16 cells and scores them through the fused
+    * decode+cosine kernel. Thread-safe: all mutable state is
+    * constructed at load. */
+  final class IvfIndex private (centroids: Array[(Long, Array[Float])],
+      cells: DataFrame, inListType: org.apache.spark.sql.types.DataType,
+      fp16: Boolean, spilled: Boolean, indexDir: String)
+      extends IvfServing(indexDir, cells, spilled) {
+
     def numCells: Int = centroids.length
+
+    val dim: Int = centroids.head._2.length
 
     /** Metadata columns the cells carry beyond the index layout — the
       * predicates a filtered probe may reference. Empty for an index
@@ -1546,6 +1588,12 @@ object Knn {
     val attrColumns: Seq[String] =
       cells.columns.toSeq.filterNot(Set("id", "v", "emb16", "centroid_id"))
 
+    /** In-cell exact top-k over the `nprobe` cosine-nearest cells:
+      * (id, centroid_id, score) ordered by (score, id). `filter`:
+      * optional metadata predicate over [[attrColumns]], applied INSIDE
+      * the pruned cell scan — it reaches the parquet reader as a data
+      * filter on the probed partitions, so selective predicates cut
+      * scan work instead of starving the post-hoc result. */
     def search(queryVec: Array[Float], k: Int, nprobe: Int,
         filter: Option[Column] = None): DataFrame = {
       val probed = centroids
@@ -1553,24 +1601,19 @@ object Knn {
           (cid, graft.functions.VectorMath.cosineDistance(cv, queryVec)) }
         .sortBy { case (cid, d) => (d, cid) }
         .take(nprobe).map(_._1).toSeq
-      val inList: Seq[Any] = inListType match {
-        case org.apache.spark.sql.types.IntegerType => probed.map(_.toInt)
-        case org.apache.spark.sql.types.LongType => probed
-        case _ => probed.map(_.toString)
-      }
       val score =
         if (fp16) graft.functions.fp16_cosine_distance(
           col("emb16"), typedLit(queryVec))
         else cosine_distance(col("v"), typedLit(queryVec))
       val scored = filter
-        .foldLeft(cells.filter(col("centroid_id").isin(inList: _*)))(
-          _ filter _)
+        .foldLeft(cells.filter(col("centroid_id")
+          .isin(cellLiterals(probed, inListType): _*)))(_ filter _)
         .withColumn("score", score)
       // spilled layout: a vector whose primary AND secondary cells are
       // both probed scores twice with the same distance — collapse via
       // a map-side-combinable min on narrow (id, score, cell) rows, the
-      // Soar.topKProbes shape; unspilled indexes keep the untouched
-      // single-job plan
+      // Soar.topKProbes shape, so effective k is k distinct vectors;
+      // unspilled indexes keep the untouched single-job plan
       val ranked =
         if (!spilled) scored
           .select(col("id"),
@@ -1586,114 +1629,10 @@ object Knn {
         .select(col("id"), col("centroid_id"), col("score"))
     }
 
-    /** Filtered search with adaptive probe widening: a selective
-      * predicate can leave fewer than k matches in the `nprobe` nearest
-      * cells (the filtered-ANN recall starvation problem), so the probe
-      * DOUBLES its cell set until k rows survive or the whole geometry
-      * has been scanned — each widening is one more pruned job, and the
-      * worst case (predicate matches < k rows anywhere) degrades to the
-      * brute-force-over-index scan that is the only correct answer
-      * there. Unfiltered requests never widen (the first probe's k rows
-      * are the cells' true top-k). */
-    def searchAdaptive(queryVec: Array[Float], k: Int, nprobe: Int,
-        filter: Option[Column]): DataFrame = {
-      var np = math.max(1, math.min(nprobe, numCells))
-      var res = search(queryVec, k, np, filter)
-      if (filter.isEmpty) return res
-      while (np < numCells && res.count() < k) {
-        np = math.min(np * 2, numCells)
-        res = search(queryVec, k, np, filter)
-      }
-      res
-    }
-
-    /** [[searchAdaptive]]'s SERVING form: each widening attempt runs as
-      * exactly one job (the probe collects its ≤ k rows and the length
-      * decides widening — no separate count pass, no re-execution of
-      * the final plan), so the common case costs the same single pruned
-      * job as an unfiltered probe. Returns (id, centroid_id, score)
-      * rows ordered by (score, id). */
-    def searchAdaptiveRows(queryVec: Array[Float], k: Int, nprobe: Int,
-        filter: Option[Column]): Array[org.apache.spark.sql.Row] = {
-      var np = math.max(1, math.min(nprobe, numCells))
-      var rows = search(queryVec, k, np, filter).collect()
-      while (filter.nonEmpty && rows.length < k && np < numCells) {
-        np = math.min(np * 2, numCells)
-        rows = search(queryVec, k, np, filter).collect()
-      }
-      rows
-    }
-
-    /** [[DenseIndex]]: one pruned job filterless, the adaptive-widening
-      * loop filtered — (id, score) with the cells' cosine distance. */
-    def servingTopK(queryVec: Array[Float], k: Int, nprobe: Int,
+    protected def probeRows(queryVec: Array[Float], k: Int, width: Int,
         filter: Option[Column]): Array[org.apache.spark.sql.Row] =
-      searchAdaptiveRows(queryVec, k, nprobe, filter)
+      search(queryVec, k, width, filter).collect()
         .map(r => org.apache.spark.sql.Row(r.get(0), r.getDouble(2)))
-
-    /** Mean rows per cell — the routing yardstick: a probe attempt at
-      * width w reads ~w·avgCellRows rows, so a predicate matching fewer
-      * than that is cheaper to scan outright. Priced ONCE, lazily (one
-      * column-pruned count on the first routed request); distinct ids
-      * on a spilled layout. */
-    private lazy val avgCellRows: Double = {
-      val n =
-        if (spilled) cells.agg(countDistinct(col("id"))).head().getLong(0)
-        else cells.count()
-      n.toDouble / math.max(1, numCells)
-    }
-
-    /** Build-time attr stats, aggregated to the driver ONCE per load:
-      * covered-column set + global `(column, value) → distinct match
-      * count` (per-cell row counts summed; exactly ÷2 on a spilled
-      * layout, where every id holds two copies). ≤ AttrStatsMaxValues
-      * entries per column by the sidecar's cap, so this is query-plan-
-      * sized state like the centroids. None when any live segment
-      * predates the sidecar — routing then prices by measurement. */
-    private lazy val attrStats: Option[(Set[String], Map[(String, String), Long])] =
-      indexDir.flatMap(d =>
-        Knn.collectAttrStats(spark, d, if (spilled) 2L else 1L))
-
-    /** The predicate's match count from [[attrStats]] — exact for a
-      * single `attr === literal` on a stats-covered column of a
-      * string/integral/boolean type (the shapes whose internal-literal
-      * string form equals the SQL cast the sidecar stored; a covered
-      * column with an absent value keys to 0 — the stats are complete
-      * for covered columns), and an UPPER BOUND for a conjunction with
-      * at least one such branch (min over the priced branches — the
-      * reference's author+tag combos route on their rarest attr). An
-      * upper bound only ever biases the route toward the probe branch,
-      * and both branches are exact. Anything else → None → measured. */
-    private def statsMatchCount(filter: Column): Option[Long] =
-      Knn.statsPrice(attrStats, filter)
-
-    /** [[DenseIndex.servingTopKRouted]]: price the predicate — an
-      * equality on a stats-covered attr reads its match count from the
-      * build-time sidecar (FREE: driver map lookup, the 100-TB routing
-      * contract), anything else measures it (one scan of ONLY its
-      * columns — vectors never read) — then
-      *  - matches ≤ nprobe·avgCellRows → ONE exhaustive filtered scan
-      *    (exact by construction; fewer vector rows than even the
-      *    first probe attempt would touch, and none of the adaptive
-      *    ladder's widening jobs);
-      *  - otherwise → the standard adaptive probe, which now starts
-      *    with enough matches in reach that widening is rare.
-      * After deletes the sidecar counts are upper bounds (tombstones
-      * don't subtract), which only biases the route toward the probe
-      * branch — both branches stay exact; compaction re-exacts them. */
-    override def servingTopKRouted(queryVec: Array[Float], k: Int,
-        nprobe: Int, filter: Column): Array[org.apache.spark.sql.Row] = {
-      val matches = statsMatchCount(filter).getOrElse {
-        val matched = cells.filter(filter)
-        if (spilled) matched.agg(countDistinct(col("id"))).head().getLong(0)
-        else matched.count()
-      }
-      val np0 = math.max(1, math.min(nprobe, numCells))
-      if (matches <= (avgCellRows * np0).toLong)
-        search(queryVec, k, numCells, Some(filter)).collect()
-          .map(r => org.apache.spark.sql.Row(r.get(0), r.getDouble(2)))
-      else servingTopK(queryVec, k, nprobe, Some(filter))
-    }
   }
 
   object IvfIndex {
@@ -1708,11 +1647,10 @@ object Knn {
       // the segment list resolves ONCE at load (like the centroids):
       // appends committed later serve through a re-load, never half-seen
       val cells = readCells(spark, indexDir)
-      new IvfIndex(spark, cents, cells,
+      new IvfIndex(cents, cells,
         cells.schema("centroid_id").dataType,
         cells.columns.contains("emb16"),
-        spilled = ivfSpillMeta(spark, indexDir).isDefined,
-        indexDir = Some(indexDir))
+        spilled = ivfSpillMeta(spark, indexDir).isDefined, indexDir)
     }
 
     /** [[load]] behind a per-request generation check
@@ -3628,7 +3566,7 @@ object Knn {
     /** Filtered resident serving: the walk navigates on GEOMETRY and
       * cannot prune on attributes, so the predicate applies in the
       * refine job (self-rows carry the attr columns) and the shortlist
-      * widens when it starves — the [[IvfIndex.searchAdaptiveRows]]
+      * widens when it starves — the IVF ladder's ([[probeWidths]])
       * discipline with the widening MEASURED, not laddered blindly:
       *  1. walk at the deployed ef; refine + filter (one job). k
       *     survivors → done, same job shape as a filterless request;
@@ -4237,14 +4175,6 @@ object Knn {
     opqRot.foreach(saveRotation(corpus.sparkSession, indexDir, _))
   }
 
-  /** Probe an [[ivfPqBuildIndex]] layout: the query picks its nprobe
-    * L2-nearest cells from the centroid sidecar (driver-side, matching
-    * the index's cell metric), and for EACH probed cell builds the
-    * residual query's LUT (`q − c` sliced against the shared codebooks)
-    * — per-cell LUTs because residuals are cell-relative. Each cell
-    * reads as its own partition-pruned scan scored by its own codegen'd
-    * [[graft.functions.PqAdcScore]]; the union's top-k merges nprobe
-    * pruned scans. Scores approximate squared L2 of (q − v). */
   /** The OPQ rotation sidecar of an [[ivfPqBuildIndex]] layout, if the
     * index was built with `opqSweeps > 0` (absent → identity). */
   def loadRotation(
@@ -4266,68 +4196,26 @@ object Knn {
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/rotation")
   }
 
-  def ivfPqSearch(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      queryVec: Array[Float], k: Int, nprobe: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    require(cents.nonEmpty, s"no centroids at $indexDir")
-    val cb = collectCodebooks(spark.read.parquet(s"$indexDir/codebooks"))
-    // OPQ layout: the index lives in rotated space — rotate the query
-    // into it once, then every downstream step is unchanged
-    val queryVecR = loadRotation(spark, indexDir)
-      .map(graft.functions.RotMath.rotateLocal(queryVec, _))
-      .getOrElse(queryVec)
-    def l2sqLocal(a: Array[Float], b: Array[Float]): Double = {
-      var aa = 0.0; var ab = 0.0; var bb = 0.0
-      var i = 0
-      while (i < a.length) {
-        aa += a(i).toDouble * a(i); ab += a(i).toDouble * b(i)
-        bb += b(i).toDouble * b(i); i += 1
-      }
-      aa - 2.0 * ab + bb
-    }
-    val probed = cents
-      .map { case (cid, cv) => (cid, l2sqLocal(queryVecR, cv)) }
-      .sortBy { case (cid, d) => (d, cid) }
-      .take(nprobe)
-    val cells = spark.read.parquet(s"$indexDir/cells")
-    val inListType = cells.schema("centroid_id").dataType
-    val legs = probed.map { case (cid, _) =>
-      val cv = cents.find(_._1 == cid).get._2
-      val qr = queryVecR.zip(cv).map { case (a, b) => a - b }
-      val lut = graft.functions.PqMath.lut(qr, cb)
-      val cidLit: Any = inListType match {
-        case org.apache.spark.sql.types.IntegerType => cid.toInt
-        case org.apache.spark.sql.types.LongType => cid
-        case _ => cid.toString
-      }
-      cells.filter(col("centroid_id") === lit(cidLit))
-        .select(col("id"),
-          col("centroid_id").cast("long").as("centroid_id"),
-          graft.functions.pq_adc_score(col("codes"), lut).as("score_adc"))
-    }
-    legs.reduce(_ unionByName _)
-      .orderBy(col("score_adc").asc, col("id").asc)
-      .limit(k)
-  }
-
   /** Serving handle over an [[ivfPqBuildIndex]] layout — the IVFADC
     * counterpart of [[IvfIndex]]: centroids AND codebooks are collected
     * once at load (both are driver-scale sidecars — cells×dim floats
-    * and m×ksub×dsub floats), so a request is local probe selection +
-    * nprobe LUT constructions (m×ksub doubles each) + ONE Spark job
-    * whose per-cell legs are partition-pruned ADC scans over m-byte
-    * codes. Where [[IvfIndex]]'s request reads nprobe/cells of fp16
-    * vectors, this one reads nprobe/cells of PQ codes — the I/O drops
-    * by the compression ratio, the serving shape is identical.
-    * Thread-safe: all state is immutable after load. */
-  final class IvfPqIndex private (
+    * and m×ksub×dsub floats). A request picks its nprobe L2-nearest
+    * cells locally (the index's cell metric) and builds one residual
+    * LUT per probed cell (`q − c` sliced against the shared codebooks —
+    * per-cell because residuals are cell-relative), then runs ONE Spark
+    * job: a single partition-pruned scan of the probed cells' m-byte
+    * codes, each row scored against its own cell's LUT. Where
+    * [[IvfIndex]]'s request reads nprobe/cells of fp16 vectors, this
+    * one reads nprobe/cells of PQ codes — the I/O drops by the
+    * compression ratio, the serving shape is identical. Scores
+    * approximate squared L2 of (q − v). Thread-safe: all state is
+    * immutable after load (the [[asDense]] views are memoized in a
+    * concurrent map). */
+  final class IvfPqIndex private (indexDir: String,
       cents: Array[(Long, Array[Float])],
       cb: Array[Array[Array[Float]]],
       cells: DataFrame, inListType: org.apache.spark.sql.types.DataType,
-      rot: Option[Array[Array[Double]]],
-      statsSource: Option[(org.apache.spark.sql.SparkSession, String)] =
-        None) {
+      rot: Option[Array[Array[Double]]]) {
 
     /** Was the index built with an OPQ rotation (`opqSweeps > 0`)? */
     val hasRotation: Boolean = rot.nonEmpty
@@ -4349,6 +4237,13 @@ object Knn {
     val attrColumns: Seq[String] = cells.columns.toSeq
       .filterNot(Set("id", "centroid_id", "codes", "emb16"))
 
+    /** Number of cells in the frozen geometry — the nprobe ceiling. */
+    def numCells: Int = cents.length
+
+    /** Vector width of the geometry — the only query width it scores
+      * (an OPQ rotation is square, so caller space has the same). */
+    val dim: Int = cents.head._2.length
+
     /** ADC-shortlist-then-exact-re-rank (the FAISS `IndexRefine` stage):
       * stage 1 is the plain ADC search widened to `refine·k` candidates;
       * their ids collect to the driver (r·k longs) and stage 2 re-scores
@@ -4360,9 +4255,6 @@ object Knn {
       * returned `score` is exact squared L2 of (q − v) at fp16 input
       * precision, so recall lifts from the quantizer's (~0.3 at 32:1,
       * PqSpec) toward the coarse-probe ceiling as r grows. */
-    /** Number of cells in the frozen geometry — the nprobe ceiling. */
-    def numCells: Int = cents.length
-
     def search(queryVec: Array[Float], k: Int, nprobe: Int,
         refine: Int, filter: Option[Column] = None,
         cosineScore: Boolean = false): DataFrame = {
@@ -4375,16 +4267,9 @@ object Knn {
       // id type follows the corpus key (long for numeric corpora, string
       // for the highlight store) — the IN-list carries whatever it is
       val qR = rq(queryVec)
-      val (probedCells, shortlist) = {
-        val stage1 = searchRotated(qR, k * refine, nprobe, filter)
-        (probe(qR, nprobe).map(_._1),
-          stage1.select(col("id")).collect().map(_.get(0)).toSeq)
-      }
-      val inList: Seq[Any] = inListType match {
-        case org.apache.spark.sql.types.IntegerType => probedCells.map(_.toInt)
-        case org.apache.spark.sql.types.LongType => probedCells
-        case _ => probedCells.map(_.toString)
-      }
+      val probed = probe(qR, nprobe)
+      val shortlist = adc(qR, k * refine, probed, filter)
+        .select(col("id")).collect().map(_.get(0)).toSeq
       // cosineScore swaps the re-rank metric to the fused fp16 cosine —
       // identical ranking on the unit-norm corpus (l2² = 2·cos-dist for
       // unit vectors), but the score matches what the store scan and
@@ -4402,7 +4287,8 @@ object Knn {
       // In past inFilterThreshold silently range-degrades (the r10
       // cliff). Balanced 256-id legs have neither failure mode at any
       // legal refine·k (MaxK=100 → 12800 ids → depth ~261).
-      cells.filter(col("centroid_id").isin(inList: _*) &&
+      cells.filter(col("centroid_id")
+          .isin(cellLiterals(probed.map(_._1).toSeq, inListType): _*) &&
           chunkedIn(col("id"), shortlist))
         .select(col("id"),
           col("centroid_id").cast("long").as("centroid_id"),
@@ -4411,67 +4297,36 @@ object Knn {
         .limit(k)
     }
 
+    private val views =
+      scala.collection.concurrent.TrieMap.empty[Int, DenseIndex]
+
     /** [[DenseIndex]] view at a fixed refine rung: ADC shortlists r·k
       * inside the pruned probe scan, the second job re-scores exactly
       * those rows against the fp16 refine payload with the COSINE
-      * metric (store-compatible scores). Filtered requests widen the
-      * probe adaptively, like [[IvfIndex.searchAdaptiveRows]] — the
-      * predicate applies at stage 1, so the shortlist (and therefore
-      * the re-ranked winners) always satisfies it. */
+      * metric (store-compatible scores). Filtered requests go through
+      * the shared [[IvfServing]] policy — the predicate applies at
+      * stage 1, so the shortlist (and therefore the re-ranked winners)
+      * always satisfies it. One view per rung and handle, so its
+      * lazily priced routing state is paid once per loaded generation,
+      * not once per request. */
     def asDense(refine: Int): DenseIndex = {
       require(refine >= 2 && hasRefine,
         "asDense serves cosine scores through the refine stage — needs " +
         "an index built with ivfPqBuildIndex(refine=true) and refine >= 2")
       val self = this
-      new DenseIndex {
-        def attrColumns: Seq[String] = self.attrColumns
-        def servingTopK(queryVec: Array[Float], k: Int, nprobe: Int,
-            filter: Option[Column]): Array[org.apache.spark.sql.Row] = {
-          var np = math.max(1, math.min(nprobe, numCells))
-          var rows = self.search(queryVec, k, np, refine, filter,
-            cosineScore = true).collect()
-          while (filter.nonEmpty && rows.length < k && np < numCells) {
-            np = math.min(np * 2, numCells)
-            rows = self.search(queryVec, k, np, refine, filter,
-              cosineScore = true).collect()
-          }
-          rows.map(r => org.apache.spark.sql.Row(r.get(0), r.getDouble(2)))
-        }
-
-        // routing yardstick, priced once on first routed request —
-        // codes rows are one id + m bytes, so the count scans only the
-        // predicate's columns
-        private lazy val avgCellRows: Double =
-          cells.count().toDouble / math.max(1, numCells)
-
-        // the build-time sidecar's driver form (never spilled here:
-        // the IVFADC layout is single-assignment)
-        private lazy val attrStats
-            : Option[(Set[String], Map[(String, String), Long])] =
-          statsSource.flatMap { case (sp, d) =>
-            Knn.collectAttrStats(sp, d, denom = 1L) }
-
-        /** [[DenseIndex.servingTopKRouted]]: rare predicates (matches
-          * ≤ nprobe·avgCellRows — read FREE from the build-time attr
-          * stats for covered equalities/conjunctions, else measured
-          * per request on a column-pruned count) jump STRAIGHT to the
-          * full-width probe — identical rows to the adaptive ladder's
-          * final widening, without paying its intermediate attempts
-          * (each a 2-job shortlist+refine pass); plentiful predicates
-          * take the standard adaptive path, which then rarely
-          * widens. */
-        override def servingTopKRouted(queryVec: Array[Float], k: Int,
-            nprobe: Int, filter: Column): Array[org.apache.spark.sql.Row] = {
-          val matches = Knn.statsPrice(attrStats, filter)
-            .getOrElse(cells.filter(filter).count())
-          val np0 = math.max(1, math.min(nprobe, numCells))
-          if (matches <= (avgCellRows * np0).toLong)
-            self.search(queryVec, k, numCells, refine, Some(filter),
+      // the IVFADC layout is single-assignment: never spilled
+      views.getOrElseUpdate(refine,
+        new IvfServing(indexDir, cells, spilled = false) {
+          def numCells: Int = self.numCells
+          def dim: Int = self.dim
+          def attrColumns: Seq[String] = self.attrColumns
+          protected def probeRows(queryVec: Array[Float], k: Int,
+              width: Int, filter: Option[Column])
+              : Array[org.apache.spark.sql.Row] =
+            self.search(queryVec, k, width, refine, filter,
                 cosineScore = true).collect()
               .map(r => org.apache.spark.sql.Row(r.get(0), r.getDouble(2)))
-          else servingTopK(queryVec, k, nprobe, Some(filter))
-        }
-      }
+        })
     }
 
     /** The query's `nprobe` L2-nearest cells, driver-local. */
@@ -4490,15 +4345,18 @@ object Knn {
       .sortBy { case (cid, d) => (d, cid) }
       .take(nprobe)
 
+    /** Stage-1 ADC top-k over the `nprobe` nearest cells:
+      * (id, centroid_id, score_adc) ordered by (score_adc, id). */
     def search(queryVec: Array[Float], k: Int, nprobe: Int,
-        filter: Option[Column]): DataFrame =
-      searchRotated(rq(queryVec), k, nprobe, filter)
+        filter: Option[Column]): DataFrame = {
+      val qR = rq(queryVec)
+      adc(qR, k, probe(qR, nprobe), filter)
+    }
 
     /** Stage-1 ADC over an ALREADY-ROTATED query (every public entry
       * rotates exactly once, so internals must not re-apply). */
-    private def searchRotated(queryVec: Array[Float], k: Int, nprobe: Int,
-        filter: Option[Column]): DataFrame = {
-      val probed = probe(queryVec, nprobe)
+    private def adc(queryVec: Array[Float], k: Int,
+        probed: Array[(Long, Double)], filter: Option[Column]): DataFrame = {
       // ONE scan with a partition IN-filter + the per-cell LUT map —
       // nprobe single-cell legs would mean nprobe scans to PLAN per
       // request, and planning is the serialized path under concurrency
@@ -4509,12 +4367,8 @@ object Knn {
         val qr = queryVec.zip(cv).map { case (a, b) => a - b }
         cid -> graft.functions.PqMath.lut(qr, cb)
       }.toMap
-      val inList: Seq[Any] = inListType match {
-        case org.apache.spark.sql.types.IntegerType => probed.map(_._1.toInt).toSeq
-        case org.apache.spark.sql.types.LongType => probed.map(_._1).toSeq
-        case _ => probed.map(_._1.toString).toSeq
-      }
-      filter.foldLeft(cells.filter(col("centroid_id").isin(inList: _*)))(
+      filter.foldLeft(cells.filter(col("centroid_id")
+          .isin(cellLiterals(probed.map(_._1).toSeq, inListType): _*)))(
           _ filter _)
         .select(col("id"),
           col("centroid_id").cast("long").as("centroid_id"),
@@ -4538,8 +4392,8 @@ object Knn {
         s"IVFADC index at $indexDir has an empty centroids sidecar")
       val cb = collectCodebooks(spark.read.parquet(s"$indexDir/codebooks"))
       val cells = spark.read.parquet(s"$indexDir/cells")
-      new IvfPqIndex(cents, cb, cells, cells.schema("centroid_id").dataType,
-        loadRotation(spark, indexDir), Some((spark, indexDir)))
+      new IvfPqIndex(indexDir, cents, cb, cells,
+        cells.schema("centroid_id").dataType, loadRotation(spark, indexDir))
     }
 
     /** [[load]] behind a generation check — the IVFADC layout has no

@@ -81,9 +81,10 @@ object Reloading {
       minCheckIntervalMs, (_: T) => ())
 
   /** [[apply]] with a caller-supplied fingerprint — for indexes spread
-    * over SEVERAL pointer roots (e.g. the HNSW layer stack: one
-    * [[SegmentedIndex]] per layer plus a meta sidecar), where one
-    * generation token must cover every root. */
+    * over SEVERAL pointer roots (e.g. the resident graph walk: the
+    * adjacency pointer, its code-sidecar segment root and the entry
+    * IVF's centroids; or every such root of a sharded gateway), where
+    * one generation token must cover every root. */
   def withFingerprint[T](fingerprint: () => String,
       minCheckIntervalMs: Long = 0L)(loadFn: => T): Reloading[T] =
     new Reloading(fingerprint, () => loadFn, minCheckIntervalMs,

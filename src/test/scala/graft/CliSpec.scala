@@ -66,6 +66,31 @@ class CliSpec extends SparkTestBase {
     assert(capture(Cli.run(Array("frobnicate"), spark))._1 == 2)
   }
 
+  test("every subcommand refuses a flag it does not read, naming it") {
+    val dir = Files.createTempDirectory("graft-cli-flags").toString
+    // no store exists here: a command that ignored the flag would get as
+    // far as the missing store (exit 1) — the refusal must come first
+    val cases = Seq(
+      Seq("search", "q", "--store", s"$dir/store", "--hnsw-index", "H"),
+      Seq("refresh", "--pages-dir", dir, "--store", s"$dir/store",
+        "--ckpt", s"$dir/ckpt", "--hnsw-index", "H"),
+      Seq("sync", "--backfill", "--pages-dir", dir, "--store",
+        s"$dir/store", "--ckpt", s"$dir/ckpt", "--nprobes", "4"),
+      Seq("index", "--store", s"$dir/store", "--out", s"$dir/ivf",
+        "--levels", "3"),
+      Seq("export", "--store", s"$dir/store", "--out", s"$dir/ex",
+        "--shard-tokenz", "9"),
+      Seq("curate", "--docs", s"$dir/docs", "--report-only", "--qualty",
+        "0.5"),
+      Seq("serve", "--store", s"$dir/store", "--graph-hops", "3"),
+      Seq("health", "--verbose"))
+    cases.foreach { args =>
+      val (c, err) = captureErr(Cli.run(args.toArray, spark))
+      val flag = args.filter(_.startsWith("--")).last
+      assert(c == 2 && err.contains(flag), s"${args.mkString(" ")}: exit $c: $err")
+    }
+  }
+
   test("index builds an attr-carrying IVF index from the store; bad flags fail fast") {
     val dir = Files.createTempDirectory("graft-cli-idx").toString
     val pages = s"$dir/pages"
@@ -99,6 +124,12 @@ class CliSpec extends SparkTestBase {
       Some(org.apache.spark.sql.functions.col("source_type") === "books"))
       .collect()
     assert(hits.nonEmpty)
+    // `serve` refuses an IVF index of another width than its embedder at
+    // start-up, naming both widths
+    val (cw, errW) = captureErr(Cli.denseIndex(spark, GraftConfig(
+      storeDir = s"$dir/store", embedderDim = 32,
+      ivfIndexDir = Some(s"$dir/ivf"))).swap.getOrElse(0))
+    assert(cw == 2 && errW.contains("64") && errW.contains("32"), errW)
   }
 
   test("index --type ivfpq builds the serving IVFADC layout; --opq-sweeps rotates it") {
@@ -137,6 +168,12 @@ class CliSpec extends SparkTestBase {
     val qv = graft.embed.Embedder.Default.embed("spark joins and shuffles")
     val hits = idx.search(qv, 2, idx.numCells, refine = 2).collect()
     assert(hits.nonEmpty && hits.head.get(0) == "h1", hits.mkString("|"))
+    // `serve` refuses an IVFADC index of another width than its embedder
+    // at start-up, naming both widths
+    val (cw, errW) = captureErr(Cli.denseIndex(spark, GraftConfig(
+      storeDir = s"$dir/store", embedderDim = 32,
+      pqIndexDir = Some(s"$dir/ivfpq"))).swap.getOrElse(0))
+    assert(cw == 2 && errW.contains("64") && errW.contains("32"), errW)
   }
 
   test("index --type graph/hnsw/lexical: build → serve → delete → refresh round-trip") {

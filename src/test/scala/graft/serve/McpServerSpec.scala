@@ -117,6 +117,9 @@ class McpServerSpec extends AnyFunSuite {
         """{"jsonrpc":"2.0","method":"search","params":{"q":"boom"},"id":9}""").head)
       assert(m.error.get("code") == JsonRpcErrorCodes.InternalError)
       assert(m.error.get("message") == "Internal server error")
+      // the cause travels as error.data, so a client can tell a failed
+      // read from a bad query without the server's log
+      assert(m.error.get.get("data").contains("kaput"), m.error)
       assert(m.id.contains(9L))
     }
   }

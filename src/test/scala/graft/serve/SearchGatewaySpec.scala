@@ -253,6 +253,44 @@ class SearchGatewaySpec extends SparkTestBase {
     }
   }
 
+  test("index-backed gateway refuses a query embedded at the wrong dimension") {
+    val root = java.nio.file.Files.createTempDirectory("gw-dim").toString
+    try {
+      // both IVF layouts are built over the 64-dim store; the gateway
+      // embeds at 32 dims — a truncated dot product would score rows
+      graft.similarity.Knn.ivfBuildIndex(store, "embedding", "id",
+        s"$root/ivf", k = 4, iters = 2,
+        trainFilter = crc32(col("id")) % 5 === 0, attrCols = Seq("source_type"))
+      graft.similarity.Knn.ivfPqBuildIndex(store, "embedding", "id",
+        s"$root/pq", cells = 4, m = 8, ksub = 16, iters = 2,
+        trainFilter = crc32(col("id")) % 5 === 0, refine = true,
+        attrCols = Seq("source_type"))
+      val wrong = graft.embed.HashNgramEmbedder(dim = 32)
+      val indexes = Seq(
+        graft.similarity.Knn.IvfIndex.load(spark, s"$root/ivf"),
+        graft.similarity.Knn.IvfPqIndex.load(spark, s"$root/pq").asDense(4))
+      indexes.foreach { idx =>
+        val gw = new SearchGateway(() => store, wrong, Some(() => idx), 4)
+        val plain = intercept[IllegalArgumentException] {
+          gw.search(SearchParams(query = "spark vector join", k = 5)).toList
+        }
+        assert(plain.getMessage.contains("32") &&
+          plain.getMessage.contains("64"), plain.getMessage)
+        val st = store.select(col("source_type")).head().getString(0)
+        val filtered = intercept[IllegalArgumentException] {
+          gw.search(SearchParams(query = "spark vector join", k = 5,
+            sourceType = Some(st))).toList
+        }
+        assert(filtered.getMessage.contains("32") &&
+          filtered.getMessage.contains("64"), filtered.getMessage)
+      }
+    } finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator()
+        .asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
   test("MCP server serves real searches over TCP") {
     val gw = new SearchGateway(store)
     val server = new McpServer(gw.search).start()

@@ -11,7 +11,7 @@ class KnnSpec extends SparkTestBase {
 
   private lazy val emb = table("embeddings").cache()
 
-  test("ivfBuildIndex + ivfSearchIndex: probe scan reads only probed partitions") {
+  test("ivfBuildIndex + IvfIndex.search: probe scan reads only probed partitions") {
     val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
     try {
       Knn.ivfBuildIndex(emb, "embedding", "vec_id", dir, k = 4, iters = 2,
@@ -25,7 +25,8 @@ class KnnSpec extends SparkTestBase {
       val qv = emb.orderBy($"vec_id").select($"embedding")
         .head().getSeq[Float](0).toArray
       val nprobe = 2
-      val res = Knn.ivfSearchIndex(spark, dir, qv, k = 10, nprobe = nprobe)
+      val res = Knn.IvfIndex.load(spark, dir)
+        .search(qv, k = 10, nprobe = nprobe)
       // the cells scan prunes at PLAN time: PartitionFilters carries the
       // IN-list and only nprobe of the cell directories are selected
       val scans = res.queryExecution.executedPlan.collect {
@@ -238,18 +239,15 @@ class KnnSpec extends SparkTestBase {
       val exact = Knn.topK(emb.filter(cond), "embedding", qv, 10, "vec_id")
         .collect().map(_.getLong(0)).toSeq
       assert(all == exact)
-      // a predicate with fewer than k matches ANYWHERE: searchAdaptive
-      // must widen to the full geometry and return every match, exactly
-      // the brute-force filtered answer
+      // a predicate with fewer than k matches ANYWHERE: the serving
+      // ladder (one job per attempt, no count pass) must widen to the
+      // full geometry and return every match, exactly the brute-force
+      // filtered answer
       val rare = col("label") === 7 && col("id") % 11 === 3
       val rareIds = emb.filter($"label" === 7 && $"vec_id" % 11 === 3)
         .select($"vec_id").collect().map(_.getLong(0)).toSet
       assert(rareIds.nonEmpty && rareIds.size < 10) // genuinely starving
-      val widened = idx.searchAdaptive(qv, 10, 1, Some(rare))
-        .collect().map(_.getLong(0)).toSet
-      assert(widened == rareIds)
-      // the serving form (one job per attempt, no count pass) agrees
-      val widenedRows = idx.searchAdaptiveRows(qv, 10, 1, Some(rare))
+      val widenedRows = idx.servingTopK(qv, 10, 1, Some(rare))
         .map(_.getLong(0)).toSet
       assert(widenedRows == rareIds)
       // append: attrs are part of the index schema contract — sniffed
@@ -295,7 +293,7 @@ class KnnSpec extends SparkTestBase {
       assert(cells.select(octet_length($"emb16")).head().getInt(0) == 2 * 64)
       val qv = emb.orderBy($"vec_id").select($"embedding")
         .head().getSeq[Float](0).toArray
-      val r16 = Knn.ivfSearchIndex(spark, dir16, qv, k = 10, nprobe = 2)
+      val r16 = Knn.IvfIndex.load(spark, dir16).search(qv, k = 10, nprobe = 2)
       // fused one-pass kernel in the probe plan: the blob is scored
       // directly, never widened through fp16_decode
       val plan = r16.queryExecution.executedPlan.toString
@@ -308,7 +306,7 @@ class KnnSpec extends SparkTestBase {
       assert(cellScan.selectedPartitions.partitionCount == 2)
       // half-precision perturbs scores inside the established tolerance
       // but not the ranking
-      val r32 = Knn.ivfSearchIndex(spark, dir32, qv, k = 10, nprobe = 2)
+      val r32 = Knn.IvfIndex.load(spark, dir32).search(qv, k = 10, nprobe = 2)
       val ids16 = r16.select($"id").as[Long].collect().toSeq
       val ids32 = r32.select($"id").as[Long].collect().toSeq
       assert(ids16 == ids32)
@@ -318,7 +316,7 @@ class KnnSpec extends SparkTestBase {
     } finally { rmrf(dir32); rmrf(dir16) }
   }
 
-  test("IvfIndex serving handle agrees with ivfSearchIndex, keeps pruning + fused kernel") {
+  test("IvfIndex serving handle agrees with exact topK at full width, keeps pruning + fused kernel") {
     val dir = java.nio.file.Files.createTempDirectory("ivfserve").toString
     try {
       Knn.ivfBuildIndex(emb, "embedding", "vec_id", dir, k = 4, iters = 2,
@@ -326,11 +324,16 @@ class KnnSpec extends SparkTestBase {
       val index = Knn.IvfIndex.load(spark, dir)
       val qv = emb.filter($"vec_id" === 7).select($"embedding")
         .head().getSeq[Float](0).toArray
+      // at nprobe = numCells the probe reads every cell, so the handle's
+      // driver-side cell selection must reproduce the brute-force top-k:
+      // same ids in the same order, scores at fp16 input precision
+      val full = index.search(qv, k = 10, nprobe = index.numCells).collect()
+      val exact = Knn.topK(emb, "embedding", qv, 10, "vec_id")
+        .select($"vec_id", $"score").collect()
+      assert(full.map(_.getLong(0)).toSeq == exact.map(_.getLong(0)).toSeq)
+      full.zip(exact).foreach { case (a, b) =>
+        assert(math.abs(a.getDouble(2) - b.getDouble(1)) < 1e-3) }
       val viaHandle = index.search(qv, k = 10, nprobe = 2)
-      val oneShot = Knn.ivfSearchIndex(spark, dir, qv, k = 10, nprobe = 2)
-      // driver-side probe selection picks the SAME cells as the one-shot
-      // path's Spark-job selection, so results are row-identical
-      assert(viaHandle.collect().toSeq == oneShot.collect().toSeq)
       // the handle's plan still prunes partitions and scores fused — the
       // serving shortcut changes where probe selection runs, not the scan
       val scans = viaHandle.queryExecution.executedPlan.collect {
@@ -381,8 +384,8 @@ class KnnSpec extends SparkTestBase {
       // → identical cells → row-identical searches
       Knn.ivfBuildIndex(emb.filter($"vec_id" < 400), "embedding", "vec_id",
         dirAll, k = 4, iters = 2, trainFilter = train, fp16 = true)
-      val inc = Knn.ivfSearchIndex(spark, dirInc, qv, k = 10, nprobe = 3)
-      val all = Knn.ivfSearchIndex(spark, dirAll, qv, k = 10, nprobe = 3)
+      val inc = Knn.IvfIndex.load(spark, dirInc).search(qv, k = 10, nprobe = 3)
+      val all = Knn.IvfIndex.load(spark, dirAll).search(qv, k = 10, nprobe = 3)
       assert(inc.collect().toSeq == all.collect().toSeq)
       // a fresh load serves the appended corpus, fp16 stayed sticky
       // (sniffed from the live segments), and the probe still prunes
@@ -427,9 +430,10 @@ class KnnSpec extends SparkTestBase {
         trainFilter = $"vec_id" % 5 === 0)
       val qv = emb.filter($"vec_id" === 7).select($"embedding")
         .head().getSeq[Float](0).toArray // query BY a deleted vector
-      val del = Knn.ivfSearchIndex(spark, dirDel, qv, k = 10, nprobe = 4)
+      val del = Knn.IvfIndex.load(spark, dirDel).search(qv, k = 10, nprobe = 4)
         .collect().toSeq
-      assert(del == Knn.ivfSearchIndex(spark, dirRef, qv, k = 10, nprobe = 4)
+      assert(del == Knn.IvfIndex.load(spark, dirRef)
+        .search(qv, k = 10, nprobe = 4)
         .collect().toSeq)
       assert(del.map(_.getLong(0)).toSet.intersect(dead.toSet).isEmpty)
       // the serving handle resolves tombstones at load too
@@ -443,7 +447,8 @@ class KnnSpec extends SparkTestBase {
       assert(left.size == 1 && !left.exists(_.startsWith("del-")))
       assert(new java.io.File(dirDel).listFiles()
         .count(f => f.getName.startsWith("seg-") || f.getName.startsWith("del-")) == 1)
-      val compacted = Knn.ivfSearchIndex(spark, dirDel, qv, k = 10, nprobe = 4)
+      val compacted = Knn.IvfIndex.load(spark, dirDel)
+        .search(qv, k = 10, nprobe = 4)
       assert(compacted.collect().toSeq == del)
       assert(!compacted.queryExecution.executedPlan.toString.contains("Join"),
         "compacted probe plan should carry no anti-join")
@@ -617,9 +622,9 @@ class KnnSpec extends SparkTestBase {
         allDir, k = 4, iters = 2, trainFilter = $"vec_id" < 100)
       val qv = emb.filter($"vec_id" === 0).select($"embedding")
         .head().getSeq[Float](0).toArray
-      val a = Knn.ivfSearchIndex(spark, streamDir, qv, k = 10, nprobe = 2)
+      val a = Knn.IvfIndex.load(spark, streamDir).search(qv, k = 10, nprobe = 2)
         .collect().toSeq
-      val b = Knn.ivfSearchIndex(spark, allDir, qv, k = 10, nprobe = 2)
+      val b = Knn.IvfIndex.load(spark, allDir).search(qv, k = 10, nprobe = 2)
         .collect().toSeq
       assert(a == b, "streamed index diverges from wholesale twin")
     } finally {

@@ -45,7 +45,7 @@ class RoutedSearchSpec extends SparkTestBase {
         nprobe = 2, filter = cond, bruteThreshold = 100L)
       .collect()
     assert(got.forall(_.getString(3) == "probe"))
-    val plain = Knn.ivfSearchIndex(spark, indexDir, qv, k = 10,
+    val plain = Knn.IvfIndex.load(spark, indexDir).search(qv, k = 10,
         nprobe = 2, filter = Some(cond))
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     assert(got.map(r => (r.getLong(0), r.getDouble(2))).toSeq == plain)
@@ -74,7 +74,7 @@ class RoutedSearchSpec extends SparkTestBase {
     }
     var got: Array[org.apache.spark.sql.Row] = null
     val routedJobs = jobs { got = idx.servingTopKRouted(qv, 10, 1, starved) }
-    val ladderJobs = jobs { idx.searchAdaptiveRows(qv, 10, 1, Some(starved)) }
+    val ladderJobs = jobs { idx.servingTopK(qv, 10, 1, Some(starved)) }
     // the routed request is count + ONE pruned scan; the adaptive
     // ladder on the same starved predicate pays a widening attempt per
     // doubling (log₂(cells) jobs) to arrive at the same plan
@@ -89,8 +89,8 @@ class RoutedSearchSpec extends SparkTestBase {
     val broad = $"label" % 3 === 1
     val gotB = idx.servingTopKRouted(qv, 10, 2, broad)
       .map(r => (r.get(0), r.getDouble(1))).toSeq
-    val wantB = idx.searchAdaptiveRows(qv, 10, 2, Some(broad))
-      .map(r => (r.get(0), r.getDouble(2))).toSeq
+    val wantB = idx.servingTopK(qv, 10, 2, Some(broad))
+      .map(r => (r.get(0), r.getDouble(1))).toSeq
     assert(gotB == wantB)
   }
 
@@ -229,7 +229,11 @@ class RoutedSearchSpec extends SparkTestBase {
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(stats == emb.groupBy($"label".cast("string")).count()
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap)
-    val dense = Knn.IvfPqIndex.load(spark, dir).asDense(refine = 4)
+    val handle = Knn.IvfPqIndex.load(spark, dir)
+    val dense = handle.asDense(refine = 4)
+    // one view per rung and handle: the serving edge asks for the view
+    // on every request, and its priced routing state must survive that
+    assert(handle.asDense(refine = 4) eq dense)
     // warm both request shapes + the lazy pricing state
     dense.servingTopKRouted(qv, 10, 1, $"label" === 3)
     dense.servingTopKRouted(qv, 10, 1, $"label".isin(3))

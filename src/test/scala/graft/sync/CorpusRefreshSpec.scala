@@ -75,9 +75,11 @@ class CorpusRefreshSpec extends SparkTestBase {
         ivfRef, k = 3, iters = 2, trainFilter = col("doc_id") % 5 === 0)
       val qv = vec(23L, 5)
       val got = graft.similarity.Knn
-        .ivfSearchIndex(spark, ivf, qv, k = 10, nprobe = 3).collect().toSeq
+        .IvfIndex.load(spark, ivf)
+          .search(qv, k = 10, nprobe = 3).collect().toSeq
       assert(got == graft.similarity.Knn
-        .ivfSearchIndex(spark, ivfRef, qv, k = 10, nprobe = 3).collect().toSeq)
+        .IvfIndex.load(spark, ivfRef)
+          .search(qv, k = 10, nprobe = 3).collect().toSeq)
       assert(!got.map(_.getLong(0)).contains(7L))
       assert(got.map(_.getLong(0)).contains(23L)) // its own vector → top hit
 
@@ -357,9 +359,11 @@ class CorpusRefreshSpec extends SparkTestBase {
         k = 3, iters = 2, trainFilter = col("doc_id") % 5 === 0)
       val qv = vec(24L, 5)
       assert(graft.similarity.Knn
-        .ivfSearchIndex(spark, ivf, qv, k = 10, nprobe = 3).collect().toSeq
+        .IvfIndex.load(spark, ivf)
+          .search(qv, k = 10, nprobe = 3).collect().toSeq
         == graft.similarity.Knn
-          .ivfSearchIndex(spark, ivfRef, qv, k = 10, nprobe = 3).collect().toSeq)
+          .IvfIndex.load(spark, ivfRef)
+            .search(qv, k = 10, nprobe = 3).collect().toSeq)
     } finally { Seq(store, lex, ivf, lexRef, ivfRef).foreach(rmrf) }
   }
 
