@@ -44,39 +44,17 @@ object Cli {
         k.stripPrefix("--") -> v
     }.toMap
 
-  /** The flags each subcommand reads. */
-  private val readFlags: Map[String, Set[String]] = {
-    val config = Set("store", "embed-dim")
-    val syncIn = config ++ Set("pages-dir", "ckpt", "pooled", "chunk-words")
-    Map(
-      "health" -> Set.empty[String],
-      "sync" -> (syncIn ++ Set("backfill", "since", "fp16")),
-      "refresh" -> (syncIn ++
-        Set("lex-index", "ivf-index", "graph-index", "graph-entry-ivf")),
-      "search" -> (config ++ Set("k", "source-type", "author", "tags",
-        "from", "to", "hybrid", "mmr")),
-      "index" -> Set("store", "out", "type", "cells", "iters", "train-every",
-        "fp16", "attrs", "graph-k", "nprobe", "buckets", "pq-m", "pq-ksub",
-        "opq-sweeps", "shards", "codec", "codes"),
-      "export" -> Set("store", "out", "shard-tokens"),
-      "curate" -> Set("docs", "out", "quality", "lm-threshold", "lm-store",
-        "mix-alpha", "mix-frac", "shard-tokens", "report-only"),
-      "serve" -> (config ++ Set("http-port", "mcp-port", "ivf-index",
-        "pq-index", "pq-refine", "nprobe", "graph-index", "graph-entry-ivf",
-        "graph-ef")))
-  }
-
   /** A command line carrying a flag its subcommand does not read — the
     * refusal message naming it. An unread flag is a misspelling or a
     * removed option; ignoring it would run something the user did not
     * ask for (a removed serving mode falling back to the store scan). */
   private object UnreadFlag {
     def unapply(args: Seq[String]): Option[String] = args match {
-      case cmd +: rest if readFlags.contains(cmd) =>
+      case cmd +: rest if GraftConfig.readFlags.contains(cmd) =>
         // search's query text is positional, never a flag
         (if (cmd == "search") rest.drop(1) else rest)
           .find(a => a.startsWith("--") &&
-            !readFlags(cmd)(a.stripPrefix("--")))
+            !GraftConfig.readFlags(cmd)(a.stripPrefix("--")))
           .map(a => s"$a is not a $cmd option")
       case _ => None
     }

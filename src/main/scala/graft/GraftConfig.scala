@@ -67,6 +67,31 @@ object GraftConfig {
     * large enough that chunk count stays ~tokens/256. */
   val DefaultChunkWords = 256
 
+  /** The flags each `Cli` subcommand reads — the ONE table both `Cli`
+    * (which refuses an unread flag before any work) and [[resolve]]
+    * (which scopes knobs by [[Command]]) read, so a flag is accepted or
+    * refused the same way by both. */
+  private[graft] val readFlags: Map[String, Set[String]] = {
+    val config = Set("store", "embed-dim")
+    val syncIn = config ++ Set("pages-dir", "ckpt", "pooled", "chunk-words")
+    Map(
+      "health" -> Set.empty[String],
+      "sync" -> (syncIn ++ Set("backfill", "since", "fp16")),
+      "refresh" -> (syncIn ++
+        Set("lex-index", "ivf-index", "graph-index", "graph-entry-ivf")),
+      "search" -> (config ++ Set("k", "source-type", "author", "tags",
+        "from", "to", "hybrid", "mmr")),
+      "index" -> Set("store", "out", "type", "cells", "iters", "train-every",
+        "fp16", "attrs", "graph-k", "nprobe", "buckets", "pq-m", "pq-ksub",
+        "opq-sweeps", "shards", "codec", "codes"),
+      "export" -> Set("store", "out", "shard-tokens"),
+      "curate" -> Set("docs", "out", "quality", "lm-threshold", "lm-store",
+        "mix-alpha", "mix-frac", "shard-tokens", "report-only"),
+      "serve" -> (config ++ Set("http-port", "mcp-port", "ivf-index",
+        "pq-index", "pq-refine", "nprobe", "graph-index", "graph-entry-ivf",
+        "graph-ef")))
+  }
+
   /** Validate a candidate configuration; Left = every violation, each with
     * a message specific enough to fix the config without reading code. */
   def validated(config: GraftConfig): Either[List[String], GraftConfig] = {
@@ -156,8 +181,9 @@ object GraftConfig {
     * Knob scoping by `command`: ports are read only by Serve, fp16 and
     * pages-dir/ckpt only by Sync (which also REQUIRES pages-dir — the
     * rule lives here so presence is computed in one place); store and
-    * embed-dim by everything. Out-of-scope ENV vars are ignored;
-    * out-of-scope FLAGS are rejected with a message. */
+    * embed-dim by everything. Out-of-scope ENV vars are ignored; a FLAG
+    * the command does not read ([[readFlags]]) is rejected with a
+    * message. */
   def resolve(flags: Map[String, String], env: Map[String, String],
       command: Command,
       fp16Flag: Boolean = false,
@@ -178,15 +204,10 @@ object GraftConfig {
       }
     val portsInScope = command == Serve || command == All
     val syncInScope = command == Sync || command == All
-    for ((flag, ok) <- Seq("pages-dir" -> syncInScope, "ckpt" -> syncInScope,
-        "chunk-words" -> syncInScope,
-        "http-port" -> portsInScope, "mcp-port" -> portsInScope,
-        "ivf-index" -> portsInScope, "nprobe" -> portsInScope,
-        "pq-index" -> portsInScope, "pq-refine" -> portsInScope,
-        "graph-index" -> portsInScope, "graph-entry-ivf" -> portsInScope,
-        "graph-ef" -> portsInScope))
-      if (!ok && flags.contains(flag))
-        errs += s"--$flag is not a ${command.name} option"
+    // `All` is no subcommand: every knob is in scope
+    for (read <- readFlags.get(command.name);
+         flag <- flags.keys.toSeq.sorted if !read(flag))
+      errs += s"--$flag is not a ${command.name} option"
     val fp16 = fp16Flag || (if (!syncInScope) false
     else e("FP16") match {
       case None => false

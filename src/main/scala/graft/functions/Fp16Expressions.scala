@@ -143,15 +143,8 @@ case class Fp16CosineDistance(left: Expression, right: Expression)
       b.asInstanceOf[Array[Byte]], q.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val vm = VectorMath.getClass.getName.stripSuffix("$")
-    val foldedQ: Option[Array[Float]] =
-      if (right.foldable)
-        Option(right.eval(null)).map(_.asInstanceOf[ArrayData].toFloatArray())
-      else None
-    foldedQ match {
-      case Some(q) =>
-        val qRef = ctx.addReferenceObj("queryVec", q, "float[]")
-        val qNormBits = java.lang.Double.doubleToRawLongBits(VectorMath.norm(q))
-        val qNorm = s"java.lang.Double.longBitsToDouble(${qNormBits}L)"
+    FoldedQuery.refs(ctx, right) match {
+      case Some((qRef, qNorm)) =>
         nullSafeCodeGen(ctx, ev, (b, _) =>
           s"${ev.value} = $vm.cosineDistanceHalfPre($b, $qRef, $qNorm);")
       case None =>

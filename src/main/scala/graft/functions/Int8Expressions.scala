@@ -183,7 +183,7 @@ case class Int8Decode(child: Expression) extends UnaryExpression {
 
 /** `int8_cosine_distance(BINARY, ARRAY<FLOAT>) -> DOUBLE` — cosine in the
   * quantized domain, fused dequantize+score (no per-row allocation); a
-  * foldable query folds its norm at codegen like [[Fp16CosineDistance]]. */
+  * foldable query's array and norm are [[FoldedQuery]] references. */
 case class Int8CosineDistance(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -200,15 +200,8 @@ case class Int8CosineDistance(left: Expression, right: Expression)
       b.asInstanceOf[Array[Byte]], q.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val o = Int8.getClass.getName.stripSuffix("$")
-    val foldedQ: Option[Array[Float]] =
-      if (right.foldable)
-        Option(right.eval(null)).map(_.asInstanceOf[ArrayData].toFloatArray())
-      else None
-    foldedQ match {
-      case Some(q) =>
-        val qRef = ctx.addReferenceObj("queryVec", q, "float[]")
-        val qNormBits = java.lang.Double.doubleToRawLongBits(VectorMath.norm(q))
-        val qNorm = s"java.lang.Double.longBitsToDouble(${qNormBits}L)"
+    FoldedQuery.refs(ctx, right) match {
+      case Some((qRef, qNorm)) =>
         nullSafeCodeGen(ctx, ev, (b, _) =>
           s"${ev.value} = $o.cosineDistancePre($b, $qRef, $qNorm);")
       case None =>

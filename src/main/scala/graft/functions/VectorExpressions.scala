@@ -196,11 +196,28 @@ abstract class BinaryVectorExpression extends BinaryExpression {
   }
 }
 
+/** The codegen references of a foldable query operand — the query
+  * array and its norm, extracted ONCE at codegen so the per-row work is
+  * one fused dot+self-norm pass over the corpus vector. BOTH ride in the
+  * generated class's `references`, never as literals: the generated code
+  * is then the same for every query vector and Spark's codegen cache
+  * hits, where a literal norm compiled a new class per query. None when
+  * the operand is not foldable or folds to null. */
+private[functions] object FoldedQuery {
+  def refs(ctx: CodegenContext, query: Expression): Option[(String, String)] =
+    if (!query.foldable) None
+    else Option(query.eval(null)).map { v =>
+      val q = v.asInstanceOf[ArrayData].toFloatArray()
+      val norm = java.lang.Double.valueOf(VectorMath.norm(q))
+      (ctx.addReferenceObj("queryVec", q, "float[]"),
+        ctx.addReferenceObj("queryNorm", norm, "java.lang.Double") +
+          ".doubleValue()")
+    }
+}
+
 /** pgvector `<=>` equivalent (cosine distance). When the query side is
   * foldable (the overwhelmingly common top-k case: `cosine_distance(col,
-  * lit(queryVec))`), its float array and norm are extracted ONCE at codegen
-  * and embedded as references — the per-row work drops to one fused
-  * dot+self-norm pass over the corpus vector. */
+  * lit(queryVec))`), its array and norm are [[FoldedQuery]] references. */
 case class CosineDistance(left: Expression, right: Expression)
     extends BinaryVectorExpression {
   override protected def mathFn: String = "cosineDistanceData"
@@ -210,17 +227,8 @@ case class CosineDistance(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val vm = VectorMath.getClass.getName.stripSuffix("$")
-    val foldedRight: Option[Array[Float]] =
-      if (right.foldable)
-        Option(right.eval(null)).map(_.asInstanceOf[ArrayData].toFloatArray())
-      else None
-    foldedRight match {
-      case Some(q) =>
-        val qRef = ctx.addReferenceObj("queryVec", q, "float[]")
-        // bit-pattern literal: valid Java for every double incl. NaN/Inf
-        // (a bare interpolated "NaN" would not compile)
-        val qNormBits = java.lang.Double.doubleToRawLongBits(VectorMath.norm(q))
-        val qNorm = s"java.lang.Double.longBitsToDouble(${qNormBits}L)"
+    FoldedQuery.refs(ctx, right) match {
+      case Some((qRef, qNorm)) =>
         nullSafeCodeGen(ctx, ev, (a, _) =>
           s"${ev.value} = $vm.cosineDistancePre($a, $qRef, $qNorm);")
       case None => super.doGenCode(ctx, ev)

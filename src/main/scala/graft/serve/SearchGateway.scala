@@ -130,10 +130,11 @@ final class SearchGateway(storeFn: () => DataFrame, embedder: Embedder,
     out.result().iterator.map(decode)
   }
 
-  /** Index-served top-k + store rehydration: the probe is the index's
-    * partition-pruned serving job (one job for fp16 IVF, two for the
-    * PQ+refine path); the fetch reads only the k winners' rows (id
-    * IN-list, embedding column never projected). Scores come from the
+  /** Index-served top-k + store rehydration: the probe is ONE Spark job
+    * (a partition-pruned cell scan for fp16 IVF; for the PQ+refine path
+    * a `runJob` over the probed cells held resident, no Catalyst plan);
+    * the fetch reads only the k winners' rows (id IN-list, embedding
+    * column never projected). Scores come from the
     * index (same cosine the store scan computes), so the two paths
     * agree wherever the probe's recall does. */
   private def denseIndexSearch(idx: graft.similarity.Knn.DenseIndex,

@@ -4202,15 +4202,24 @@ object Knn {
     * and m×ksub×dsub floats). A request picks its nprobe L2-nearest
     * cells locally (the index's cell metric) and builds one residual
     * LUT per probed cell (`q − c` sliced against the shared codebooks —
-    * per-cell because residuals are cell-relative), then runs ONE Spark
-    * job: a single partition-pruned scan of the probed cells' m-byte
-    * codes, each row scored against its own cell's LUT. Where
-    * [[IvfIndex]]'s request reads nprobe/cells of fp16 vectors, this
-    * one reads nprobe/cells of PQ codes — the I/O drops by the
-    * compression ratio, the serving shape is identical. Scores
-    * approximate squared L2 of (q − v). Thread-safe: all state is
-    * immutable after load (the [[asDense]] views are memoized in a
-    * concurrent map). */
+    * per-cell because residuals are cell-relative).
+    *
+    * Two probe paths, one answer:
+    *  - [[search]] plans Catalyst jobs over the cell parquet: one
+    *    partition-pruned scan of the probed cells' m-byte codes, each
+    *    row scored against its own cell's LUT (plus a second, id-IN
+    *    scan for the refine re-rank). It is the only path that evaluates
+    *    a `Column` predicate, so attr-filtered serving runs it, and it
+    *    is the reference the resident path is specified against.
+    *  - the filterless [[asDense]] probe runs ONE `SparkContext.runJob`
+    *    over the cells pinned in executor memory (one RDD partition per
+    *    cell, built on the first such request of a loaded generation):
+    *    no analysis, codegen or parquet open per request. Each vector
+    *    stays resident at ≈ id + m + 2·dim bytes until [[unpin]].
+    * Scores approximate squared L2 of (q − v). Thread-safe: all state
+    * but the pinned cells is immutable after load (pinning is
+    * serialized; the [[asDense]] views are memoized in a concurrent
+    * map). */
   final class IvfPqIndex private (indexDir: String,
       cents: Array[(Long, Array[Float])],
       cb: Array[Array[Array[Float]]],
@@ -4249,7 +4258,7 @@ object Knn {
       * their ids collect to the driver (r·k longs) and stage 2 re-scores
       * EXACTLY those rows against the fp16 refine payload — a second
       * partition-pruned scan of the probed cells with an id IN-list that
-      * parquet row-group stats skip on. Two jobs/request instead of one,
+      * parquet row-group stats skip on. Two Catalyst jobs instead of one,
       * but stage 2 touches r·k fp16 rows, not nprobe/cells of them — the
       * re-rank cost is output-sensitive, independent of corpus size. The
       * returned `score` is exact squared L2 of (q − v) at fp16 input
@@ -4300,15 +4309,18 @@ object Knn {
     private val views =
       scala.collection.concurrent.TrieMap.empty[Int, DenseIndex]
 
-    /** [[DenseIndex]] view at a fixed refine rung: ADC shortlists r·k
-      * inside the pruned probe scan, the second job re-scores exactly
-      * those rows against the fp16 refine payload with the COSINE
-      * metric (store-compatible scores). Filtered requests go through
-      * the shared [[IvfServing]] policy — the predicate applies at
-      * stage 1, so the shortlist (and therefore the re-ranked winners)
-      * always satisfies it. One view per rung and handle, so its
-      * lazily priced routing state is paid once per loaded generation,
-      * not once per request. */
+    /** [[DenseIndex]] view at a fixed refine rung: ADC shortlists r·k,
+      * and exactly those rows re-score against the fp16 refine payload
+      * with the COSINE metric (store-compatible scores).
+      *  - filterless: ONE Spark job over the resident cells
+      *    ([[residentTopK]]) — the same rows and bit-identical scores
+      *    as `search(q, k, nprobe, refine, None, cosineScore = true)`;
+      *  - attr-filtered: the two Catalyst jobs of [[search]] under the
+      *    shared [[IvfServing]] policy — the predicate applies at stage
+      *    1, so the shortlist (and therefore the re-ranked winners)
+      *    always satisfies it.
+      * One view per rung and handle, so its lazily priced routing state
+      * is paid once per loaded generation, not once per request. */
     def asDense(refine: Int): DenseIndex = {
       require(refine >= 2 && hasRefine,
         "asDense serves cosine scores through the refine stage — needs " +
@@ -4323,10 +4335,74 @@ object Knn {
           protected def probeRows(queryVec: Array[Float], k: Int,
               width: Int, filter: Option[Column])
               : Array[org.apache.spark.sql.Row] =
-            self.search(queryVec, k, width, refine, filter,
+            if (filter.isEmpty) self.residentTopK(queryVec, k, width, refine)
+            else self.search(queryVec, k, width, refine, filter,
                 cosineScore = true).collect()
               .map(r => org.apache.spark.sql.Row(r.get(0), r.getDouble(2)))
         })
+    }
+
+    /** Cell id → its partition of the resident cells (centroid order). */
+    private val cellPart: Map[Long, Int] = cents.map(_._1).zipWithIndex.toMap
+
+    @volatile private var pinned: org.apache.spark.rdd.RDD[IvfPqIndex.Cell] = _
+    private var released = false
+
+    /** The cells pinned in executor memory, one RDD partition per cell
+      * ([[cellPart]]) — built and materialized by the first caller. A
+      * handle already released by [[unpin]] builds them unpersisted, so
+      * a request still in flight on a superseded generation leaves no
+      * cached blocks behind. */
+    private def residentCells: org.apache.spark.rdd.RDD[IvfPqIndex.Cell] = {
+      val p = pinned
+      if (p != null) p
+      else synchronized {
+        if (pinned == null)
+          pinned = IvfPqIndex.pinCells(cells, cellPart,
+            s"ivfpq cells $indexDir", persist = !released)
+        pinned
+      }
+    }
+
+    /** Release the pinned cells (soft: a request in flight on this handle
+      * recomputes its cells from the parquet layout). The superseded
+      * generation's eviction hook of [[IvfPqIndex.reloading]]. */
+    def unpin(): Unit = synchronized {
+      released = true
+      if (pinned != null) pinned.unpersist(blocking = false)
+    }
+
+    /** The filterless refine probe over the resident cells: ONE
+      * `runJob` over the `width` probed cells' partitions. Each task
+      * ADC-scores its cell against the cell's residual LUT, keeps its
+      * top r·k by (ADC, id) and exact-scores those rows; the driver
+      * cuts the global top r·k by (ADC, id), then the top k by (exact,
+      * id). Every cut orders as the Catalyst plan does
+      * ([[IvfPqIndex.scoreIdOrder]]), so the rows and scores are those
+      * of `search(q, k, width, refine, None, cosineScore = true)`. */
+    private def residentTopK(queryVec: Array[Float], k: Int, width: Int,
+        refine: Int): Array[org.apache.spark.sql.Row] = {
+      val qR = rq(queryVec)
+      val probed = probe(qR, width)
+      val luts = cellLuts(qR, probed)
+      val lutOf = probed.map { case (cid, _) => cellPart(cid) -> luts(cid) }
+        .toMap
+      val cap = k * refine
+      val idType = cells.schema("id").dataType
+      val qNorm = graft.functions.VectorMath.norm(qR)
+      val blocks = residentCells
+      val perCell = blocks.sparkContext.runJob(blocks,
+        (ctx: org.apache.spark.TaskContext, it: Iterator[IvfPqIndex.Cell]) =>
+          IvfPqIndex.probeCell(it.next(), lutOf(ctx.partitionId()), qR,
+            qNorm, cap, idType),
+        lutOf.keys.toSeq.sorted)
+      val ord = IvfPqIndex.scoreIdOrder(idType)
+      perCell.flatten
+        .sorted(ord.on[(Double, Any, Double)](t => (t._1, t._2))).take(cap)
+        .sorted(ord.on[(Double, Any, Double)](t => (t._3, t._2))).take(k)
+        .map(t => org.apache.spark.sql.Row(
+          org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .convertToScala(t._2, idType), t._3))
     }
 
     /** The query's `nprobe` L2-nearest cells, driver-local. */
@@ -4362,11 +4438,7 @@ object Knn {
       // request, and planning is the serialized path under concurrency
       // (measured: 4-leg union p95 1.47 s vs single-scan ~0.4 s at the
       // 20-user gate shape)
-      val luts: Map[Long, Array[Array[Double]]] = probed.map { case (cid, _) =>
-        val cv = cents.find(_._1 == cid).get._2
-        val qr = queryVec.zip(cv).map { case (a, b) => a - b }
-        cid -> graft.functions.PqMath.lut(qr, cb)
-      }.toMap
+      val luts = cellLuts(queryVec, probed)
       filter.foldLeft(cells.filter(col("centroid_id")
           .isin(cellLiterals(probed.map(_._1).toSeq, inListType): _*)))(
           _ filter _)
@@ -4377,6 +4449,16 @@ object Knn {
         .orderBy(col("score_adc").asc, col("id").asc)
         .limit(k)
     }
+
+    /** One residual LUT per probed cell (`q − c` against the shared
+      * codebooks) over an ALREADY-ROTATED query. */
+    private def cellLuts(queryVec: Array[Float], probed: Array[(Long, Double)])
+        : Map[Long, Array[Array[Double]]] =
+      probed.map { case (cid, _) =>
+        val cv = cents.find(_._1 == cid).get._2
+        val qr = queryVec.zip(cv).map { case (a, b) => a - b }
+        cid -> graft.functions.PqMath.lut(qr, cb)
+      }.toMap
 
     def search(queryVec: Array[Float], k: Int, nprobe: Int): DataFrame =
       search(queryVec, k, nprobe, None: Option[Column])
@@ -4398,10 +4480,80 @@ object Knn {
 
     /** [[load]] behind a generation check — the IVFADC layout has no
       * segment pointer (rebuilds rewrite in place), so the fingerprint
-      * is the three relations' commit-marker mtimes. */
+      * is the three relations' commit-marker mtimes. A reload unpins the
+      * superseded generation's resident cells. */
     def reloading(spark: org.apache.spark.sql.SparkSession, indexDir: String,
         minCheckIntervalMs: Long = 0L): graft.sync.Reloading[IvfPqIndex] =
-      graft.sync.Reloading(spark, indexDir, Seq("centroids", "codebooks"),
-        minCheckIntervalMs)(load(spark, indexDir))
+      graft.sync.Reloading.withEvict(spark, indexDir,
+        Seq("centroids", "codebooks"), minCheckIntervalMs)(
+        load(spark, indexDir))(_.unpin())
+
+    /** One IVFADC cell, resident: its rows' ids (Catalyst internal
+      * values), m-byte codes and fp16 refine payloads, index-aligned. */
+    private[Knn] final class Cell(val ids: Array[Any],
+        val codes: Array[Array[Byte]], val emb16: Array[Array[Byte]])
+        extends Serializable
+
+    /** The cell layout as one RDD partition per cell, cell c in partition
+      * `partOf(c)` (an empty cell is an empty [[Cell]]), persisted
+      * MEMORY_AND_DISK and materialized by one job when `persist`. */
+    private[Knn] def pinCells(cells: DataFrame, partOf: Map[Long, Int],
+        name: String, persist: Boolean): org.apache.spark.rdd.RDD[Cell] = {
+      val idType = cells.schema("id").dataType
+      val blocks = cells.select(col("centroid_id").cast("long"), col("id"),
+          col("codes"), col("emb16"))
+        .queryExecution.toRdd
+        .map(r => partOf(r.getLong(0)) -> ((
+          org.apache.spark.sql.catalyst.InternalRow.copyValue(
+            r.get(1, idType)), r.getBinary(2), r.getBinary(3))))
+        .partitionBy(new org.apache.spark.HashPartitioner(partOf.size))
+        .mapPartitions({ rows =>
+          val rs = rows.map(_._2).toArray
+          Iterator(new Cell(rs.map(_._1), rs.map(_._2), rs.map(_._3)))
+        }, preservesPartitioning = true)
+        .setName(name)
+      if (persist) {
+        blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        blocks.count()
+      }
+      blocks
+    }
+
+    /** Catalyst's ascending order on (score, id): scores as SQL orders
+      * doubles (NaN last, −0.0 = 0.0), ids by their type's SQL order —
+      * UTF-8 binary for strings, signed for longs. `orderBy(score, id)`
+      * cuts the Catalyst probe by this order. */
+    private[Knn] def scoreIdOrder(idType: org.apache.spark.sql.types.DataType)
+        : Ordering[(Double, Any)] = {
+      val idOrd = org.apache.spark.sql.catalyst.types.PhysicalDataType
+        .ordering(idType)
+      new Ordering[(Double, Any)] {
+        def compare(a: (Double, Any), b: (Double, Any)): Int = {
+          val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(a._1, b._1)
+          if (c != 0) c else idOrd.compare(a._2, b._2)
+        }
+      }
+    }
+
+    /** One task of [[IvfPqIndex.residentTopK]]: the cell's top `cap` rows
+      * by (ADC, id), each as (ADC, id, exact cosine distance at fp16
+      * input precision) — the scores the Catalyst kernels compute. */
+    private[Knn] def probeCell(cell: Cell, lut: Array[Array[Double]],
+        q: Array[Float], qNorm: Double, cap: Int,
+        idType: org.apache.spark.sql.types.DataType)
+        : Array[(Double, Any, Double)] = {
+      val adc = cell.codes.map(graft.functions.PqMath.adc(_, lut))
+      val ord = scoreIdOrder(idType)
+      val byRow = ord.on[Int](i => (adc(i), cell.ids(i)))
+      // max-heap of the best `cap` rows so far: its head is the worst kept
+      val kept = scala.collection.mutable.PriorityQueue.empty[Int](byRow)
+      for (i <- adc.indices)
+        if (kept.size < cap) kept.enqueue(i)
+        else if (byRow.lt(i, kept.head)) { kept.dequeue(); kept.enqueue(i) }
+      kept.iterator.map(i => (adc(i), cell.ids(i),
+        graft.functions.VectorMath.cosineDistanceHalfPre(cell.emb16(i), q,
+          qNorm))).toArray
+    }
   }
 }

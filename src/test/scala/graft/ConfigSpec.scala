@@ -167,6 +167,21 @@ class ConfigSpec extends AnyFunSuite {
     assert(errs2.exists(_.contains("STORE_DIR (--store / GRAFT_STORE_DIR) is required")))
   }
 
+  test("resolve scopes flags by the table Cli refuses unread flags by") {
+    // a flag of another subcommand is refused, as Cli refuses it
+    val Left(e) = GraftConfig.resolve(Map("store" -> "/s", "k" -> "5"),
+      Map.empty, GraftConfig.Command.Serve): @unchecked
+    assert(e == List("--k is not a serve option"))
+    // and every flag a command reads passes the scope check
+    for ((cmd, name) <- Seq(GraftConfig.Command.Sync -> "sync",
+        GraftConfig.Command.Search -> "search",
+        GraftConfig.Command.Serve -> "serve")) {
+      val all = GraftConfig.readFlags(name).map(_ -> "1").toMap
+      val errs = GraftConfig.resolve(all, Map.empty, cmd).left.getOrElse(Nil)
+      assert(!errs.exists(_.contains("is not a")), errs)
+    }
+  }
+
   test("orThrow joins all messages into one fail-fast exception") {
     val e = intercept[IllegalArgumentException] {
       GraftConfig.orThrow(GraftConfig.validated(

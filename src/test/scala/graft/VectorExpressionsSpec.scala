@@ -40,6 +40,52 @@ class VectorExpressionsSpec extends SparkTestBase {
     assert(sqlGot(1).isNullAt(1))
   }
 
+  test("a folded query vector is passed by reference: a new query compiles no new class, scores bit-identical") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import graft.functions.{Fp16, Int8, fp16_cosine_distance, fp16_encode,
+      int8_cosine_distance, int8_encode}
+    val dim = 8
+    // Range, not a local Seq: a LocalRelation would be folded by the
+    // optimizer and never reach whole-stage codegen
+    val rows = spark.range(0, 16, 1, 2).select(
+      array((0 until dim).map(i => sin($"id" * (i + 1)).cast("float")): _*)
+        .as("v"))
+      .select($"v", fp16_encode($"v").as("h"), int8_encode($"v").as("i8"))
+      .cache()
+    val vs = rows.select($"v").as[Seq[Float]].collect().map(_.toArray)
+    val queries = Seq(Array.tabulate(dim)(i => (i + 1).toFloat),
+      Array.tabulate(dim)(i => (3 * i - 7).toFloat / 5f))
+    // kernel name → (query → served scores, query → expected scores)
+    val kernels = Seq[(String, Array[Float] => Seq[Double],
+        Array[Float] => Seq[Double])](
+      ("cosine_distance",
+        q => rows.select(cosine_distance($"v", typedLit(q))).as[Double]
+          .collect().toSeq,
+        q => vs.toSeq.map(v => VectorMath.cosineDistancePre(
+          ArrayData.toArrayData(v), q, VectorMath.norm(q)))),
+      ("fp16_cosine_distance",
+        q => rows.select(fp16_cosine_distance($"h", typedLit(q)))
+          .as[Double].collect().toSeq,
+        q => vs.toSeq.map(v => VectorMath.cosineDistanceHalfPre(
+          Fp16.encode(v), q, VectorMath.norm(q)))),
+      ("int8_cosine_distance",
+        q => rows.select(int8_cosine_distance($"i8", typedLit(q)))
+          .as[Double].collect().toSeq,
+        q => vs.toSeq.map(v => Int8.cosineDistancePre(
+          Int8.encode(v), q, VectorMath.norm(q)))))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    for ((name, served, expected) <- kernels) {
+      assert(served(queries.head) == expected(queries.head), name)
+      val before = compiles.getCount
+      assert(served(queries(1)) == expected(queries(1)), name)
+      assert(compiles.getCount == before,
+        s"$name compiled ${compiles.getCount - before} new class(es) " +
+          "for a new query vector")
+    }
+    rows.unpersist()
+  }
+
   test("cosine distance on real embeddings stays in [0, 2]") {
     val emb = table("embeddings")
     val q = emb.filter($"vec_id" === 0).select($"embedding").head().getSeq[Float](0).toArray

@@ -342,6 +342,104 @@ class PqSpec extends SparkTestBase {
       // refine < 2 is not a serving config (the cosine contract needs
       // the refine stage)
       assertThrows[IllegalArgumentException](handle.asDense(1))
+
+      // the filterless view runs over the resident cells; the Catalyst
+      // refine search is its reference: same ids in the same order,
+      // scores bit-for-bit. (20, 1, 64) asks for refine·k = 1280 rows
+      // of one probed cell, more than it holds
+      val combos = Seq((1, 4, 2), (2, 1, 2), (3, 2, 2), (10, 4, 3),
+        (20, 1, 64))
+      def sameAsCatalyst(h: Knn.IvfPqIndex, q: Array[Float]): Unit =
+        for ((k, nprobe, refine) <- combos) {
+          val served = h.asDense(refine).servingTopK(q, k, nprobe, None)
+          val ref = h.search(q, k, nprobe, refine, filter = None,
+            cosineScore = true).collect()
+          val at = s"k=$k nprobe=$nprobe refine=$refine"
+          assert(served.nonEmpty, at)
+          assert(served.map(_.get(0)).toSeq == ref.map(_.get(0)).toSeq, at)
+          assert(served.map(r => java.lang.Double.doubleToRawLongBits(
+              r.getDouble(1))).toSeq ==
+            ref.map(r => java.lang.Double.doubleToRawLongBits(
+              r.getDouble(2))).toSeq, at)
+        }
+      val queries = Seq(7L, 11L, 150L).map(id =>
+        emb.filter($"vec_id" === id).select($"embedding")
+          .head().getSeq[Float](0).toArray)
+      queries.foreach(sameAsCatalyst(handle, _))
+
+      // a warm filterless request is exactly ONE Spark job
+      val sc = spark.sparkContext
+      val group = s"pq-one-job-${System.nanoTime()}"
+      sc.setJobGroup(group, "one filterless asDense request")
+      try dense.servingTopK(queries(2), 10, 4, None)
+      finally sc.clearJobGroup()
+      assert(sc.statusTracker.getJobIdsForGroup(group).length == 1)
+
+      // duplicate-vector ties straddling both cuts: copies of vector 11
+      // under ids that order differently as SQL orders them than as the
+      // JVM does — signed longs (−3 < −1 < 11), and strings by UTF-8
+      // bytes ("g\uFF21" < "g\uD83D\uDE00", the reverse of UTF-16
+      // order). At (k, refine) = (1, 2) the r·k cut falls inside the tie
+      // group, at (2, 2) the k cut does. The long-id layout is also
+      // OPQ-rotated.
+      val copy = emb.filter($"vec_id" === 11).select($"embedding")
+      val base = emb.filter($"vec_id" < 300)
+      val longIds = base.select($"vec_id".as("id"), $"embedding")
+        .unionByName(Seq(-3L, -1L, 2000L, 2001L, 2002L).toDF("id")
+          .crossJoin(copy))
+      val strIds = base.select(concat(lit("n"), $"vec_id").as("id"),
+          $"embedding")
+        .unionByName(Seq("f0", "g\uFF21", "g\uD83D\uDE00", "h0", "h1")
+          .toDF("id").crossJoin(copy))
+      for ((corpus, opq) <- Seq(longIds -> 1, strIds -> 0)) {
+        val tieDir = java.nio.file.Files.createTempDirectory("ivfpqties")
+          .toString
+        try {
+          Knn.ivfPqBuildIndex(corpus, "embedding", "id", tieDir,
+            cells = 4, m = 8, ksub = 16, iters = 2, trainFilter = lit(true),
+            refine = true, opqSweeps = opq)
+          val h = Knn.IvfPqIndex.load(spark, tieDir)
+          assert(h.hasRotation == (opq > 0))
+          // the copies lead the ADC order, so both cuts fall inside them
+          val lead = h.search(queries(1), 4, 4).collect().map(_.getDouble(2))
+          assert(lead.distinct.length == 1, lead.toSeq)
+          queries.foreach(sameAsCatalyst(h, _))
+          h.unpin()
+        } finally {
+          import scala.jdk.CollectionConverters._
+          java.nio.file.Files.walk(java.nio.file.Paths.get(tieDir)).iterator()
+            .asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+        }
+      }
+      handle.unpin()
+    } finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
+  test("IvfPqIndex.reloading: a rebuild unpins the superseded generation's cells") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqreload").toString
+    def build(iters: Int): Unit = Knn.ivfPqBuildIndex(emb, "embedding",
+      "vec_id", dir, cells = 4, m = 8, ksub = 16, iters = iters,
+      trainFilter = $"vec_id" % 5 === 0, refine = true)
+    def pinnedBlocks: Int = spark.sparkContext.getPersistentRDDs.values
+      .count(_.name == s"ivfpq cells $dir")
+    try {
+      build(iters = 2)
+      val h = Knn.IvfPqIndex.reloading(spark, dir)
+      val qv = emb.filter($"vec_id" === 11).select($"embedding")
+        .head().getSeq[Float](0).toArray
+      h.get.asDense(4).servingTopK(qv, 10, 4, None)
+      assert(pinnedBlocks == 1)
+      build(iters = 3)
+      val served = h.get.asDense(4).servingTopK(qv, 10, 4, None)
+      assert(served.length == 10)
+      assert(pinnedBlocks == 1,
+        "a reload must unpersist the previous generation's cell blocks")
+      h.get.unpin()
+      assert(pinnedBlocks == 0)
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
