@@ -29,10 +29,12 @@ import graft.sync.{HighlightStore, Sync}
   *   graft.Cli curate --docs D.parquet --out O [--quality 0.6] [--lm-threshold -6.0]
   *     [--lm-store L] [--mix-alpha A --mix-frac F] [--shard-tokens 2048] [--report-only]
   *   graft.Cli search "query text" --k 5 --store S [--source-type T] [--hybrid true] [--mmr 0.3]
-  *   graft.Cli serve --store S [--ivf-index I | --pq-index P [--pq-refine 64]
+  *   graft.Cli serve --store S [--ivf-index I [--pq-refine 64]
   *     | --graph-index G[,G2,...] [--graph-entry-ivf I[,I2,...]] [--graph-ef 20]]
   *     [--nprobe 4]
-  *     (--graph-index always serves the resident code walk: one dir with
+  *     (--ivf-index serves ADC + fp16 refine when I is an IVFADC layout
+  *      from `index --type ivfpq`, the fp16 probe otherwise;
+  *      --graph-index always serves the resident code walk: one dir with
   *      its code sidecar, a comma-separated shard list, or a MANIFEST root)
   *   graft.Cli health
   */
@@ -99,12 +101,14 @@ object Cli {
   /** The dense index `serve` routes requests through, behind a
     * generation-checked handle that follows rebuilds and refreshes, or
     * None for the store scan. Left = the exit code of a start-up
-    * refusal, already explained on stderr. Three modes:
-    *  - `--ivf-index`: the fp16 IVF probe, one pruned job a request;
-    *    filtered requests stay on the index when its cells carry the
-    *    referenced attr columns, else fall back to the store scan;
-    *  - `--pq-index`: IVFADC codes + exact fp16 refine, cosine-scored
-    *    (the default-mode promotion of SCALE.md §r11);
+    * refusal, already explained on stderr. Two modes:
+    *  - `--ivf-index`: the IVF cell layout, served by its payload. An
+    *    IVFADC layout (`index --type ivfpq`) serves IVFADC codes + exact
+    *    fp16 refine at `--pq-refine`, cosine-scored (the default-mode
+    *    promotion of SCALE.md §r11); an fp16 layout serves the fp16
+    *    probe, one pruned job a request. Filtered requests stay on the
+    *    index when its cells carry the referenced attr columns, else
+    *    fall back to the store scan;
     *  - `--graph-index`: the resident code walk — topology and codes
     *    held in memory, one exact re-rank job a request (SCALE.md §r13).
     *    One dir serves through [[graft.similarity.Knn.ResidentGraphIndex]];
@@ -127,8 +131,8 @@ object Cli {
     // build; idOf maps winners back so rehydration joins on the store's
     // own key type
     val idOf = (id: Long) => id.toString
-    (cfg.graphIndexDir, cfg.pqIndexDir, cfg.ivfIndexDir) match {
-      case (Some(g), _, _) =>
+    (cfg.graphIndexDir, cfg.ivfIndexDir) match {
+      case (Some(g), _) =>
         val manifest =
           if (g.contains(',')) None
           else Knn.ShardedResidentIndex.loadManifest(spark, g)
@@ -164,32 +168,35 @@ object Cli {
             dirs.zip(entries), cfg.graphEf, idOf = idOf)
           Right(Some(() => h.get))
         }
-      case (_, Some(d), _) =>
-        if (!Knn.ivfPqIndexReady(d))
-          return refuse(1, s"no IVFADC index at $d (build one with " +
-            "Knn.ivfPqBuildIndex(refine=true) or drop --pq-index)")
-        val h = Knn.IvfPqIndex.reloading(spark, d)
-        if (!h.get.hasRefine)
-          return refuse(1, s"IVFADC index at $d has no refine payload — " +
-            "rebuild with ivfPqBuildIndex(refine=true)")
-        if (h.get.dim != cfg.embedderDim) return widthRefusal(d, h.get.dim)
-        // hasRefine is RE-CHECKED per request, not just here: the
-        // reloading handle follows rebuilds, and a later generation
-        // committed without the refine payload must become a
-        // descriptive serving error (surfaced as an SSE/JSON-RPC error
-        // frame), not asDense's bare require failure
-        Right(Some(() => {
-          val idx = h.get
-          if (!idx.hasRefine) throw new IllegalStateException(
-            s"IVFADC index at $d was rebuilt without its refine payload; " +
-            "rebuild with ivfPqBuildIndex(refine=true) or restart serve " +
-            "without --pq-index")
-          idx.asDense(cfg.pqRefine)
-        }))
-      case (_, _, Some(d)) =>
+      case (_, Some(d)) =>
         if (!Knn.ivfIndexReady(d))
-          return refuse(1, s"no IVF index at $d " +
-            "(build one with Knn.ivfBuildIndex or drop --ivf-index)")
+          return refuse(1, s"no IVF index at $d (build one with " +
+            "`graft.Cli index --type ivf|ivfpq` or drop --ivf-index)")
+        if (Knn.ivfPqLayout(spark, d)) {
+          // checked here, against the layout: ambient GRAFT_PQ_REFINE
+          // garbage never refuses a config that does not use it
+          if (cfg.pqRefine < 2)
+            return refuse(2, "PQ_REFINE (--pq-refine / GRAFT_PQ_REFINE) " +
+              "must be >= 2 (serving the IVFADC index at " + d +
+              s" re-ranks refine·k rows), got ${cfg.pqRefine}")
+          val h = Knn.IvfPqIndex.reloading(spark, d)
+          if (!h.get.hasRefine)
+            return refuse(1, s"IVFADC index at $d has no refine payload — " +
+              "rebuild with ivfPqBuildIndex(refine=true)")
+          if (h.get.dim != cfg.embedderDim) return widthRefusal(d, h.get.dim)
+          // hasRefine is RE-CHECKED per request, not just here: the
+          // reloading handle follows rebuilds, and a later generation
+          // committed without the refine payload must become a
+          // descriptive serving error (surfaced as an SSE/JSON-RPC error
+          // frame), not asDense's bare require failure
+          return Right(Some(() => {
+            val idx = h.get
+            if (!idx.hasRefine) throw new IllegalStateException(
+              s"IVFADC index at $d was rebuilt without its refine " +
+              "payload; rebuild with ivfPqBuildIndex(refine=true)")
+            idx.asDense(cfg.pqRefine)
+          }))
+        }
         val h = Knn.IvfIndex.reloading(spark, d)
         if (h.get.dim != cfg.embedderDim) return widthRefusal(d, h.get.dim)
         Right(Some(() => h.get))
@@ -399,8 +406,8 @@ object Cli {
     //     ivfpq:   [--cells 64] [--iters 2] [--train-every 5] [--pq-m 8]
     //              [--pq-ksub 256] [--opq-sweeps 0] [--attrs col1,col2,…]
     //              (IVFADC with the fp16 refine payload `serve
-    //               --pq-index` requires; --opq-sweeps > 0 learns the
-    //               OPQ rotation and builds in rotated space)
+    //               --ivf-index` requires of it; --opq-sweeps > 0 learns
+    //               the OPQ rotation and builds in rotated space)
     //     graph:   [--graph-k 5] [--cells 64] [--nprobe 2] [--buckets 64]
     //              [--fp16 true]
     //              [--shards N|auto [--codec pq|int8] [--attrs c1,c2]]
@@ -507,10 +514,10 @@ object Cli {
                       f("opq-sweeps") + "'")
                     return 2
                   }
-                  // refine is always on: `serve --pq-index` re-ranks
-                  // against the fp16 payload and refuses a payload-less
-                  // layout — a CLI build that serving rejects would be
-                  // a trap
+                  // refine is always on: `serve --ivf-index` re-ranks an
+                  // IVFADC layout against the fp16 payload and refuses a
+                  // payload-less one — a CLI build that serving rejects
+                  // would be a trap
                   graft.similarity.Knn.ivfPqBuildIndex(df, "embedding",
                     "id", out, cells = cells, m = pm,
                     ksub = intOf("pq-ksub", 256),

@@ -97,7 +97,8 @@ object ConcurrencyProbe {
     def denseMode(corpus: org.apache.spark.sql.DataFrame): Unit = {
       // THE DEFAULT DENSE SERVING MODE (r11): IVFADC codes shortlist +
       // exact fp16 COSINE refine (refine=64) through the DenseIndex
-      // contract the gateway routes (`Cli serve --pq-index`). Promoted
+      // contract the gateway routes (`Cli serve --ivf-index` over an
+      // IVFADC layout). Promoted
       // over the fp16 IVF probe after r10's gate instability — ivf
       // nprobe=4 ran p95 436/521/502 ms same-phase (1-in-3 over the
       // 500 ms gate) and 781 ms in r11's slow-phase sweep, while this
@@ -118,7 +119,7 @@ object ConcurrencyProbe {
       val refine = sys.env.getOrElse("CONC_DENSE_REFINE", "64").toInt
       val indexDir = graft.fixtures.Fp16Corpus.workRoot +
         s"/ivfpqserve3072$ftag-n$n-c$cellsK-m32-k64-refine"
-      if (!graft.similarity.Knn.ivfPqIndexReady(indexDir)) {
+      if (!graft.similarity.Knn.ivfIndexReady(indexDir)) {
         val fp32 = corpus.select(col("vec_id").as("id"),
           graft.functions.fp16_decode(col("emb16")).as("embedding"))
         val every = (n / 500).max(1L)
@@ -302,7 +303,7 @@ object ConcurrencyProbe {
       val indexDir = graft.fixtures.Fp16Corpus.workRoot +
         s"/ivfpqserve3072$ftag-n$n-c$cellsK-m$m-k$ksub" +
         (if (refine > 1) "-refine" else "")
-      if (!graft.similarity.Knn.ivfPqIndexReady(indexDir)) {
+      if (!graft.similarity.Knn.ivfIndexReady(indexDir)) {
         val fp32 = corpus.select(col("vec_id").as("id"),
           graft.functions.fp16_decode(col("emb16")).as("embedding"))
         // coarse + sub-quantizer training both on ~500-vector samples;

@@ -25,7 +25,6 @@ final case class GraftConfig(
     pagesDir: Option[String] = None,
     checkpointDir: Option[String] = None,
     ivfIndexDir: Option[String] = None,
-    pqIndexDir: Option[String] = None,
     pqRefine: Int = GraftConfig.DefaultPqRefine,
     nprobe: Int = GraftConfig.DefaultNprobe,
     pooledChunkWords: Option[Int] = None,
@@ -44,8 +43,10 @@ object GraftConfig {
   val DefaultHttpPort = 8000
   val DefaultMcpPort = 8375
   val DefaultNprobe = 4
-  /** ADC shortlist factor for `--pq-index` serving: stage 2 exactly
-    * re-scores refine·k fp16 rows. 64 is the measured default rung
+  /** ADC shortlist factor for `--ivf-index` serving of an IVFADC
+    * layout (`index --type ivfpq`): stage 2 exactly re-scores refine·k
+    * fp16 rows. Read, and checked to be ≥ 2, only when the layout
+    * carries codes. 64 is the measured default rung
     * (SCALE.md r11 refine ladder on the 200 k × 3072-dim fixture):
     * recall@10 0.972 — within 0.03 of the fp16 IVF probe's 1.000 at
     * the same nprobe — at p95 290 ms in a VM phase where that probe
@@ -88,7 +89,7 @@ object GraftConfig {
       "curate" -> Set("docs", "out", "quality", "lm-threshold", "lm-store",
         "mix-alpha", "mix-frac", "shard-tokens", "report-only"),
       "serve" -> (config ++ Set("http-port", "mcp-port", "ivf-index",
-        "pq-index", "pq-refine", "nprobe", "graph-index", "graph-entry-ivf",
+        "pq-refine", "nprobe", "graph-index", "graph-entry-ivf",
         "graph-ef")))
   }
 
@@ -122,14 +123,14 @@ object GraftConfig {
         s"integer, got ${config.nprobe}"
     val denseModes = Seq(
       "IVF_INDEX_DIR (--ivf-index)" -> config.ivfIndexDir,
-      "PQ_INDEX_DIR (--pq-index)" -> config.pqIndexDir,
       "GRAPH_INDEX_DIR (--graph-index)" -> config.graphIndexDir)
       .collect { case (n, Some(_)) => n }
     if (denseModes.size > 1)
       errs += denseModes.mkString(" and ") +
         " are mutually exclusive — the gateway serves through ONE dense index"
-    // graph-walk knobs pair with --graph-index the way pq-refine pairs
-    // with --pq-index: validated only when the graph path is selected
+    // graph-walk knobs pair with --graph-index: validated only when the
+    // graph path is selected (pq-refine likewise, by `Cli serve`, only
+    // when the --ivf-index layout carries IVFADC codes)
     if (config.graphIndexDir.isDefined && config.graphEf < 1)
       errs += "GRAPH_EF (--graph-ef / GRAFT_GRAPH_EF) must be a positive " +
         s"beam width, got ${config.graphEf}"
@@ -142,13 +143,6 @@ object GraftConfig {
         errs += "CHUNK_WORDS (--chunk-words / GRAFT_CHUNK_WORDS) must be " +
           s"a positive word count, got $cw"
     }
-    // validated only when the PQ serving path is actually selected —
-    // ambient GRAFT_PQ_REFINE garbage must not refuse a serve config
-    // that never touches it (mirrors how nprobe pairs with the index
-    // flags; the r11 advice item)
-    if (config.pqIndexDir.isDefined && config.pqRefine < 2)
-      errs += "PQ_REFINE (--pq-refine / GRAFT_PQ_REFINE) must be >= 2 " +
-        s"(the PQ serving path re-ranks refine·k rows), got ${config.pqRefine}"
     errs.result() match {
       case Nil => Right(config)
       case es  => Left(es)
@@ -250,8 +244,6 @@ object GraftConfig {
       pagesDir = pagesDir,
       checkpointDir = if (syncInScope) str("ckpt", "CHECKPOINT_DIR") else None,
       ivfIndexDir = if (portsInScope) str("ivf-index", "IVF_INDEX_DIR")
-        else None,
-      pqIndexDir = if (portsInScope) str("pq-index", "PQ_INDEX_DIR")
         else None,
       pqRefine = if (portsInScope) int("pq-refine", "PQ_REFINE",
         DefaultPqRefine) else DefaultPqRefine,

@@ -50,6 +50,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q16_search_docs")(spark, "/root/testdata/sf0.001")
 
+  /** q145's fixture: the HNSW stack over `base` at `root`, then `batch`
+    * inserted. Each step is guarded on its own commit — the build on the
+    * stack's ready probe, the insertion on layer 0 holding every batch
+    * node (layer 0 commits first; q145 reads it) — so a run that
+    * crashed between the two heals on the next run instead of reading
+    * the base stack alone. */
+  private[graft] def hnswInsertFixture(s: SparkSession, base: DataFrame,
+      batch: DataFrame, root: String): Unit = {
+    // layers build concurrently — guard on the order-independent ready
+    // probe (all layers + meta), not one layer's pointer
+    if (!Knn.hnswIndexReady(s, root))
+      Knn.buildHnswIndex(base, "embedding", "vec_id", root, maxLevel = 2,
+        upperM = 3, k0 = 5, buckets = 8, fp16 = false)
+    val layer0 = Knn.AdjIndex.load(s, s"$root/layer0").relation
+      .filter(col("src") === col("dst")).select(col("dst").as("vec_id"))
+    if (!batch.join(layer0, Seq("vec_id"), "left_anti").isEmpty)
+      Knn.hnswAppendIndex(batch, "embedding", "vec_id", root)
+  }
+
   // ====================================================================
   // Queries — one per implemented operator family from SURVEY.md §2.
   // ====================================================================
@@ -2718,13 +2737,7 @@ object SparkEntry {
         .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       val root = graft.fixtures.Fp16Corpus.workRoot +
         s"/hnswapp-${new java.io.File(dir).getName}-c${e.count()}"
-      // layers build concurrently — guard on the order-independent ready
-      // probe (all layers + meta), not one layer's pointer
-      if (!Knn.hnswIndexReady(s, root)) {
-        Knn.buildHnswIndex(base, "embedding", "vec_id", root, maxLevel = 2,
-          upperM = 3, k0 = 5, buckets = 8, fp16 = false)
-        Knn.hnswAppendIndex(batch, "embedding", "vec_id", root)
-      }
+      hnswInsertFixture(s, base, batch, root)
       graft.similarity.Knn.AdjIndex.load(s, s"$root/layer0").relation
         .filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst"))

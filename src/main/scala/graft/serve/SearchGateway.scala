@@ -25,7 +25,8 @@ import graft.search.{SearchRequest, SemanticSearch}
   * served without restart); the plain-DataFrame constructors pin one
   * version, the reference's process-lifecycle behavior. When a dense
   * index ([[graft.similarity.Knn.DenseIndex]] — fp16 IVF cells, or the
-  * IVFADC codes + exact-refine path via `IvfPqIndex.asDense`) is
+  * IVFADC codes + exact-refine path via `IvfPqIndex.asDense`, both
+  * served by `Cli serve --ivf-index`) is
   * provided, FILTERLESS non-hybrid queries top-k through its
   * partition-pruned probe and only rehydrate the k winners from the
   * store (the pgvector-index shape); filtered queries fall back to the

@@ -1028,6 +1028,10 @@ object Knn {
     * KBs; a unique-id attr would otherwise write n rows. */
   private[graft] val AttrStatsMaxValues = 4096L
 
+  /** Column names an IVF cell layout reserves; every other cell column
+    * is an attr column (filterable metadata). */
+  private val LayoutCols = Set("id", "v", "rv", "codes", "emb16", "centroid_id")
+
   /** Per-cell attr-value counts of one written cell segment — the
     * sidecar [[IvfIndex.servingTopKRouted]] prices equality predicates
     * from WITHOUT a count job (the 100-TB routing contract stated in
@@ -1046,19 +1050,6 @@ object Knn {
   private def writeAttrStatsSidecar(
       spark: org.apache.spark.sql.SparkSession, segDir: String): Unit = {
     import org.apache.spark.sql.types._
-    val cellsPath = new org.apache.hadoop.fs.Path(s"$segDir/cells")
-    val fs = cellsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // no sidecar for THIS generation → retire any stale one (the
-    // spillmeta lesson: an in-place rebuild without attrs must not
-    // leave the dead generation's counts pricing the new layout)
-    def retire(): Unit = {
-      val sp = new org.apache.hadoop.fs.Path(s"$segDir/attrstats")
-      if (fs.exists(sp)) fs.delete(sp, true)
-    }
-    // an empty batch's segment holds only _SUCCESS — no files, no
-    // schema, nothing to price (and nothing a probe would scan)
-    if (!fs.exists(cellsPath) || !fs.listStatus(cellsPath)
-        .exists(_.getPath.getName != "_SUCCESS")) { retire(); return }
     val cells = spark.read.parquet(s"$segDir/cells")
     val statsable: DataType => Boolean = {
       case StringType | IntegerType | LongType | ShortType | ByteType |
@@ -1066,9 +1057,9 @@ object Knn {
       case _ => false
     }
     val acols = cells.schema.fields
-      .filterNot(f => Set("id", "v", "emb16", "centroid_id")(f.name))
+      .filterNot(f => LayoutCols(f.name))
       .filter(f => statsable(f.dataType)).map(_.name).toSeq
-    if (acols.isEmpty) { retire(); return }
+    if (acols.isEmpty) return
     val stacked = acols.map { c =>
       cells.select(col("centroid_id").cast("long").as("centroid_id"),
         lit(c).as("acol"), col(c).cast("string").as("value"))
@@ -1107,34 +1098,21 @@ object Knn {
   private[graft] def ivfAttrStats(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Option[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def sidecarReady(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(s"$p/_SUCCESS")
-      hp.getFileSystem(conf).exists(hp)
-    }
-    def cleanSum(all: DataFrame): DataFrame = {
-      val overflowed = all.filter(col("cnt") < 0)
-        .select(col("acol")).distinct().collect().map(_.getString(0)).toSeq
-      val clean =
-        if (overflowed.isEmpty) all
-        else all.filter(col("cnt") >= 0 && !col("acol").isin(overflowed: _*))
-      clean.groupBy(col("centroid_id"), col("acol"), col("value"))
-        .agg(sum(col("cnt")).as("cnt"))
-    }
-    graft.sync.SegmentedIndex.resolve(spark, indexDir) match {
-      case Some(list) =>
-        val dataSegs = list.filterNot(graft.sync.SegmentedIndex.isTombstone)
-        val paths = dataSegs.map(s => s"$indexDir/$s/attrstats")
-        if (dataSegs.isEmpty || !paths.forall(sidecarReady)) None
-        else Some(cleanSum(
-          paths.map(spark.read.parquet(_)).reduce(_ unionByName _)))
-      case None =>
-        // flat layouts (the IVFADC build writes cells in place) carry
-        // ONE root sidecar — same schema, no segment summing
-        if (sidecarReady(s"$indexDir/attrstats"))
-          Some(cleanSum(spark.read.parquet(s"$indexDir/attrstats")))
-        else None
-    }
+    val paths = graft.sync.SegmentedIndex.resolve(spark, indexDir)
+      .getOrElse(Nil).filterNot(graft.sync.SegmentedIndex.isTombstone)
+      .map(s => s"$indexDir/$s/attrstats")
+    if (paths.isEmpty || !paths.forall { p =>
+        val hp = new org.apache.hadoop.fs.Path(s"$p/_SUCCESS")
+        hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
+      }) return None
+    val all = paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    val overflowed = all.filter(col("cnt") < 0)
+      .select(col("acol")).distinct().collect().map(_.getString(0)).toSeq
+    val clean =
+      if (overflowed.isEmpty) all
+      else all.filter(col("cnt") >= 0 && !col("acol").isin(overflowed: _*))
+    Some(clean.groupBy(col("centroid_id"), col("acol"), col("value"))
+      .agg(sum(col("cnt")).as("cnt")))
   }
 
   /** [[ivfAttrStats]] aggregated to driver state for the serving
@@ -1175,30 +1153,67 @@ object Knn {
       if (priced.isEmpty) None else Some(priced.min)
     }
 
-  private def writeCellSegment(assigned: DataFrame, segDir: String,
-      fp16: Boolean): Unit = {
-    // fp16 cells: assignment ran at full precision (centroid choice is a
-    // build-time decision — no reason to degrade it), but what the index
-    // STORES is 2 bytes/dim — at 100 TB the cells are the index's entire
-    // footprint, and the probe path has a fused decode+cosine kernel, so
-    // fp32 cells would double storage and scan I/O for nothing
-    val cells =
-      if (fp16) assigned
-        .withColumn("emb16", graft.functions.fp16_encode(col("v")))
-        .drop("v") // attr columns (filtered-search metadata) carry through
-      else assigned
+  /** The one cell-segment writer of build, append and compaction:
+    * `cells` (id, centroid_id, payload, attrs) partitioned by cell, then
+    * the attr-stats sidecar. False when `cells` was empty: the segment
+    * then holds no cell directory and no schema, so no reader can open
+    * it. */
+  private def writeCellSegment(cells: DataFrame, segDir: String): Boolean = {
     // cluster by cell before the partitioned write (same rationale as
     // the lexical segment writer): one file per cell per segment, so an
     // nprobe-cell probe schedules nprobe scan tasks, not nprobe × writer
     // tasks of sliver files. Cells that outgrow single-task writes are
     // the signal to raise `k` — which bounds per-probe scan size too
-    cells.repartition(col("centroid_id")).write.partitionBy("centroid_id")
+    val clustered = cells.repartition(col("centroid_id"))
+    // IVFADC refine layout: rows SORTED by id within each cell + 128 KB
+    // row groups (~20 fp16 rows each), so the re-rank's id IN-shortlist
+    // probe skips on row-group statistics to ~r·k tight groups — 3.4×
+    // on the 200 k serving corpus (402 ms → 118 ms warm; GraftSession's
+    // inFilterThreshold keeps the In list from range-degrading)
+    val refine = Set("codes", "emb16").subsetOf(cells.columns.toSet)
+    val writer = (if (refine)
+        clustered.sortWithinPartitions(col("centroid_id"), col("id"))
+      else clustered).write.partitionBy("centroid_id")
+    (if (refine) writer.option("parquet.block.size", 131072) else writer)
       .mode("overwrite").parquet(s"$segDir/cells")
+    val spark = cells.sparkSession
+    val dir = new org.apache.hadoop.fs.Path(s"$segDir/cells")
+    val written = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir).exists(_.getPath.getName.startsWith("centroid_id="))
     // attr columns present → price them for the router while the
     // segment is hot (reads back ONLY centroid_id + attrs — parquet
     // column pruning keeps the vectors untouched)
-    writeAttrStatsSidecar(assigned.sparkSession, segDir)
+    if (written) writeAttrStatsSidecar(spark, segDir)
+    written
   }
+
+  /** fp16 cells store 2 bytes/dim (assignment ran at full precision):
+    * at 100 TB the cells are the index's footprint, and the probe has a
+    * fused decode+cosine kernel. Attr columns carry through. */
+  private def ivfCells(assigned: DataFrame, fp16: Boolean): DataFrame =
+    if (fp16) assigned
+      .withColumn("emb16", graft.functions.fp16_encode(col("v"))).drop("v")
+    else assigned
+
+  /** Delete the sidecar dir `dir` if present (a rebuild retiring it). */
+  private def retireSidecar(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
+  }
+
+  /** The cell columns of the first live data segment of `list`. */
+  private def liveCellColumns(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, list: Seq[String]): Seq[String] =
+    spark.read.parquet(s"$indexDir/${list.filterNot(
+      graft.sync.SegmentedIndex.isTombstone).head}/cells").columns.toSeq
+
+  /** Do the IVF cells at `indexDir` carry IVFADC codes? */
+  def ivfPqLayout(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String): Boolean =
+    graft.sync.SegmentedIndex.resolve(spark, indexDir)
+      .exists(liveCellColumns(spark, indexDir, _).contains("codes"))
 
   /** Build a persistent IVF index: train centroids on `trainFilter`'s
     * subset (at 100 TB this is a sample — the full corpus is only scanned
@@ -1237,7 +1252,7 @@ object Knn {
       trainFilter: Column, fp16: Boolean = false,
       attrCols: Seq[String] = Nil, spill: Boolean = false,
       spillLambda: Double = 1.0): Unit = {
-    require(!attrCols.exists(Set("id", "v", "emb16", "centroid_id")),
+    require(!attrCols.exists(LayoutCols),
       s"ivfBuildIndex: attrCols clash with index layout columns")
     val cents = trainCentroids(corpus.filter(trainFilter), vecCol, keyCol, k, iters)
     val assigned =
@@ -1246,7 +1261,7 @@ object Knn {
       else ivfAssign(corpus, vecCol, keyCol, cents, "cvec",
         "centroid_id", attrCols)
     val seg = graft.sync.SegmentedIndex.newSegmentName()
-    writeCellSegment(assigned, s"$indexDir/$seg", fp16)
+    writeCellSegment(ivfCells(assigned, fp16), s"$indexDir/$seg")
     cents.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
     val spark = corpus.sparkSession
     if (spill) {
@@ -1260,9 +1275,7 @@ object Knn {
       // single-assignment index load as spilled (needless dedup) and,
       // worse, make future appends spill with the dead generation's λ,
       // committing a mixed layout
-      val p = new org.apache.hadoop.fs.Path(s"$indexDir/spillmeta")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+      retireSidecar(spark, s"$indexDir/spillmeta")
     }
     graft.sync.SegmentedIndex.commit(spark, indexDir, Seq(seg))
   }
@@ -1292,45 +1305,51 @@ object Knn {
     * steady-state contract), write one new segment partitioned by the
     * same `centroid_id`, and commit the extended segment list with one
     * atomic replace. Probes prune every segment identically (the
-    * PartitionFilter applies per segment); the at-rest precision is
-    * sniffed from the live segments so an fp16 index stays fp16. As
+    * PartitionFilter applies per segment); the payload is sniffed from
+    * the live segments: fp16 stays fp16, and IVFADC codes encode under
+    * the frozen quantizer (stored rotation, L2 centroids, codebooks). As
     * cells drift from the trained geometry (data distribution shift),
-    * recall decays — re-train wholesale with [[ivfBuildIndex]] when the
-    * drift matters; that rebuild is the same pointer swap. Batch ids
-    * must be new to the index (dedup upstream). foreachBatch-ready. */
+    * recall decays — re-train wholesale with a build when the drift
+    * matters; that rebuild is the same pointer swap. Batch ids must be
+    * new to the index (dedup upstream). foreachBatch-ready. */
   def ivfAppendIndex(batch: DataFrame, vecCol: String, keyCol: String,
       indexDir: String): Unit = {
     val spark = batch.sparkSession
     val existing = graft.sync.SegmentedIndex.resolve(spark, indexDir)
       .getOrElse(throw new IllegalStateException(
         s"ivfAppendIndex: no segmented IVF index at $indexDir (build first)"))
-    val liveCols = spark.read
-      .parquet(s"$indexDir/${existing.filterNot(
-        graft.sync.SegmentedIndex.isTombstone).head}/cells")
-      .columns
-    val fp16 = liveCols.contains("emb16")
+    val liveCols = liveCellColumns(spark, indexDir, existing)
     // attr columns are part of the index's schema contract: sniff them
     // from the live segments (like fp16) and demand them of the batch,
     // so an appended segment can never silently drop the metadata the
     // filtered probes rely on
-    val attrCols = liveCols.toSeq
-      .filterNot(Set("id", "v", "emb16", "centroid_id"))
+    val attrCols = liveCols.filterNot(LayoutCols)
     val missing = attrCols.filterNot(batch.columns.contains)
     require(missing.isEmpty,
       s"ivfAppendIndex: batch lacks index attr column(s) ${missing.mkString(", ")}")
     val cents = spark.read.parquet(s"$indexDir/centroids")
-    // a spilled index spills its appends too (same λ, same cosine
-    // primary) — otherwise appended vectors would silently carry half
-    // the boundary coverage the build promised
-    val assigned = ivfSpillMeta(spark, indexDir) match {
-      case Some(lambda) => Soar.assign(batch, vecCol, keyCol, cents,
-        lambda, attrCols, cosine_distance).drop("crank")
-      case None => ivfAssign(batch, vecCol, keyCol, cents, "cvec",
-        "centroid_id", attrCols)
-    }
+    val cells =
+      if (liveCols.contains("codes"))
+        pqCells(pqResiduals(
+            rotated(batch, vecCol, loadRotation(spark, indexDir)),
+            vecCol, keyCol, cents, attrCols),
+          collectCodebooks(spark.read.parquet(s"$indexDir/codebooks")),
+          refine = liveCols.contains("emb16"), attrCols)
+      else ivfCells(
+        // a spilled index spills its appends too (same λ, same cosine
+        // primary) — otherwise appended vectors would silently carry
+        // half the boundary coverage the build promised
+        ivfSpillMeta(spark, indexDir) match {
+          case Some(lambda) => Soar.assign(batch, vecCol, keyCol, cents,
+            lambda, attrCols, cosine_distance).drop("crank")
+          case None => ivfAssign(batch, vecCol, keyCol, cents, "cvec",
+            "centroid_id", attrCols)
+        }, fp16 = liveCols.contains("emb16"))
     val seg = graft.sync.SegmentedIndex.newSegmentName()
-    writeCellSegment(assigned, s"$indexDir/$seg", fp16)
-    graft.sync.SegmentedIndex.commit(spark, indexDir, existing :+ seg)
+    // an empty batch commits nothing (its orphan dir goes at the next
+    // commit's sweep)
+    if (writeCellSegment(cells, s"$indexDir/$seg"))
+      graft.sync.SegmentedIndex.commit(spark, indexDir, existing :+ seg)
   }
 
   /** Index health profile — the RE-TRAIN TRIGGER the frozen-geometry
@@ -1585,8 +1604,7 @@ object Knn {
     /** Metadata columns the cells carry beyond the index layout — the
       * predicates a filtered probe may reference. Empty for an index
       * built without `attrCols`. */
-    val attrColumns: Seq[String] =
-      cells.columns.toSeq.filterNot(Set("id", "v", "emb16", "centroid_id"))
+    val attrColumns: Seq[String] = cells.columns.toSeq.filterNot(LayoutCols)
 
     /** In-cell exact top-k over the `nprobe` cosine-nearest cells:
       * (id, centroid_id, score) ordered by (score, id). `filter`:
@@ -1638,12 +1656,7 @@ object Knn {
   object IvfIndex {
     def load(spark: org.apache.spark.sql.SparkSession,
         indexDir: String): IvfIndex = {
-      val cents = spark.read.parquet(s"$indexDir/centroids")
-        .select(col("centroid_id"), col("cvec"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      require(cents.nonEmpty,
-        s"IVF index at $indexDir has an empty centroids sidecar")
+      val cents = loadCentroids(spark, indexDir)
       // the segment list resolves ONCE at load (like the centroids):
       // appends committed later serve through a re-load, never half-seen
       val cells = readCells(spark, indexDir)
@@ -1663,16 +1676,26 @@ object Knn {
         minCheckIntervalMs)(load(spark, indexDir))
   }
 
-  /** The live cell data: segmented layout when a `CURRENT` pointer
-    * exists (each segment read as its own parquet root and unioned —
-    * one multi-path read would reject the "conflicting" per-segment
+  /** The collected centroid sidecar of an IVF layout. */
+  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String): Array[(Long, Array[Float])] = {
+    val cents = spark.read.parquet(s"$indexDir/centroids")
+      .select(col("centroid_id"), col("cvec")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    require(cents.nonEmpty,
+      s"IVF index at $indexDir has an empty centroids sidecar")
+    cents
+  }
+
+  /** The live cell data of a segmented IVF layout (either payload):
+    * each segment read as its own parquet root and unioned — one
+    * multi-path read would reject the "conflicting" per-segment
     * partition trees; probe filters push through the Union, so every
-    * segment's scan prunes to the probed cells), else the pre-segment
-    * flat `cells/` dir. Tombstone segments ([[ivfDeleteIndex]])
-    * anti-join away under SEQUENCE scope — a tombstone masks only
-    * segments committed before it, so a vector re-appended after its
-    * delete (the CDC changed-doc shape) is served; steady state (no
-    * tombstones) carries no join. */
+    * segment's scan prunes to the probed cells. Tombstone segments
+    * ([[ivfDeleteIndex]]) anti-join away under SEQUENCE scope — a
+    * tombstone masks only segments committed before it, so a vector
+    * re-appended after its delete (the CDC changed-doc shape) is
+    * served; steady state (no tombstones) carries no join. */
   private def readCells(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame =
     graft.sync.SegmentedIndex.resolve(spark, indexDir) match {
@@ -1687,7 +1710,8 @@ object Knn {
                 .reduce(_ unionByName _),
               Seq("id"), "left_anti")
           }.reduce(_ unionByName _)
-      case None => spark.read.parquet(s"$indexDir/cells")
+      case None => throw new IllegalStateException(
+        s"no segmented IVF index at $indexDir (build first)")
     }
 
   /** Delete vectors from a persistent IVF index without rewriting it —
@@ -1716,9 +1740,10 @@ object Knn {
     * training, no assignment pass, vectors move once). Bounds per-probe
     * segment fan-out after many appends and PHYSICALLY erases tombstoned
     * vectors (the commit's retention pass deletes the swept segments).
-    * fp16 cells carry through as-is — the blob never decodes. Distinct
-    * from the [[ivfBuildIndex]] rebuild, which re-trains the geometry
-    * itself when enough mass has left or drifted. */
+    * Payloads carry through the build's segment writer as-is (never
+    * decoded or re-encoded). Distinct from the [[ivfBuildIndex]]
+    * rebuild, which re-trains the geometry itself when enough mass has
+    * left or drifted. */
   def ivfCompactIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit = {
     val existing = graft.sync.SegmentedIndex.resolve(spark, indexDir)
@@ -1726,33 +1751,22 @@ object Knn {
         s"ivfCompactIndex: no segmented IVF index at $indexDir"))
     if (existing.size <= 1) return
     val seg = graft.sync.SegmentedIndex.newSegmentName()
-    readCells(spark, indexDir)
-      .repartition(col("centroid_id")).write.partitionBy("centroid_id")
-      .mode("overwrite").parquet(s"$indexDir/$seg/cells")
     // tombstoned rows are gone from the compacted union, so the attr
-    // stats this writes are EXACT again (post-delete they were upper
-    // bounds) — and a pre-stats index gains the sidecar here
-    writeAttrStatsSidecar(spark, s"$indexDir/$seg")
-    graft.sync.SegmentedIndex.commit(spark, indexDir, Seq(seg))
+    // stats the writer derives are EXACT again (post-delete they were
+    // upper bounds) — and a pre-stats index gains the sidecar here. No
+    // live row left: the list stays as it is (like an empty append)
+    if (writeCellSegment(readCells(spark, indexDir), s"$indexDir/$seg"))
+      graft.sync.SegmentedIndex.commit(spark, indexDir, Seq(seg))
   }
 
-  /** Is a COMPLETE persistent index on local disk at `indexDir`?  Both
-    * sides must exist — the centroid sidecar AND the cell data (the
-    * segment pointer, or the pre-segment flat layout's `cells` commit
-    * marker) — so a build that crashed between the two writes reads as
-    * absent and gets rebuilt, not half-loaded. Local-path form for the
-    * fixture-cache checks; cluster URIs should probe via FileSystem. */
+  /** Is a COMPLETE persistent IVF index (either payload) on local disk
+    * at `indexDir`?  Both the centroid sidecar AND the segment pointer,
+    * which a build commits after every sidecar, must exist — a crashed
+    * build reads as absent and gets rebuilt, not half-loaded. Local-path
+    * form for fixture caches; cluster URIs should probe via FileSystem. */
   def ivfIndexReady(indexDir: String): Boolean =
     new java.io.File(s"$indexDir/centroids/_SUCCESS").isFile &&
-      (new java.io.File(s"$indexDir/CURRENT").isFile ||
-        new java.io.File(s"$indexDir/cells/_SUCCESS").isFile)
-
-  /** Complete [[ivfPqBuildIndex]] layout on local disk? All three
-    * relations must have committed. */
-  def ivfPqIndexReady(indexDir: String): Boolean =
-    new java.io.File(s"$indexDir/centroids/_SUCCESS").isFile &&
-      new java.io.File(s"$indexDir/codebooks/_SUCCESS").isFile &&
-      new java.io.File(s"$indexDir/cells/_SUCCESS").isFile
+      new java.io.File(s"$indexDir/CURRENT").isFile
 
   /** Lloyd-iteration centroid training for the IVF index, DataFrame-native:
     * seed = the `k` lowest-key vectors relabeled 0..k-1; each iteration
@@ -2321,12 +2335,7 @@ object Knn {
     * cell. */
   def ivfGraphEntries(spark: org.apache.spark.sql.SparkSession,
       ivfIndexDir: String): GraphEntries = {
-    val cents = spark.read.parquet(s"$ivfIndexDir/centroids")
-      .select(col("centroid_id"), col("cvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    require(cents.nonEmpty,
-      s"ivfGraphEntries: empty centroids sidecar at $ivfIndexDir")
+    val cents = loadCentroids(spark, ivfIndexDir)
     import spark.implicits._
     val centDf = cents.toSeq.toDF("__cid", "cvec")
     val cells = readCells(spark, ivfIndexDir)
@@ -4081,24 +4090,25 @@ object Knn {
     * index is nprobe-pruned directories of m-byte codes: 3072-dim fp32
     * corpus = 12 KB/vec, the IVFADC index = m bytes + one id.
     *
-    * Layout: cells parquet PARTITIONED BY centroid_id with (id, codes)
-    * rows; centroid + codebook sidecars (driver-scale, like the IVF
-    * sidecar). Training order: coarse centroids (L2 Lloyd — the whole
-    * IVFADC pipeline is L2-geometric: residual magnitude is an L2
-    * quantity, so cosine cells would hand the sub-quantizer needlessly
-    * wide residuals) → assign → residuals (`zip_with` subtract) → one
-    * L2 sub-quantizer per subspace over ALL residuals. The residual
-    * advantage over raw-vector PQ scales with how CLUSTERED the corpus
-    * is (residual spread ≪ vector spread inside tight cells); on a
-    * quasi-uniform corpus it only matches raw PQ — PqSpec measures both
-    * on the bench fixtures. */
+    * Layout: [[ivfBuildIndex]]'s segmented cells with (id, codes) rows;
+    * centroid + codebook sidecars (driver-scale, like the IVF sidecar)
+    * written before the pointer commit, so append, delete, compaction
+    * and refresh maintain it like the fp16 layout. Training order:
+    * coarse centroids (L2 Lloyd — the whole IVFADC pipeline is
+    * L2-geometric: residual magnitude is an L2 quantity, so cosine cells
+    * would hand the sub-quantizer needlessly wide residuals) → assign →
+    * residuals (`zip_with` subtract) → one L2 sub-quantizer per subspace
+    * over ALL residuals. The residual advantage over raw-vector PQ
+    * scales with how CLUSTERED the corpus is; on a quasi-uniform corpus
+    * it only matches raw PQ — PqSpec measures both. */
   def ivfPqBuildIndex(corpus: DataFrame, vecCol: String, keyCol: String,
       indexDir: String, cells: Int, m: Int, ksub: Int, iters: Int,
       trainFilter: Column, pqTrainFilter: Column = lit(true),
       refine: Boolean = false, attrCols: Seq[String] = Nil,
       opqSweeps: Int = 0): Unit = {
-    require(!attrCols.exists(Set("id", "v", "rv", "codes", "emb16",
-      "centroid_id")), "ivfPqBuildIndex: attrCols clash with layout columns")
+    require(!attrCols.exists(LayoutCols),
+      "ivfPqBuildIndex: attrCols clash with layout columns")
+    val spark = corpus.sparkSession
     // opqSweeps > 0: learn the OPQ rotation on the pq-train slice
     // ([[opqTrain]] — FAISS's OPQMatrix pre-transform ahead of IVFPQ)
     // and build the ENTIRE index in rotated space: coarse cells,
@@ -4106,84 +4116,80 @@ object Knn {
     // queries rotate once driver-side at search entry
     // ([[IvfPqIndex.load]] reads the sidecar). Orthonormal R preserves
     // L2, so every score contract is unchanged — the codes just waste
-    // fewer bits on cross-subspace correlation. Default 0 = bit-exact
-    // legacy layout, no sidecar.
+    // fewer bits on cross-subspace correlation. Default 0 = no sidecar.
     val opqRot: Option[Array[Array[Double]]] =
       if (opqSweeps > 0)
         Some(opqTrain(corpus.filter(pqTrainFilter), vecCol, keyCol,
           m, ksub, iters, opqSweeps)._1)
       else None
-    val corpusR = opqRot match {
-      case Some(rot) => corpus.withColumn(vecCol,
-        graft.functions.mat_vec_rotate(col(vecCol), rot))
-      case None => corpus
-    }
+    val corpusR = rotated(corpus, vecCol, opqRot)
     val cents = trainCentroidsL2(corpusR.filter(trainFilter), vecCol, keyCol,
       cells, iters)
-    val assigned = ivfAssignL2(corpusR, vecCol, keyCol, cents, "cvec",
-      "centroid_id", attrCols)
-    val residuals = assigned
-      .join(broadcast(cents), Seq("centroid_id"))
-      .select(col("id") +: col("centroid_id") +:
-        zip_with(col("v"), col("cvec"), (a, b) => a - b).as("rv") +:
-        col("v") +: attrCols.map(col): _*)
-    // sub-quantizers may train on a residual sample (pqTrainFilter over
-    // the keyed residual rows) — at corpus scale the codebooks only need
-    // a representative slice, exactly like the coarse trainFilter; the
-    // ENCODE pass below always covers every vector. The training slice
-    // is PERSISTED first: pqTrain runs m independent Lloyd trainings,
-    // each several actions, and every one would otherwise re-execute the
-    // full-corpus assignment lineage behind the residual frame (~m×iters
-    // recomputations of the most expensive pass in the build)
+    val residuals = pqResiduals(corpusR, vecCol, keyCol, cents, attrCols)
+    // sub-quantizers may train on a residual sample (pqTrainFilter) —
+    // the ENCODE pass always covers every vector. The slice is PERSISTED:
+    // pqTrain's m Lloyd trainings would otherwise each re-execute the
+    // full-corpus assignment lineage behind the residual frame
     val trainRes = residuals.filter(pqTrainFilter)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cbFrame = pqTrain(trainRes, "rv", "id", m, ksub, iters)
     val cb = collectCodebooks(cbFrame)
     trainRes.unpersist()
-    // the optional refine payload rides in the SAME cell files as an
-    // fp16 column: parquet is columnar, so stage-1 ADC scans never read
-    // it — it's touched only by the re-rank's id-IN-shortlist probe
-    // (r·k rows/request), while at-rest cost grows from m bytes to
-    // m + 2·dim. The alternative (a separate fp16 index) would pay a
-    // second directory listing + an un-cell-pruned probe per request.
-    val encCols = Seq(col("id"), col("centroid_id"),
+    val seg = graft.sync.SegmentedIndex.newSegmentName()
+    writeCellSegment(pqCells(residuals, cb, refine, attrCols),
+      s"$indexDir/$seg")
+    cents.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
+    cbFrame.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebooks")
+    // a rebuild without OPQ retires a previous rotation, which would
+    // otherwise rotate every query and append of the unrotated layout
+    opqRot match {
+      case Some(rot) => saveRotation(spark, indexDir, rot)
+      case None => retireSidecar(spark, s"$indexDir/rotation")
+    }
+    graft.sync.SegmentedIndex.commit(spark, indexDir, Seq(seg))
+  }
+
+  /** `df` with `vecCol` rotated into an OPQ layout's space, if any. */
+  private def rotated(df: DataFrame, vecCol: String,
+      rot: Option[Array[Array[Double]]]): DataFrame =
+    rot.fold(df)(r =>
+      df.withColumn(vecCol, graft.functions.mat_vec_rotate(col(vecCol), r)))
+
+  /** (id, centroid_id, rv = v − c, v, attrs) of `corpus` (in the
+    * layout's space) assigned by L2 to `cents`. */
+  private def pqResiduals(corpus: DataFrame, vecCol: String, keyCol: String,
+      cents: DataFrame, attrCols: Seq[String]): DataFrame =
+    ivfAssignL2(corpus, vecCol, keyCol, cents, "cvec", "centroid_id",
+      attrCols)
+      .join(broadcast(cents), Seq("centroid_id"))
+      .select(col("id") +: col("centroid_id") +:
+        zip_with(col("v"), col("cvec"), (a, b) => a - b).as("rv") +:
+        col("v") +: attrCols.map(col): _*)
+
+  /** The IVFADC encode the build and [[ivfAppendIndex]] share: m-byte
+    * residual codes, the optional fp16 refine payload (same cell files:
+    * parquet is columnar, so stage-1 ADC scans never read it), attrs. */
+  private def pqCells(residuals: DataFrame, cb: Array[Array[Array[Float]]],
+      refine: Boolean, attrCols: Seq[String]): DataFrame =
+    residuals.select(Seq(col("id"), col("centroid_id"),
       graft.functions.pq_encode(col("rv"), cb).as("codes")) ++
       (if (refine) Seq(graft.functions.fp16_encode(col("v")).as("emb16"))
        else Nil) ++
-      attrCols.map(col) // filterable metadata next to the codes (q132's
-                        // attr contract applied to the compressed layout)
-    // refine layout: rows SORTED by id within each cell + 128 KB row
-    // groups (~20 fp16 rows each), so the re-rank's id IN-shortlist
-    // probe skips on row-group statistics to ~r·k tight groups instead
-    // of decompressing every probed cell's emb16 chunk — measured 3.4×
-    // on the 200 k serving corpus (402 ms → 118 ms warm). The In filter
-    // must reach parquet un-degraded: GraftSession raises
-    // inFilterThreshold past r·k so Spark pushes the actual value list,
-    // not the useless (min,max) range over a spread shortlist.
-    val enc = residuals.select(encCols: _*).repartition(col("centroid_id"))
-    val writer = (if (refine)
-        enc.sortWithinPartitions(col("centroid_id"), col("id"))
-      else enc).write.partitionBy("centroid_id")
-    (if (refine) writer.option("parquet.block.size", 131072) else writer)
-      .mode("overwrite").parquet(s"$indexDir/cells")
-    // attr-carrying layouts price their attrs for the router at build
-    // time (flat-layout root sidecar — the IvfIndex segment contract's
-    // one-segment form); reads back only centroid_id + attrs
-    writeAttrStatsSidecar(corpus.sparkSession, indexDir)
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    cbFrame.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    opqRot.foreach(saveRotation(corpus.sparkSession, indexDir, _))
-  }
+      attrCols.map(col): _*) // filterable metadata next to the codes
 
   /** The OPQ rotation sidecar of an [[ivfPqBuildIndex]] layout, if the
-    * index was built with `opqSweeps > 0` (absent → identity). */
+    * index was built with `opqSweeps > 0` (absent → identity). Probed
+    * through the Hadoop FileSystem (the spillmeta lesson). */
   def loadRotation(
       spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[Array[Array[Double]]] =
-    if (!new java.io.File(s"$indexDir/rotation/_SUCCESS").isFile) None
+      indexDir: String): Option[Array[Array[Double]]] = {
+    val p = new org.apache.hadoop.fs.Path(s"$indexDir/rotation/_SUCCESS")
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      None
     else Some(spark.read.parquet(s"$indexDir/rotation").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2))
+  }
 
   /** Persist an OPQ rotation as `indexDir/rotation` ([[loadRotation]]'s
     * layout) — shared by [[ivfPqBuildIndex]] and trained-artifact
@@ -4199,7 +4205,8 @@ object Knn {
   /** Serving handle over an [[ivfPqBuildIndex]] layout — the IVFADC
     * counterpart of [[IvfIndex]]: centroids AND codebooks are collected
     * once at load (both are driver-scale sidecars — cells×dim floats
-    * and m×ksub×dsub floats). A request picks its nprobe L2-nearest
+    * and m×ksub×dsub floats), and the segment list resolves once, like
+    * [[IvfIndex.load]]'s. A request picks its nprobe L2-nearest
     * cells locally (the index's cell metric) and builds one residual
     * LUT per probed cell (`q − c` sliced against the shared codebooks —
     * per-cell because residuals are cell-relative).
@@ -4243,8 +4250,7 @@ object Knn {
     /** Metadata columns the cells carry beyond the layout
       * (ivfPqBuildIndex `attrCols`) — the predicates a filtered probe
       * may reference. */
-    val attrColumns: Seq[String] = cells.columns.toSeq
-      .filterNot(Set("id", "centroid_id", "codes", "emb16"))
+    val attrColumns: Seq[String] = cells.columns.toSeq.filterNot(LayoutCols)
 
     /** Number of cells in the frozen geometry — the nprobe ceiling. */
     def numCells: Int = cents.length
@@ -4467,21 +4473,17 @@ object Knn {
   object IvfPqIndex {
     def load(spark: org.apache.spark.sql.SparkSession,
         indexDir: String): IvfPqIndex = {
-      val cents = spark.read.parquet(s"$indexDir/centroids")
-        .select(col("centroid_id"), col("cvec"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      require(cents.nonEmpty,
-        s"IVFADC index at $indexDir has an empty centroids sidecar")
+      val cents = loadCentroids(spark, indexDir)
+      val cells = readCells(spark, indexDir)
+      require(cells.columns.contains("codes"), s"the IVF index at " +
+        s"$indexDir carries no IVFADC codes (build with ivfPqBuildIndex)")
       val cb = collectCodebooks(spark.read.parquet(s"$indexDir/codebooks"))
-      val cells = spark.read.parquet(s"$indexDir/cells")
       new IvfPqIndex(indexDir, cents, cb, cells,
         cells.schema("centroid_id").dataType, loadRotation(spark, indexDir))
     }
 
-    /** [[load]] behind a generation check — the IVFADC layout has no
-      * segment pointer (rebuilds rewrite in place), so the fingerprint
-      * is the three relations' commit-marker mtimes. A reload unpins the
-      * superseded generation's resident cells. */
+    /** [[load]] behind [[IvfIndex.reloading]]'s generation check; a
+      * reload unpins the superseded generation's resident cells. */
     def reloading(spark: org.apache.spark.sql.SparkSession, indexDir: String,
         minCheckIntervalMs: Long = 0L): graft.sync.Reloading[IvfPqIndex] =
       graft.sync.Reloading.withEvict(spark, indexDir,

@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
   * production re-ingest loop (reference: the nightly re-sync shape of
   * jobs/sync.py, generalized to the index layouts this engine adds).
   *
-  * The delta is [[graft.text.CorpusPrep.snapshotDiff]] between what the
-  * store currently serves and the new snapshot: `added` / `removed` /
-  * `changed` keys only — the unchanged bulk (at 100 TB, ~all of it)
-  * is filtered in-plan by the digest comparison and never touches an
-  * index or the store write path beyond the one narrow (key, md5) scan.
+  * The delta ([[diff]]) is taken between what the store currently
+  * serves and the new snapshot: `added` / `removed` / `changed` (text)
+  * / `metadata` (another stored column) keys only — the unchanged bulk
+  * (at 100 TB, ~all of it) is filtered in-plan by the digest
+  * comparison and never touches an index or the store write path
+  * beyond the one narrow (key, digests) scan.
   *
   * Index application is delete-then-append under the sequence-scoped
   * tombstones of [[SegmentedIndex]]: EVERY delta key is tombstoned
@@ -71,7 +72,34 @@ object CorpusRefresh {
     * firing. */
   val DefaultCodesDriftRatio: Double = 1.5
 
-  /** Apply `newSnap` to the store at `storeDir` and any of the two
+  /** The refresh delta between the stored corpus `old` and `newSnap`:
+    * one `(keyCol, status)` row per key that differs — `added`,
+    * `removed`, `changed` when the text differs, and `metadata` when
+    * only another stored column does (tags, note, author, location…).
+    * Every stored column but the key, the text, the vectors (`vecCol`,
+    * [[HighlightStore.Emb16Col]]) and `version` (an export restamps it
+    * on every row) feeds the metadata digest. [[graft.text.CorpusPrep
+    * .snapshotDiff]] keeps its text-only contract; a refresh must also
+    * carry a retag to the store, so it diffs on both digests. */
+  private def diff(old: DataFrame, newSnap: DataFrame, textCol: String,
+      keyCol: String, vecCol: String): DataFrame = {
+    val metaCols = old.columns.toSeq.filterNot(
+      Set(keyCol, textCol, vecCol, HighlightStore.Emb16Col, "version")).sorted
+    def digests(df: DataFrame, side: String): DataFrame =
+      df.select(col(keyCol).as("id"), lit(true).as(s"${side}_in"),
+        md5(col(textCol)).as(s"${side}_text"),
+        md5(to_json(struct(metaCols.map(col): _*))).as(s"${side}_meta"))
+    digests(old, "o").join(digests(newSnap, "n"), Seq("id"), "full_outer")
+      .select(col("id").as(keyCol),
+        when(col("o_in").isNull, lit("added"))
+          .when(col("n_in").isNull, lit("removed"))
+          .when(!(col("o_text") <=> col("n_text")), lit("changed"))
+          .when(!(col("o_meta") <=> col("n_meta")), lit("metadata"))
+          .otherwise(lit("unchanged")).as("status"))
+      .filter(col("status") =!= "unchanged")
+  }
+
+  /** Apply `newSnap` to the store at `storeDir` and any of the
     * index roots; returns the materialized delta (keyCol, status) so
     * callers can fan further delta-only work (re-embed, re-dedup)
     * off the same frame. No-op (and no new versions/segments) when the
@@ -99,10 +127,11 @@ object CorpusRefresh {
     val old = HighlightStore.read(spark, storeDir).getOrElse(
       throw new IllegalStateException(
         s"CorpusRefresh.refresh: no store at $storeDir (writeAtomic first)"))
-    val delta = graft.text.CorpusPrep
-      .snapshotDiff(old, newSnap, textCol, keyCol).persist()
+    val delta = diff(old, newSnap, textCol, keyCol, vecCol).persist()
     if (delta.isEmpty) { delta.unpersist(); delta }
     else {
+      // a metadata-only row re-applies like a changed one: IVF cells
+      // and adjacency layouts may carry metadata as attr columns
       val deltaKeys = delta.select(col(keyCol))
       // PERSISTED: every index family below runs 2–4 actions over the
       // upsert batch (isEmpty, append, sidecar, entry IVF), and the

@@ -17,10 +17,11 @@ import org.apache.spark.sql.SparkSession
   * committed segment list — one small read covering append, delete and
   * compaction in a single token) concatenated with the modification
   * times of any sidecar commit markers (`centroids/_SUCCESS`,
-  * `codebooks/_SUCCESS` — rebuilds rewrite those without touching a
-  * pointer). On local disk or HDFS the check is microseconds; on object
-  * stores it is one metadata GET, so high-QPS deployments can bound it
-  * with `minCheckIntervalMs` (staleness ≤ the interval — the standard
+  * `codebooks/_SUCCESS`, `meta/_SUCCESS` — sidecars the pointer does
+  * not name); a root with no pointer reads as `absent`. On local disk
+  * or HDFS the check is microseconds; on object stores it is one
+  * metadata GET, so high-QPS deployments can bound it with
+  * `minCheckIntervalMs` (staleness ≤ the interval — the standard
   * serving trade; 0 re-checks every request).
   *
   * Thread-safe: the hot path is one volatile read + the fingerprint
@@ -106,13 +107,7 @@ object Reloading {
     val rootP = new HPath(root)
     val fs = rootP.getFileSystem(conf)
     val ptr = SegmentedIndex.resolve(spark, root)
-      .map(_.mkString(","))
-      .getOrElse {
-        // pre-segment flat layout: the data commit marker's mtime
-        val m = new HPath(rootP, "cells/_SUCCESS")
-        if (fs.exists(m)) s"flat@${fs.getFileStatus(m).getModificationTime}"
-        else "absent"
-      }
+      .map(_.mkString(",")).getOrElse("absent")
     val side = sidecars.map { s =>
       val m = new HPath(rootP, s"$s/_SUCCESS")
       if (fs.exists(m)) fs.getFileStatus(m).getModificationTime.toString

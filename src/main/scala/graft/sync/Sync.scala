@@ -411,7 +411,9 @@ object Sync {
     * highlight deleted upstream), changed docs re-index under
     * sequence-scoped tombstones, and the unchanged bulk never moves.
     * Advances the watermark like a backfill (the export walk saw
-    * everything). Returns (added, changed, removed) counts. */
+    * everything). Returns (added, changed, removed, metadata) counts —
+    * `metadata` rows changed only stored columns other than the text
+    * (a retag, a new note). */
   def refresh(spark: SparkSession, client: ExportClient, storeDir: String,
       checkpointDir: String,
       lexIndexDir: Option[String] = None,
@@ -436,9 +438,11 @@ object Sync {
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         delta.unpersist()
         SyncState.write(checkpointDir, ServiceName, now())
-        val n = Seq("added", "changed").map(counts.getOrElse(_, 0L)).sum
+        val n = Seq("added", "changed", "metadata")
+          .map(counts.getOrElse(_, 0L)).sum
         graft.serve.Metrics.counter("rows_synced_total").inc(n)
-        Map("added" -> 0L, "changed" -> 0L, "removed" -> 0L) ++ counts
+        Map("added" -> 0L, "changed" -> 0L, "removed" -> 0L,
+          "metadata" -> 0L) ++ counts
       } finally if (spoolDir.isEmpty) deleteSpool(spark, spool)
     }
 

@@ -130,6 +130,9 @@ class CliSpec extends SparkTestBase {
       storeDir = s"$dir/store", embedderDim = 32,
       ivfIndexDir = Some(s"$dir/ivf"))).swap.getOrElse(0))
     assert(cw == 2 && errW.contains("64") && errW.contains("32"), errW)
+    // --pq-refine tunes only an IVFADC layout: an fp16 one ignores it
+    assert(Cli.denseIndex(spark, GraftConfig(storeDir = s"$dir/store",
+      ivfIndexDir = Some(s"$dir/ivf"), pqRefine = 1)).isRight)
   }
 
   test("index --type ivfpq builds the serving IVFADC layout; --opq-sweeps rotates it") {
@@ -160,7 +163,7 @@ class CliSpec extends SparkTestBase {
       "--pq-ksub", "4", "--opq-sweeps", "1"), spark))
     assert(c == 0, out)
     assert(out.contains("\"opq_sweeps\":1"))
-    assert(graft.similarity.Knn.ivfPqIndexReady(s"$dir/ivfpq"))
+    assert(graft.similarity.Knn.ivfIndexReady(s"$dir/ivfpq"))
     val idx = graft.similarity.Knn.IvfPqIndex.load(spark, s"$dir/ivfpq")
     assert(idx.hasRefine && idx.hasRotation)
     // the rotated layout serves: callers pass ORIGINAL-space queries and
@@ -172,8 +175,53 @@ class CliSpec extends SparkTestBase {
     // at start-up, naming both widths
     val (cw, errW) = captureErr(Cli.denseIndex(spark, GraftConfig(
       storeDir = s"$dir/store", embedderDim = 32,
-      pqIndexDir = Some(s"$dir/ivfpq"))).swap.getOrElse(0))
+      ivfIndexDir = Some(s"$dir/ivfpq"))).swap.getOrElse(0))
     assert(cw == 2 && errW.contains("64") && errW.contains("32"), errW)
+  }
+
+  test("serve --ivf-index serves an IVFADC layout through its refine view; refresh --ivf-index maintains it") {
+    val dir = Files.createTempDirectory("graft-cli-ivfpq-serve").toString
+    val pages = s"$dir/pages"
+    Files.createDirectories(java.nio.file.Paths.get(pages))
+    val texts = Seq("spark joins and shuffles", "completely different topic words",
+      "a third unrelated highlight", "and a fourth one entirely")
+    texts.zipWithIndex.foreach { case (t, i) =>
+      Files.writeString(java.nio.file.Paths.get(pages, s"page$i.json"),
+        pageJson(s"h${i + 1}", t))
+    }
+    assert(capture(Cli.run(Array("sync", "--backfill", "--pages-dir", pages,
+      "--store", s"$dir/store", "--ckpt", s"$dir/ckpt"), spark))._1 == 0)
+    val ivfpq = s"$dir/ivfpq"
+    assert(capture(Cli.run(Array("index", "--store", s"$dir/store",
+      "--out", ivfpq, "--type", "ivfpq", "--cells", "2",
+      "--train-every", "1", "--pq-m", "8", "--pq-ksub", "4"), spark))._1 == 0)
+    val cfg = GraftConfig(storeDir = s"$dir/store", ivfIndexDir = Some(ivfpq),
+      pqRefine = 2)
+    val dense = Cli.denseIndex(spark, cfg).toOption.flatten.get
+    // the IVFADC + refine view, not the fp16 probe: its answers are
+    // asDense(--pq-refine)'s
+    assert(!dense().isInstanceOf[graft.similarity.Knn.IvfIndex])
+    val qv = graft.embed.Embedder.Default.embed(texts.head)
+    val view = graft.similarity.Knn.IvfPqIndex.load(spark, ivfpq).asDense(2)
+    assert(dense().servingTopK(qv, 2, 2, None).toSeq ==
+      view.servingTopK(qv, 2, 2, None).toSeq)
+    // --pq-refine is checked against the IVFADC layout it tunes
+    val (cr, errR) = captureErr(Cli.denseIndex(spark, cfg.copy(pqRefine = 1))
+      .swap.getOrElse(0))
+    assert(cr == 2 && errR.contains("PQ_REFINE"), errR)
+    // refresh --ivf-index: an added highlight becomes servable
+    Files.writeString(java.nio.file.Paths.get(pages, "page4.json"),
+      pageJson("h5", "quantized vectors refresh"))
+    val (c, out) = capture(Cli.run(Array("refresh", "--pages-dir", pages,
+      "--store", s"$dir/store", "--ckpt", s"$dir/ckpt",
+      "--ivf-index", ivfpq), spark))
+    assert(c == 0 && out.contains("\"added\":1"), out)
+    val q5 = graft.embed.Embedder.Default.embed("quantized vectors refresh")
+    assert(dense().servingTopK(q5, 1, 2, None).head.get(0) == "h5")
+    // the removed flag is refused as one `serve` does not read
+    val (cq, errQ) = captureErr(Cli.run(Array("serve", "--store",
+      s"$dir/store", "--pq-index", ivfpq), spark))
+    assert(cq == 2 && errQ.contains("--pq-index is not a serve option"), errQ)
   }
 
   test("index --type graph/hnsw/lexical: build → serve → delete → refresh round-trip") {

@@ -37,18 +37,11 @@ class ConfigSpec extends AnyFunSuite {
       GraftConfig("/s", httpPort = 0, mcpPort = 0)).isRight)
   }
 
-  test("dense-index matrix: ivf+pq refuse together; pq-refine < 2 refuses") {
-    val Left(errs) = GraftConfig.validated(GraftConfig("/s",
-      ivfIndexDir = Some("/i"), pqIndexDir = Some("/p"),
-      pqRefine = 1)): @unchecked
-    assert(errs.exists(_.contains("mutually exclusive")), errs)
-    assert(errs.exists(e => e.contains("PQ_REFINE") && e.contains("got 1")),
-      errs)
-    assert(GraftConfig.validated(
-      GraftConfig("/s", pqIndexDir = Some("/p"))).isRight)
+  test("dense-index matrix: pq-refine is left to the IVFADC layout check; default rung 64") {
     assert(GraftConfig.orThrow(GraftConfig.validated(
       GraftConfig("/s"))).pqRefine == 64) // the measured default rung
-    // pqRefine is validated ONLY when the PQ path is selected — ambient
+    // pqRefine is validated ONLY where an IVFADC layout is served (`Cli
+    // serve` checks it against the --ivf-index layout) — ambient
     // GRAFT_PQ_REFINE garbage must not refuse an unrelated serve config
     assert(GraftConfig.validated(GraftConfig("/s", pqRefine = 1)).isRight)
     assert(GraftConfig.validated(GraftConfig("/s",
@@ -61,9 +54,6 @@ class ConfigSpec extends AnyFunSuite {
       ivfIndexDir = Some("/i"), graphIndexDir = Some("/g"))): @unchecked
     assert(e1.exists(e => e.contains("mutually exclusive")
       && e.contains("GRAPH_INDEX_DIR")), e1)
-    val Left(e2) = GraftConfig.validated(GraftConfig("/s",
-      pqIndexDir = Some("/p"), graphIndexDir = Some("/g"))): @unchecked
-    assert(e2.exists(_.contains("mutually exclusive")), e2)
     // walk knobs validate only when the graph path is selected
     val Left(e3) = GraftConfig.validated(GraftConfig("/s",
       graphIndexDir = Some("/g"), graphEf = 0)): @unchecked

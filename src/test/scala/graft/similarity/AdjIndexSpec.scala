@@ -396,6 +396,31 @@ class AdjIndexSpec extends SparkTestBase {
         .search(qv, k = 5, ef = 12, hops = 3).collect().nonEmpty)
     } finally rmTree(root)
   }
+
+  test("q145's fixture guard heals a crash between the stack build and the insertion") {
+    val root = java.nio.file.Files.createTempDirectory("hnswheal").toString
+    val dir = s"$root/stack"
+    val base = emb.filter($"vec_id" < 250)
+      .select($"vec_id".cast("long").as("vec_id"), $"embedding")
+    val batch = emb.filter($"vec_id" >= 250 && $"vec_id" < 300)
+      .select($"vec_id".cast("long").as("vec_id"), $"embedding")
+    def layer0Nodes: Set[Long] = Knn.AdjIndex.load(spark, s"$dir/layer0")
+      .relation.filter($"src" === $"dst").select($"dst").as[Long]
+      .collect().toSet
+    try {
+      // the base stack committed, the insertion never ran
+      Knn.buildHnswIndex(base, "embedding", "vec_id", dir, maxLevel = 2,
+        upperM = 3, k0 = 5, buckets = 8, fp16 = false)
+      val batchIds = batch.select($"vec_id").as[Long].collect().toSet
+      assert(batchIds.size == 50 && (layer0Nodes & batchIds).isEmpty)
+      graft.SparkEntry.hnswInsertFixture(spark, base, batch, dir)
+      assert(batchIds.subsetOf(layer0Nodes))
+      // a second run finds both steps committed and changes nothing
+      val segs = graft.sync.SegmentedIndex.resolve(spark, s"$dir/layer0")
+      graft.SparkEntry.hnswInsertFixture(spark, base, batch, dir)
+      assert(graft.sync.SegmentedIndex.resolve(spark, s"$dir/layer0") == segs)
+    } finally rmTree(root)
+  }
 }
 
 /** Orders [[AdjIndexSpec]]'s failed-build case: a task of layer 0's job

@@ -452,6 +452,12 @@ class KnnSpec extends SparkTestBase {
       assert(compacted.collect().toSeq == del)
       assert(!compacted.queryExecution.executedPlan.toString.contains("Join"),
         "compacted probe plan should carry no anti-join")
+      // every vector deleted: nothing live to compact into, and a
+      // segment without cells would leave the index unreadable
+      Knn.ivfDeleteIndex(spark, dirDel, emb.select($"vec_id"), "vec_id")
+      Knn.ivfCompactIndex(spark, dirDel)
+      assert(Knn.IvfIndex.load(spark, dirDel).search(qv, k = 10, nprobe = 4)
+        .collect().isEmpty)
     } finally { rmrf(dirDel); rmrf(dirRef) }
   }
 

@@ -14,6 +14,35 @@ class PqSpec extends SparkTestBase {
   private lazy val emb = table("embeddings")
     .filter($"embedding".isNotNull).cache()
 
+  private def rmTree(dir: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+  }
+
+  private def vecOf(id: Long): Array[Float] =
+    emb.filter($"vec_id" === id).select($"embedding")
+      .head().getSeq[Float](0).toArray
+
+  /** The filterless [[Knn.IvfPqIndex.asDense]] probe over the resident
+    * cells against its reference, the Catalyst refine search: same ids
+    * in the same order, scores bit-for-bit. (20, 1, 64) asks for
+    * refine·k = 1280 rows of one probed cell, more than it holds. */
+  private def sameAsCatalyst(h: Knn.IvfPqIndex, q: Array[Float]): Unit =
+    for ((k, nprobe, refine) <- Seq((1, 4, 2), (2, 1, 2), (3, 2, 2),
+        (10, 4, 3), (20, 1, 64))) {
+      val served = h.asDense(refine).servingTopK(q, k, nprobe, None)
+      val ref = h.search(q, k, nprobe, refine, filter = None,
+        cosineScore = true).collect()
+      val at = s"k=$k nprobe=$nprobe refine=$refine"
+      assert(served.nonEmpty, at)
+      assert(served.map(_.get(0)).toSeq == ref.map(_.get(0)).toSeq, at)
+      assert(served.map(r => java.lang.Double.doubleToRawLongBits(
+          r.getDouble(1))).toSeq ==
+        ref.map(r => java.lang.Double.doubleToRawLongBits(
+          r.getDouble(2))).toSeq, at)
+    }
+
   private def exactIds(qv: Array[Float], k: Int): Seq[Long] =
     emb.select($"vec_id".as("id"), $"embedding".as("v"))
       .withColumn("d", Knn.l2sq($"v", typedLit(qv)))
@@ -344,24 +373,7 @@ class PqSpec extends SparkTestBase {
       assertThrows[IllegalArgumentException](handle.asDense(1))
 
       // the filterless view runs over the resident cells; the Catalyst
-      // refine search is its reference: same ids in the same order,
-      // scores bit-for-bit. (20, 1, 64) asks for refine·k = 1280 rows
-      // of one probed cell, more than it holds
-      val combos = Seq((1, 4, 2), (2, 1, 2), (3, 2, 2), (10, 4, 3),
-        (20, 1, 64))
-      def sameAsCatalyst(h: Knn.IvfPqIndex, q: Array[Float]): Unit =
-        for ((k, nprobe, refine) <- combos) {
-          val served = h.asDense(refine).servingTopK(q, k, nprobe, None)
-          val ref = h.search(q, k, nprobe, refine, filter = None,
-            cosineScore = true).collect()
-          val at = s"k=$k nprobe=$nprobe refine=$refine"
-          assert(served.nonEmpty, at)
-          assert(served.map(_.get(0)).toSeq == ref.map(_.get(0)).toSeq, at)
-          assert(served.map(r => java.lang.Double.doubleToRawLongBits(
-              r.getDouble(1))).toSeq ==
-            ref.map(r => java.lang.Double.doubleToRawLongBits(
-              r.getDouble(2))).toSeq, at)
-        }
+      // refine search is its reference ([[sameAsCatalyst]])
       val queries = Seq(7L, 11L, 150L).map(id =>
         emb.filter($"vec_id" === id).select($"embedding")
           .head().getSeq[Float](0).toArray)
@@ -445,5 +457,116 @@ class PqSpec extends SparkTestBase {
       java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
         .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
     }
+  }
+
+  test("IVFADC lifecycle: appends encode under the frozen quantizer; delete, compact and refresh maintain it") {
+    // one IVFADC + refine layout with attrs, one OPQ-rotated layout
+    for ((attrs, opq) <- Seq(Seq("label") -> 0, Seq.empty[String] -> 1)) {
+      val root = java.nio.file.Files.createTempDirectory("ivfpqlife").toString
+      val dir = s"$root/idx"
+      val at = s"attrs=$attrs opq=$opq"
+      try {
+        Knn.ivfPqBuildIndex(emb.filter($"vec_id" < 400), "embedding",
+          "vec_id", dir, cells = 4, m = 8, ksub = 16, iters = 2,
+          trainFilter = $"vec_id" % 5 === 0, refine = true,
+          attrCols = attrs, opqSweeps = opq)
+        assert(Knn.ivfIndexReady(dir) && Knn.ivfPqLayout(spark, dir), at)
+        val batch = emb.filter($"vec_id" >= 400 && $"vec_id" < 450)
+        Knn.ivfAppendIndex(batch, "embedding", "vec_id", dir)
+        val segs = graft.sync.SegmentedIndex.resolve(spark, dir).get
+        assert(segs.length == 2, at)
+        // an empty batch commits no segment (one without cells has no
+        // schema, and every later read of the layout would fail on it)
+        Knn.ivfAppendIndex(batch.filter(lit(false)), "embedding", "vec_id",
+          dir)
+        assert(graft.sync.SegmentedIndex.resolve(spark, dir).get == segs, at)
+
+        // appended rows: exactly the (centroid_id, codes) an L2
+        // assignment + residual encode against the FROZEN sidecars give
+        val cents = spark.read.parquet(s"$dir/centroids")
+        val cb = Knn.collectCodebooks(spark.read.parquet(s"$dir/codebooks"))
+        val rot = Knn.loadRotation(spark, dir)
+        assert(rot.isDefined == (opq > 0), at)
+        val batchR = rot.fold(batch)(r => batch.withColumn("embedding",
+          graft.functions.mat_vec_rotate($"embedding", r)))
+        def codesById(df: org.apache.spark.sql.DataFrame) =
+          df.select($"id", $"centroid_id".cast("long"), $"codes").collect()
+            .map(r => r.getLong(0) ->
+              (r.getLong(1), r.getAs[Array[Byte]](2).toSeq)).toMap
+        val expected = codesById(Knn.ivfAssignL2(batchR, "embedding",
+            "vec_id", cents, "cvec", "centroid_id")
+          .join(cents, Seq("centroid_id"))
+          .withColumn("codes", graft.functions.pq_encode(
+            zip_with($"v", $"cvec", (a, b) => a - b), cb)))
+        val appended = spark.read.parquet(s"$dir/${segs.last}/cells")
+        assert(appended.columns.toSet ==
+          Set("id", "centroid_id", "codes", "emb16") ++ attrs, at)
+        assert(expected.size == 50 && codesById(appended) == expected, at)
+
+        // the reloading handle serves the added ids
+        val h = Knn.IvfPqIndex.reloading(spark, dir)
+        def served(id: Long): Seq[Long] = h.get.asDense(4)
+          .servingTopK(vecOf(id), 10, 4, None).map(_.getLong(0)).toSeq
+        assert(served(420L).head == 420L, at)
+        // removed ids are never served, on a multi-segment layout with a
+        // tombstone, where the resident probe still equals Catalyst's
+        Knn.ivfDeleteIndex(spark, dir, Seq(420L, 10L).toDF("vec_id"),
+          "vec_id")
+        Seq(420L, 10L).foreach(id =>
+          assert(!served(id).exists(Set(420L, 10L)), at))
+        Seq(7L, 420L, 431L).foreach(id => sameAsCatalyst(h.get, vecOf(id)))
+        if (attrs.nonEmpty) {
+          val f = h.get.asDense(4).servingTopK(vecOf(431L), 5, 1,
+            Some($"label" === 3))
+          assert(f.nonEmpty && !f.exists(r => Set(420L, 10L)(r.getLong(0))),
+            at)
+        }
+        val before = Seq(7L, 431L).map(id => h.get.asDense(4)
+          .servingTopK(vecOf(id), 10, 4, None).toSeq)
+
+        // compaction: one segment, the same codes, the same answers
+        Knn.ivfCompactIndex(spark, dir)
+        assert(graft.sync.SegmentedIndex.resolve(spark, dir).get.length == 1)
+        assert(Knn.IvfPqIndex.load(spark, dir).attrColumns == attrs, at)
+        assert(Seq(7L, 431L).map(id => h.get.asDense(4)
+          .servingTopK(vecOf(id), 10, 4, None).toSeq) == before, at)
+
+        // refresh: the store's delta reaches the IVFADC cells
+        val store = s"$root/store"
+        val live = emb.filter($"vec_id" < 450 && !$"vec_id".isin(420L, 10L))
+          .withColumn("text", concat(lit("doc "), $"vec_id"))
+        graft.sync.HighlightStore.writeAtomic(live, store)
+        val next = live.filter($"vec_id" =!= 30L).unionByName(
+          emb.filter($"vec_id" >= 450 && $"vec_id" < 460)
+            .withColumn("text", concat(lit("doc "), $"vec_id")))
+        graft.sync.CorpusRefresh.refresh(spark, next, "text", "vec_id",
+          store, ivfIndexDir = Some(dir)).unpersist()
+        assert(served(455L).head == 455L, at)
+        assert(!served(30L).contains(30L), at)
+        Seq(30L, 455L).foreach(id => sameAsCatalyst(h.get, vecOf(id)))
+        h.get.unpin()
+      } finally rmTree(root)
+    }
+  }
+
+  test("a rebuild without OPQ retires the rotation sidecar; the sidecar is found through the Hadoop FileSystem") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqrot").toString
+    val fresh = java.nio.file.Files.createTempDirectory("ivfpqrotref").toString
+    def build(d: String, opq: Int): Unit = Knn.ivfPqBuildIndex(emb,
+      "embedding", "vec_id", d, cells = 4, m = 8, ksub = 16, iters = 2,
+      trainFilter = $"vec_id" % 5 === 0, refine = true, opqSweeps = opq)
+    try {
+      build(dir, opq = 1)
+      assert(Knn.IvfPqIndex.load(spark, dir).hasRotation)
+      assert(Knn.loadRotation(spark, s"file://$dir").isDefined)
+      build(dir, opq = 0)
+      build(fresh, opq = 0)
+      val h = Knn.IvfPqIndex.load(spark, dir)
+      assert(!h.hasRotation && Knn.loadRotation(spark, dir).isEmpty)
+      val qv = vecOf(11L)
+      assert(h.search(qv, 10, 4, refine = 4).collect().toSeq ==
+        Knn.IvfPqIndex.load(spark, fresh).search(qv, 10, 4, refine = 4)
+          .collect().toSeq)
+    } finally Seq(dir, fresh).foreach(rmTree)
   }
 }

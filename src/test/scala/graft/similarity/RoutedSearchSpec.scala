@@ -223,7 +223,7 @@ class RoutedSearchSpec extends SparkTestBase {
       "embedding", "vec_id", dir, cells = 8, m = 2, ksub = 4, iters = 1,
       trainFilter = $"vec_id" % 5 === 0, refine = true,
       attrCols = Seq("label"))
-    // sidecar == brute groupBy, through the flat-layout read path
+    // sidecar == brute groupBy, read from the build's cell segment
     val stats = Knn.ivfAttrStats(spark, dir).get
       .groupBy($"value").agg(sum($"cnt").as("c"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -259,8 +259,8 @@ class RoutedSearchSpec extends SparkTestBase {
         s"$measuredJobs")
     assert(gotS.map(r => (r.get(0), r.getDouble(1))).toSeq ==
       gotM.map(r => (r.get(0), r.getDouble(1))).toSeq)
-    // rebuild WITHOUT attrs in place: the sidecar must not survive to
-    // price the new generation (the spillmeta retirement rule)
+    // rebuild WITHOUT attrs in place: the dead generation's sidecar
+    // must not price the new one (its segment carries none)
     Knn.ivfPqBuildIndex(emb.select($"vec_id", $"embedding"),
       "embedding", "vec_id", dir, cells = 8, m = 2, ksub = 4, iters = 1,
       trainFilter = $"vec_id" % 5 === 0, refine = true)

@@ -93,6 +93,48 @@ class CorpusRefreshSpec extends SparkTestBase {
     } finally { Seq(store, lex, ivf, lexRef, ivfRef).foreach(rmrf) }
   }
 
+  test("metadata-only edits reach the store and an attr-carrying IVF index under their own status") {
+    val store = tmp("crm-store"); val ivf = tmp("crm-ivf")
+    // tags, author and note are stored metadata; `version` is not
+    // compared (a fresh export restamps it on every row)
+    def meta(snapV: Long, retag: Set[Long], renote: Set[Long]) =
+      snapA.as[(Long, String, Array[Float])].collect().toSeq.map {
+        case (i, text, v) =>
+          (i, text, v,
+            if (retag(i)) Seq("edited") else Seq(s"t${i % 3}"),
+            s"author${i % 4}",
+            if (renote(i)) "new note" else "note", snapV)
+      }.toDF("doc_id", "text", "embedding", "tags", "author", "note",
+        "version")
+    try {
+      val before = meta(1L, Set.empty, Set.empty)
+      HighlightStore.writeAtomic(before, store)
+      graft.similarity.Knn.ivfBuildIndex(before, "embedding", "doc_id", ivf,
+        k = 3, iters = 2, trainFilter = col("doc_id") % 5 === 0,
+        attrCols = Seq("note"))
+      val after = meta(2L, retag = Set(11L), renote = Set(23L))
+      val delta = CorpusRefresh.refresh(spark, after, "text", "doc_id",
+        store, ivfIndexDir = Some(ivf))
+      // not "changed": the text (and so the vector) is the same
+      assert(delta.as[(Long, String)].collect().toSet ==
+        Set((11L, "metadata"), (23L, "metadata")))
+      delta.unpersist()
+      val stored = HighlightStore.read(spark, store).get
+      assert(stored.filter($"doc_id" === 11L).select($"tags")
+        .as[Seq[String]].head() == Seq("edited"))
+      assert(stored.filter($"doc_id" === 23L).select($"note")
+        .as[String].head() == "new note")
+      // the index serves the new attr value, and only the new one
+      val idx = graft.similarity.Knn.IvfIndex.load(spark, ivf)
+      val hits = idx.search(vec(23L, 0), k = 60, nprobe = 3,
+        Some($"note" === "new note")).select($"id").as[Long].collect()
+      assert(hits.toSeq == Seq(23L))
+      assert(idx.search(vec(23L, 0), k = 60, nprobe = 3,
+          Some($"note" === "note")).select($"id").as[Long].collect()
+        .count(_ == 23L) == 0)
+    } finally { Seq(store, ivf).foreach(rmrf) }
+  }
+
   test("refresh drives the flat graph + code sidecar: resident serving follows the delta") {
     val store = tmp("cr6-store"); val g = tmp("cr6-graph") + "/i"
     try {
