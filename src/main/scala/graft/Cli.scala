@@ -172,34 +172,23 @@ object Cli {
         if (!Knn.ivfIndexReady(d))
           return refuse(1, s"no IVF index at $d (build one with " +
             "`graft.Cli index --type ivf|ivfpq` or drop --ivf-index)")
-        if (Knn.ivfPqLayout(spark, d)) {
+        val h = Knn.IvfIndex.reloading(spark, d)
+        val idx = h.get
+        if (idx.hasCodes) {
           // checked here, against the layout: ambient GRAFT_PQ_REFINE
           // garbage never refuses a config that does not use it
           if (cfg.pqRefine < 2)
             return refuse(2, "PQ_REFINE (--pq-refine / GRAFT_PQ_REFINE) " +
               "must be >= 2 (serving the IVFADC index at " + d +
               s" re-ranks refine·k rows), got ${cfg.pqRefine}")
-          val h = Knn.IvfPqIndex.reloading(spark, d)
-          if (!h.get.hasRefine)
+          if (!idx.hasRefine)
             return refuse(1, s"IVFADC index at $d has no refine payload — " +
               "rebuild with ivfPqBuildIndex(refine=true)")
-          if (h.get.dim != cfg.embedderDim) return widthRefusal(d, h.get.dim)
-          // hasRefine is RE-CHECKED per request, not just here: the
-          // reloading handle follows rebuilds, and a later generation
-          // committed without the refine payload must become a
-          // descriptive serving error (surfaced as an SSE/JSON-RPC error
-          // frame), not asDense's bare require failure
-          return Right(Some(() => {
-            val idx = h.get
-            if (!idx.hasRefine) throw new IllegalStateException(
-              s"IVFADC index at $d was rebuilt without its refine " +
-              "payload; rebuild with ivfPqBuildIndex(refine=true)")
-            idx.asDense(cfg.pqRefine)
-          }))
         }
-        val h = Knn.IvfIndex.reloading(spark, d)
-        if (h.get.dim != cfg.embedderDim) return widthRefusal(d, h.get.dim)
-        Right(Some(() => h.get))
+        if (idx.dim != cfg.embedderDim) return widthRefusal(d, idx.dim)
+        // the view follows rebuilds: a later generation without the
+        // refine payload fails its requests with asDense's refusal
+        Right(Some(() => h.get.asDense(cfg.pqRefine)))
       case _ => Right(None)
     }
   }

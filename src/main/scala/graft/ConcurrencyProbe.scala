@@ -20,10 +20,12 @@ import org.apache.spark.sql.functions._
   *    distance math, so 32 cores saturate near 6 qps — 20 closed-loop
   *    users push per-request latency to seconds REGARDLESS of scheduling.
   *    This mode documents graceful saturation, not the gate.
-  *  - `ivf`: requests go through [[graft.similarity.Knn.IvfIndex]] — the
-  *    centroid sidecar is driver-resident (loaded once), probe selection
-  *    is local arithmetic, and each request is ONE Spark job scanning
-  *    only `nprobe/cells` of the corpus via partition pruning. This is
+  *  - `ivf`: requests go through the Catalyst probe of
+  *    [[graft.similarity.Knn.IvfIndex.search]] — the centroid sidecar is
+  *    driver-resident (loaded once), probe selection is local
+  *    arithmetic, and each request is ONE Spark job scanning only
+  *    `nprobe/cells` of the corpus via partition pruning (the serving
+  *    edge's filterless requests take the handle's resident probe). This is
   *    the concurrency dial: per-request work drops ~cells/nprobe×, so
   *    the same 20 users sit far below saturation.
   *
@@ -128,7 +130,7 @@ object ConcurrencyProbe {
           trainFilter = col("id") % every === 0,
           pqTrainFilter = col("id") % every === 0, refine = true)
       }
-      val dense = graft.similarity.Knn.IvfPqIndex.load(spark, indexDir)
+      val dense = graft.similarity.Knn.IvfIndex.load(spark, indexDir)
         .asDense(refine)
       recall10(spark, corpus, n,
         s"dense(pq+refine=$refine,cells=$cellsK,nprobe=$nprobe)", qvec) {
@@ -314,7 +316,7 @@ object ConcurrencyProbe {
           trainFilter = col("id") % every === 0,
           pqTrainFilter = col("id") % every === 0, refine = refine > 1)
       }
-      val index = graft.similarity.Knn.IvfPqIndex.load(spark, indexDir)
+      val index = graft.similarity.Knn.IvfIndex.load(spark, indexDir)
       run(spark,
         s"pq(cells=$cellsK,nprobe=$nprobe,m=$m,ksub=$ksub,refine=$refine)",
         n, users, reqsPerUser) { seed =>

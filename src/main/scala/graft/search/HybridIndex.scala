@@ -26,9 +26,11 @@ import graft.text.TextRank
   * the real bound (e.g. many serving replicas sharing a planner-bound
   * driver, or job-count quotas); use concurrent legs for latency.
   *
-  * Wraps the two load-once handles ([[Knn.IvfIndex]],
-  * [[TextRank.LexIndex]]); compose with [[graft.sync.Reloading]] at the
-  * caller when the indexes take live maintenance.
+  * Wraps the two load-once handles ([[Knn.IvfIndex]] over a cosine cell
+  * layout — its Catalyst [[Knn.IvfIndex.search]], so both legs plan into
+  * one job — and [[TextRank.LexIndex]]); compose with
+  * [[graft.sync.Reloading]] at the caller when the indexes take live
+  * maintenance.
   */
 final class HybridIndex(dense: Knn.IvfIndex, lex: TextRank.LexIndex) {
 

@@ -41,7 +41,7 @@ object SemanticSearch {
   /** The request's metadata predicates as (column name, predicate)
     * pairs — ONE definition of filter semantics shared by the store
     * scan, the hybrid legs, and the attr-carrying IVF index probe
-    * ([[graft.similarity.Knn.IvfServing.servingTopKRouted]]), so no two
+    * ([[graft.similarity.Knn.IvfIndex.servingTopKRouted]]), so no two
     * serving paths can disagree on which rows are in scope. */
   def filterConditions(req: SearchRequest): Seq[(String, Column)] =
     Seq[Option[(String, Column)]](

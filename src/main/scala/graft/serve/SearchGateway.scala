@@ -24,12 +24,13 @@ import graft.search.{SearchRequest, SemanticSearch}
   * [[graft.sync.Reloading]]-backed handles (live sync/refresh commits
   * served without restart); the plain-DataFrame constructors pin one
   * version, the reference's process-lifecycle behavior. When a dense
-  * index ([[graft.similarity.Knn.DenseIndex]] — fp16 IVF cells, or the
-  * IVFADC codes + exact-refine path via `IvfPqIndex.asDense`, both
-  * served by `Cli serve --ivf-index`) is
-  * provided, FILTERLESS non-hybrid queries top-k through its
-  * partition-pruned probe and only rehydrate the k winners from the
-  * store (the pgvector-index shape); filtered queries fall back to the
+  * index ([[graft.similarity.Knn.DenseIndex]] — an
+  * [[graft.similarity.Knn.IvfIndex]] over fp16 cells, or its
+  * `asDense(refine)` view over IVFADC codes + exact refine, both served
+  * by `Cli serve --ivf-index`) is provided, FILTERLESS non-hybrid
+  * queries top-k through its resident probe and only rehydrate the k
+  * winners from the store (the pgvector-index shape); a filtered query
+  * serves from the index when the cells carry its columns, else from the
   * store scan, where predicates push into the same plan as the score. */
 final class SearchGateway(storeFn: () => DataFrame, embedder: Embedder,
     dense: Option[() => graft.similarity.Knn.DenseIndex], nprobe: Int) {
@@ -138,6 +139,9 @@ final class SearchGateway(storeFn: () => DataFrame, embedder: Embedder,
     * column never projected). Scores come from the
     * index (same cosine the store scan computes), so the two paths
     * agree wherever the probe's recall does. */
+  /** Filterless request through the dense index: on an
+    * [[graft.similarity.Knn.IvfIndex]] (either cell layout) one Spark
+    * job over its resident cells, then the rehydrate of the k winners. */
   private def denseIndexSearch(idx: graft.similarity.Knn.DenseIndex,
       req: SearchRequest): Iterator[Map[String, Any]] =
     rehydrate(idx.servingTopK(req.queryVec, SearchRequest.clampK(req.k),

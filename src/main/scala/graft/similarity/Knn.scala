@@ -1209,12 +1209,6 @@ object Knn {
     spark.read.parquet(s"$indexDir/${list.filterNot(
       graft.sync.SegmentedIndex.isTombstone).head}/cells").columns.toSeq
 
-  /** Do the IVF cells at `indexDir` carry IVFADC codes? */
-  def ivfPqLayout(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Boolean =
-    graft.sync.SegmentedIndex.resolve(spark, indexDir)
-      .exists(liveCellColumns(spark, indexDir, _).contains("codes"))
-
   /** Build a persistent IVF index: train centroids on `trainFilter`'s
     * subset (at 100 TB this is a sample — the full corpus is only scanned
     * for the single assignment pass), assign every corpus vector to its
@@ -1399,7 +1393,7 @@ object Knn {
     * The count job reads ONLY the predicate's columns (column pruning)
     * and counts DISTINCT vectors on a SOAR-spilled layout; the serving
     * edge prices from the build-time attr-stats sidecar instead
-    * ([[IvfServing.servingTopKRouted]]) — the routing CONTRACT is the
+    * ([[IvfIndex.servingTopKRouted]]) — the routing CONTRACT is the
     * same: route on measured selectivity, never folklore. Returns
     * (id, centroid_id, score, route), the route constant per request —
     * oracle-gated end-to-end (q159: the replay computes the same count,
@@ -1418,8 +1412,8 @@ object Knn {
   /** What the serving edge needs from a dense ANN index, independent of
     * its storage layout — [[SearchGateway]] routes filterless and
     * attr-filtered requests through this so the default dense mode is a
-    * deployment choice ([[IvfIndex]] fp16 cells, or [[IvfPqIndex]] ADC
-    * codes + exact refine via [[IvfPqIndex.asDense]]), not a code path.
+    * deployment choice ([[IvfIndex]] over fp16 cells, or over ADC codes
+    * + exact refine via [[IvfIndex.asDense]]), not a code path.
     * `score` is cosine distance ascending — the same number the store
     * scan computes, so index- and store-served results agree wherever
     * the probe's recall does. */
@@ -1447,8 +1441,8 @@ object Knn {
       servingTopK(queryVec, k, nprobe, Some(filter))
   }
 
-  /** The probe-width policy of every IVF request — the ONE place both
-    * layouts ([[IvfServing]]) and [[ivfRoutedSearchIndex]] decide how
+  /** The probe-width policy of every IVF request — the ONE place
+    * [[IvfIndex]] and [[ivfRoutedSearchIndex]] decide how
     * many cells a request reads. `attempt(width, full)` runs one probe
     * over the `width` nearest cells; `full` marks the routed pass.
     *  - route: `priced` = Some((matches, threshold)) with matches ≤
@@ -1490,42 +1484,249 @@ object Knn {
       case _ => cellIds.map(_.toString)
     }
 
-  /** [[DenseIndex]] over an IVF cell layout — the serving policy
-    * [[IvfIndex]] and [[IvfPqIndex.asDense]] share. Each layout supplies
-    * only its per-attempt probe ([[probeRows]]); the width policy
-    * ([[probeWidths]]), the predicate pricing and the query-width check
-    * live here once. Pricing state is collected lazily, once per
-    * instance. */
-  sealed abstract class IvfServing(indexDir: String, cells: DataFrame,
-      spilled: Boolean) extends DenseIndex {
+  /** Serving handle over any segmented IVF layout: [[ivfBuildIndex]]'s
+    * fp16 or fp32 cosine cells, SOAR-spilled or not, and
+    * [[ivfPqBuildIndex]]'s IVFADC codes. The layout states every fact
+    * the handle needs, so there is nothing to configure:
+    *  - the cell metric is squared L2 (in OPQ space when a rotation
+    *    sidecar exists) exactly when the cells carry `codes`, cosine
+    *    otherwise; [[probe]] ranks the centroids by it, driver-local;
+    *  - the exact payload is `emb16` or `v`; the codebooks and the
+    *    rotation are collected when present; the spilled flag is the
+    *    spill meta's.
+    * Centroids, codebooks and the segment list resolve ONCE at load
+    * (driver-scale sidecars), so appends committed later serve through
+    * a re-load, never half-seen.
+    *
+    * Two probe paths, one answer:
+    *  - [[search]] plans Catalyst jobs over the cell parquet, the probed
+    *    cells as a PartitionFilter. It is the only path that evaluates a
+    *    `Column`, so attr-filtered serving runs it, and it is the
+    *    reference the resident probe is specified against;
+    *  - a filterless serving request runs ONE `SparkContext.runJob` over
+    *    the cells pinned in executor memory (one RDD partition per cell,
+    *    built by the first such request of a handle): no analysis,
+    *    codegen or parquet open per request. A vector stays resident at
+    *    ≈ id + 2·dim bytes (fp16), id + 4·dim (fp32) or id + m + 2·dim
+    *    (IVFADC + refine) until [[unpin]].
+    * A cosine layout's handle is its own [[DenseIndex]]; an IVFADC layout
+    * serves cosine scores through [[asDense]]'s refine stage. The width
+    * policy ([[probeWidths]]), the query checks and the predicate pricing
+    * live here once; pricing is collected lazily, once per handle,
+    * whatever view serves. Thread-safe: pinning is serialized, all other
+    * state is immutable or lazy. */
+  final class IvfIndex private (indexDir: String,
+      centroids: Array[(Long, Array[Float])], cb: Array[Array[Array[Float]]],
+      cells: DataFrame, rot: Option[Array[Array[Double]]], spilled: Boolean,
+      lease: Option[graft.sync.SegmentedIndex.Lease]) extends DenseIndex {
 
     /** Number of cells in the frozen geometry — the nprobe ceiling. */
-    def numCells: Int
+    def numCells: Int = centroids.length
 
-    /** Vector width of the frozen geometry — the only query width the
-      * index can score (a narrower dot product would truncate). */
-    def dim: Int
+    /** Vector width of the geometry — the only query width it scores (a
+      * narrower dot product would truncate; an OPQ rotation is square,
+      * so caller space has the same). */
+    val dim: Int = centroids.head._2.length
 
-    /** One probe over the `width` nearest cells, collected: ≤ k
-      * `(id, score)` rows ordered by (score, id). */
-    protected def probeRows(queryVec: Array[Float], k: Int, width: Int,
-        filter: Option[Column]): Array[org.apache.spark.sql.Row]
+    /** Metadata columns the cells carry beyond the layout — the
+      * predicates a filtered probe may reference. */
+    val attrColumns: Seq[String] = cells.columns.toSeq.filterNot(LayoutCols)
 
-    /** One pruned probe filterless; filtered, the widening ladder. */
+    /** Do the cells carry IVFADC codes (L2 cells, ADC at stage 1)? */
+    val hasCodes: Boolean = cells.columns.contains("codes")
+
+    /** Does the IVFADC layout carry the fp16 refine payload
+      * ([[ivfPqBuildIndex]]`(refine = true)`)? Only then can the
+      * `refine > 1` re-rank and [[asDense]] run. */
+    val hasRefine: Boolean = hasCodes && cells.columns.contains("emb16")
+
+    /** Was the index built with an OPQ rotation (`opqSweeps > 0`)? */
+    val hasRotation: Boolean = rot.nonEmpty
+
+    private val centroidOf: Map[Long, Array[Float]] = centroids.toMap
+
+    /** Rotate a caller-space query into the index's space — applied
+      * exactly once at every public entry (the internals all take the
+      * already-rotated vector). */
+    private def rq(queryVec: Array[Float]): Array[Float] =
+      rot.fold(queryVec)(graft.functions.RotMath.rotateLocal(queryVec, _))
+
+    /** The query's `nprobe` nearest cells by the cell metric, ties by
+      * cell id — local arithmetic over the collected centroids. */
+    private def probe(queryVec: Array[Float], nprobe: Int): Seq[Long] =
+      centroids
+        .map { case (cid, cv) =>
+          (cid, if (hasCodes) l2sqLocal(queryVec, cv)
+            else graft.functions.VectorMath.cosineDistance(cv, queryVec)) }
+        .sortBy { case (cid, d) => (d, cid) }
+        .take(nprobe).map(_._1).toSeq
+
+    private def l2sqLocal(q: Array[Float], c: Array[Float]): Double = {
+      var aa = 0.0; var ab = 0.0; var bb = 0.0
+      var i = 0
+      while (i < c.length) {
+        aa += q(i).toDouble * q(i)
+        ab += q(i).toDouble * c(i)
+        bb += c(i).toDouble * c(i); i += 1
+      }
+      aa - 2.0 * ab + bb
+    }
+
+    /** The probed cells' rows, `filter` applied inside the pruned scan:
+      * the cell ids land in PartitionFilters (un-probed directories are
+      * never listed) and the predicate reaches the parquet reader as a
+      * data filter on the probed partitions. */
+    private def scoped(probed: Seq[Long], filter: Option[Column]): DataFrame =
+      filter.foldLeft(cells.filter(col("centroid_id").isin(cellLiterals(
+        probed, cells.schema("centroid_id").dataType): _*)))(_ filter _)
+
+    /** Stage-1 top-k over the `nprobe` nearest cells, (id, centroid_id,
+      * score) ordered by (score, id): exact cosine distance on a cosine
+      * layout, approximate squared L2 (`score_adc`) on an IVFADC one.
+      * `filter`: optional predicate over [[attrColumns]], applied INSIDE
+      * the pruned cell scan, so selective predicates cut scan work
+      * instead of starving the post-hoc result. */
+    def search(queryVec: Array[Float], k: Int, nprobe: Int,
+        filter: Option[Column]): DataFrame = {
+      val q = rq(queryVec)
+      val probed = probe(q, nprobe)
+      if (hasCodes) return adc(q, k, probed, filter)
+      val score =
+        if (cells.columns.contains("emb16"))
+          graft.functions.fp16_cosine_distance(col("emb16"), typedLit(q))
+        else cosine_distance(col("v"), typedLit(q))
+      val scored = scoped(probed, filter).withColumn("score", score)
+      // spilled layout: a vector whose primary AND secondary cells are
+      // both probed scores twice with the same distance — collapse via
+      // a map-side-combinable min on narrow (id, score, cell) rows, the
+      // Soar.topKProbes shape, so effective k is k distinct vectors;
+      // unspilled indexes keep the untouched single-job plan
+      val ranked =
+        if (!spilled) scored
+          .select(col("id"),
+            col("centroid_id").cast("long").as("centroid_id"),
+            col("score"))
+        else scored.groupBy(col("id"))
+          .agg(min(col("score")).as("score"),
+            min(col("centroid_id").cast("long")).as("centroid_id"))
+          .select(col("id"), col("centroid_id"), col("score"))
+      ranked
+        .orderBy(col("score").asc, col("id").asc)
+        .limit(k)
+        .select(col("id"), col("centroid_id"), col("score"))
+    }
+
+    def search(queryVec: Array[Float], k: Int, nprobe: Int): DataFrame =
+      search(queryVec, k, nprobe, None: Option[Column])
+
+    /** ADC-shortlist-then-exact-re-rank (the FAISS `IndexRefine` stage)
+      * of an IVFADC layout: stage 1 is the ADC search widened to
+      * `refine·k` candidates; their ids collect to the driver (r·k
+      * values) and stage 2 re-scores EXACTLY those rows against the fp16
+      * refine payload — a second partition-pruned scan of the probed
+      * cells with an id IN-list that parquet row-group stats skip on.
+      * Stage 2 touches r·k fp16 rows, not nprobe/cells of them, so the
+      * re-rank cost is independent of corpus size. `score` is exact
+      * squared L2 of (q − v) at fp16 input precision, or with
+      * `cosineScore` the fused fp16 cosine distance — identical ranking
+      * on the unit-norm corpus (l2² = 2·cos-dist for unit vectors), but
+      * the number the store scan and the cosine layouts emit. The filter
+      * applies at stage 1, so the shortlist already satisfies it.
+      * `refine = 1` is [[search]]'s stage 1. */
+    def search(queryVec: Array[Float], k: Int, nprobe: Int,
+        refine: Int, filter: Option[Column] = None,
+        cosineScore: Boolean = false): DataFrame = {
+      require(refine >= 1, s"refine=$refine must be >= 1")
+      if (refine == 1) return search(queryVec, k, nprobe, filter)
+      require(hasRefine,
+        "refine > 1 needs an index built with ivfPqBuildIndex(refine=true)")
+      // id type follows the corpus key (long for numeric corpora, string
+      // for the highlight store) — the IN-list carries whatever it is
+      val qR = rq(queryVec)
+      val probed = probe(qR, nprobe)
+      val shortlist = adc(qR, k * refine, probed, filter)
+        .select(col("id")).collect().map(_.get(0)).toSeq
+      val rescore =
+        if (cosineScore) graft.functions.fp16_cosine_distance(
+          col("emb16"), typedLit(qR))
+        else l2sq(graft.functions.fp16_decode(col("emb16")),
+          typedLit(qR))
+      // chunkedIn, not isin: refine·k literals in one In would build a
+      // left-deep parquet or-chain whose recursive evaluation overflows
+      // default task stacks past ~1024 ids (refine=128·k=10, and the
+      // API default k=20 at refine=64, both hit 1280) — and any single
+      // In past inFilterThreshold silently range-degrades (the r10
+      // cliff). Balanced 256-id legs have neither failure mode at any
+      // legal refine·k (MaxK=100 → 12800 ids → depth ~261).
+      scoped(probed, Some(chunkedIn(col("id"), shortlist)))
+        .select(col("id"),
+          col("centroid_id").cast("long").as("centroid_id"),
+          rescore.as("score"))
+        .orderBy(col("score").asc, col("id").asc)
+        .limit(k)
+    }
+
+    /** Stage-1 ADC over an ALREADY-ROTATED query: ONE scan with a
+      * partition IN-filter + the per-cell LUT map — nprobe single-cell
+      * legs would mean nprobe scans to PLAN per request, and planning is
+      * the serialized path under concurrency (measured: 4-leg union p95
+      * 1.47 s vs single-scan ~0.4 s at the 20-user gate shape). */
+    private def adc(queryVec: Array[Float], k: Int, probed: Seq[Long],
+        filter: Option[Column]): DataFrame =
+      scoped(probed, filter)
+        .select(col("id"),
+          col("centroid_id").cast("long").as("centroid_id"),
+          graft.functions.pq_adc_score_cells(col("codes"),
+            col("centroid_id"), cellLuts(queryVec, probed)).as("score_adc"))
+        .orderBy(col("score_adc").asc, col("id").asc)
+        .limit(k)
+
+    /** One residual LUT per probed cell (`q − c` against the shared
+      * codebooks — per cell because residuals are cell-relative) over an
+      * ALREADY-ROTATED query. */
+    private def cellLuts(queryVec: Array[Float], probed: Seq[Long])
+        : Map[Long, Array[Array[Double]]] =
+      probed.map { cid =>
+        val qr = queryVec.zip(centroidOf(cid)).map { case (a, b) => a - b }
+        cid -> graft.functions.PqMath.lut(qr, cb)
+      }.toMap
+
+    /** This handle as a [[DenseIndex]] at refine rung `refine`: itself on
+      * a cosine layout (its scores are exact; there is nothing to
+      * refine), on an IVFADC layout a view whose ADC shortlist of r·k
+      * rows re-scores against the fp16 refine payload with the COSINE
+      * metric (store-compatible scores). Views share the handle's pinned
+      * cells and pricing, so a view per request costs nothing. */
+    def asDense(refine: Int): DenseIndex =
+      if (!hasCodes) this
+      else { checkRefine(refine); new RefineView(this, refine) }
+
     def servingTopK(queryVec: Array[Float], k: Int, nprobe: Int,
-        filter: Option[Column]): Array[org.apache.spark.sql.Row] = {
-      checkWidth(queryVec)
+        filter: Option[Column]): Array[org.apache.spark.sql.Row] =
+      topK(queryVec, k, nprobe, filter, refine = 1)
+
+    override def servingTopKRouted(queryVec: Array[Float], k: Int,
+        nprobe: Int, filter: Column): Array[org.apache.spark.sql.Row] =
+      topKRouted(queryVec, k, nprobe, filter, refine = 1)
+
+    /** [[servingTopK]] at rung `refine`: one pruned probe filterless
+      * (the resident job); filtered, the widening ladder of Catalyst
+      * probes. */
+    private[Knn] def topK(queryVec: Array[Float], k: Int, nprobe: Int,
+        filter: Option[Column],
+        refine: Int): Array[org.apache.spark.sql.Row] = {
+      check(queryVec, refine)
       probeWidths[Array[org.apache.spark.sql.Row]](numCells, nprobe, None,
           rows => filter.nonEmpty && rows.length < k) {
-        (width, _) => probeRows(queryVec, k, width, filter)
+        (width, _) => probeRows(queryVec, k, width, filter, refine)
       }
     }
 
-    /** [[DenseIndex.servingTopKRouted]]: price the predicate — an
-      * equality on a stats-covered attr reads its match count from the
-      * build-time sidecar (FREE: driver map lookup, the 100-TB routing
-      * contract), anything else measures it ([[measuredMatches]]) —
-      * then
+    /** [[DenseIndex.servingTopKRouted]] at rung `refine`: price the
+      * predicate — an equality on a stats-covered attr reads its match
+      * count from the build-time sidecar (FREE: driver map lookup, the
+      * 100-TB routing contract), anything else measures it
+      * ([[measuredMatches]]) — then
       *  - matches ≤ nprobe·avgCellRows → ONE full-width probe (exact by
       *    construction; fewer vector rows than even the first probe
       *    attempt would touch, and none of the ladder's widenings);
@@ -1534,26 +1735,46 @@ object Knn {
       * After deletes the sidecar counts are upper bounds (tombstones
       * don't subtract), which only biases the route toward the ladder —
       * both branches stay exact; compaction re-exacts them. */
-    override def servingTopKRouted(queryVec: Array[Float], k: Int,
-        nprobe: Int, filter: Column): Array[org.apache.spark.sql.Row] = {
-      checkWidth(queryVec)
+    private[Knn] def topKRouted(queryVec: Array[Float], k: Int, nprobe: Int,
+        filter: Column, refine: Int): Array[org.apache.spark.sql.Row] = {
+      check(queryVec, refine)
       val matches = statsPrice(attrStats, filter)
         .getOrElse(measuredMatches(filter))
       val threshold =
         (avgCellRows * math.max(1, math.min(nprobe, numCells))).toLong
       probeWidths[Array[org.apache.spark.sql.Row]](numCells, nprobe,
           Some(matches -> threshold), _.length < k) {
-        (width, _) => probeRows(queryVec, k, width, Some(filter))
+        (width, _) => probeRows(queryVec, k, width, Some(filter), refine)
       }
     }
 
-    /** Refuse a query of another width BEFORE any Spark job: the
-      * scoring kernels would otherwise truncate to the shorter operand
-      * and rank rows by a meaningless number. */
-    private def checkWidth(queryVec: Array[Float]): Unit =
+    /** One probe over the `width` nearest cells, collected: ≤ k
+      * `(id, score)` rows ordered by (score, id), cosine scores. */
+    private def probeRows(queryVec: Array[Float], k: Int, width: Int,
+        filter: Option[Column], refine: Int): Array[org.apache.spark.sql.Row] =
+      if (filter.isEmpty) residentTopK(queryVec, k, width, refine)
+      else search(queryVec, k, width, refine, filter, cosineScore = true)
+        .collect().map(r => org.apache.spark.sql.Row(r.get(0), r.getDouble(2)))
+
+    /** Refuse, BEFORE any Spark job, a request the layout cannot answer
+      * in cosine scores: a query of another width (the scoring kernels
+      * would truncate to the shorter operand and rank rows by a
+      * meaningless number), or an IVFADC request without its refine
+      * stage. */
+    private def check(queryVec: Array[Float], refine: Int): Unit = {
+      checkRefine(refine)
       require(queryVec.length == dim,
         s"query vector is ${queryVec.length}-dim but the index at " +
           s"$indexDir is $dim-dim; embed queries at the index's width")
+    }
+
+    private def checkRefine(refine: Int): Unit =
+      require(!hasCodes || (hasRefine && refine >= 2),
+        s"the IVFADC index at $indexDir serves cosine scores through its " +
+          "refine stage: it needs the refine payload of " +
+          "ivfPqBuildIndex(refine=true) " +
+          (if (hasRefine) "" else "(this generation has none) ") +
+          s"and refine >= 2, got refine=$refine")
 
     /** The predicate's match count, measured: one scan of ONLY its
       * columns (vectors never read), counting DISTINCT vectors on a
@@ -1581,100 +1802,210 @@ object Knn {
         : Option[(Set[String], Map[(String, String), Long])] =
       collectAttrStats(cells.sparkSession, indexDir,
         if (spilled) 2L else 1L)
-  }
 
-  /** Serving handle over a persistent IVF index: the k-row centroid
-    * sidecar is collected ONCE at load and lives on the driver (it is
-    * query-plan state, like a query vector — k × dim floats), so each
-    * request costs exactly one Spark job: probe selection is local
-    * arithmetic, and the cell scan carries `centroid_id IN (probed…)` as
-    * a PartitionFilter — only the probed directories are read.
-    * Schema-sniffs fp16 cells and scores them through the fused
-    * decode+cosine kernel. Thread-safe: all mutable state is
-    * constructed at load. */
-  final class IvfIndex private (centroids: Array[(Long, Array[Float])],
-      cells: DataFrame, inListType: org.apache.spark.sql.types.DataType,
-      fp16: Boolean, spilled: Boolean, indexDir: String)
-      extends IvfServing(indexDir, cells, spilled) {
+    /** Cell id → its partition of the resident cells (centroid order). */
+    private val cellPart: Map[Long, Int] =
+      centroids.map(_._1).zipWithIndex.toMap
 
-    def numCells: Int = centroids.length
+    @volatile private var pinned: org.apache.spark.rdd.RDD[IvfIndex.Cell] = _
+    private var released = false
 
-    val dim: Int = centroids.head._2.length
-
-    /** Metadata columns the cells carry beyond the index layout — the
-      * predicates a filtered probe may reference. Empty for an index
-      * built without `attrCols`. */
-    val attrColumns: Seq[String] = cells.columns.toSeq.filterNot(LayoutCols)
-
-    /** In-cell exact top-k over the `nprobe` cosine-nearest cells:
-      * (id, centroid_id, score) ordered by (score, id). `filter`:
-      * optional metadata predicate over [[attrColumns]], applied INSIDE
-      * the pruned cell scan — it reaches the parquet reader as a data
-      * filter on the probed partitions, so selective predicates cut
-      * scan work instead of starving the post-hoc result. */
-    def search(queryVec: Array[Float], k: Int, nprobe: Int,
-        filter: Option[Column] = None): DataFrame = {
-      val probed = centroids
-        .map { case (cid, cv) =>
-          (cid, graft.functions.VectorMath.cosineDistance(cv, queryVec)) }
-        .sortBy { case (cid, d) => (d, cid) }
-        .take(nprobe).map(_._1).toSeq
-      val score =
-        if (fp16) graft.functions.fp16_cosine_distance(
-          col("emb16"), typedLit(queryVec))
-        else cosine_distance(col("v"), typedLit(queryVec))
-      val scored = filter
-        .foldLeft(cells.filter(col("centroid_id")
-          .isin(cellLiterals(probed, inListType): _*)))(_ filter _)
-        .withColumn("score", score)
-      // spilled layout: a vector whose primary AND secondary cells are
-      // both probed scores twice with the same distance — collapse via
-      // a map-side-combinable min on narrow (id, score, cell) rows, the
-      // Soar.topKProbes shape, so effective k is k distinct vectors;
-      // unspilled indexes keep the untouched single-job plan
-      val ranked =
-        if (!spilled) scored
-          .select(col("id"),
-            col("centroid_id").cast("long").as("centroid_id"),
-            col("score"))
-        else scored.groupBy(col("id"))
-          .agg(min(col("score")).as("score"),
-            min(col("centroid_id").cast("long")).as("centroid_id"))
-          .select(col("id"), col("centroid_id"), col("score"))
-      ranked
-        .orderBy(col("score").asc, col("id").asc)
-        .limit(k)
-        .select(col("id"), col("centroid_id"), col("score"))
+    /** The cells pinned in executor memory, one RDD partition per cell
+      * ([[cellPart]]) — built and materialized by the first caller. A
+      * handle already released by [[unpin]] builds them unpersisted, so
+      * a request still in flight on a superseded generation leaves no
+      * cached blocks behind. */
+    private def residentCells: org.apache.spark.rdd.RDD[IvfIndex.Cell] = {
+      val p = pinned
+      if (p != null) p
+      else synchronized {
+        if (pinned == null)
+          pinned = IvfIndex.pinCells(cells, cellPart, s"ivf cells $indexDir",
+            persist = !released)
+        pinned
+      }
     }
 
-    protected def probeRows(queryVec: Array[Float], k: Int, width: Int,
+    /** Release the pinned cells and, on a [[IvfIndex.reloading]] handle,
+      * its segment lease (soft: a request in flight on this handle
+      * recomputes its cells from the parquet layout — see
+      * [[graft.sync.SegmentedIndex.commit]] for what a released lease no
+      * longer keeps). The superseded generation's eviction hook. */
+    def unpin(): Unit = synchronized {
+      released = true
+      if (pinned != null) pinned.unpersist(blocking = false)
+      lease.foreach(_.release())
+    }
+
+    /** The filterless probe over the resident cells: ONE `runJob` over
+      * the `width` probed cells' partitions. Each task scores its cell
+      * at stage 1 — ADC against the cell's residual LUT on an IVFADC
+      * layout, exact cosine otherwise — keeps its top `cap` rows by
+      * (stage 1, id) and exact-scores those (cap = r·k on the ADC path,
+      * k otherwise). The driver orders every row by (stage 1, id), keeps
+      * each id's first copy (a spilled layout holds two, scored alike),
+      * cuts the top `cap`, then the top k by (exact, id). Every cut
+      * orders as the Catalyst plan does ([[IvfIndex.scoreIdOrder]]), so
+      * the rows and scores are those of [[search]] — on the ADC path
+      * `search(q, k, width, refine, None, cosineScore = true)`. */
+    private def residentTopK(queryVec: Array[Float], k: Int, width: Int,
+        refine: Int): Array[org.apache.spark.sql.Row] = {
+      val q = rq(queryVec)
+      val probed = probe(q, width)
+      val luts =
+        if (hasCodes) cellLuts(q, probed) else Map.empty[Long, Array[Array[Double]]]
+      val lutOf = probed.map(cid => cellPart(cid) -> luts.get(cid)).toMap
+      val cap = if (hasCodes) k * refine else k
+      val idType = cells.schema("id").dataType
+      val qNorm = graft.functions.VectorMath.norm(q)
+      val blocks = residentCells
+      val perCell = blocks.sparkContext.runJob(blocks,
+        (ctx: org.apache.spark.TaskContext, it: Iterator[IvfIndex.Cell]) =>
+          IvfIndex.probeCell(it.next(), lutOf(ctx.partitionId()), q, qNorm,
+            cap, idType),
+        lutOf.keys.toSeq.sorted)
+      val ord = IvfIndex.scoreIdOrder(idType)
+      perCell.flatten
+        .sorted(ord.on[(Double, Any, Double)](t => (t._1, t._2)))
+        .distinctBy(_._2).take(cap)
+        .sorted(ord.on[(Double, Any, Double)](t => (t._3, t._2))).take(k)
+        .map(t => org.apache.spark.sql.Row(
+          org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .convertToScala(t._2, idType), t._3))
+    }
+  }
+
+  /** An IVFADC [[IvfIndex]] served at one refine rung
+    * ([[IvfIndex.asDense]]): the handle's probes and pricing, cosine
+    * scores from its refine stage. */
+  private final class RefineView(idx: IvfIndex, refine: Int)
+      extends DenseIndex {
+    def attrColumns: Seq[String] = idx.attrColumns
+    def servingTopK(queryVec: Array[Float], k: Int, nprobe: Int,
         filter: Option[Column]): Array[org.apache.spark.sql.Row] =
-      search(queryVec, k, width, filter).collect()
-        .map(r => org.apache.spark.sql.Row(r.get(0), r.getDouble(2)))
+      idx.topK(queryVec, k, nprobe, filter, refine)
+    override def servingTopKRouted(queryVec: Array[Float], k: Int,
+        nprobe: Int, filter: Column): Array[org.apache.spark.sql.Row] =
+      idx.topKRouted(queryVec, k, nprobe, filter, refine)
   }
 
   object IvfIndex {
     def load(spark: org.apache.spark.sql.SparkSession,
-        indexDir: String): IvfIndex = {
-      val cents = loadCentroids(spark, indexDir)
-      // the segment list resolves ONCE at load (like the centroids):
-      // appends committed later serve through a re-load, never half-seen
-      val cells = readCells(spark, indexDir)
-      new IvfIndex(cents, cells,
-        cells.schema("centroid_id").dataType,
-        cells.columns.contains("emb16"),
-        spilled = ivfSpillMeta(spark, indexDir).isDefined, indexDir)
-    }
+        indexDir: String): IvfIndex = open(spark, indexDir, leased = false)
 
     /** [[load]] behind a per-request generation check
       * ([[graft.sync.Reloading]]): appends, deletes, compactions and
       * rebuilds committed while the server runs are served after their
-      * commit, not after a process restart. */
+      * commit, not after a process restart. Each served handle LEASES the
+      * segment list it resolved ([[graft.sync.SegmentedIndex.lease]]), so
+      * a compaction keeps those files while the handle is current; the
+      * reload that supersedes it unpins its cells and releases the
+      * lease, which sweeps what no live list or other lease names. */
     def reloading(spark: org.apache.spark.sql.SparkSession, indexDir: String,
         minCheckIntervalMs: Long = 0L): graft.sync.Reloading[IvfIndex] =
-      graft.sync.Reloading(spark, indexDir, Seq("centroids"),
-        minCheckIntervalMs)(load(spark, indexDir))
+      graft.sync.Reloading.withEvict(spark, indexDir,
+        Seq("centroids", "codebooks"), minCheckIntervalMs)(
+        open(spark, indexDir, leased = true))(_.unpin())
+
+    private def open(spark: org.apache.spark.sql.SparkSession,
+        indexDir: String, leased: Boolean): IvfIndex = {
+      val lease =
+        if (leased) graft.sync.SegmentedIndex.lease(spark, indexDir) else None
+      try {
+        val cells = readCells(spark, indexDir, lease.map(_.segments))
+        val cb =
+          if (!cells.columns.contains("codes")) Array.empty[Array[Array[Float]]]
+          else collectCodebooks(spark.read.parquet(s"$indexDir/codebooks"))
+        new IvfIndex(indexDir, loadCentroids(spark, indexDir), cb, cells,
+          loadRotation(spark, indexDir),
+          spilled = ivfSpillMeta(spark, indexDir).isDefined, lease)
+      } catch { case e: Throwable => lease.foreach(_.release()); throw e }
+    }
+
+    /** One IVF cell, resident: its rows' ids (Catalyst internal values),
+      * exact payloads (fp16 `emb16` bytes or fp32 `v` array data) and,
+      * on an IVFADC layout, m-byte codes (empty otherwise),
+      * index-aligned. */
+    private[Knn] final class Cell(val ids: Array[Any], val vecs: Array[Any],
+        val codes: Array[Array[Byte]]) extends Serializable
+
+    /** The cell layout as one RDD partition per cell, cell c in partition
+      * `partOf(c)` (an empty cell is an empty [[Cell]]), persisted
+      * MEMORY_AND_DISK and materialized by one job when `persist`. */
+    private[Knn] def pinCells(cells: DataFrame, partOf: Map[Long, Int],
+        name: String, persist: Boolean): org.apache.spark.rdd.RDD[Cell] = {
+      val payload = if (cells.columns.contains("emb16")) "emb16" else "v"
+      val codes = cells.columns.contains("codes")
+      val idType = cells.schema("id").dataType
+      val vecType = cells.schema(payload).dataType
+      val copy = org.apache.spark.sql.catalyst.InternalRow.copyValue _
+      val blocks = cells.select(Seq(col("centroid_id").cast("long"), col("id"),
+          col(payload)) ++ (if (codes) Seq(col("codes")) else Nil): _*)
+        .queryExecution.toRdd
+        .map(r => partOf(r.getLong(0)) -> ((copy(r.get(1, idType)),
+          copy(r.get(2, vecType)), if (codes) r.getBinary(3) else null)))
+        .partitionBy(new org.apache.spark.HashPartitioner(partOf.size))
+        .mapPartitions({ rows =>
+          val rs = rows.map(_._2).toArray
+          Iterator(new Cell(rs.map(_._1), rs.map(_._2),
+            if (codes) rs.map(_._3) else Array.empty))
+        }, preservesPartitioning = true)
+        .setName(name)
+      if (persist) {
+        blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        blocks.count()
+      }
+      blocks
+    }
+
+    /** Catalyst's ascending order on (score, id): scores as SQL orders
+      * doubles (NaN last, −0.0 = 0.0), ids by their type's SQL order —
+      * UTF-8 binary for strings, signed for longs. `orderBy(score, id)`
+      * cuts the Catalyst probe by this order. */
+    private[Knn] def scoreIdOrder(idType: org.apache.spark.sql.types.DataType)
+        : Ordering[(Double, Any)] = {
+      val idOrd = org.apache.spark.sql.catalyst.types.PhysicalDataType
+        .ordering(idType)
+      new Ordering[(Double, Any)] {
+        def compare(a: (Double, Any), b: (Double, Any)): Int = {
+          val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(a._1, b._1)
+          if (c != 0) c else idOrd.compare(a._2, b._2)
+        }
+      }
+    }
+
+    /** One task of the resident probe: the cell's top `cap` rows by
+      * (stage 1, id), each as (stage 1, id, exact cosine distance) —
+      * the scores the Catalyst kernels compute. Stage 1 is ADC against
+      * `lut` when given, else the exact score itself. */
+    private[Knn] def probeCell(cell: Cell, lut: Option[Array[Array[Double]]],
+        q: Array[Float], qNorm: Double, cap: Int,
+        idType: org.apache.spark.sql.types.DataType)
+        : Array[(Double, Any, Double)] = {
+      def exact(i: Int): Double = cell.vecs(i) match {
+        case b: Array[Byte] =>
+          graft.functions.VectorMath.cosineDistanceHalfPre(b, q, qNorm)
+        case a: org.apache.spark.sql.catalyst.util.ArrayData =>
+          graft.functions.VectorMath.cosineDistancePre(a, q, qNorm)
+      }
+      val first = lut.fold(Array.tabulate(cell.ids.length)(exact))(l =>
+        cell.codes.map(graft.functions.PqMath.adc(_, l)))
+      val ord = scoreIdOrder(idType)
+      val byRow = ord.on[Int](i => (first(i), cell.ids(i)))
+      // max-heap of the best `cap` rows so far: its head is the worst kept
+      val kept = scala.collection.mutable.PriorityQueue.empty[Int](byRow)
+      for (i <- first.indices)
+        if (kept.size < cap) kept.enqueue(i)
+        else if (byRow.lt(i, kept.head)) { kept.dequeue(); kept.enqueue(i) }
+      kept.iterator.map(i => (first(i), cell.ids(i),
+        if (lut.isEmpty) first(i) else exact(i))).toArray
+    }
   }
+
+  /** [[IvfIndex]] under its former IVFADC name. It exists for perfbench
+    * alone, whose calls must compile unchanged until its next change. */
+  val IvfPqIndex: IvfIndex.type = IvfIndex
 
   /** The collected centroid sidecar of an IVF layout. */
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
@@ -1695,10 +2026,11 @@ object Knn {
     * ([[ivfDeleteIndex]]) anti-join away under SEQUENCE scope — a
     * tombstone masks only segments committed before it, so a vector
     * re-appended after its delete (the CDC changed-doc shape) is
-    * served; steady state (no tombstones) carries no join. */
+    * served; steady state (no tombstones) carries no join. `list`: a
+    * segment list already resolved (a leased one), else the live list. */
   private def readCells(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame =
-    graft.sync.SegmentedIndex.resolve(spark, indexDir) match {
+      indexDir: String, list: Option[Seq[String]] = None): DataFrame =
+    list.orElse(graft.sync.SegmentedIndex.resolve(spark, indexDir)) match {
       case Some(list) =>
         graft.sync.SegmentedIndex.tombstoneScopes(list)
           .map { case (data, tombs) =>
@@ -4114,7 +4446,7 @@ object Knn {
     // and build the ENTIRE index in rotated space: coarse cells,
     // residual codes and the fp16 refine payload all live there, and
     // queries rotate once driver-side at search entry
-    // ([[IvfPqIndex.load]] reads the sidecar). Orthonormal R preserves
+    // ([[IvfIndex.load]] reads the sidecar). Orthonormal R preserves
     // L2, so every score contract is unchanged — the codes just waste
     // fewer bits on cross-subspace correlation. Default 0 = no sidecar.
     val opqRot: Option[Array[Array[Double]]] =
@@ -4200,362 +4532,5 @@ object Knn {
     rot.toSeq.zipWithIndex.map { case (row, i) => (i, row.toSeq) }
       .toDF("i", "rvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/rotation")
-  }
-
-  /** Serving handle over an [[ivfPqBuildIndex]] layout — the IVFADC
-    * counterpart of [[IvfIndex]]: centroids AND codebooks are collected
-    * once at load (both are driver-scale sidecars — cells×dim floats
-    * and m×ksub×dsub floats), and the segment list resolves once, like
-    * [[IvfIndex.load]]'s. A request picks its nprobe L2-nearest
-    * cells locally (the index's cell metric) and builds one residual
-    * LUT per probed cell (`q − c` sliced against the shared codebooks —
-    * per-cell because residuals are cell-relative).
-    *
-    * Two probe paths, one answer:
-    *  - [[search]] plans Catalyst jobs over the cell parquet: one
-    *    partition-pruned scan of the probed cells' m-byte codes, each
-    *    row scored against its own cell's LUT (plus a second, id-IN
-    *    scan for the refine re-rank). It is the only path that evaluates
-    *    a `Column` predicate, so attr-filtered serving runs it, and it
-    *    is the reference the resident path is specified against.
-    *  - the filterless [[asDense]] probe runs ONE `SparkContext.runJob`
-    *    over the cells pinned in executor memory (one RDD partition per
-    *    cell, built on the first such request of a loaded generation):
-    *    no analysis, codegen or parquet open per request. Each vector
-    *    stays resident at ≈ id + m + 2·dim bytes until [[unpin]].
-    * Scores approximate squared L2 of (q − v). Thread-safe: all state
-    * but the pinned cells is immutable after load (pinning is
-    * serialized; the [[asDense]] views are memoized in a concurrent
-    * map). */
-  final class IvfPqIndex private (indexDir: String,
-      cents: Array[(Long, Array[Float])],
-      cb: Array[Array[Array[Float]]],
-      cells: DataFrame, inListType: org.apache.spark.sql.types.DataType,
-      rot: Option[Array[Array[Double]]]) {
-
-    /** Was the index built with an OPQ rotation (`opqSweeps > 0`)? */
-    val hasRotation: Boolean = rot.nonEmpty
-
-    /** Rotate a caller-space query into the index's space — applied
-      * exactly once at every PUBLIC search entry (the internals all
-      * take the already-rotated vector). */
-    private def rq(queryVec: Array[Float]): Array[Float] =
-      rot.map(graft.functions.RotMath.rotateLocal(queryVec, _))
-        .getOrElse(queryVec)
-
-    /** Was the index built with `refine = true` ([[ivfPqBuildIndex]])?
-      * Only then can [[search]]'s `refine > 1` re-rank run. */
-    val hasRefine: Boolean = cells.columns.contains("emb16")
-
-    /** Metadata columns the cells carry beyond the layout
-      * (ivfPqBuildIndex `attrCols`) — the predicates a filtered probe
-      * may reference. */
-    val attrColumns: Seq[String] = cells.columns.toSeq.filterNot(LayoutCols)
-
-    /** Number of cells in the frozen geometry — the nprobe ceiling. */
-    def numCells: Int = cents.length
-
-    /** Vector width of the geometry — the only query width it scores
-      * (an OPQ rotation is square, so caller space has the same). */
-    val dim: Int = cents.head._2.length
-
-    /** ADC-shortlist-then-exact-re-rank (the FAISS `IndexRefine` stage):
-      * stage 1 is the plain ADC search widened to `refine·k` candidates;
-      * their ids collect to the driver (r·k longs) and stage 2 re-scores
-      * EXACTLY those rows against the fp16 refine payload — a second
-      * partition-pruned scan of the probed cells with an id IN-list that
-      * parquet row-group stats skip on. Two Catalyst jobs instead of one,
-      * but stage 2 touches r·k fp16 rows, not nprobe/cells of them — the
-      * re-rank cost is output-sensitive, independent of corpus size. The
-      * returned `score` is exact squared L2 of (q − v) at fp16 input
-      * precision, so recall lifts from the quantizer's (~0.3 at 32:1,
-      * PqSpec) toward the coarse-probe ceiling as r grows. */
-    def search(queryVec: Array[Float], k: Int, nprobe: Int,
-        refine: Int, filter: Option[Column] = None,
-        cosineScore: Boolean = false): DataFrame = {
-      require(refine >= 1, s"refine=$refine must be >= 1")
-      if (refine == 1) return search(queryVec, k, nprobe, filter)
-      require(hasRefine,
-        "refine > 1 needs an index built with ivfPqBuildIndex(refine=true)")
-      // the filter applies at STAGE 1 (inside the pruned ADC scan), so
-      // the shortlist already satisfies it — stage 2 re-scores ids
-      // id type follows the corpus key (long for numeric corpora, string
-      // for the highlight store) — the IN-list carries whatever it is
-      val qR = rq(queryVec)
-      val probed = probe(qR, nprobe)
-      val shortlist = adc(qR, k * refine, probed, filter)
-        .select(col("id")).collect().map(_.get(0)).toSeq
-      // cosineScore swaps the re-rank metric to the fused fp16 cosine —
-      // identical ranking on the unit-norm corpus (l2² = 2·cos-dist for
-      // unit vectors), but the score matches what the store scan and
-      // IvfIndex emit, so the serving edge can route through either
-      // index without changing its score contract
-      val rescore =
-        if (cosineScore) graft.functions.fp16_cosine_distance(
-          col("emb16"), typedLit(qR))
-        else l2sq(graft.functions.fp16_decode(col("emb16")),
-          typedLit(qR))
-      // chunkedIn, not isin: refine·k literals in one In would build a
-      // left-deep parquet or-chain whose recursive evaluation overflows
-      // default task stacks past ~1024 ids (refine=128·k=10, and the
-      // API default k=20 at refine=64, both hit 1280) — and any single
-      // In past inFilterThreshold silently range-degrades (the r10
-      // cliff). Balanced 256-id legs have neither failure mode at any
-      // legal refine·k (MaxK=100 → 12800 ids → depth ~261).
-      cells.filter(col("centroid_id")
-          .isin(cellLiterals(probed.map(_._1).toSeq, inListType): _*) &&
-          chunkedIn(col("id"), shortlist))
-        .select(col("id"),
-          col("centroid_id").cast("long").as("centroid_id"),
-          rescore.as("score"))
-        .orderBy(col("score").asc, col("id").asc)
-        .limit(k)
-    }
-
-    private val views =
-      scala.collection.concurrent.TrieMap.empty[Int, DenseIndex]
-
-    /** [[DenseIndex]] view at a fixed refine rung: ADC shortlists r·k,
-      * and exactly those rows re-score against the fp16 refine payload
-      * with the COSINE metric (store-compatible scores).
-      *  - filterless: ONE Spark job over the resident cells
-      *    ([[residentTopK]]) — the same rows and bit-identical scores
-      *    as `search(q, k, nprobe, refine, None, cosineScore = true)`;
-      *  - attr-filtered: the two Catalyst jobs of [[search]] under the
-      *    shared [[IvfServing]] policy — the predicate applies at stage
-      *    1, so the shortlist (and therefore the re-ranked winners)
-      *    always satisfies it.
-      * One view per rung and handle, so its lazily priced routing state
-      * is paid once per loaded generation, not once per request. */
-    def asDense(refine: Int): DenseIndex = {
-      require(refine >= 2 && hasRefine,
-        "asDense serves cosine scores through the refine stage — needs " +
-        "an index built with ivfPqBuildIndex(refine=true) and refine >= 2")
-      val self = this
-      // the IVFADC layout is single-assignment: never spilled
-      views.getOrElseUpdate(refine,
-        new IvfServing(indexDir, cells, spilled = false) {
-          def numCells: Int = self.numCells
-          def dim: Int = self.dim
-          def attrColumns: Seq[String] = self.attrColumns
-          protected def probeRows(queryVec: Array[Float], k: Int,
-              width: Int, filter: Option[Column])
-              : Array[org.apache.spark.sql.Row] =
-            if (filter.isEmpty) self.residentTopK(queryVec, k, width, refine)
-            else self.search(queryVec, k, width, refine, filter,
-                cosineScore = true).collect()
-              .map(r => org.apache.spark.sql.Row(r.get(0), r.getDouble(2)))
-        })
-    }
-
-    /** Cell id → its partition of the resident cells (centroid order). */
-    private val cellPart: Map[Long, Int] = cents.map(_._1).zipWithIndex.toMap
-
-    @volatile private var pinned: org.apache.spark.rdd.RDD[IvfPqIndex.Cell] = _
-    private var released = false
-
-    /** The cells pinned in executor memory, one RDD partition per cell
-      * ([[cellPart]]) — built and materialized by the first caller. A
-      * handle already released by [[unpin]] builds them unpersisted, so
-      * a request still in flight on a superseded generation leaves no
-      * cached blocks behind. */
-    private def residentCells: org.apache.spark.rdd.RDD[IvfPqIndex.Cell] = {
-      val p = pinned
-      if (p != null) p
-      else synchronized {
-        if (pinned == null)
-          pinned = IvfPqIndex.pinCells(cells, cellPart,
-            s"ivfpq cells $indexDir", persist = !released)
-        pinned
-      }
-    }
-
-    /** Release the pinned cells (soft: a request in flight on this handle
-      * recomputes its cells from the parquet layout). The superseded
-      * generation's eviction hook of [[IvfPqIndex.reloading]]. */
-    def unpin(): Unit = synchronized {
-      released = true
-      if (pinned != null) pinned.unpersist(blocking = false)
-    }
-
-    /** The filterless refine probe over the resident cells: ONE
-      * `runJob` over the `width` probed cells' partitions. Each task
-      * ADC-scores its cell against the cell's residual LUT, keeps its
-      * top r·k by (ADC, id) and exact-scores those rows; the driver
-      * cuts the global top r·k by (ADC, id), then the top k by (exact,
-      * id). Every cut orders as the Catalyst plan does
-      * ([[IvfPqIndex.scoreIdOrder]]), so the rows and scores are those
-      * of `search(q, k, width, refine, None, cosineScore = true)`. */
-    private def residentTopK(queryVec: Array[Float], k: Int, width: Int,
-        refine: Int): Array[org.apache.spark.sql.Row] = {
-      val qR = rq(queryVec)
-      val probed = probe(qR, width)
-      val luts = cellLuts(qR, probed)
-      val lutOf = probed.map { case (cid, _) => cellPart(cid) -> luts(cid) }
-        .toMap
-      val cap = k * refine
-      val idType = cells.schema("id").dataType
-      val qNorm = graft.functions.VectorMath.norm(qR)
-      val blocks = residentCells
-      val perCell = blocks.sparkContext.runJob(blocks,
-        (ctx: org.apache.spark.TaskContext, it: Iterator[IvfPqIndex.Cell]) =>
-          IvfPqIndex.probeCell(it.next(), lutOf(ctx.partitionId()), qR,
-            qNorm, cap, idType),
-        lutOf.keys.toSeq.sorted)
-      val ord = IvfPqIndex.scoreIdOrder(idType)
-      perCell.flatten
-        .sorted(ord.on[(Double, Any, Double)](t => (t._1, t._2))).take(cap)
-        .sorted(ord.on[(Double, Any, Double)](t => (t._3, t._2))).take(k)
-        .map(t => org.apache.spark.sql.Row(
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToScala(t._2, idType), t._3))
-    }
-
-    /** The query's `nprobe` L2-nearest cells, driver-local. */
-    private def probe(queryVec: Array[Float],
-        nprobe: Int): Array[(Long, Double)] = cents
-      .map { case (cid, cv) =>
-        var aa = 0.0; var ab = 0.0; var bb = 0.0
-        var i = 0
-        while (i < cv.length) {
-          aa += queryVec(i).toDouble * queryVec(i)
-          ab += queryVec(i).toDouble * cv(i)
-          bb += cv(i).toDouble * cv(i); i += 1
-        }
-        (cid, aa - 2.0 * ab + bb)
-      }
-      .sortBy { case (cid, d) => (d, cid) }
-      .take(nprobe)
-
-    /** Stage-1 ADC top-k over the `nprobe` nearest cells:
-      * (id, centroid_id, score_adc) ordered by (score_adc, id). */
-    def search(queryVec: Array[Float], k: Int, nprobe: Int,
-        filter: Option[Column]): DataFrame = {
-      val qR = rq(queryVec)
-      adc(qR, k, probe(qR, nprobe), filter)
-    }
-
-    /** Stage-1 ADC over an ALREADY-ROTATED query (every public entry
-      * rotates exactly once, so internals must not re-apply). */
-    private def adc(queryVec: Array[Float], k: Int,
-        probed: Array[(Long, Double)], filter: Option[Column]): DataFrame = {
-      // ONE scan with a partition IN-filter + the per-cell LUT map —
-      // nprobe single-cell legs would mean nprobe scans to PLAN per
-      // request, and planning is the serialized path under concurrency
-      // (measured: 4-leg union p95 1.47 s vs single-scan ~0.4 s at the
-      // 20-user gate shape)
-      val luts = cellLuts(queryVec, probed)
-      filter.foldLeft(cells.filter(col("centroid_id")
-          .isin(cellLiterals(probed.map(_._1).toSeq, inListType): _*)))(
-          _ filter _)
-        .select(col("id"),
-          col("centroid_id").cast("long").as("centroid_id"),
-          graft.functions.pq_adc_score_cells(col("codes"),
-            col("centroid_id"), luts).as("score_adc"))
-        .orderBy(col("score_adc").asc, col("id").asc)
-        .limit(k)
-    }
-
-    /** One residual LUT per probed cell (`q − c` against the shared
-      * codebooks) over an ALREADY-ROTATED query. */
-    private def cellLuts(queryVec: Array[Float], probed: Array[(Long, Double)])
-        : Map[Long, Array[Array[Double]]] =
-      probed.map { case (cid, _) =>
-        val cv = cents.find(_._1 == cid).get._2
-        val qr = queryVec.zip(cv).map { case (a, b) => a - b }
-        cid -> graft.functions.PqMath.lut(qr, cb)
-      }.toMap
-
-    def search(queryVec: Array[Float], k: Int, nprobe: Int): DataFrame =
-      search(queryVec, k, nprobe, None: Option[Column])
-  }
-
-  object IvfPqIndex {
-    def load(spark: org.apache.spark.sql.SparkSession,
-        indexDir: String): IvfPqIndex = {
-      val cents = loadCentroids(spark, indexDir)
-      val cells = readCells(spark, indexDir)
-      require(cells.columns.contains("codes"), s"the IVF index at " +
-        s"$indexDir carries no IVFADC codes (build with ivfPqBuildIndex)")
-      val cb = collectCodebooks(spark.read.parquet(s"$indexDir/codebooks"))
-      new IvfPqIndex(indexDir, cents, cb, cells,
-        cells.schema("centroid_id").dataType, loadRotation(spark, indexDir))
-    }
-
-    /** [[load]] behind [[IvfIndex.reloading]]'s generation check; a
-      * reload unpins the superseded generation's resident cells. */
-    def reloading(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-        minCheckIntervalMs: Long = 0L): graft.sync.Reloading[IvfPqIndex] =
-      graft.sync.Reloading.withEvict(spark, indexDir,
-        Seq("centroids", "codebooks"), minCheckIntervalMs)(
-        load(spark, indexDir))(_.unpin())
-
-    /** One IVFADC cell, resident: its rows' ids (Catalyst internal
-      * values), m-byte codes and fp16 refine payloads, index-aligned. */
-    private[Knn] final class Cell(val ids: Array[Any],
-        val codes: Array[Array[Byte]], val emb16: Array[Array[Byte]])
-        extends Serializable
-
-    /** The cell layout as one RDD partition per cell, cell c in partition
-      * `partOf(c)` (an empty cell is an empty [[Cell]]), persisted
-      * MEMORY_AND_DISK and materialized by one job when `persist`. */
-    private[Knn] def pinCells(cells: DataFrame, partOf: Map[Long, Int],
-        name: String, persist: Boolean): org.apache.spark.rdd.RDD[Cell] = {
-      val idType = cells.schema("id").dataType
-      val blocks = cells.select(col("centroid_id").cast("long"), col("id"),
-          col("codes"), col("emb16"))
-        .queryExecution.toRdd
-        .map(r => partOf(r.getLong(0)) -> ((
-          org.apache.spark.sql.catalyst.InternalRow.copyValue(
-            r.get(1, idType)), r.getBinary(2), r.getBinary(3))))
-        .partitionBy(new org.apache.spark.HashPartitioner(partOf.size))
-        .mapPartitions({ rows =>
-          val rs = rows.map(_._2).toArray
-          Iterator(new Cell(rs.map(_._1), rs.map(_._2), rs.map(_._3)))
-        }, preservesPartitioning = true)
-        .setName(name)
-      if (persist) {
-        blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        blocks.count()
-      }
-      blocks
-    }
-
-    /** Catalyst's ascending order on (score, id): scores as SQL orders
-      * doubles (NaN last, −0.0 = 0.0), ids by their type's SQL order —
-      * UTF-8 binary for strings, signed for longs. `orderBy(score, id)`
-      * cuts the Catalyst probe by this order. */
-    private[Knn] def scoreIdOrder(idType: org.apache.spark.sql.types.DataType)
-        : Ordering[(Double, Any)] = {
-      val idOrd = org.apache.spark.sql.catalyst.types.PhysicalDataType
-        .ordering(idType)
-      new Ordering[(Double, Any)] {
-        def compare(a: (Double, Any), b: (Double, Any)): Int = {
-          val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-            .compareDoubles(a._1, b._1)
-          if (c != 0) c else idOrd.compare(a._2, b._2)
-        }
-      }
-    }
-
-    /** One task of [[IvfPqIndex.residentTopK]]: the cell's top `cap` rows
-      * by (ADC, id), each as (ADC, id, exact cosine distance at fp16
-      * input precision) — the scores the Catalyst kernels compute. */
-    private[Knn] def probeCell(cell: Cell, lut: Array[Array[Double]],
-        q: Array[Float], qNorm: Double, cap: Int,
-        idType: org.apache.spark.sql.types.DataType)
-        : Array[(Double, Any, Double)] = {
-      val adc = cell.codes.map(graft.functions.PqMath.adc(_, lut))
-      val ord = scoreIdOrder(idType)
-      val byRow = ord.on[Int](i => (adc(i), cell.ids(i)))
-      // max-heap of the best `cap` rows so far: its head is the worst kept
-      val kept = scala.collection.mutable.PriorityQueue.empty[Int](byRow)
-      for (i <- adc.indices)
-        if (kept.size < cap) kept.enqueue(i)
-        else if (byRow.lt(i, kept.head)) { kept.dequeue(); kept.enqueue(i) }
-      kept.iterator.map(i => (adc(i), cell.ids(i),
-        graft.functions.VectorMath.cosineDistanceHalfPre(cell.emb16(i), q,
-          qNorm))).toArray
-    }
   }
 }

@@ -5,13 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** A serving handle that re-checks its index's on-disk GENERATION before
   * each request and transparently reloads when a maintenance commit
   * moved it — the bridge between the load-once handles
-  * ([[graft.similarity.Knn.IvfIndex]], [[graft.similarity.Knn.IvfPqIndex]],
-  * [[graft.text.TextRank.LexIndex]] — centroids / codebooks / segment
-  * lists / corpus stats all resolve at construction, deliberately, so a
-  * request is pure plan execution) and the incremental-maintenance
-  * machinery (segment appends, tombstone deletes, compaction,
-  * [[CorpusRefresh]]): without this, a long-lived server silently serves
-  * the generation it loaded until process restart.
+  * ([[graft.similarity.Knn.IvfIndex]], [[graft.text.TextRank.LexIndex]]
+  * — centroids / codebooks / segment lists / corpus stats all resolve
+  * at construction, deliberately, so a request is pure plan execution)
+  * and the incremental-maintenance machinery (segment appends,
+  * tombstone deletes, compaction, [[CorpusRefresh]]): without this, a
+  * long-lived server silently serves the generation it loaded until
+  * process restart.
   *
   * The generation fingerprint is the `CURRENT` pointer's CONTENT (the
   * committed segment list — one small read covering append, delete and
@@ -25,10 +25,14 @@ import org.apache.spark.sql.SparkSession
   * serving trade; 0 re-checks every request).
   *
   * Thread-safe: the hot path is one volatile read + the fingerprint
-  * probe; reload is serialized under the lock, concurrent requests keep
-  * serving the previous (immutable) handle until the swap, and the old
-  * handle needs no teardown — its segment files stay live until the
-  * next commit's retention sweep.
+  * probe; reload is serialized under the lock, and concurrent requests
+  * keep serving the previous (immutable) handle until the swap. The
+  * superseded handle is then handed to `onEvict` ([[withEvict]]): the IVF
+  * handle unpins its cells and releases the segment lease that kept a
+  * compaction from sweeping its files
+  * ([[SegmentedIndex.commit]] names what a released or lease-less
+  * handle still races). A handle without a hook keeps nothing: a
+  * commit that drops its segments sweeps them at once.
   */
 final class Reloading[T] private (fingerprint: () => String, loadFn: () => T,
     minCheckIntervalMs: Long, onEvict: T => Unit) {

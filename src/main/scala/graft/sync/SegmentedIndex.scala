@@ -78,11 +78,23 @@ private[graft] object SegmentedIndex {
 
   /** Commit `segments` as the live list (one atomic replace), then sweep
     * segment directories no list references — segments dropped by a
-    * compaction, or orphaned by a crashed append. The just-superseded
-    * LIST needs no grace period (segments it shares with the new list
-    * stay live; compaction is the only drop and the sweep runs after the
-    * swap, so a reader that resolved pre-swap races only compaction —
-    * the same bounded window writeAtomic's retention accepts). */
+    * compaction or rebuild, or orphaned by a crashed append — except
+    * those a [[lease]] still names: a serving handle that resolved the
+    * list before the swap keeps reading its files, and the lease's
+    * release sweeps them once no live list or other lease names them.
+    * The new list takes no grace period beyond that, so no dropped
+    * segment outlives the last handle that resolved it.
+    *
+    * Two gaps stay open:
+    *  - a reader that resolved the list WITHOUT a lease (a direct load,
+    *    the lexical index) races the sweep, and so does a request still
+    *    running on a leased handle when its lease is released (the
+    *    reload that supersedes the handle releases it; a handle whose
+    *    cells are pinned in memory answers filterless requests without
+    *    the files, but a filtered one, or a recompute of lost blocks,
+    *    reads them);
+    *  - leases are in-process only: a reader in another process is not
+    *    protected. */
   def commit(spark: SparkSession, root: String,
       segments: Seq[String]): Unit = {
     require(segments.nonEmpty, "SegmentedIndex.commit: empty segment list")
@@ -95,9 +107,64 @@ private[graft] object SegmentedIndex {
     FsUtil.atomicReplace(fs, spark.sparkContext.hadoopConfiguration,
       ptrTmp, new HPath(rootP, "CURRENT"))
     val live = segments.toSet
-    fs.listStatus(rootP).toSeq.map(_.getPath)
-      .filter(p => (p.getName.startsWith("seg-") || p.getName.startsWith("del-"))
-        && !live.contains(p.getName))
-      .foreach(p => try { fs.delete(p, true); () } catch { case _: Exception => () })
+    val dropped = fs.listStatus(rootP).toSeq.map(_.getPath.getName)
+      .filter(n => (n.startsWith("seg-") || n.startsWith("del-")) && !live(n))
+    // leases taken before the swap are registered by now (lease resolves
+    // and registers under the same lock); any later one resolved `live`
+    val key = keyOf(fs, rootP)
+    sweep(fs, rootP, leases.synchronized(dropped.filterNot(n =>
+      leases.contains((key, n)))))
+  }
+
+  /** (qualified index root, segment) → number of leases naming it. */
+  private val leases = scala.collection.mutable.Map.empty[(String, String), Int]
+
+  private def keyOf(fs: FileSystem, rootP: HPath): String =
+    fs.makeQualified(rootP).toString
+
+  private def sweep(fs: FileSystem, rootP: HPath, names: Seq[String]): Unit =
+    names.foreach(n =>
+      try { fs.delete(new HPath(rootP, n), true); () }
+      catch { case _: Exception => () })
+
+  /** A serving handle's claim on the segment list it resolved: while it
+    * is held, [[commit]] keeps those segments on disk. */
+  final class Lease private[SegmentedIndex] (spark: SparkSession,
+      root: String, val segments: Seq[String]) {
+    private var released = false
+
+    /** Drop the claim (idempotent), then sweep the segments it kept that
+      * no live list or other lease names. */
+    def release(): Unit = {
+      val rootP = new HPath(root)
+      val fs = fsFor(spark, rootP)
+      val key = keyOf(fs, rootP)
+      val orphans = leases.synchronized {
+        if (released) Nil
+        else {
+          released = true
+          segments.foreach { s =>
+            val n = leases((key, s)) - 1
+            if (n == 0) leases -= ((key, s)) else leases((key, s)) = n
+          }
+          val live = resolve(spark, root).getOrElse(Nil).toSet
+          segments.filterNot(s => live(s) || leases.contains((key, s)))
+        }
+      }
+      sweep(fs, rootP, orphans)
+    }
+  }
+
+  /** Resolve the live list of `root` and lease it in one step (None when
+    * no pointer exists), so no commit can sweep between the two. */
+  def lease(spark: SparkSession, root: String): Option[Lease] = {
+    val rootP = new HPath(root)
+    val key = keyOf(fsFor(spark, rootP), rootP)
+    leases.synchronized {
+      resolve(spark, root).map { list =>
+        list.foreach(s => leases((key, s)) = leases.getOrElse((key, s), 0) + 1)
+        new Lease(spark, root, list)
+      }
+    }
   }
 }

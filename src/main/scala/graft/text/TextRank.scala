@@ -452,11 +452,11 @@ object TextRank {
   }
 
   /** Serving handle over a persistent lexical index — the sparse mirror
-    * of [[graft.similarity.Knn.IvfIndex]]: the segment list and corpus
-    * stats resolve ONCE at load (stats become plan literals — no
-    * per-request sidecar scan), the postings relation is held so file
-    * listings are never repeated per request, and each search builds one
-    * bucket-pruned plan over it.
+    * of [[graft.similarity.Knn.IvfIndex]]'s Catalyst probe: the segment
+    * list and corpus stats resolve ONCE at load (stats become plan
+    * literals — no per-request sidecar scan), the postings relation is
+    * held so file listings are never repeated per request, and each
+    * search builds one bucket-pruned plan over it.
     *
     * Per-term document frequencies are CACHED across requests: df is a
     * property of the index, not the query, so the first request for a

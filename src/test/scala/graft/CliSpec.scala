@@ -164,7 +164,7 @@ class CliSpec extends SparkTestBase {
     assert(c == 0, out)
     assert(out.contains("\"opq_sweeps\":1"))
     assert(graft.similarity.Knn.ivfIndexReady(s"$dir/ivfpq"))
-    val idx = graft.similarity.Knn.IvfPqIndex.load(spark, s"$dir/ivfpq")
+    val idx = graft.similarity.Knn.IvfIndex.load(spark, s"$dir/ivfpq")
     assert(idx.hasRefine && idx.hasRotation)
     // the rotated layout serves: callers pass ORIGINAL-space queries and
     // the exact refine stage puts the matching highlight first
@@ -202,7 +202,7 @@ class CliSpec extends SparkTestBase {
     // asDense(--pq-refine)'s
     assert(!dense().isInstanceOf[graft.similarity.Knn.IvfIndex])
     val qv = graft.embed.Embedder.Default.embed(texts.head)
-    val view = graft.similarity.Knn.IvfPqIndex.load(spark, ivfpq).asDense(2)
+    val view = graft.similarity.Knn.IvfIndex.load(spark, ivfpq).asDense(2)
     assert(dense().servingTopK(qv, 2, 2, None).toSeq ==
       view.servingTopK(qv, 2, 2, None).toSeq)
     // --pq-refine is checked against the IVFADC layout it tunes

@@ -231,7 +231,7 @@ class SearchGatewaySpec extends SparkTestBase {
       graft.similarity.Knn.ivfPqBuildIndex(store, "embedding", "id",
         s"$root/pq", cells = 4, m = 8, ksub = 16, iters = 2,
         trainFilter = crc32(col("id")) % 5 === 0, refine = true)
-      val idx = graft.similarity.Knn.IvfPqIndex.load(spark, s"$root/pq")
+      val idx = graft.similarity.Knn.IvfIndex.load(spark, s"$root/pq")
       assert(idx.hasRefine)
       val gw = new SearchGateway(() => store, Embedder.Default,
         Some(() => idx.asDense(n / 5 + 2)), nprobe = 4)
@@ -268,7 +268,7 @@ class SearchGatewaySpec extends SparkTestBase {
       val wrong = graft.embed.HashNgramEmbedder(dim = 32)
       val indexes = Seq(
         graft.similarity.Knn.IvfIndex.load(spark, s"$root/ivf"),
-        graft.similarity.Knn.IvfPqIndex.load(spark, s"$root/pq").asDense(4))
+        graft.similarity.Knn.IvfIndex.load(spark, s"$root/pq").asDense(4))
       indexes.foreach { idx =>
         val gw = new SearchGateway(() => store, wrong, Some(() => idx), 4)
         val plain = intercept[IllegalArgumentException] {

@@ -82,8 +82,8 @@ class OpqSpec extends SparkTestBase {
         graft.functions.mat_vec_rotate($"v", rot)),
       "v", "id", dirB, cells = 4, m = 2, ksub = 8, iters = 2,
       trainFilter = lit(true), refine = true, opqSweeps = 0)
-    val idxA = Knn.IvfPqIndex.load(spark, dirA)
-    val idxB = Knn.IvfPqIndex.load(spark, dirB)
+    val idxA = Knn.IvfIndex.load(spark, dirA)
+    val idxB = Knn.IvfIndex.load(spark, dirB)
     assert(idxA.hasRotation && !idxB.hasRotation)
     val qv = emb.filter($"vec_id" === 7).select($"embedding")
       .head().getSeq[Float](0).toArray

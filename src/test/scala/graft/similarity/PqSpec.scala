@@ -24,24 +24,7 @@ class PqSpec extends SparkTestBase {
     emb.filter($"vec_id" === id).select($"embedding")
       .head().getSeq[Float](0).toArray
 
-  /** The filterless [[Knn.IvfPqIndex.asDense]] probe over the resident
-    * cells against its reference, the Catalyst refine search: same ids
-    * in the same order, scores bit-for-bit. (20, 1, 64) asks for
-    * refine·k = 1280 rows of one probed cell, more than it holds. */
-  private def sameAsCatalyst(h: Knn.IvfPqIndex, q: Array[Float]): Unit =
-    for ((k, nprobe, refine) <- Seq((1, 4, 2), (2, 1, 2), (3, 2, 2),
-        (10, 4, 3), (20, 1, 64))) {
-      val served = h.asDense(refine).servingTopK(q, k, nprobe, None)
-      val ref = h.search(q, k, nprobe, refine, filter = None,
-        cosineScore = true).collect()
-      val at = s"k=$k nprobe=$nprobe refine=$refine"
-      assert(served.nonEmpty, at)
-      assert(served.map(_.get(0)).toSeq == ref.map(_.get(0)).toSeq, at)
-      assert(served.map(r => java.lang.Double.doubleToRawLongBits(
-          r.getDouble(1))).toSeq ==
-        ref.map(r => java.lang.Double.doubleToRawLongBits(
-          r.getDouble(2))).toSeq, at)
-    }
+  import ResidentCheck.sameAsCatalyst
 
   private def exactIds(qv: Array[Float], k: Int): Seq[Long] =
     emb.select($"vec_id".as("id"), $"embedding".as("v"))
@@ -117,7 +100,7 @@ class PqSpec extends SparkTestBase {
       val rawCb = Knn.collectCodebooks(Knn.pqTrain(
         emb, "embedding", "vec_id", m = 8, ksub = 16, iters = 2))
       val rawEnc = Knn.pqEncode(emb, "embedding", "vec_id", rawCb).cache()
-      val handle = Knn.IvfPqIndex.load(spark, dir)
+      val handle = Knn.IvfIndex.load(spark, dir)
       val queries = emb.filter($"vec_id" % 29 === 3).limit(10)
         .select($"vec_id", $"embedding").collect()
         .map(r => r.getSeq[Float](1).toArray)
@@ -173,7 +156,7 @@ class PqSpec extends SparkTestBase {
       handle.search(qv, k = 10, nprobe = 3).collect()
       val after = sc.statusTracker.getJobIdsForGroup(null).length
       assert(after - before <= 1,
-        s"IvfPqIndex.search ran ${after - before} jobs; probe selection and LUTs must be local")
+        s"IvfIndex.search ran ${after - before} jobs; probe selection and LUTs must be local")
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
@@ -187,7 +170,7 @@ class PqSpec extends SparkTestBase {
       Knn.ivfPqBuildIndex(emb, "embedding", "vec_id", dir,
         cells = 4, m = 8, ksub = 16, iters = 2,
         trainFilter = $"vec_id" % 5 === 0, refine = true)
-      val handle = Knn.IvfPqIndex.load(spark, dir)
+      val handle = Knn.IvfIndex.load(spark, dir)
       assert(handle.hasRefine)
       // refine=1 is the plain ADC path, row-identical
       val qv = emb.filter($"vec_id" === 7).select($"embedding")
@@ -198,6 +181,22 @@ class PqSpec extends SparkTestBase {
       // the ADC scan reads m-byte codes even though emb16 is on disk)
       assert(!handle.search(qv, 10, 4).queryExecution.executedPlan
         .toString.contains("emb16"))
+      // stage 2 reads back its shortlist through the parquet reader: the
+      // probed-cell partition filter plus a real In(id, …) over all 40
+      // shortlisted ids — more than the 10-value default
+      // inFilterThreshold, which would range-degrade it to a min/max
+      // bound; the test session's GraftSession.init pins the threshold
+      val stage2 = handle.search(qv, k = 10, nprobe = 2, refine = 4)
+        .queryExecution.executedPlan
+      val readBack = stage2.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+      assert(readBack.length == 1, stage2)
+      assert(readBack.head.metadata("PartitionFilters")
+        .contains("centroid_id"), stage2)
+      val pushed = readBack.head.metadata("PushedFilters")
+      val inIds = "In\\(id, \\[([^\\]]*)\\]\\)".r.findFirstMatchIn(pushed)
+        .map(_.group(1).split(',').length)
+      assert(inIds.exists(_ > 10), pushed)
       // the 32-bit quantizer ranks at recall ~0.3 (the IVFADC test
       // above); an exact re-rank of the 4k-shortlist must recover MORE
       // of the true top-10 — compare means over 10 queries to beat
@@ -232,7 +231,7 @@ class PqSpec extends SparkTestBase {
         Knn.ivfPqBuildIndex(emb, "embedding", "vec_id", bare,
           cells = 4, m = 2, ksub = 4, iters = 2,
           trainFilter = $"vec_id" % 5 === 0)
-        val h2 = Knn.IvfPqIndex.load(spark, bare)
+        val h2 = Knn.IvfIndex.load(spark, bare)
         assert(!h2.hasRefine)
         assertThrows[IllegalArgumentException](h2.search(qv, 10, 4, refine = 2))
       } finally {
@@ -254,7 +253,7 @@ class PqSpec extends SparkTestBase {
         cells = 4, m = 8, ksub = 16, iters = 2,
         trainFilter = $"vec_id" % 5 === 0, refine = true,
         attrCols = Seq("label"))
-      val idx = Knn.IvfPqIndex.load(spark, dir)
+      val idx = Knn.IvfIndex.load(spark, dir)
       assert(idx.attrColumns == Seq("label"))
       val labelOf = emb.select($"vec_id", $"label").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -324,7 +323,7 @@ class PqSpec extends SparkTestBase {
         cells = 4, m = 8, ksub = 16, iters = 2,
         trainFilter = $"vec_id" % 5 === 0, refine = true,
         attrCols = Seq("label"))
-      val handle = Knn.IvfPqIndex.load(spark, dir)
+      val handle = Knn.IvfIndex.load(spark, dir)
       val qv = emb.filter($"vec_id" === 11).select($"embedding")
         .head().getSeq[Float](0).toArray
       // on the unit-norm corpus l2² = 2·cosine-distance, so the two
@@ -410,7 +409,7 @@ class PqSpec extends SparkTestBase {
           Knn.ivfPqBuildIndex(corpus, "embedding", "id", tieDir,
             cells = 4, m = 8, ksub = 16, iters = 2, trainFilter = lit(true),
             refine = true, opqSweeps = opq)
-          val h = Knn.IvfPqIndex.load(spark, tieDir)
+          val h = Knn.IvfIndex.load(spark, tieDir)
           assert(h.hasRotation == (opq > 0))
           // the copies lead the ADC order, so both cuts fall inside them
           val lead = h.search(queries(1), 4, 4).collect().map(_.getDouble(2))
@@ -431,31 +430,33 @@ class PqSpec extends SparkTestBase {
     }
   }
 
-  test("IvfPqIndex.reloading: a rebuild unpins the superseded generation's cells") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfpqreload").toString
-    def build(iters: Int): Unit = Knn.ivfPqBuildIndex(emb, "embedding",
-      "vec_id", dir, cells = 4, m = 8, ksub = 16, iters = iters,
-      trainFilter = $"vec_id" % 5 === 0, refine = true)
-    def pinnedBlocks: Int = spark.sparkContext.getPersistentRDDs.values
-      .count(_.name == s"ivfpq cells $dir")
-    try {
-      build(iters = 2)
-      val h = Knn.IvfPqIndex.reloading(spark, dir)
-      val qv = emb.filter($"vec_id" === 11).select($"embedding")
-        .head().getSeq[Float](0).toArray
-      h.get.asDense(4).servingTopK(qv, 10, 4, None)
-      assert(pinnedBlocks == 1)
-      build(iters = 3)
-      val served = h.get.asDense(4).servingTopK(qv, 10, 4, None)
-      assert(served.length == 10)
-      assert(pinnedBlocks == 1,
-        "a reload must unpersist the previous generation's cell blocks")
-      h.get.unpin()
-      assert(pinnedBlocks == 0)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
-        .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+  test("IvfIndex.reloading: a rebuild unpins the superseded generation's cells") {
+    val builds: Seq[(String, (String, Int) => Unit)] = Seq(
+      "ivfadc" -> ((d, iters) => Knn.ivfPqBuildIndex(emb, "embedding",
+        "vec_id", d, cells = 4, m = 8, ksub = 16, iters = iters,
+        trainFilter = $"vec_id" % 5 === 0, refine = true)),
+      "fp16" -> ((d, iters) => Knn.ivfBuildIndex(emb, "embedding", "vec_id",
+        d, k = 4, iters = iters, trainFilter = $"vec_id" % 5 === 0,
+        fp16 = true)))
+    for ((layout, build) <- builds) {
+      val dir = java.nio.file.Files.createTempDirectory(s"reload-$layout")
+        .toString
+      def pinnedBlocks: Int = spark.sparkContext.getPersistentRDDs.values
+        .count(_.name == s"ivf cells $dir")
+      try {
+        build(dir, 2)
+        val h = Knn.IvfIndex.reloading(spark, dir)
+        val qv = vecOf(11L)
+        h.get.asDense(4).servingTopK(qv, 10, 4, None)
+        assert(pinnedBlocks == 1, layout)
+        build(dir, 3)
+        val served = h.get.asDense(4).servingTopK(qv, 10, 4, None)
+        assert(served.length == 10, layout)
+        assert(pinnedBlocks == 1,
+          s"$layout: a reload must unpersist the previous generation's cell blocks")
+        h.get.unpin()
+        assert(pinnedBlocks == 0, layout)
+      } finally rmTree(dir)
     }
   }
 
@@ -470,7 +471,8 @@ class PqSpec extends SparkTestBase {
           "vec_id", dir, cells = 4, m = 8, ksub = 16, iters = 2,
           trainFilter = $"vec_id" % 5 === 0, refine = true,
           attrCols = attrs, opqSweeps = opq)
-        assert(Knn.ivfIndexReady(dir) && Knn.ivfPqLayout(spark, dir), at)
+        assert(Knn.ivfIndexReady(dir) && Knn.IvfIndex.load(spark, dir).hasCodes,
+          at)
         val batch = emb.filter($"vec_id" >= 400 && $"vec_id" < 450)
         Knn.ivfAppendIndex(batch, "embedding", "vec_id", dir)
         val segs = graft.sync.SegmentedIndex.resolve(spark, dir).get
@@ -504,7 +506,7 @@ class PqSpec extends SparkTestBase {
         assert(expected.size == 50 && codesById(appended) == expected, at)
 
         // the reloading handle serves the added ids
-        val h = Knn.IvfPqIndex.reloading(spark, dir)
+        val h = Knn.IvfIndex.reloading(spark, dir)
         def served(id: Long): Seq[Long] = h.get.asDense(4)
           .servingTopK(vecOf(id), 10, 4, None).map(_.getLong(0)).toSeq
         assert(served(420L).head == 420L, at)
@@ -527,7 +529,7 @@ class PqSpec extends SparkTestBase {
         // compaction: one segment, the same codes, the same answers
         Knn.ivfCompactIndex(spark, dir)
         assert(graft.sync.SegmentedIndex.resolve(spark, dir).get.length == 1)
-        assert(Knn.IvfPqIndex.load(spark, dir).attrColumns == attrs, at)
+        assert(Knn.IvfIndex.load(spark, dir).attrColumns == attrs, at)
         assert(Seq(7L, 431L).map(id => h.get.asDense(4)
           .servingTopK(vecOf(id), 10, 4, None).toSeq) == before, at)
 
@@ -557,15 +559,15 @@ class PqSpec extends SparkTestBase {
       trainFilter = $"vec_id" % 5 === 0, refine = true, opqSweeps = opq)
     try {
       build(dir, opq = 1)
-      assert(Knn.IvfPqIndex.load(spark, dir).hasRotation)
+      assert(Knn.IvfIndex.load(spark, dir).hasRotation)
       assert(Knn.loadRotation(spark, s"file://$dir").isDefined)
       build(dir, opq = 0)
       build(fresh, opq = 0)
-      val h = Knn.IvfPqIndex.load(spark, dir)
+      val h = Knn.IvfIndex.load(spark, dir)
       assert(!h.hasRotation && Knn.loadRotation(spark, dir).isEmpty)
       val qv = vecOf(11L)
       assert(h.search(qv, 10, 4, refine = 4).collect().toSeq ==
-        Knn.IvfPqIndex.load(spark, fresh).search(qv, 10, 4, refine = 4)
+        Knn.IvfIndex.load(spark, fresh).search(qv, 10, 4, refine = 4)
           .collect().toSeq)
     } finally Seq(dir, fresh).foreach(rmTree)
   }

@@ -43,6 +43,18 @@ class SpilledIvfSpec extends SparkTestBase {
     assert(wide.distinct == wide)
   }
 
+  test("the resident probe collapses a spilled layout's copies exactly as the Catalyst search does") {
+    val dir = freshDir("resident")
+    Knn.ivfBuildIndex(emb, "embedding", "vec_id", dir, k = 6, iters = 2,
+      trainFilter = $"vec_id" % 5 === 0, spill = true)
+    val idx = Knn.IvfIndex.load(spark, dir)
+    Seq(3L, 123L, 401L).foreach { id =>
+      ResidentCheck.sameAsCatalyst(idx, emb.filter($"vec_id" === id)
+        .select($"embedding").head().getSeq[Float](0).toArray)
+    }
+    idx.unpin()
+  }
+
   test("spilling is additive: the primary copy sits in the unspilled " +
       "build's cell, so equal-nprobe recall can only improve") {
     val single = freshDir("single")

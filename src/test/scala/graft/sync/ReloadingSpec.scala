@@ -88,6 +88,44 @@ class ReloadingSpec extends SparkTestBase {
     } finally rmTree(dir)
   }
 
+  test("a reloading IVF handle resolved before a compaction answers after it; its release sweeps the dropped segments") {
+    val emb = table("embeddings").filter($"embedding".isNotNull)
+      .withColumn("label", pmod($"vec_id", lit(7)))
+    val dir = java.nio.file.Files.createTempDirectory("reload-compact").toString
+    def entries: Int = new java.io.File(dir).listFiles().count(f =>
+      f.getName.startsWith("seg-") || f.getName.startsWith("del-"))
+    try {
+      Knn.ivfBuildIndex(emb.filter($"vec_id" < 300), "embedding", "vec_id",
+        dir, k = 4, iters = 2, trainFilter = $"vec_id" % 5 === 0,
+        fp16 = true, attrCols = Seq("label"))
+      Knn.ivfAppendIndex(emb.filter($"vec_id" >= 300), "embedding", "vec_id",
+        dir)
+      Knn.ivfDeleteIndex(spark, dir, Seq(7L, 310L).toDF("vec_id"), "vec_id")
+      val handle = Knn.IvfIndex.reloading(spark, dir)
+      // resolved before the compaction, and never asked before it: no
+      // request has pinned its cells, so it reads the files it resolved
+      val held = handle.get
+      val qv = emb.filter($"vec_id" === 11).select($"embedding")
+        .head().getSeq[Float](0).toArray
+      Knn.ivfCompactIndex(spark, dir)
+      val fresh = Knn.IvfIndex.load(spark, dir)
+      def rows(a: Array[org.apache.spark.sql.Row]) =
+        a.map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(rows(held.servingTopK(qv, 10, 4, None)) ==
+        rows(fresh.servingTopK(qv, 10, 4, None)))
+      val filtered = held.servingTopK(qv, 5, 1, Some($"label" === 3))
+      assert(rows(filtered) == rows(fresh.servingTopK(qv, 5, 1,
+        Some($"label" === 3))))
+      assert(filtered.nonEmpty)
+      fresh.unpin()
+      // the reload that supersedes the held handle releases what it kept
+      handle.get
+      assert(SegmentedIndex.resolve(spark, dir).get.length == 1)
+      assert(entries == 1,
+        "the superseded handle's segments must be gone once it is released")
+    } finally rmTree(dir)
+  }
+
   test("lexical handle serves a CorpusRefresh'd doc with refreshed stats") {
     val docs = table("documents").select($"doc_id", $"text").limit(60)
     val root = java.nio.file.Files.createTempDirectory("reload-lex").toString
