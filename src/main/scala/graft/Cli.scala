@@ -19,23 +19,16 @@ import graft.sync.{HighlightStore, Sync}
   *   graft.Cli sync --backfill --pages-dir D --store S --ckpt C [--pooled [--chunk-words N]]
   *   graft.Cli sync --since 2024-01-01T00:00:00Z --pages-dir D --store S --ckpt C
   *   graft.Cli refresh --pages-dir D --store S --ckpt C [--lex-index L]
-  *     [--ivf-index I] [--graph-index G[,G2,...]
-  *      [--graph-entry-ivf I[,I2,...]]]
-  *   graft.Cli index --store S --out D
-  *     [--type ivf|ivfpq|graph|graph-codes|lexical]
-  *     [--cells 64] [--fp16 true] [--attrs c1,c2] [--graph-k 5] [--buckets N]
-  *     [--shards N|auto]   (graph: one-call sharded gateway + MANIFEST)
+  *     [--ivf-index I]
+  *   graft.Cli index --store S --out D [--type ivf|ivfpq|lexical]
+  *     [--cells 64] [--fp16 true] [--attrs c1,c2] [--buckets N]
   *   graft.Cli export --store S --out D [--shard-tokens 2048]
   *   graft.Cli curate --docs D.parquet --out O [--quality 0.6] [--lm-threshold -6.0]
   *     [--lm-store L] [--mix-alpha A --mix-frac F] [--shard-tokens 2048] [--report-only]
   *   graft.Cli search "query text" --k 5 --store S [--source-type T] [--hybrid true] [--mmr 0.3]
-  *   graft.Cli serve --store S [--ivf-index I [--pq-refine 64]
-  *     | --graph-index G[,G2,...] [--graph-entry-ivf I[,I2,...]] [--graph-ef 20]]
-  *     [--nprobe 4]
+  *   graft.Cli serve --store S [--ivf-index I [--pq-refine 64]] [--nprobe 4]
   *     (--ivf-index serves ADC + fp16 refine when I is an IVFADC layout
-  *      from `index --type ivfpq`, the fp16 probe otherwise;
-  *      --graph-index always serves the resident code walk: one dir with
-  *      its code sidecar, a comma-separated shard list, or a MANIFEST root)
+  *      from `index --type ivfpq`, the fp16 probe otherwise)
   *   graft.Cli health
   */
 object Cli {
@@ -101,74 +94,20 @@ object Cli {
   /** The dense index `serve` routes requests through, behind a
     * generation-checked handle that follows rebuilds and refreshes, or
     * None for the store scan. Left = the exit code of a start-up
-    * refusal, already explained on stderr. Two modes:
-    *  - `--ivf-index`: the IVF cell layout, served by its payload. An
-    *    IVFADC layout (`index --type ivfpq`) serves IVFADC codes + exact
-    *    fp16 refine at `--pq-refine`, cosine-scored (the default-mode
-    *    promotion of SCALE.md §r11); an fp16 layout serves the fp16
-    *    probe, one pruned job a request. Filtered requests stay on the
-    *    index when its cells carry the referenced attr columns, else
-    *    fall back to the store scan;
-    *  - `--graph-index`: the resident code walk — topology and codes
-    *    held in memory, one exact re-rank job a request (SCALE.md §r13).
-    *    One dir serves through [[graft.similarity.Knn.ResidentGraphIndex]];
-    *    a comma-separated shard list, or a root carrying a sharded
-    *    gateway MANIFEST (`index --type graph --shards N`), through the
-    *    fan-and-merge [[graft.similarity.Knn.ShardedResidentIndex]].
-    *    `--graph-entry-ivf` pairs with the listed dirs positionally. */
+    * refusal, already explained on stderr. One mode, `--ivf-index`:
+    * the IVF cell layout, served by its payload. An IVFADC layout
+    * (`index --type ivfpq`) serves IVFADC codes + exact fp16 refine at
+    * `--pq-refine`, cosine-scored (the default-mode promotion of
+    * SCALE.md §r11); an fp16 layout serves the fp16 probe, one pruned
+    * job a request. Filtered requests stay on the index when its cells
+    * carry the referenced attr columns, else fall back to the store
+    * scan. */
   private[graft] def denseIndex(spark: SparkSession, cfg: GraftConfig)
       : Either[Int, Option[() => graft.similarity.Knn.DenseIndex]] = {
     import graft.similarity.Knn
     def refuse(code: Int, msg: String) = { System.err.println(msg); Left(code) }
-    // the store check's counterpart for the index: a query embedded at
-    // another width would be scored by a truncated dot product
-    def widthRefusal(d: String, dim: Int) =
-      refuse(2, s"index at $d holds $dim-dim vectors but the configured " +
-        s"embedder is ${cfg.embedderDim}-dim; pass --embed-dim $dim (or " +
-        s"GRAFT_EMBEDDER_DIM=$dim) or rebuild the index")
-    def split(csv: String) = csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-    // graph node ids are the store's numeric string ids cast long at
-    // build; idOf maps winners back so rehydration joins on the store's
-    // own key type
-    val idOf = (id: Long) => id.toString
-    (cfg.graphIndexDir, cfg.ivfIndexDir) match {
-      case (Some(g), _) =>
-        val manifest =
-          if (g.contains(',')) None
-          else Knn.ShardedResidentIndex.loadManifest(spark, g)
-        val dirs = manifest.fold(split(g))(_.map(_._1))
-        val entries: Seq[Option[String]] = manifest.map(_.map(_._2))
-          .getOrElse(cfg.graphEntryIvfDir.fold(
-            Seq.fill(dirs.length)(Option.empty[String]))(
-            split(_).map(Some(_))))
-        if (entries.length != dirs.length)
-          return refuse(2, s"--graph-entry-ivf lists ${entries.length} " +
-            s"IVF dirs for ${dirs.length} graph dirs — entry IVFs pair " +
-            "with --graph-index positionally")
-        dirs.zip(entries).foreach { case (d, e) =>
-          if (!Knn.graphIndexReady(d))
-            return refuse(1, s"no adjacency index at $d (build one with " +
-              "`graft.Cli index --type graph` or drop --graph-index)")
-          if (!Knn.graphCodesReady(d))
-            return refuse(1, s"no pq-code sidecar at $d/pqcodes for " +
-              "--graph-index (build with `graft.Cli index --type graph " +
-              "--codes true`, or `--type graph-codes` over the existing " +
-              "layout)")
-          e.filterNot(Knn.ivfIndexReady).foreach { ivf =>
-            return refuse(1, s"no IVF index at $ivf for --graph-entry-ivf " +
-              "(build one with `graft.Cli index` or drop the flag)")
-          }
-        }
-        if (dirs.length == 1) {
-          val h = Knn.ResidentGraphIndex.reloading(spark, dirs.head,
-            entries.head, cfg.graphEf, idOf = idOf)
-          Right(Some(() => h.get))
-        } else {
-          val h = Knn.ShardedResidentIndex.reloading(spark,
-            dirs.zip(entries), cfg.graphEf, idOf = idOf)
-          Right(Some(() => h.get))
-        }
-      case (_, Some(d)) =>
+    cfg.ivfIndexDir match {
+      case Some(d) =>
         if (!Knn.ivfIndexReady(d))
           return refuse(1, s"no IVF index at $d (build one with " +
             "`graft.Cli index --type ivf|ivfpq` or drop --ivf-index)")
@@ -185,11 +124,17 @@ object Cli {
             return refuse(1, s"IVFADC index at $d has no refine payload — " +
               "rebuild with ivfPqBuildIndex(refine=true)")
         }
-        if (idx.dim != cfg.embedderDim) return widthRefusal(d, idx.dim)
+        // the store check's counterpart for the index: a query embedded
+        // at another width would be scored by a truncated dot product
+        if (idx.dim != cfg.embedderDim)
+          return refuse(2, s"index at $d holds ${idx.dim}-dim vectors but " +
+            s"the configured embedder is ${cfg.embedderDim}-dim; pass " +
+            s"--embed-dim ${idx.dim} (or GRAFT_EMBEDDER_DIM=${idx.dim}) or " +
+            "rebuild the index")
         // the view follows rebuilds: a later generation without the
         // refine payload fails its requests with asDense's refusal
         Right(Some(() => h.get.asDense(cfg.pqRefine)))
-      case _ => Right(None)
+      case None => Right(None)
     }
   }
 
@@ -267,8 +212,7 @@ object Cli {
     // store and any maintained index roots (Sync.refresh / CorpusRefresh)
     case "refresh" +: rest =>
       val f = flags(rest)
-      val resolved = GraftConfig.resolve(
-        f -- Seq("lex-index", "ivf-index", "graph-index", "graph-entry-ivf"),
+      val resolved = GraftConfig.resolve(f -- Seq("lex-index", "ivf-index"),
         env, GraftConfig.Command.Sync,
         pooledFlag = rest.contains("--pooled"))
       resolved match {
@@ -279,53 +223,10 @@ object Cli {
               "run sync --backfill first (refresh reconciles an existing store)")
             1
           } else {
-            // --graph-index a,b,... (shard order!) routes the delta by
-            // the build's pmod rule and refreshes each touched shard —
-            // the maintenance half of `serve --graph-index a,b`.
-            // --graph-entry-ivf pairs positionally
-            // (each shard's entry IVF follows its shard's slice).
-            val graphArg = f.get("graph-index").toSeq
-              .flatMap(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-            // a single dir carrying a sharded-gateway MANIFEST expands
-            // to its shard list + entry IVFs — the maintenance half of
-            // `index --type graph --shards N` under one flag
-            val manifest = graphArg match {
-              case Seq(root) => graft.similarity.Knn.ShardedResidentIndex
-                .loadManifest(spark, root)
-              case _ => None
-            }
-            val graphDirs = manifest.map(_.map(_._1)).getOrElse(graphArg)
-            val entryIvfs = manifest.map(_.flatMap(_._2)).getOrElse(
-              f.get("graph-entry-ivf").toSeq
-                .flatMap(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)))
-            if (entryIvfs.nonEmpty && entryIvfs.length != graphDirs.length) {
-              System.err.println(s"--graph-entry-ivf lists " +
-                s"${entryIvfs.length} IVF dirs for ${graphDirs.length} " +
-                "graph dirs — entry IVFs pair with --graph-index " +
-                "positionally")
-              return 2
-            }
-            // a single dir WITH an entry IVF routes through the shard
-            // path too (pmod(key, 1) keeps every key): same adjacency
-            // cycle, plus the entry IVF maintained — dropping the flag
-            // silently would let entries drift from the live set
             val counts = Sync.refresh(spark, dirClient(cfg.pagesDir.get),
               cfg.storeDir, cfg.checkpointDir.get,
               lexIndexDir = f.get("lex-index"),
               ivfIndexDir = f.get("ivf-index"),
-              graphIndexDir = graphDirs match {
-                case Seq(one) if entryIvfs.isEmpty && manifest.isEmpty =>
-                  Some(one)
-                case _ => None
-              },
-              graphShardDirs = manifest.getOrElse(
-                if (graphDirs.length > 1 || entryIvfs.nonEmpty) {
-                  val es: Seq[Option[String]] =
-                    if (entryIvfs.isEmpty)
-                      Seq.fill(graphDirs.length)(None)
-                    else entryIvfs.map(Some(_))
-                  graphDirs.zip(es)
-                } else Nil),
               embedder = cfg.embedder,
               pooledChunkWords = cfg.pooledChunkWords)
             println(Json.write(counts.map { case (k, v) => k -> v } +
@@ -388,8 +289,7 @@ object Cli {
     // store columns into the cells so `serve --ivf-index` can keep
     // FILTERED queries on the probe (q132's contract); --fp16 halves
     // the at-rest cells.
-    //   graft.Cli index --store S --out D
-    //     [--type ivf|ivfpq|graph|graph-codes|lexical]
+    //   graft.Cli index --store S --out D [--type ivf|ivfpq|lexical]
     //     ivf:     [--cells 64] [--iters 2] [--train-every 5] [--fp16 true]
     //              [--attrs col1,col2,…]
     //     ivfpq:   [--cells 64] [--iters 2] [--train-every 5] [--pq-m 8]
@@ -397,32 +297,19 @@ object Cli {
     //              (IVFADC with the fp16 refine payload `serve
     //               --ivf-index` requires of it; --opq-sweeps > 0 learns
     //               the OPQ rotation and builds in rotated space)
-    //     graph:   [--graph-k 5] [--cells 64] [--nprobe 2] [--buckets 64]
-    //              [--fp16 true]
-    //              [--shards N|auto [--codec pq|int8] [--attrs c1,c2]]
-    //                (pmod-split sharded gateway: per-shard adjacency +
-    //                 codes + entry IVF under one root MANIFEST that
-    //                 `serve --graph-index <root>` and
-    //                 `refresh --graph-index <root>` consume)
-    //              [--codes true [--codec pq|int8] [--pq-m 64]
-    //               [--pq-ksub 256]] (+the code sidecar `serve
-    //                 --graph-index` needs)
-    //     graph-codes: [--codec pq|int8] [--pq-m 64] [--pq-ksub 256]
-    //                    (sidecar-only rebuild over an existing layout)
     //     lexical: [--buckets 64]
     case "index" +: rest =>
       val f = flags(rest)
       (f.get("store"), f.get("out")) match {
         case (Some(storeDir), Some(out)) =>
           val typ = f.getOrElse("type", "ivf")
-          if (!Seq("ivf", "ivfpq", "graph", "graph-codes", "lexical")
-              .contains(typ)) {
-            System.err.println(s"--type must be ivf, ivfpq, graph, " +
-              s"graph-codes or lexical, got '$typ'")
+          if (!Seq("ivf", "ivfpq", "lexical").contains(typ)) {
+            System.err.println(
+              s"--type must be ivf, ivfpq or lexical, got '$typ'")
             return 2
           }
-          val badInts = Seq("cells", "iters", "train-every", "graph-k",
-              "nprobe", "buckets", "pq-m", "pq-ksub")
+          val badInts = Seq("cells", "iters", "train-every", "buckets",
+              "pq-m", "pq-ksub")
             .flatMap(k => f.get(k).filter(_.toIntOption.forall(_ <= 0))
               .map(v => s"--$k must be a positive integer, got '$v'"))
           if (badInts.nonEmpty) { badInts.foreach(System.err.println); return 2 }
@@ -434,29 +321,7 @@ object Cli {
             case None =>
               System.err.println(s"no highlight store at $storeDir"); 1
             case Some(df) =>
-              import org.apache.spark.sql.functions.{col, crc32, sum, when,
-                coalesce, lit}
-              // the graph family keys nodes by LONG ids; the store's ids
-              // are numeric strings (Readwise highlight ids), so the cast
-              // round-trips — verified here in one aggregate, because a
-              // non-numeric id would otherwise vanish into a NULL node
-              // silently
-              def numericIdsOk(): Boolean = {
-                // try_cast (ANSI cast throws on 'h1') + null-safe compare
-                // (NULL =!= 'h1' is NULL, not true — <=> catches it)
-                // coalesce: SUM over zero rows (empty store / all-null
-                // ids) is NULL — getLong would NPE instead of passing
-                // the empty store through to the builder's own error
-                val bad = df.filter(col("id").isNotNull)
-                  .agg(coalesce(sum(when(col("id").try_cast("long")
-                    .cast("string") <=> col("id"), 0).otherwise(1)),
-                    lit(0L)))
-                  .head().getLong(0)
-                if (bad > 0) System.err.println(s"--type $typ needs numeric " +
-                  s"store ids (graph nodes key by long); $bad ids do not " +
-                  "round-trip through CAST(id AS LONG)")
-                bad == 0
-              }
+              import org.apache.spark.sql.functions.{col, crc32}
               typ match {
                 case "ivf" =>
                   val every = intOf("train-every", 5)
@@ -518,146 +383,6 @@ object Cli {
                     "type" -> "ivfpq", "cells" -> cells, "m" -> pm,
                     "opq_sweeps" -> sweeps,
                     "attrs" -> attrs.mkString(","))))
-                  0
-                case "graph" =>
-                  if (!numericIdsOk()) return 2
-                  val gk = intOf("graph-k", 5)
-                  val nprobe = intOf("nprobe", 2)
-                  // --shards N|auto: the ONE-CALL sharded deployment a
-                  // corpus past the per-replica residency budget needs
-                  // (the ResidentGraphIndex.load refusal points here) —
-                  // pmod-split shards, each with adjacency + code
-                  // sidecar + entry IVF, plus the root MANIFEST that
-                  // `serve --graph-index <root>` consumes. `auto` sizes the shard count from the
-                  // live corpus against the resident budget.
-                  f.get("shards").foreach { sv =>
-                    val live = df.filter(col("embedding").isNotNull).count()
-                    val shards = sv match {
-                      case "auto" => math.max(1L, (live +
-                        graft.similarity.Knn.ResidentGraphIndex
-                          .DefaultMaxResidentNodes - 1) /
-                        graft.similarity.Knn.ResidentGraphIndex
-                          .DefaultMaxResidentNodes).toInt
-                      case v => v.toIntOption.filter(_ >= 1).getOrElse {
-                        System.err.println("--shards must be a positive " +
-                          s"integer or 'auto', got '$v'")
-                        return 2
-                      }
-                    }
-                    val codecV = f.getOrElse("codec", "int8")
-                    if (!Seq("pq", "int8").contains(codecV)) {
-                      System.err.println(
-                        s"--codec must be pq or int8, got '$codecV'")
-                      return 2
-                    }
-                    val attrs = f.get("attrs").toSeq.flatMap(_.split(","))
-                      .map(_.trim).filter(_.nonEmpty)
-                    val missingA = attrs.filterNot(df.columns.contains)
-                    if (missingA.nonEmpty) {
-                      System.err.println("--attrs name(s) not in the " +
-                        "store: " + missingA.mkString(", "))
-                      return 2
-                    }
-                    val corpus = df.filter(col("embedding").isNotNull)
-                      .select(col("id").cast("long").as("id") +:
-                        col("embedding") +: attrs.map(col): _*)
-                    val dirs = graft.similarity.Knn.ShardedResidentIndex
-                      .build(corpus, "embedding", "id", out,
-                        shards = shards, topK = gk,
-                        iters = intOf("iters", 2), nprobe = nprobe,
-                        codec = codecV, entryCells = cells,
-                        attrCols = attrs)
-                    println(Json.write(Map("indexed" -> out,
-                      "type" -> "graph", "shards" -> shards,
-                      "graph_k" -> gk, "codec" -> codecV,
-                      "attrs" -> attrs.mkString(","),
-                      "manifest" -> s"$out/MANIFEST",
-                      "shard_dirs" -> dirs.map(_._1).mkString(","))))
-                    return 0
-                  }
-                  // the 100-TB construction: neighbors searched inside
-                  // k-means cells (cellKnnGraph — the nprobe dial buys
-                  // recall linearly), never the O(n²) exact pair join.
-                  // Cells clamp to corpus size so small stores degrade
-                  // to the exact graph instead of starving k-means.
-                  val n = df.count()
-                  val c = math.max(1, math.min(cells, (n / 4).toInt))
-                  val corpus = df.filter(col("embedding").isNotNull)
-                    .select(col("id").cast("long").as("id"), col("embedding"))
-                  val edges = graft.similarity.Knn.cellKnnGraph(corpus,
-                      "embedding", "id", topK = gk, cells = c,
-                      iters = intOf("iters", 2),
-                      nprobe = math.min(nprobe, c))
-                    .select(col("id_a"), col("id_b"))
-                  // --buckets absent → the measured density dial (~50 k
-                  // adjacency rows per bucket, Knn.bucketsFor): bucket
-                  // count never adds probe tasks but bounds what each
-                  // task scans, and 64-at-any-n served 1.5× slower than
-                  // density-sized at the 2 M edge (SCALE.md §r15)
-                  val gbuckets = f.get("buckets").map(_.toInt).getOrElse(
-                    graft.similarity.Knn.bucketsFor(n * (gk + 1L)))
-                  graft.similarity.Knn.buildAdjacencyIndex(edges, corpus,
-                    "embedding", "id", out, buckets = gbuckets,
-                    fp16 = fp16)
-                  // --codes true: also build the pq-code sidecar that
-                  // `serve --graph-index` needs (one narrow pass;
-                  // rebuild after refresh/append — the resident load
-                  // refuses a sidecar that no longer covers the live set)
-                  val codes = f.get("codes").contains("true")
-                  if (codes) {
-                    val codecV = f.getOrElse("codec", "pq")
-                    if (!Seq("pq", "int8").contains(codecV)) {
-                      System.err.println(
-                        s"--codec must be pq or int8, got '$codecV'")
-                      return 2
-                    }
-                    val pm = intOf("pq-m", 64)
-                    val dims = df.filter(col("embedding").isNotNull)
-                      .select(org.apache.spark.sql.functions
-                        .size(col("embedding"))).head().getInt(0)
-                    if (codecV == "pq" && dims % pm != 0) {
-                      System.err.println(s"--pq-m $pm must divide the " +
-                        s"embedding dim $dims")
-                      return 2
-                    }
-                    graft.similarity.Knn.buildGraphCodes(spark, out,
-                      m = pm, ksub = intOf("pq-ksub", 256), codec = codecV)
-                  }
-                  println(Json.write(Map("indexed" -> out, "type" -> "graph",
-                    "graph_k" -> gk, "cells" -> c, "codes" -> codes,
-                    "buckets" -> gbuckets)))
-                  0
-                case "graph-codes" =>
-                  // sidecar-only (re)build over an EXISTING adjacency
-                  // layout — the maintenance verb after append/refresh
-                  // (the resident load refuses a sidecar that no longer
-                  // covers the live set; this one pass re-covers it)
-                  if (!graft.similarity.Knn.graphIndexReady(out)) {
-                    System.err.println(s"no adjacency index at $out — " +
-                      "--type graph-codes rebuilds the code sidecar of " +
-                      "an existing graph index (build one with --type graph)")
-                    return 1
-                  }
-                  val codecV = f.getOrElse("codec", "pq")
-                  if (!Seq("pq", "int8").contains(codecV)) {
-                    System.err.println(
-                      s"--codec must be pq or int8, got '$codecV'")
-                    return 2
-                  }
-                  val pm = intOf("pq-m", 64)
-                  val dims = df.filter(col("embedding").isNotNull)
-                    .select(org.apache.spark.sql.functions
-                      .size(col("embedding"))).head().getInt(0)
-                  if (codecV == "pq" && dims % pm != 0) {
-                    System.err.println(s"--pq-m $pm must divide the " +
-                      s"embedding dim $dims")
-                    return 2
-                  }
-                  graft.similarity.Knn.buildGraphCodes(spark, out,
-                    m = pm, ksub = intOf("pq-ksub", 256), codec = codecV)
-                  println(Json.write(Map("indexed" -> out,
-                    "type" -> "graph-codes", "codec" -> codecV,
-                    "pq_m" -> pm, "pq_ksub" -> intOf("pq-ksub", 256))))
                   0
                 case "lexical" =>
                   graft.text.TextRank.buildLexicalIndex(df, "text", "id",

@@ -20,12 +20,12 @@ import org.apache.spark.sql.functions._
   *    distance math, so 32 cores saturate near 6 qps — 20 closed-loop
   *    users push per-request latency to seconds REGARDLESS of scheduling.
   *    This mode documents graceful saturation, not the gate.
-  *  - `ivf`: requests go through the Catalyst probe of
-  *    [[graft.similarity.Knn.IvfIndex.search]] — the centroid sidecar is
-  *    driver-resident (loaded once), probe selection is local
-  *    arithmetic, and each request is ONE Spark job scanning only
-  *    `nprobe/cells` of the corpus via partition pruning (the serving
-  *    edge's filterless requests take the handle's resident probe). This is
+  *  - `ivf`: requests go through the resident probe that `serve`
+  *    runs for a filterless request,
+  *    [[graft.similarity.Knn.IvfIndex.servingTopK]] — the centroid
+  *    sidecar is driver-resident (loaded once), probe selection is local
+  *    arithmetic, and each request is ONE Spark job scoring only
+  *    `nprobe/cells` of the corpus over pinned cell blocks. This is
   *    the concurrency dial: per-request work drops ~cells/nprobe×, so
   *    the same 20 users sit far below saturation.
   *
@@ -39,13 +39,8 @@ import org.apache.spark.sql.functions._
   *
   * env: CONC_VECS (default 200000), CONC_USERS (default 20),
   * CONC_REQS per user (default 10), CONC_MODE (`dense` — the default
-  * serving mode, PQ codes + fp16 cosine refine; `ivf`, `brute`, `pq`,
-  * `filtered`, `routed`, `resident` (the in-memory code walk
-  * `Cli serve --graph-index` serves — CONC_GRAPH_K graph out-degree
-  * default 5, CONC_RESIDENT_EF default 64, CONC_RESIDENT_CODEC pq|int8,
-  * CONC_RESIDENT_M/CONC_RESIDENT_KSUB pq dials,
-  * CONC_RESIDENT_REBUILD=1 forces a sidecar rebuild, CONC_ENTRY=ivf
-  * seeds walks from IVF cells), `hybrid`, `lex`, or `both` =
+  * serving mode, PQ codes + fp16 cosine refine; `ivf`, `brute`,
+  * `filtered`, `routed`, `hybrid`, `lex`, or `both` =
   * dense + ivf + hybrid + brute), CONC_CELLS
   * (default 64), CONC_NPROBE (default 4), CONC_DENSE_REFINE (default 64),
   * CONC_THINK_MS (mean think time; default 1000 = locust's
@@ -187,12 +182,12 @@ object ConcurrencyProbe {
       val tag = if (sys.env.get("CONC_RELOADING").contains("1"))
         ",reloading" else ""
       recall10(spark, corpus, n, s"ivf(cells=$cellsK,nprobe=$nprobe$tag)",
-        qvec) { qv => fetch().search(qv, k = 10, nprobe = nprobe)
-          .select(col("id")).collect().map(_.getLong(0)).toSeq }
+        qvec) { qv => fetch().servingTopK(qv, 10, nprobe, None)
+          .map(_.getLong(0)).toSeq }
       run(spark, s"ivf(cells=$cellsK,nprobe=$nprobe$tag)", n, users,
         reqsPerUser) { seed =>
           val qv = qvec(seed)
-          fetch().search(qv, k = 10, nprobe = nprobe).collect()
+          require(fetch().servingTopK(qv, 10, nprobe, None).length == 10)
       }
     }
 
@@ -280,115 +275,6 @@ object ConcurrencyProbe {
           val qv = qvec(seed)
           index.servingTopKRouted(qv, k = 10, nprobe = nprobe,
             col("nlabel").isin(seed % nmod))
-      }
-    }
-
-    if (mode("pq")) {
-      // IVFADC serving: same cells/nprobe dial as `ivf`, but the probed
-      // partitions hold m-byte PQ codes instead of fp16 vectors — per-
-      // request scan I/O drops by the compression ratio (fp16 6 KB/vec →
-      // m=32 B is 192×) while the request shape stays ONE pruned job;
-      // probe selection + the nprobe residual LUTs are driver-local
-      // arithmetic (~dim·ksub flops, microseconds). The latency floor is
-      // the same ~50 ms serialized planning path as `ivf` — this mode
-      // documents that the COMPRESSED index serves the gate too, i.e.
-      // recall (not latency) is the only cost of PQ at serving time.
-      val cellsK = sys.env.getOrElse("CONC_CELLS", "64").toInt
-      val nprobe = sys.env.getOrElse("CONC_NPROBE", "4").toInt
-      val m = sys.env.getOrElse("CONC_PQ_M", "32").toInt
-      val ksub = sys.env.getOrElse("CONC_PQ_KSUB", "64").toInt
-      // CONC_PQ_REFINE > 1 turns on the exact re-rank stage: the index
-      // carries the fp16 refine payload and every request pays a SECOND
-      // pruned job re-scoring the r·k shortlist — the recall-vs-latency
-      // trade the 5× p95 headroom of the code-only path buys back
-      val refine = sys.env.getOrElse("CONC_PQ_REFINE", "1").toInt
-      val indexDir = graft.fixtures.Fp16Corpus.workRoot +
-        s"/ivfpqserve3072$ftag-n$n-c$cellsK-m$m-k$ksub" +
-        (if (refine > 1) "-refine" else "")
-      if (!graft.similarity.Knn.ivfIndexReady(indexDir)) {
-        val fp32 = corpus.select(col("vec_id").as("id"),
-          graft.functions.fp16_decode(col("emb16")).as("embedding"))
-        // coarse + sub-quantizer training both on ~500-vector samples;
-        // the assignment & encode passes cover the full corpus
-        val every = (n / 500).max(1L)
-        graft.similarity.Knn.ivfPqBuildIndex(fp32, "embedding", "id",
-          indexDir, cells = cellsK, m = m, ksub = ksub, iters = 2,
-          trainFilter = col("id") % every === 0,
-          pqTrainFilter = col("id") % every === 0, refine = refine > 1)
-      }
-      val index = graft.similarity.Knn.IvfIndex.load(spark, indexDir)
-      run(spark,
-        s"pq(cells=$cellsK,nprobe=$nprobe,m=$m,ksub=$ksub,refine=$refine)",
-        n, users, reqsPerUser) { seed =>
-          val qv = qvec(seed)
-          index.search(qv, k = 10, nprobe = nprobe, refine = refine).collect()
-      }
-    }
-
-    if (mode("resident")) {
-      // the resident-code walk (Knn.ResidentGraphIndex — `Cli serve
-      // --graph-index G`): topology + m-byte PQ codes held in memory,
-      // the FULL best-first graph search runs at ~µs
-      // per expansion (no hop cap — natural termination), and the one
-      // Spark job per request is the bucket-pruned exact re-rank of the
-      // ef shortlist. This is the serving answer to the manifold
-      // ladder's finding that multi-hop-as-jobs prices at seconds
-      // (SCALE.md §r13): the walk's budget stops costing jobs, so ef
-      // buys recall at driver-flop prices and the job count matches the
-      // gate-passing IVF probe's.
-      val gk = sys.env.getOrElse("CONC_GRAPH_K", "5").toInt
-      val ef = sys.env.getOrElse("CONC_RESIDENT_EF", "64").toInt
-      val indexDir = graft.fixtures.Fp16Corpus.workRoot +
-        s"/adjserve3072$ftag-n$n-k$gk"
-      // the CELLED construction (cellKnnGraph): at 3072 dims NN-Descent's
-      // proposal joins carry both endpoint vectors (~2 TB of shuffle a
-      // round at 200 k), while the celled build shuffles n·nprobe rows
-      if (!new java.io.File(s"$indexDir/CURRENT").isFile) {
-        val fp32 = corpus.select(col("vec_id").as("id"),
-          graft.functions.fp16_decode(col("emb16")).as("embedding"))
-        val edges = graft.similarity.Knn.cellKnnGraph(
-            fp32, "embedding", "id", topK = gk,
-            cells = (n / 800).max(8L).toInt, iters = 2, nprobe = 2)
-          .select(col("id_a"), col("id_b"))
-        graft.similarity.Knn.buildAdjacencyIndex(edges, fp32, "embedding",
-          "id", indexDir, buckets = 64)
-      }
-      val pqM = sys.env.getOrElse("CONC_RESIDENT_M", "64").toInt
-      val pqKsub = sys.env.getOrElse("CONC_RESIDENT_KSUB", "256").toInt
-      val codec = sys.env.getOrElse("CONC_RESIDENT_CODEC", "pq")
-      if (!graft.similarity.Knn.graphCodesReady(indexDir) ||
-          sys.env.get("CONC_RESIDENT_REBUILD").contains("1"))
-        // train on ~2000 nodes — codebook quality saturates long before
-        // the corpus; encode is the full narrow pass either way
-        graft.similarity.Knn.buildGraphCodes(spark, indexDir,
-          m = pqM, ksub = pqKsub, trainMod = math.max(1L, n / 2000L),
-          codec = codec)
-      val entryIvf =
-        if (!sys.env.get("CONC_ENTRY").contains("ivf")) None
-        else {
-          val cellsK = sys.env.getOrElse("CONC_CELLS", "64").toInt
-          val ivfDir = graft.fixtures.Fp16Corpus.workRoot +
-            s"/ivfserve3072$ftag-n$n-c$cellsK"
-          if (!graft.similarity.Knn.ivfIndexReady(ivfDir)) {
-            val fp32 = corpus.select(col("vec_id").as("id"),
-              graft.functions.fp16_decode(col("emb16")).as("embedding"))
-            graft.similarity.Knn.ivfBuildIndex(fp32, "embedding", "id",
-              ivfDir, k = cellsK, iters = 2,
-              trainFilter = col("id") % (n / 500).max(1L) === 0, fp16 = true)
-          }
-          Some(ivfDir)
-        }
-      val index = graft.similarity.Knn.ResidentGraphIndex.load(spark,
-        indexDir, entryIvf, ef = ef)
-      val tag = if (entryIvf.isDefined) ",entry=ivf" else ",entry=fixed"
-      val lbl =
-        if (codec == "int8") s"resident(k=$gk,ef=$ef,codec=int8$tag)"
-        else s"resident(k=$gk,ef=$ef,m=$pqM,ksub=$pqKsub$tag)"
-      recall10(spark, corpus, n, lbl, qvec) {
-        qv => index.servingTopK(qv, 10, 0, None).map(_.getLong(0)) }
-      run(spark, lbl, n, users, reqsPerUser) { seed =>
-          val qv = qvec(seed)
-          require(index.servingTopK(qv, 10, 0, None).nonEmpty)
       }
     }
 

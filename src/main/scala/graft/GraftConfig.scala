@@ -27,10 +27,7 @@ final case class GraftConfig(
     ivfIndexDir: Option[String] = None,
     pqRefine: Int = GraftConfig.DefaultPqRefine,
     nprobe: Int = GraftConfig.DefaultNprobe,
-    pooledChunkWords: Option[Int] = None,
-    graphIndexDir: Option[String] = None,
-    graphEntryIvfDir: Option[String] = None,
-    graphEf: Int = GraftConfig.DefaultGraphEf) {
+    pooledChunkWords: Option[Int] = None) {
 
   /** The embedder this configuration describes. */
   def embedder: graft.embed.Embedder =
@@ -55,13 +52,6 @@ object GraftConfig {
     * since the chunked shortlist) for deployments that want it. */
   val DefaultPqRefine = 64
 
-  /** Shortlist width for `--graph-index` serving when `--graph-ef` is
-    * omitted: the resident walk keeps the ef best codes-scored nodes
-    * and re-ranks them exactly in its one Spark job, so ef is the
-    * recall dial and costs local flops, not jobs. The walk widens ef
-    * to k automatically when a request's k exceeds it. */
-  val DefaultGraphEf = 20
-
   /** `--pooled` chunk width when `--chunk-words` is omitted: 256 words
     * ≈ a few hundred tokens per chunk — small enough that every chunk
     * sits far inside the embedder's input cap (the point of pooling),
@@ -78,19 +68,16 @@ object GraftConfig {
     Map(
       "health" -> Set.empty[String],
       "sync" -> (syncIn ++ Set("backfill", "since", "fp16")),
-      "refresh" -> (syncIn ++
-        Set("lex-index", "ivf-index", "graph-index", "graph-entry-ivf")),
+      "refresh" -> (syncIn ++ Set("lex-index", "ivf-index")),
       "search" -> (config ++ Set("k", "source-type", "author", "tags",
         "from", "to", "hybrid", "mmr")),
       "index" -> Set("store", "out", "type", "cells", "iters", "train-every",
-        "fp16", "attrs", "graph-k", "nprobe", "buckets", "pq-m", "pq-ksub",
-        "opq-sweeps", "shards", "codec", "codes"),
+        "fp16", "attrs", "buckets", "pq-m", "pq-ksub", "opq-sweeps"),
       "export" -> Set("store", "out", "shard-tokens"),
       "curate" -> Set("docs", "out", "quality", "lm-threshold", "lm-store",
         "mix-alpha", "mix-frac", "shard-tokens", "report-only"),
       "serve" -> (config ++ Set("http-port", "mcp-port", "ivf-index",
-        "pq-refine", "nprobe", "graph-index", "graph-entry-ivf",
-        "graph-ef")))
+        "pq-refine", "nprobe")))
   }
 
   /** Validate a candidate configuration; Left = every violation, each with
@@ -121,23 +108,6 @@ object GraftConfig {
     if (config.nprobe < 1)
       errs += "NPROBE (--nprobe / GRAFT_NPROBE) must be a positive " +
         s"integer, got ${config.nprobe}"
-    val denseModes = Seq(
-      "IVF_INDEX_DIR (--ivf-index)" -> config.ivfIndexDir,
-      "GRAPH_INDEX_DIR (--graph-index)" -> config.graphIndexDir)
-      .collect { case (n, Some(_)) => n }
-    if (denseModes.size > 1)
-      errs += denseModes.mkString(" and ") +
-        " are mutually exclusive — the gateway serves through ONE dense index"
-    // graph-walk knobs pair with --graph-index: validated only when the
-    // graph path is selected (pq-refine likewise, by `Cli serve`, only
-    // when the --ivf-index layout carries IVFADC codes)
-    if (config.graphIndexDir.isDefined && config.graphEf < 1)
-      errs += "GRAPH_EF (--graph-ef / GRAFT_GRAPH_EF) must be a positive " +
-        s"beam width, got ${config.graphEf}"
-    if (config.graphEntryIvfDir.isDefined && config.graphIndexDir.isEmpty)
-      errs += "GRAPH_ENTRY_IVF (--graph-entry-ivf) requires " +
-        "GRAPH_INDEX_DIR (--graph-index) — it selects walk entries for " +
-        "the graph serving mode"
     config.pooledChunkWords.foreach { cw =>
       if (cw < 1)
         errs += "CHUNK_WORDS (--chunk-words / GRAFT_CHUNK_WORDS) must be " +
@@ -249,18 +219,7 @@ object GraftConfig {
         DefaultPqRefine) else DefaultPqRefine,
       nprobe = if (portsInScope) int("nprobe", "NPROBE", DefaultNprobe)
         else DefaultNprobe,
-      pooledChunkWords = pooledChunkWords,
-      graphIndexDir = if (portsInScope) str("graph-index", "GRAPH_INDEX_DIR")
-        else None,
-      graphEntryIvfDir = if (portsInScope)
-        str("graph-entry-ivf", "GRAPH_ENTRY_IVF") else None,
-      graphEf = if (portsInScope) int("graph-ef", "GRAPH_EF", DefaultGraphEf)
-        else DefaultGraphEf)
-    // an explicit walk-knob flag without the graph mode is a silent drop
-    // (the env-only form is ignored garbage, like ambient GRAFT_PQ_REFINE)
-    if (candidate.graphIndexDir.isEmpty && flags.contains("graph-ef"))
-      errs += "--graph-ef requires --graph-index (it dials the graph " +
-        "serving walk)"
+      pooledChunkWords = pooledChunkWords)
     (errs.result(), validated(candidate)) match {
       case (Nil, v)         => v
       case (es, Left(more)) => Left(es ++ more)

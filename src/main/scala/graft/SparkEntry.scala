@@ -1872,120 +1872,6 @@ object SparkEntry {
         .orderBy(col("id_a"), col("rank"))
     }),
 
-    // ---- the resident-code walk ORACLE-GATED end-to-end (adjacency
-    //      build → int8 sidecar → driver best-first walk → the ONE
-    //      exact refine job): with an exhaustive beam (ef = n) over a
-    //      connected graph the walk's shortlist is the whole live set,
-    //      so serving MUST equal brute-force top-10 by exact fp32
-    //      cosine — the deterministic form of the resident contract
-    //      (selective-beam RECALL stays spec-gated in ResidentGraphSpec,
-    //      where a floor, not equality, is the honest gate). A chain
-    //      over the contiguous ids keeps the symmetrized graph
-    //      connected by construction ----
-    "q150_resident_walk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").filter(col("vec_id") < 300)
-      val n = e.count().toInt
-      val qv = e.filter(col("vec_id") === 299).select(col("embedding"))
-        .head().getSeq[Float](0).toArray
-      // index cached under the work root keyed by (sf dir, live count) —
-      // the q123 shape: the bench row measures load + walk + refine (the
-      // operator), not a per-invocation from-scratch index construction,
-      // and nothing leaks one temp dir per run
-      val idxDir = graft.fixtures.Fp16Corpus.workRoot +
-        s"/residentwalk-${new java.io.File(dir).getName}-c$n/adj"
-      if (!Knn.graphIndexReady(idxDir) || !Knn.graphCodesReady(idxDir)) {
-        val knn = Knn.knnGraph(e, "embedding", "vec_id", topK = 5)
-          .select(col("id_a"), col("id_b"))
-        val chain = e.select(col("vec_id").as("id_a"),
-          (col("vec_id") + 1L).as("id_b")).filter(col("id_b") < 300)
-        if (!Knn.graphIndexReady(idxDir))
-          Knn.buildAdjacencyIndex(knn.unionByName(chain), e, "embedding",
-            "vec_id", idxDir, buckets = 16, fp16 = false)
-        Knn.buildGraphCodes(s, idxDir, codec = "int8")
-      }
-      val rows = Knn.ResidentGraphIndex.load(s, idxDir, ef = n)
-        .servingTopK(qv, 10, 0, None)
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      import s.implicits._
-      rows.toDF("vec_id", "score")
-    }),
-
-    // ---- q150's contract over the SHARDED gateway (the mechanism the
-    //      resident budget refusal points at): the corpus splits by id
-    //      parity into two shards that never communicate, each gets its
-    //      OWN adjacency (kNN ∪ intra-shard chain — connected by
-    //      construction) + int8 sidecar, and one request fans the
-    //      driver walk + refine across both and k-way merges by
-    //      (score, id). With exhaustive per-shard beams every shard's
-    //      shortlist is its whole live set, so the merge MUST equal
-    //      brute-force top-10 by exact fp32 cosine over the union —
-    //      sharding is lossless relative to the beams ----
-    "q151_sharded_resident" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").filter(col("vec_id") < 300)
-      val n = e.count().toInt
-      val qv = e.filter(col("vec_id") === 157).select(col("embedding"))
-        .head().getSeq[Float](0).toArray
-      val root = graft.fixtures.Fp16Corpus.workRoot +
-        s"/shardedres-${new java.io.File(dir).getName}-c$n"
-      val dirs = Seq(0, 1).map(p => (p, s"$root/shard$p"))
-      dirs.foreach { case (p, d) =>
-        if (!Knn.graphIndexReady(d) || !Knn.graphCodesReady(d)) {
-          val members = e.filter(col("vec_id") % 2 === p)
-          val knn = Knn.knnGraph(members, "embedding", "vec_id", topK = 5)
-            .select(col("id_a"), col("id_b"))
-          val chain = members.select(col("vec_id").as("id_a"),
-            (col("vec_id") + 2L).as("id_b")).filter(col("id_b") < 300)
-          if (!Knn.graphIndexReady(d))
-            Knn.buildAdjacencyIndex(knn.unionByName(chain), members,
-              "embedding", "vec_id", d, buckets = 8, fp16 = false)
-          Knn.buildGraphCodes(s, d, codec = "int8")
-        }
-      }
-      val rows = Knn.ShardedResidentIndex
-        .load(s, dirs.map(_._2 -> None), ef = n)
-        .servingTopK(qv, 10, 0, None)
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      import s.implicits._
-      rows.toDF("vec_id", "score")
-    }),
-
-    // ---- q151's gateway with an ATTRIBUTE FILTER fanned across the
-    //      shards (the r15 verdict's missing piece): shard layouts
-    //      carry `label` on their self-rows, each shard evaluates the
-    //      predicate inside its own refine job, and with exhaustive
-    //      beams the merged filtered top-k must equal brute-force
-    //      filtered cosine over the union — no store fallback anywhere
-    //      on the path ----
-    "q160_sharded_filtered" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").filter(col("vec_id") < 300)
-      val n = e.count().toInt
-      val qv = e.filter(col("vec_id") === 157).select(col("embedding"))
-        .head().getSeq[Float](0).toArray
-      val root = graft.fixtures.Fp16Corpus.workRoot +
-        s"/shardedresf-${new java.io.File(dir).getName}-c$n"
-      val dirs = Seq(0, 1).map(p => (p, s"$root/shard$p"))
-      dirs.foreach { case (p, d) =>
-        if (!Knn.graphIndexReady(d) || !Knn.graphCodesReady(d)) {
-          val members = e.filter(col("vec_id") % 2 === p)
-          val knn = Knn.knnGraph(members, "embedding", "vec_id", topK = 5)
-            .select(col("id_a"), col("id_b"))
-          val chain = members.select(col("vec_id").as("id_a"),
-            (col("vec_id") + 2L).as("id_b")).filter(col("id_b") < 300)
-          if (!Knn.graphIndexReady(d))
-            Knn.buildAdjacencyIndex(knn.unionByName(chain), members,
-              "embedding", "vec_id", d, buckets = 8, fp16 = false,
-              attrCols = Seq("label"))
-          Knn.buildGraphCodes(s, d, codec = "int8")
-        }
-      }
-      val rows = Knn.ShardedResidentIndex
-        .load(s, dirs.map(_._2 -> None), ef = n)
-        .servingTopK(qv, 10, 0, Some(col("label") % 3 === 1))
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      import s.implicits._
-      rows.toDF("vec_id", "score")
-    }),
-
     // ---- the build-time attr-stats sidecar (the 100-TB routing
     //      contract SCALE.md §r16 states: selectivity read from build-
     //      time stats, not a per-request scan): per-cell per-value
@@ -2110,7 +1996,7 @@ object SparkEntry {
     "q155_opq_rotation" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").filter(col("vec_id") < 300)
       // the learned rotation caches under the work root keyed by
-      // (sf dir, live count) — the q123/q150 shape: training is
+      // (sf dir, live count) — the q123 shape: training is
       // deterministic in the data, so the bench row measures the
       // rotated SEARCH (the operator under oracle), not a per-run
       // Procrustes replay
@@ -5054,48 +4940,6 @@ object SparkEntry {
          |    JOIN v vb ON vb.id = c.id_b)
          |WHERE rank <= $k ORDER BY id_a, rank""".stripMargin
     },
-
-    // the resident walk's exhaustive-beam form is exactly brute-force
-    // top-10 by fp32 cosine: the graph (kNN ∪ chain, symmetrized at
-    // load) is connected, ef = n puts every node in the shortlist, and
-    // the one refine job scores the shortlist's self-rows exact — so
-    // the oracle needs no walk replay at all, just the scan the contract
-    // reduces to
-    "q150_resident_walk" ->
-      s"""WITH v AS MATERIALIZED (SELECT vec_id AS id,
-         |    CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings WHERE vec_id < 300 AND embedding IS NOT NULL),
-         |q AS MATERIALIZED (SELECT v AS qv FROM v WHERE id = 299)
-         |SELECT v.id AS vec_id, ${sqlCosine("v.v", "q.qv")} AS score
-         |FROM v CROSS JOIN q
-         |ORDER BY score, vec_id LIMIT 10""".stripMargin,
-
-    // the sharded fan-and-merge with exhaustive per-shard beams reduces
-    // to the same scan q150's contract does — brute-force cosine top-10
-    // over the union: each shard's shortlist is its whole live set and
-    // the global top-10's members are each in their own shard's local
-    // top-10 by definition, so the merge loses nothing
-    "q151_sharded_resident" ->
-      s"""WITH v AS MATERIALIZED (SELECT vec_id AS id,
-         |    CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings WHERE vec_id < 300 AND embedding IS NOT NULL),
-         |q AS MATERIALIZED (SELECT v AS qv FROM v WHERE id = 157)
-         |SELECT v.id AS vec_id, ${sqlCosine("v.v", "q.qv")} AS score
-         |FROM v CROSS JOIN q
-         |ORDER BY score, vec_id LIMIT 10""".stripMargin,
-
-    // q151's brute-force oracle with the attribute predicate applied to
-    // the CANDIDATES only (the query row is fetched unfiltered — a
-    // request's filter scopes results, never the query vector)
-    "q160_sharded_filtered" ->
-      s"""WITH v AS MATERIALIZED (SELECT vec_id AS id,
-         |    CAST(embedding AS DOUBLE[]) AS v, label
-         |  FROM embeddings WHERE vec_id < 300 AND embedding IS NOT NULL),
-         |q AS MATERIALIZED (SELECT v AS qv FROM v WHERE id = 157)
-         |SELECT v.id AS vec_id, ${sqlCosine("v.v", "q.qv")} AS score
-         |FROM v CROSS JOIN q
-         |WHERE v.label % 3 = 1
-         |ORDER BY score, vec_id LIMIT 10""".stripMargin,
 
     // the attr-stats sidecar replayed: the q159 centroid chain (same
     // build dials), the full-corpus assignment, then the per-cell

@@ -2538,16 +2538,6 @@ object Knn {
 
   // ------------------------------------------- adjacency serving index
 
-  /** The measured bucket-density dial for [[buildAdjacencyIndex]]:
-    * ~50 k adjacency rows per bucket keeps every bucket-pruned probe
-    * task a point read (r15, 2 M-node same-graph comparison — see the
-    * builder's scaladoc). `adjRows` ≈ nodes × (degree + 1): directed
-    * out-edges plus one self-row per node. Clamped to [16, 4096]:
-    * below, partition pruning has nothing to prune; above, the
-    * partition-directory fan-out starts costing listing/commit time. */
-  def bucketsFor(adjRows: Long): Int =
-    math.min(4096L, math.max(16L, adjRows / 50000L)).toInt
-
   /** Persist a kNN graph ([[knnGraph]] / [[nnDescentGraph]]) as the
     * SERVING adjacency index the [[graphBeamSearch]] docs promise: edge
     * rows `(src_bucket, src, dst, dvec)` partitioned by `src_bucket =
@@ -2564,8 +2554,8 @@ object Knn {
     * O(batch) immutable segments like every index here.
     *
     * `buckets` is a serving-latency dial, not just a layout choice —
-    * size it with [[bucketsFor]] (~50 k rows/bucket): a probe prunes to
-    * the frontier's/shortlist's ≤ef DISTINCT buckets regardless of the
+    * size it at ~50 k rows/bucket: a probe prunes to
+    * the frontier's ≤ef DISTINCT buckets regardless of the
     * count, so more buckets never adds tasks, but each task scans its
     * whole bucket's row groups — measured at the 2 M-node edge
     * (SCALE.md §r15, same graph re-bucketed): 64 buckets (~344 k
@@ -2574,10 +2564,8 @@ object Knn {
     * from density alone. */
   def buildAdjacencyIndex(edges: DataFrame, corpus: DataFrame,
       vecCol: String, keyCol: String, indexDir: String, buckets: Int = 64,
-      fp16: Boolean = true, attrCols: Seq[String] = Nil): Unit = {
+      fp16: Boolean = true): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    require(!attrCols.exists(Set("src_bucket", "src", "dst", "dvec")),
-      "buildAdjacencyIndex: attrCols clash with index layout columns")
     val spark = edges.sparkSession
     require(graft.sync.SegmentedIndex.resolve(spark, indexDir).isEmpty,
       s"buildAdjacencyIndex: index already exists at $indexDir (append instead)")
@@ -2587,7 +2575,7 @@ object Knn {
       .select(lit(buckets).as("buckets"), lit(fp16).as("fp16"))
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
     writeAdjSegment(edges, corpus, vecCol, keyCol, indexDir, buckets, fp16,
-      selfRows = true, attrCols = attrCols)
+      selfRows = true)
   }
 
   /** Append a batch of edges (+ self-rows for any NEW nodes in
@@ -2599,26 +2587,12 @@ object Knn {
       vecCol: String, keyCol: String, indexDir: String,
       newNodes: Option[DataFrame] = None): Unit = {
     val spark = edges.sparkSession
-    val existing = graft.sync.SegmentedIndex.resolve(spark, indexDir)
-      .getOrElse(throw new IllegalArgumentException(
-        s"appendAdjacencyIndex: no index at $indexDir (build first)"))
+    require(graft.sync.SegmentedIndex.resolve(spark, indexDir).isDefined,
+      s"appendAdjacencyIndex: no index at $indexDir (build first)")
     val meta = spark.read.parquet(s"$indexDir/meta").head()
-    // attr columns are schema contract (the ivfAppendIndex discipline):
-    // sniff them from a live segment and demand them of the corpus, so
-    // an appended segment never silently drops the metadata filtered
-    // resident walks evaluate
-    val attrCols = spark.read
-      .parquet(s"$indexDir/${existing.filterNot(
-        graft.sync.SegmentedIndex.isTombstone).head}/edges")
-      .columns.toSeq
-      .filterNot(Set("src_bucket", "src", "dst", "dvec"))
-    val missing = attrCols.filterNot(corpus.columns.contains)
-    require(missing.isEmpty,
-      s"appendAdjacencyIndex: corpus lacks index attr column(s) " +
-        missing.mkString(", "))
     writeAdjSegment(edges, corpus, vecCol, keyCol, indexDir,
       meta.getAs[Int]("buckets"), meta.getAs[Boolean]("fp16"),
-      selfRows = false, selfFor = newNodes, attrCols = attrCols)
+      selfRows = false, selfFor = newNodes)
   }
 
   /** Driver-local entry selection for graph-ANN serving — the measured
@@ -2739,12 +2713,10 @@ object Knn {
   private def writeAdjSegment(edges: DataFrame, corpus: DataFrame,
       vecCol: String, keyCol: String, indexDir: String, buckets: Int,
       fp16: Boolean, selfRows: Boolean,
-      selfFor: Option[DataFrame] = None,
-      attrCols: Seq[String] = Nil): Unit = {
+      selfFor: Option[DataFrame] = None): Unit = {
     val spark = edges.sparkSession
     val v = corpus.filter(col(vecCol).isNotNull)
-      .select(col(keyCol).cast("long").as("dst") +:
-        col(vecCol).as("__dv") +: attrCols.map(col): _*)
+      .select(col(keyCol).cast("long").as("dst"), col(vecCol).as("__dv"))
     val e = edges.select(col("id_a").cast("long").as("src"),
       col("id_b").cast("long").as("dst"))
     val self =
@@ -2765,17 +2737,10 @@ object Knn {
     // made each hop decompress the WHOLE bucket's dvec chunk — measured
     // p95 6.2 s on the 200 k serving corpus vs 543 ms for the one-scan
     // ivf mode; sorted groups read ~ef·(K̃+1) rows instead.
-    // attr columns live on SELF-ROWS only (the rows filtered refine
-    // reads touch — src = dst): an edge row's dst-side attr would be
-    // misleading next to its src, and parquet nulls cost definition
-    // levels, not data pages, so the edge rows stay as narrow as the
-    // attr-less layout
-    val attrOut = attrCols.map(a =>
-      when(col("src") === col("dst"), col(a)).as(a))
     e.unionByName(self)
       .join(v, Seq("dst"))
-      .select(pmod(col("src"), lit(buckets.toLong)).as("src_bucket") +:
-        col("src") +: col("dst") +: dvec.as("dvec") +: attrOut: _*)
+      .select(pmod(col("src"), lit(buckets.toLong)).as("src_bucket"),
+        col("src"), col("dst"), dvec.as("dvec"))
       .repartition(col("src_bucket"))
       .sortWithinPartitions(col("src_bucket"), col("src"))
       .write.partitionBy("src_bucket")
@@ -2801,12 +2766,6 @@ object Knn {
       * self-rows) — maintenance code ([[Knn.hnswAppendIndex]]) reads
       * members and degrees from it, and the q145 gate audits it. */
     private[graft] def relation: DataFrame = rel
-
-    /** Metadata columns the layout carries on its SELF-ROWS
-      * ([[Knn.buildAdjacencyIndex]]'s `attrCols`) — the predicates a
-      * filtered refine may evaluate. Empty for an attr-less layout. */
-    val attrColumns: Seq[String] = rel.columns.toSeq
-      .filterNot(Set("src_bucket", "src", "dst", "dvec"))
 
     private def scoreCol(queryVec: Array[Float]): Column =
       if (fp16) graft.functions.fp16_cosine_distance(col("dvec"),
@@ -2838,50 +2797,6 @@ object Knn {
         queryVec: Array[Float]): Array[(Long, Double)] =
       frontierFrame(srcs, queryVec)
         .collect().map(r => (r.getLong(0), r.getDouble(1)))
-
-    /** Exact scores for a shortlist's SELF-ROWS — the refine read the
-      * resident-code walk ([[ResidentGraphIndex]]) spends its one Spark
-      * job on: bucket `IN` keeps the scan partition-pruned, the
-      * [[chunkedIn]] OR-tree keeps every id leg inside row-group
-      * statistics at any shortlist width, and `src = dst` touches only
-      * the one vector-carrying row per node. Scores carry the index's
-      * storage precision — identical to what [[search]]'s beam scores. */
-    private[similarity] def selfScores(ids: Seq[Long],
-        queryVec: Array[Float],
-        filter: Option[Column] = None): DataFrame = {
-      // floorMod to match the writer's pmod — see frontierFrame
-      val bs: Seq[Any] = rel.schema("src_bucket").dataType match {
-        case org.apache.spark.sql.types.IntegerType =>
-          ids.map(s => Math.floorMod(s, buckets.toLong).toInt).distinct
-        case org.apache.spark.sql.types.LongType =>
-          ids.map(Math.floorMod(_, buckets.toLong)).distinct
-        case _ => ids.map(s => Math.floorMod(s, buckets.toLong).toString)
-          .distinct
-      }
-      // the optional attr predicate evaluates INSIDE the pruned scan
-      // (self-rows carry the attr columns) — the q132 filter-in-index
-      // discipline applied to the refine read
-      filter.foldLeft(
-          rel.filter(col("src_bucket").isin(bs: _*)
-            && col("src") === col("dst")
-            && chunkedIn(col("src"), ids.map(x => x: Any))))(_ filter _)
-        .select(col("src").as("id"), scoreCol(queryVec).as("score"))
-    }
-
-    /** Exhaustive filtered top-k over the layout's SELF-ROWS — the
-      * correctness backstop a filtered walk degrades to when the
-      * predicate starves its shortlist (the walk navigates on geometry
-      * and cannot prune on attributes, so a rare predicate can leave
-      * any beam empty while matches exist elsewhere in the graph). One
-      * job over the vector-carrying rows only (src = dst skips ~K̃
-      * edge rows per node on row-group stats; the attr predicate
-      * prunes further). */
-    private[similarity] def filteredSelfTopK(queryVec: Array[Float],
-        k: Int, filter: Column): DataFrame =
-      rel.filter(col("src") === col("dst") && filter)
-        .select(col("src").as("id"), scoreCol(queryVec).as("score"))
-        .orderBy(col("score").asc, col("id").asc)
-        .limit(k)
 
     def search(queryVec: Array[Float], k: Int, ef: Int, hops: Int,
         entryId: Long): DataFrame = {
@@ -2953,12 +2868,6 @@ object Knn {
       new AdjIndex(rel, meta.getAs[Int]("buckets"),
         meta.getAs[Boolean]("fp16"))
     }
-
-    /** [[load]] behind the [[graft.sync.Reloading]] generation check. */
-    def reloading(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-        minCheckIntervalMs: Long = 0L): graft.sync.Reloading[AdjIndex] =
-      graft.sync.Reloading(spark, indexDir, Seq("meta"),
-        minCheckIntervalMs)(load(spark, indexDir))
   }
 
   /** Persist [[hnswSearch]]'s layer stack as serving indexes: one
@@ -3280,7 +3189,7 @@ object Knn {
         if (memberCount > budget) fits = false
         else {
           // two narrow jobs per resident layer, at LOAD time, both
-          // collected as PRIMITIVES (the ResidentGraphIndex.load shape):
+          // collected as PRIMITIVES:
           // self-rows carry each member's vector, non-self rows ONLY the
           // 16-byte adjacency pair packed into long chunks — the collect
           // moves nodes·dim vector bytes + 16 B an edge, never ~100+ B
@@ -3335,13 +3244,6 @@ object Knn {
     }
   }
 
-  /** Whether a [[buildAdjacencyIndex]] layout has committed at `indexDir`
-    * — the serve-time precondition probe ([[ivfIndexReady]]'s sibling):
-    * both the segment pointer and the meta sidecar must exist. */
-  def graphIndexReady(indexDir: String): Boolean =
-    new java.io.File(s"$indexDir/CURRENT").isFile &&
-      new java.io.File(s"$indexDir/meta/_SUCCESS").isFile
-
   /** Whether a [[buildHnswIndex]] stack has committed at `indexDir`.
     * The build writes meta FIRST and layer maxLevel last, so the probe
     * reads meta's level count and requires every layer's pointer — a
@@ -3355,1043 +3257,6 @@ object Knn {
       (0 to maxLevel).forall(l =>
         new java.io.File(s"$indexDir/layer$l/CURRENT").isFile)
     }
-
-  // ------------------------------------ resident-code graph serving
-
-  /** Whether [[buildGraphCodes]] has committed its sidecar under a
-    * [[buildAdjacencyIndex]] layout. The sidecar is a
-    * [[graft.sync.SegmentedIndex]] root (`pqcodes/CURRENT`), so
-    * readiness is ONE atomic pointer — a crash mid-build or mid-rebuild
-    * leaves the previous generation serving, never fresh codebooks
-    * beside stale codes. */
-  def graphCodesReady(indexDir: String): Boolean =
-    new java.io.File(s"$indexDir/pqcodes/CURRENT").isFile
-
-  /** Whether `indexDir/pqcodes` holds the PRE-SEGMENTATION flat layout
-    * (`meta`/`codes` directly under the root, no `CURRENT` pointer) —
-    * the shape [[buildGraphCodes]] wrote before the sidecar became a
-    * [[graft.sync.SegmentedIndex]] root. Such a sidecar is real but
-    * invisible to [[graphCodesReady]]; [[migrateGraphCodes]] adopts it. */
-  def legacyFlatGraphCodes(indexDir: String): Boolean =
-    !new java.io.File(s"$indexDir/pqcodes/CURRENT").isFile &&
-      new java.io.File(s"$indexDir/pqcodes/meta/_SUCCESS").isFile &&
-      new java.io.File(s"$indexDir/pqcodes/codes/_SUCCESS").isFile
-
-  /** Adopt a pre-segmentation flat code sidecar in place: copy the
-    * existing codebooks/codes into ONE immutable segment, re-record the
-    * meta with the train-time reconstruction error the flat layout never
-    * carried (measured NOW, over the live corpus sample under the FROZEN
-    * flat codebooks — the same measurement a fresh build records, so
-    * append-time drift ratios compare like with like; 0.0 for int8),
-    * commit the `CURRENT` pointer, and delete the flat directories.
-    * Returns true when a flat layout was found and migrated, false as a
-    * no-op. Crash-safe in the segment discipline: the pointer commits
-    * only after the segment is complete, a crash before the commit
-    * leaves the flat layout intact for a re-run (the partial segment is
-    * swept by the next successful commit), and the flat directories are
-    * removed only after the pointer lands. */
-  def migrateGraphCodes(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Boolean = {
-    if (!legacyFlatGraphCodes(indexDir)) false
-    else {
-      import org.apache.hadoop.fs.{FileUtil, Path => HPath}
-      val root = s"$indexDir/pqcodes"
-      val conf = spark.sparkContext.hadoopConfiguration
-      val rootP = new HPath(root)
-      val fs = rootP.getFileSystem(conf)
-      val seg = graft.sync.SegmentedIndex.newSegmentName()
-      val flatMeta = spark.read.parquet(s"$root/meta").head()
-      val codec = flatMeta.getAs[String]("codec")
-      FileUtil.copy(fs, new HPath(root, "codes"),
-        fs, new HPath(s"$root/$seg/codes"), false, conf)
-      val trainErr = codec match {
-        case "pq" =>
-          FileUtil.copy(fs, new HPath(root, "codebooks"),
-            fs, new HPath(s"$root/$seg/codebooks"), false, conf)
-          val rel = AdjIndex.load(spark, indexDir).relation
-          val fp16 = rel.schema("dvec").dataType ==
-            org.apache.spark.sql.types.BinaryType
-          val vec =
-            if (fp16) graft.functions.fp16_decode(col("dvec"))
-              .cast("array<float>")
-            else col("dvec")
-          pqAnchorError(
-            unitNormalized(rel.filter(col("src") === col("dst"))
-              .select(col("src").as("id"), vec.as("v"))),
-            collectCodebooks(spark.read.parquet(s"$root/codebooks")),
-            flatMeta.getAs[Long]("train_mod"))
-        case _ => 0.0
-      }
-      writeCodesSegMeta(spark, root, seg, codec, flatMeta.getAs[Int]("m"),
-        flatMeta.getAs[Int]("ksub"), flatMeta.getAs[Int]("iters"),
-        flatMeta.getAs[Long]("train_mod"), trainErr)
-      graft.sync.SegmentedIndex.commit(spark, root, Seq(seg))
-      sweepFlatGraphCodes(fs, rootP)
-      true
-    }
-  }
-
-  /** Remove the flat-layout directories a segmented commit supersedes —
-    * `commit`'s own retention pass sweeps only `seg-`/`del-` names, so
-    * without this the orphaned flat dirs would sit beside the pointer
-    * forever. */
-  private def sweepFlatGraphCodes(fs: org.apache.hadoop.fs.FileSystem,
-      rootP: org.apache.hadoop.fs.Path): Unit =
-    Seq("meta", "codebooks", "codes").foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(rootP, d)
-      try { if (fs.exists(p)) { fs.delete(p, true); () } }
-      catch { case _: Exception => () }
-    }
-
-  /** The live sidecar's recorded codec + dials + train-time
-    * reconstruction error: the BASE segment's meta (append segments
-    * copy it forward; a rebuild's fresh base re-records it). */
-  def graphCodesMeta(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): org.apache.spark.sql.Row = {
-    val root = s"$indexDir/pqcodes"
-    val base = graft.sync.SegmentedIndex.resolve(spark, root)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed code sidecar at $root")).head
-    spark.read.parquet(s"$root/$base/meta").head()
-  }
-
-  /** Unit-normalize an (id, v: array<float>) frame in TWO checkpointed
-    * steps, deliberately — the HOF-per-element trap (see
-    * [[nnDescentGraphCompressed]]'s pq codec for the measured failure):
-    * an inline `x / sqrt(aggregate(v))` re-evaluates the whole-array
-    * aggregate (AND any fp16 decode below it) per element once Catalyst
-    * collapses the projects; the second barrier keeps [[pqTrain]]'s
-    * m×iters Lloyd actions from re-running decode+normalize per
-    * subspace action. Zero-norm vectors pass through unnormalized (the
-    * [[graft.embed.Pooling]] guard) — they encode to SOME code and are
-    * re-ranked exactly anyway. */
-  private def unitNormalized(df: DataFrame): DataFrame = {
-    val norm = sqrt(aggregate(col("v"), lit(0.0d),
-      (acc, x) => acc + x.cast("double") * x.cast("double")))
-    val withNorm = df
-      .select(col("id"), col("v"), norm.as("__n"))
-      .localCheckpoint()
-    withNorm.select(col("id"),
-      when(col("__n") > 0d,
-          transform(col("v"), x => (x.cast("double") / col("__n"))
-            .cast("float")))
-        .otherwise(col("v")).as("v"))
-      .localCheckpoint()
-  }
-
-  /** Mean squared PQ reconstruction error over a deterministic `cap`-row
-    * sample of `self` — the drift statistic [[appendGraphCodes]] compares
-    * against the base segment's recorded train-time value (the q126
-    * cell-stats shape applied to the code sidecar): codebooks frozen at
-    * build stay valid while upsert batches reconstruct about as well as
-    * the corpus they trained on, and a distribution shift shows up as
-    * this ratio instead of forcing a blind per-refresh retrain.
-    *
-    * Sampled by HASH order, not id order: ids typically correlate with
-    * insertion time and content (monotonic doc ids), so "the `cap`
-    * smallest ids" would anchor the train-time error on the OLDEST slice
-    * of the corpus and systematically mis-trigger retrains against the
-    * fixed threshold. The `cap` rows with the smallest xxhash64(id) are
-    * a uniform deterministic sample of the id domain — same plan shape
-    * (one TakeOrdered, O(cap·dim) driver flops), never a corpus pass —
-    * and both sides of the ratio (build-time anchor, append-time batch)
-    * sample the same way. */
-  /** The BUILD-TIME drift anchor: [[pqReconError]] over rows HELD OUT of
-    * the training sample when there are any (`id % trainMod =!= 0`),
-    * falling back to the full corpus sample at trainMod=1 (everything
-    * trained — no held-out rows exist). Anchoring on training rows
-    * understates the denominator by the overfit gap — measured on a
-    * 400-doc corpus at m=64/ksub=256 (256 centroids over 400 points per
-    * subspace), IN-DISTRIBUTION batches ratio'd 4.4× against the
-    * in-sample anchor, which would retrain on every healthy delta —
-    * while a held-out anchor puts in-distribution batches at ~1.0× by
-    * construction, so the ratio measures distribution shift, not
-    * memorization. */
-  private def pqAnchorError(self: DataFrame,
-      books: Array[Array[Array[Float]]], trainMod: Long): Double = {
-    val held =
-      if (trainMod > 1L)
-        pqReconError(self.filter(col("id") % trainMod =!= 0), books)
-      else 0.0
-    if (held > 0.0) held else pqReconError(self, books)
-  }
-
-  private def pqReconError(self: DataFrame,
-      books: Array[Array[Array[Float]]], cap: Int = 256): Double = {
-    val rows = self
-      .orderBy(xxhash64(col("id")), col("id")).limit(cap)
-      .select(col("v")).collect()
-    if (rows.isEmpty) 0.0
-    else {
-      var sum = 0.0
-      rows.foreach { r =>
-        val v = r.getSeq[Float](0).toArray
-        val ad = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v)
-        sum += graft.functions.PqMath.adc(
-          graft.functions.PqMath.encode(ad, books),
-          graft.functions.PqMath.lut(v, books))
-      }
-      sum / rows.length
-    }
-  }
-
-  private def writeCodesSegMeta(spark: org.apache.spark.sql.SparkSession,
-      root: String, seg: String, codec: String, m: Int, ksub: Int,
-      iters: Int, trainMod: Long, trainErr: Double): Unit =
-    spark.range(1)
-      .select(lit(codec).as("codec"), lit(m).as("m"), lit(ksub).as("ksub"),
-        lit(iters).as("iters"), lit(trainMod).as("train_mod"),
-        lit(trainErr).as("train_err"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/$seg/meta")
-
-  /** Build the code sidecar that turns an adjacency layout into a
-    * [[ResidentGraphIndex]]: every LIVE node's vector (read from the
-    * index's own self-rows, so tombstones and appends are honored as of
-    * this build) unit-normalizes and encodes under
-    * `indexDir/pqcodes/<segment>/{meta,codebooks,codes}` behind a
-    * `pqcodes/CURRENT` pointer. `codec` picks the
-    * fidelity/footprint point: `pq` trains an `m`×`ksub` product
-    * quantizer (m bytes a node — the scale path; ADC noise costs walk
-    * recall, measured in SCALE.md §r13's resident ladder), `int8`
-    * quantizes per dimension (dim bytes a node — near-lossless
-    * distances the walk can navigate on, ~48× pq's footprint at m=64).
-    *
-    * Unit-normalizing BEFORE train/encode is what makes the walk's ADC
-    * ordering correct for this engine's metric: on unit vectors,
-    * squared L2 = 2·cosine-distance, so the ADC approximation of L2
-    * (the quantity [[graft.functions.PqMath]] computes) is monotone
-    * with the cosine the exact refine scores. Zero-norm vectors pass
-    * through unnormalized (the [[graft.embed.Pooling]] guard) — they
-    * encode to SOME code and are re-ranked exactly anyway.
-    *
-    * Scale shape: one narrow pass over n self-rows (train on a
-    * `trainMod` sample, encode all — [[graft.functions.PqEncode]]
-    * codegen); output is n·(8+m) bytes. The sidecar commits as ONE
-    * immutable [[graft.sync.SegmentedIndex]] segment carrying its codes,
-    * its meta (codec, dials, train-time reconstruction error) and — for
-    * pq — the codebooks those codes were encoded against, then a single
-    * atomic pointer flip: a rebuild writes the new generation COMPLETE
-    * before the flip, so a crash leaves the old sidecar serving and a
-    * concurrently-reloading server never observes new codebooks beside
-    * old codes. Day-to-day maintenance never calls this per delta:
-    * [[appendGraphCodes]] covers upsert batches in O(batch), and this
-    * full pass is the retrain/compaction cadence
-    * ([[rebuildGraphCodes]]). */
-  def buildGraphCodes(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, m: Int = 64, ksub: Int = 256, iters: Int = 2,
-      trainMod: Long = 1L, codec: String = "pq"): Unit = {
-    require(m >= 1 && ksub >= 1 && ksub <= 256 && trainMod >= 1,
-      s"buildGraphCodes: need m >= 1, 1 <= ksub <= 256, trainMod >= 1, " +
-        s"got $m/$ksub/$trainMod")
-    require(Set("pq", "int8").contains(codec),
-      s"buildGraphCodes: codec must be pq or int8, got $codec")
-    val rel = AdjIndex.load(spark, indexDir).relation
-    val fp16 = rel.schema("dvec").dataType ==
-      org.apache.spark.sql.types.BinaryType
-    val vec =
-      if (fp16) graft.functions.fp16_decode(col("dvec")).cast("array<float>")
-      else col("dvec")
-    val self = unitNormalized(rel.filter(col("src") === col("dst"))
-      .select(col("src").as("id"), vec.as("v")))
-    val root = s"$indexDir/pqcodes"
-    val seg = graft.sync.SegmentedIndex.newSegmentName()
-    val trainErr = codec match {
-      case "pq" =>
-        val books = pqTrain(self.filter(col("id") % trainMod === 0),
-          "v", "id", m, ksub, iters)
-        books.coalesce(1).write.mode("overwrite")
-          .parquet(s"$root/$seg/codebooks")
-        val collected = collectCodebooks(books)
-        pqEncode(self, "v", "id", collected)
-          .write.mode("overwrite").parquet(s"$root/$seg/codes")
-        pqAnchorError(self, collected, trainMod)
-      case _ =>
-        // near-lossless per-dimension quantization (dim bytes a node —
-        // ~48× PQ's footprint at m=64, for distance fidelity the walk
-        // can NAVIGATE on; one codegen pass, no training, no drift)
-        self.select(col("id"),
-            graft.functions.int8_encode(col("v")).as("codes"))
-          .write.mode("overwrite").parquet(s"$root/$seg/codes")
-        0.0
-    }
-    writeCodesSegMeta(spark, root, seg, codec, m, ksub, iters, trainMod,
-      trainErr)
-    // the flip: old generation's segments are swept AFTER the pointer
-    // replace (commit's retention pass), the SegmentedIndex discipline
-    graft.sync.SegmentedIndex.commit(spark, root, Seq(seg))
-    // a rebuild over a pre-segmentation flat sidecar supersedes it — the
-    // commit's own sweep only touches seg-/del- names, so clean the flat
-    // dirs here or they sit beside the pointer forever
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    sweepFlatGraphCodes(
-      rootP.getFileSystem(spark.sparkContext.hadoopConfiguration), rootP)
-  }
-
-  /** O(delta) sidecar maintenance — encode ONLY an upsert batch into a
-    * new codes segment against the live sidecar's recorded codec and
-    * (for pq) its FROZEN base codebooks. This is what a refresh runs:
-    * int8 codes are per-node independent (no training), and pq codes
-    * against frozen codebooks stay ADC-comparable with the base
-    * segment's, so a 10-document refresh writes 10 rows instead of
-    * replaying the corpus build. Changed docs re-encode under the same
-    * id — [[ResidentGraphIndex.load]] reads segments in commit order
-    * and the NEWEST code per id wins — and tombstoned ids need no
-    * sidecar work at all (the live set comes from the adjacency
-    * relation; dead codes are never consulted and compact away with the
-    * next [[rebuildGraphCodes]]). The batch's vectors round-trip
-    * through the index's storage precision first (fp16 when the layout
-    * stores fp16), so appended codes are byte-identical to what a
-    * from-scratch build would derive from the index's own self-rows.
-    *
-    * Returns the pq drift ratio: the batch's mean reconstruction error
-    * under the frozen codebooks over the base segment's recorded
-    * train-time error (0.0 for int8, which cannot drift) — callers
-    * retrain past a threshold
-    * ([[graft.sync.CorpusRefresh.DefaultCodesDriftRatio]]) instead of
-    * on every delta. */
-  def appendGraphCodes(batch: DataFrame, vecCol: String, keyCol: String,
-      indexDir: String): Double = {
-    val spark = batch.sparkSession
-    require(graphCodesReady(indexDir),
-      s"appendGraphCodes: no committed sidecar at $indexDir/pqcodes")
-    val root = s"$indexDir/pqcodes"
-    val list = graft.sync.SegmentedIndex.resolve(spark, root).get
-    val meta = spark.read.parquet(s"$root/${list.head}/meta").head()
-    val codec = meta.getAs[String]("codec")
-    val fp16 = spark.read.parquet(s"$indexDir/meta").head()
-      .getAs[Boolean]("fp16")
-    val vec =
-      if (fp16) graft.functions.fp16_decode(
-          graft.functions.fp16_encode(col(vecCol))).cast("array<float>")
-      else col(vecCol)
-    val self = unitNormalized(batch.filter(col(vecCol).isNotNull)
-      .select(col(keyCol).cast("long").as("id"), vec.as("v")))
-    val seg = graft.sync.SegmentedIndex.newSegmentName()
-    val drift = codec match {
-      case "pq" =>
-        val books = collectCodebooks(
-          spark.read.parquet(s"$root/${list.head}/codebooks"))
-        pqEncode(self, "v", "id", books)
-          .write.mode("overwrite").parquet(s"$root/$seg/codes")
-        val trainErr = meta.getAs[Double]("train_err")
-        if (trainErr > 0.0) pqReconError(self, books) / trainErr else 0.0
-      case _ =>
-        self.select(col("id"),
-            graft.functions.int8_encode(col("v")).as("codes"))
-          .write.mode("overwrite").parquet(s"$root/$seg/codes")
-        0.0
-    }
-    // the append segment carries the dials it encoded with forward (the
-    // base's, verbatim) so a later rebuild replays the same geometry
-    spark.read.parquet(s"$root/${list.head}/meta")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/$seg/meta")
-    graft.sync.SegmentedIndex.commit(spark, root, list :+ seg)
-    drift
-  }
-
-  /** Full sidecar retrain — replays [[buildGraphCodes]] over the live
-    * corpus with the sidecar's OWN recorded dials and flips the pointer
-    * to ONE fresh segment (superseded segments swept after the commit).
-    * O(corpus) by design: this is the sidecar's COMPACTION/retrain
-    * cadence — [[graft.sync.CorpusRefresh]] runs the O(delta)
-    * [[appendGraphCodes]] per refresh and reaches for this only on a pq
-    * drift signal or segment fan-out, never per delta. */
-  def rebuildGraphCodes(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    require(graphCodesReady(indexDir),
-      s"rebuildGraphCodes: no committed sidecar at $indexDir/pqcodes")
-    val meta = graphCodesMeta(spark, indexDir)
-    buildGraphCodes(spark, indexDir, m = meta.getAs[Int]("m"),
-      ksub = meta.getAs[Int]("ksub"), iters = meta.getAs[Int]("iters"),
-      trainMod = meta.getAs[Long]("train_mod"),
-      codec = meta.getAs[String]("codec"))
-  }
-
-  /** Graph-ANN serving with the WALK off the job path — the r13 answer
-    * to the measured structure of the manifold ladder (SCALE.md §r13):
-    * on navigable data the beam walk reaches competitive recall only at
-    * hops ≥ 5, and every hop is a serialized planned job (~50 ms floor
-    * under load), so multi-hop-as-jobs prices at seconds. Here the hops
-    * cost driver flops instead: topology (SYMMETRIZED at load — stored
-    * out-lists plus their reverse edges, the DPG/NSG trick that gives
-    * every walk escape routes a directed kNN digraph lacks) and
-    * `m`-byte PQ codes ([[buildGraphCodes]]) are held driver-resident,
-    * a request seeds from `entryCount` query-near IVF cells and runs
-    * the best-first graph search (Malkov & Yashunin's SEARCH-LAYER,
-    * candidate/result heaps) over ADC distances at ~µs per expansion
-    * under an expansion budget (default 16·ef — ADC noise makes
-    * unbudgeted best-first wander, and unbounded driver CPU per request
-    * is a serving hazard under concurrency), and exactly ONE Spark job
-    * runs per request: the bucket-pruned exact re-rank of the ef-wide
-    * shortlist against the index's self-rows ([[AdjIndex.selfScores]] —
-    * the same one-pruned-read shape as the IVF probe that serves
-    * 269 ms p95).
-    *
-    * Residency budget: ~(8 + 8·degree + codeBytes) a node, where
-    * codeBytes is m for the pq codec and dim for int8 — 200 k nodes at
-    * degree 10 (symmetrized ≈ 20) is ~50 MB pq / ~680 MB int8 at
-    * 3072-dim; the default `maxResidentNodes` bound (2 M) caps pq
-    * state at centroid-sidecar scale and int8 at a documented ~7 GB
-    * ceiling a serving driver sizes for. Past the budget [[load]]
-    * REFUSES (the IVF modes remain); at true corpus
-    * scale the resident walk is a per-replica shard choice, not a
-    * single-driver structure — the same posture as [[HnswIndex.load]]'s
-    * resident upper layers.
-    *
-    * `attrColumns` lists the layout's self-row attr columns; for an
-    * attr-less layout it is empty, so the gateway routes filtered
-    * requests to the store scan. */
-  final class ResidentGraphIndex private[Knn] (adj: AdjIndex,
-      ids: Array[Long], nbrs: Array[Array[Int]], codes: Array[Array[Byte]],
-      codebooks: Array[Array[Array[Float]]], codec: String,
-      entries: Option[GraphEntries],
-      ef: Int, entryCount: Int, visitBudget: Int,
-      idOf: Long => Any) extends DenseIndex {
-    /** Attr columns the adjacency layout carries on its self-rows
-      * ([[buildAdjacencyIndex]]'s `attrCols`) — filtered requests
-      * evaluate them in the refine job, so the gateway routes filtered
-      * traffic here instead of a full store scan. Empty (attr-less
-      * layout) keeps the old route-to-store behavior. */
-    val attrColumns: Seq[String] = adj.attrColumns
-
-    private val idToIdx: java.util.HashMap[Long, Integer] = {
-      val m = new java.util.HashMap[Long, Integer](ids.length * 2)
-      var i = 0
-      while (i < ids.length) { m.put(ids(i), i); i += 1 }
-      m
-    }
-
-    // int8: per-node code norms precomputed ONCE at load (scale cancels
-    // in cosine), so the per-expansion hot loop is a single integer
-    // dot product — the int8_cosine_codes kernel split across
-    // load/request time. Measured necessity: the dequantizing scorer's
-    // ~3 double ops/dim put ~200 ms of driver CPU in every request and
-    // 20-user queueing took p50 328 → 777 ms.
-    private val codeNorms: Array[Double] =
-      if (codec != "int8") null
-      else codes.map { b =>
-        var s = 0L; var i = 8
-        while (i < b.length) { val v = b(i).toLong; s += v * v; i += 1 }
-        math.sqrt(s.toDouble)
-      }
-
-    /** The `efEff` best node ids by code distance, best-first from the
-      * seeds — all driver flops, zero jobs. Deterministic: `ids` is
-      * sorted, so (distance, idx) ordering is (distance, id) ordering. */
-    private[similarity] def walk(queryVec: Array[Float],
-        efEff: Int): Array[Long] = {
-      val qn = {
-        var s = 0.0; var i = 0
-        while (i < queryVec.length) {
-          s += queryVec(i).toDouble * queryVec(i).toDouble; i += 1 }
-        val n = math.sqrt(s)
-        if (n > 0) queryVec.map(x => (x / n).toFloat) else queryVec
-      }
-      // per-codec scorer: pq = m LUT adds a node over the query's ADC
-      // table (approximate squared L2, monotone with cosine on unit
-      // vectors); int8 = code-domain cosine (the int8_cosine_codes
-      // kernel: query encoded ONCE per request, node norms precomputed
-      // at load, the hot loop one INTEGER dot/dim — near-lossless
-      // ranking at ~µs a node)
-      val score: Int => Double =
-        if (codec == "int8") {
-          val qb = graft.functions.Int8.encode(qn)
-          val qNorm0 = {
-            var s = 0L; var i = 8
-            while (i < qb.length) { val v = qb(i).toLong; s += v * v; i += 1 }
-            math.sqrt(s.toDouble)
-          }
-          i => {
-            val cb = codes(i)
-            val n0 = codeNorms(i)
-            if (n0 == 0.0 || qNorm0 == 0.0) 1.0
-            else {
-              val len = math.min(cb.length, qb.length)
-              var dot = 0L; var j = 8
-              while (j < len) { dot += cb(j).toLong * qb(j).toLong; j += 1 }
-              1.0 - dot.toDouble / (n0 * qNorm0)
-            }
-          }
-        } else {
-          val lut = graft.functions.PqMath.lut(qn, codebooks)
-          i => graft.functions.PqMath.adc(codes(i), lut)
-        }
-      // multi-entry seeding: one entry per query-near IVF cell. A
-      // single entry strands the walk when the target sits outside the
-      // entry's reachable region (measured: recall@10 min 0.000 on the
-      // manifold gate with one ivf entry); entryCount nearby reps cover
-      // the neighborhood from several sides for the same zero jobs.
-      val seedIdxs: Seq[Int] = entries
-        .map(_.entriesFor(queryVec, entryCount)
-          .flatMap(e => Option(idToIdx.get(e)).map(_.intValue())))
-        .filter(_.nonEmpty)
-        .getOrElse(Seq(0))
-      val visited = new java.util.BitSet(ids.length)
-      // candidates: min-heap by (dist, idx); results: max-heap, head =
-      // worst kept — SEARCH-LAYER's two-heap form
-      val cand = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Int)](Ordering.Tuple2[Double, Int].reverse)
-      val res = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Int)](Ordering.Tuple2[Double, Int])
-      seedIdxs.foreach { e =>
-        if (!visited.get(e)) {
-          visited.set(e)
-          val d0 = score(e)
-          cand.enqueue((d0, e)); res.enqueue((d0, e))
-        }
-      }
-      while (res.size > efEff) res.dequeue()
-      // expansion budget: ADC noise keeps far candidates "promising",
-      // so unbudgeted best-first can wander a large fraction of the
-      // graph — unbounded driver CPU per request is a serving hazard
-      // under concurrency (measured: p50 217 → 849 ms at 20 users).
-      // The budget bounds work like HNSW's efSearch bounds it: recall
-      // dials are ef / entryCount / budget, all driver-flop-priced.
-      // int8 distances are ~exact, so the walk converges like HNSW's
-      // SEARCH-LAYER (≈ef expansions plus the approach path) — 4·ef
-      // bounds it; pq's ADC noise needs wandering room — 16·ef
-      val budget = if (visitBudget > 0) visitBudget
-        else if (codec == "int8") 4 * efEff else 16 * efEff
-      var expansions = 0
-      var done = false
-      while (!done && cand.nonEmpty && expansions < budget) {
-        val (cd, ci) = cand.dequeue()
-        if (res.size >= efEff && cd > res.head._1) done = true
-        else {
-          expansions += 1
-          val ns = nbrs(ci)
-          var j = 0
-          while (j < ns.length) {
-            val nb = ns(j)
-            if (!visited.get(nb)) {
-              visited.set(nb)
-              val d = score(nb)
-              if (res.size < efEff) { res.enqueue((d, nb)); cand.enqueue((d, nb)) }
-              else if (Ordering.Tuple2[Double, Int]
-                  .lt((d, nb), res.head)) {
-                res.dequeue(); res.enqueue((d, nb)); cand.enqueue((d, nb))
-              }
-            }
-            j += 1
-          }
-        }
-      }
-      res.dequeueAll.reverseIterator
-        .map((t: (Double, Int)) => ids(t._2)).toArray
-    }
-
-    /** ≤ k (id, score) rows by (score, id); `nprobe` is ignored — the
-      * recall dial is ef, fixed per deployment (widened to k when a
-      * request asks for more rows than the deployed beam — ef bounds
-      * the shortlist, never the row count). One
-      * Spark job. */
-    def servingTopK(queryVec: Array[Float], k: Int, nprobe: Int,
-        filter: Option[Column]): Array[org.apache.spark.sql.Row] = {
-      filter.foreach { _ =>
-        require(attrColumns.nonEmpty,
-          "ResidentGraphIndex: this layout carries no attr columns " +
-            "(rebuild with buildAdjacencyIndex attrCols = ...); the " +
-            "gateway must route filtered requests to the store") }
-      filter match {
-        case None =>
-          adj.selfScores(walk(queryVec, math.max(ef, k)).toSeq, queryVec)
-            .orderBy(col("score").asc, col("id").asc)
-            .limit(k)
-            .collect()
-            .map(r =>
-              org.apache.spark.sql.Row(idOf(r.getLong(0)), r.getDouble(1)))
-        case Some(f) => filteredTopK(queryVec, k, f)
-      }
-    }
-
-    /** Filtered resident serving: the walk navigates on GEOMETRY and
-      * cannot prune on attributes, so the predicate applies in the
-      * refine job (self-rows carry the attr columns) and the shortlist
-      * widens when it starves — the IVF ladder's ([[probeWidths]])
-      * discipline with the widening MEASURED, not laddered blindly:
-      *  1. walk at the deployed ef; refine + filter (one job). k
-      *     survivors → done, same job shape as a filterless request;
-      *  2. else the first pass's survivor fraction prices one informed
-      *     re-walk (shortlist ≈ 2k / measured selectivity, driver-flop
-      *     cost only) + one more refine job;
-      *  3. else — including a shortlist with ZERO survivors, where the
-      *     selectivity estimate carries no information — degrade to
-      *     [[AdjIndex.filteredSelfTopK]], the exhaustive filtered scan
-      *     that is the only correct answer for a predicate rarer than
-      *     the walk can see (matches < k anywhere included).
-      * Worst case: 3 jobs, exact; common (broad-predicate) case: 1 job.
-      * The exhaustive fallback scans THIS shard's self-rows — at the
-      * sharded tier that is corpus/shards rows fanned in parallel,
-      * never the gateway's full store scan. */
-    private[similarity] def filteredTopK(queryVec: Array[Float], k: Int,
-        f: Column): Array[org.apache.spark.sql.Row] = {
-      def attempt(efEff: Int): Array[org.apache.spark.sql.Row] = {
-        val short = walk(queryVec, efEff)
-        adj.selfScores(short.toSeq, queryVec, Some(f))
-          .orderBy(col("score").asc, col("id").asc)
-          .limit(k)
-          .collect()
-      }
-      val ef0 = math.max(ef, k)
-      val first = attempt(ef0)
-      val out =
-        if (first.length >= k) first
-        else if (first.length == 0) null
-        else {
-          // survivors/shortlist estimates the predicate's density along
-          // the walk; aim for 2k survivors, cap the re-walk at 4096
-          // resident expansions (past that the exhaustive scan's one
-          // clean job beats driver-flop wandering)
-          val ef1 = math.min(4096L,
-            ef0.toLong * 2L * k / math.max(1, first.length)).toInt
-          if (ef1 <= ef0) first else {
-            val second = attempt(ef1)
-            if (second.length >= k) second else null
-          }
-        }
-      val rows =
-        if (out != null) out
-        else adj.filteredSelfTopK(queryVec, k, f).collect()
-      rows.map(r =>
-        org.apache.spark.sql.Row(idOf(r.getLong(0)), r.getDouble(1)))
-    }
-  }
-
-  object ResidentGraphIndex {
-    /** Driver-heap bound on resident nodes — see the class note. */
-    val DefaultMaxResidentNodes = 2000000L
-
-    /** Load a resident-walk handle: topology from the index's
-      * tombstone-masked edge relation (collected as primitive long
-      * chunks — ~16 B an edge in transit, matching the steady state),
-      * codes from the [[buildGraphCodes]]/[[appendGraphCodes]] segment
-      * list (newest per id wins), entries from an IVF sidecar
-      * ([[ivfGraphEntries]] — zero jobs per request) or the min live
-      * id. Refuses BEFORE collecting when the live set exceeds
-      * `maxResidentNodes` (one count job, so an over-budget corpus
-      * cannot OOM the load), and when the sidecar predates an append (a
-      * node the walk cannot SCORE is a node it silently never returns —
-      * rebuild the one-pass sidecar instead). */
-    def load(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-        entryIvfDir: Option[String] = None, ef: Int = 64,
-        maxResidentNodes: Long = DefaultMaxResidentNodes,
-        idOf: Long => Any = identity[Long] _, entryCount: Int = 4,
-        visitBudget: Int = 0): ResidentGraphIndex = {
-      require(ef >= 1 && entryCount >= 1 && visitBudget >= 0,
-        s"ResidentGraphIndex: need ef >= 1, entryCount >= 1, " +
-          s"visitBudget >= 0, got ef=$ef/$entryCount/$visitBudget")
-      require(graphCodesReady(indexDir),
-        if (legacyFlatGraphCodes(indexDir))
-          s"pre-segmentation flat code sidecar at $indexDir/pqcodes — " +
-            "adopt it with Knn.migrateGraphCodes (any CorpusRefresh.refresh " +
-            "does this automatically) or rebuild with buildGraphCodes"
-        else
-          s"no pq-code sidecar at $indexDir/pqcodes — run buildGraphCodes " +
-            "(Cli index --type graph --codes true) before resident serving")
-      val adj = AdjIndex.load(spark, indexDir)
-      import spark.implicits._
-      // budget check BEFORE any collect (one cheap count job): a corpus
-      // past the resident budget must refuse with the live count, not
-      // OOM the driver halfway through pulling its edges
-      val liveCount = adj.relation
-        .filter(col("src") === col("dst")).count()
-      require(liveCount > 0,
-        s"ResidentGraphIndex: adjacency index at $indexDir has no live nodes")
-      require(liveCount <= maxResidentNodes,
-        s"ResidentGraphIndex: $liveCount live nodes exceed the resident " +
-          s"budget $maxResidentNodes — split the corpus into per-shard " +
-          "layouts behind " +
-          "ShardedResidentIndex (fan-and-merge; each shard stays inside " +
-          "this budget): one call, `graft.Cli index --type graph " +
-          "--shards N` (or `--shards auto`), then `serve --graph-index " +
-          "<root>`")
-      // two narrow jobs, both collected as PRIMITIVES: the load
-      // transient must price like the steady state (~16 B an edge), not
-      // like boxed Rows (~100+ B each) — at the 2 M-node budget the Row
-      // form roughly doubled peak driver heap exactly at the ceiling
-      // the class advertises
-      val ids = adj.relation.filter(col("src") === col("dst"))
-        .select(col("src")).as[Long].collect().sorted
-      val edgeChunks: Array[Array[Long]] = adj.relation
-        .filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst")).as[(Long, Long)]
-        .mapPartitions { it =>
-          val b = scala.collection.mutable.ArrayBuilder.make[Long]
-          it.foreach { case (s, d) => b += s; b += d }
-          Iterator.single(b.result())
-        }.collect()
-      val idToIdx = new java.util.HashMap[Long, Integer](ids.length * 2)
-      locally {
-        var i = 0
-        while (i < ids.length) { idToIdx.put(ids(i), i); i += 1 }
-      }
-      // SYMMETRIZED adjacency: the stored kNN edges are DIRECTED
-      // out-lists, and a best-first walk over them can only reach a
-      // node's out-component — measured on the manifold gate as
-      // recall@10 min 0.000 (targets unreachable from the entry).
-      // In-edges are free at load time (the same collected pairs read
-      // backwards) and give every walk escape routes — the DPG/NSG
-      // symmetrization, applied to the resident view only (the job
-      // walk keeps the stored layout's semantics). Built in two
-      // primitive passes (degree count, then fill) so the topology
-      // transient is int-array-sized, never cons cells.
-      val deg = new Array[Int](ids.length)
-      edgeChunks.foreach { ch =>
-        var i = 0
-        while (i < ch.length) {
-          // edges to nodes outside the live set were already masked by
-          // the relation's tombstone anti-joins; both lookups hit
-          val si = idToIdx.get(ch(i)); val di = idToIdx.get(ch(i + 1))
-          if (si != null && di != null) {
-            deg(si.intValue) += 1; deg(di.intValue) += 1
-          }
-          i += 2
-        }
-      }
-      val nbrs = Array.tabulate(ids.length)(i => new Array[Int](deg(i)))
-      val cur = new Array[Int](ids.length)
-      edgeChunks.foreach { ch =>
-        var i = 0
-        while (i < ch.length) {
-          val si = idToIdx.get(ch(i)); val di = idToIdx.get(ch(i + 1))
-          if (si != null && di != null) {
-            val s = si.intValue; val d = di.intValue
-            nbrs(s)(cur(s)) = d; cur(s) += 1
-            nbrs(d)(cur(d)) = s; cur(d) += 1
-          }
-          i += 2
-        }
-      }
-      // sort + dedupe each list in place (sorted order also pins the
-      // walk's deterministic neighbor visit order)
-      var ni = 0
-      while (ni < nbrs.length) {
-        val a = nbrs(ni)
-        java.util.Arrays.sort(a)
-        var w = 0; var r = 0
-        while (r < a.length) {
-          if (w == 0 || a(r) != a(w - 1)) { a(w) = a(r); w += 1 }
-          r += 1
-        }
-        nbrs(ni) = if (w == a.length) a else java.util.Arrays.copyOf(a, w)
-        ni += 1
-      }
-      // codes: segments in commit order, NEWEST code per id wins (an
-      // appendGraphCodes re-encode of a changed doc supersedes its base
-      // code); codes for since-tombstoned ids load into the map but are
-      // never consulted — they compact away with the next rebuild
-      val root = s"$indexDir/pqcodes"
-      val segs = graft.sync.SegmentedIndex.resolve(spark, root).get
-      val codeMap = new java.util.HashMap[Long, Array[Byte]](ids.length * 2)
-      segs.foreach { seg =>
-        spark.read.parquet(s"$root/$seg/codes")
-          .select(col("id"), col("codes")).as[(Long, Array[Byte])]
-          .collect()
-          .foreach { case (id, c) => codeMap.put(id, c) }
-      }
-      val missing = ids.count(id => !codeMap.containsKey(id))
-      require(missing == 0,
-        s"ResidentGraphIndex: $missing live nodes have no PQ code — the " +
-          s"sidecar at $indexDir/pqcodes predates an append; rebuild it " +
-          "with buildGraphCodes")
-      val meta = spark.read.parquet(s"$root/${segs.head}/meta").head()
-      val codec = meta.getAs[String]("codec")
-      val codebooks =
-        if (codec == "pq") collectCodebooks(
-          spark.read.parquet(s"$root/${segs.head}/codebooks"))
-        else Array.empty[Array[Array[Float]]]
-      new ResidentGraphIndex(adj, ids, nbrs, ids.map(codeMap.get(_)),
-        codebooks, codec, entryIvfDir.map(d => ivfGraphEntries(spark, d)),
-        ef, entryCount, visitBudget, idOf)
-    }
-
-    /** [[load]] behind a generation check spanning the adjacency
-      * pointer, the code sidecar, and (when given) the entry IVF's
-      * centroids — an append + sidecar rebuild or a refresh serves at
-      * the next request. */
-    def reloading(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-        entryIvfDir: Option[String] = None, ef: Int = 64,
-        maxResidentNodes: Long = DefaultMaxResidentNodes,
-        idOf: Long => Any = identity[Long] _, minCheckIntervalMs: Long = 0L,
-        entryCount: Int = 4, visitBudget: Int = 0)
-        : graft.sync.Reloading[ResidentGraphIndex] =
-      graft.sync.Reloading.withFingerprint(() =>
-        (Seq(graft.sync.Reloading.fingerprintOf(spark, indexDir, Seq("meta")),
-          // the sidecar is a segment root now: its CURRENT pointer's
-          // content covers build, append and rebuild in one token
-          graft.sync.Reloading.fingerprintOf(spark, s"$indexDir/pqcodes",
-            Nil)) ++
-          entryIvfDir.map(d => graft.sync.Reloading
-            .fingerprintOf(spark, d, Seq("centroids"))))
-          .mkString("||"),
-        minCheckIntervalMs)(
-        load(spark, indexDir, entryIvfDir, ef, maxResidentNodes, idOf,
-          entryCount, visitBudget))
-  }
-
-  /** N [[ResidentGraphIndex]] shards behind one [[DenseIndex]] face —
-    * the mechanism the single-index refusal message promises when a
-    * corpus outgrows [[ResidentGraphIndex.DefaultMaxResidentNodes]]:
-    * partition the corpus by any disjoint rule (id range, hash — the
-    * shards never communicate), build one adjacency + code sidecar per
-    * shard, and serve them as one index. A request fans the driver-flop
-    * walk + one-refine-job pipeline across all shards CONCURRENTLY
-    * (Spark schedules the per-shard refine jobs in parallel from their
-    * own threads) and merges the per-shard top-k by (score, id) — a
-    * flat sort of ≤ k×shards tuples: at k ≤ 100 and any realistic fan
-    * that is thousands of driver comparisons, so a heap-based k-way
-    * merge would buy nothing (stated so the flat sort is not
-    * cargo-culted into a hotter path).
-    *
-    * The merge is LOSSLESS relative to the per-shard shortlists: refine
-    * scores are exact, and every member of the global top-k is by
-    * definition in its own shard's local top-k — so sharded recall
-    * equals the per-shard walk recall, and with exhaustive beams the
-    * merged result is exactly brute force over the union (the q151
-    * oracle form). Wall-clock per request stays ~one shard's latency
-    * (the fan is parallel), driver heap is the SUM of shard residencies
-    * — each shard individually bounded by `maxResidentNodesPerShard`,
-    * which is the point: total corpus = shards × budget.
-    *
-    * Ids must be globally unique across shards (they key the merge's
-    * deterministic tie order); `idOf` is applied once, after the merge,
-    * so shard loads stay on raw longs. */
-  final class ShardedResidentIndex private[Knn] (
-      shards: IndexedSeq[ResidentGraphIndex],
-      idOf: Long => Any) extends DenseIndex {
-    require(shards.nonEmpty, "ShardedResidentIndex: need >= 1 shard")
-
-    /** Columns EVERY shard's layout carries — a predicate must
-      * evaluate on all shards or the merge silently drops matches, so
-      * the gateway routes on the intersection (shards built by
-      * [[build]] share one attr schema and intersect to it). */
-    val attrColumns: Seq[String] =
-      shards.map(_.attrColumns.toSet).reduce(_ intersect _).toSeq.sorted
-
-    def numShards: Int = shards.length
-
-    /** ≤ k (id, score) rows by (score, id) over the shard union —
-      * [[ResidentGraphIndex.servingTopK]]'s contract, fanned. One Spark
-      * job per shard filterless (up to 3 filtered — the per-shard
-      * adaptive ladder), all in flight together. A filtered request
-      * fans the per-shard filtered walk and merges: every member of
-      * the union's filtered top-k is in its own shard's filtered
-      * top-k, so the merge loses nothing relative to the per-shard
-      * shortlists, and a shard whose walk starves degrades to ITS OWN
-      * exhaustive self-row scan (corpus/shards rows, in parallel with
-      * the other shards) — never the gateway's full store scan. */
-    def servingTopK(queryVec: Array[Float], k: Int, nprobe: Int,
-        filter: Option[Column]): Array[org.apache.spark.sql.Row] = {
-      filter.foreach { _ =>
-        require(attrColumns.nonEmpty,
-          "ShardedResidentIndex: shard layouts carry no shared attr " +
-            "columns (rebuild with attrCols = ...); the gateway must " +
-            "route filtered requests to the store") }
-      val perShard =
-        new Array[Array[org.apache.spark.sql.Row]](shards.length)
-      val errs = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      val threads = shards.indices.map { i =>
-        val t = new Thread(() => {
-          try perShard(i) = shards(i).servingTopK(queryVec, k, nprobe,
-            filter)
-          catch { case e: Throwable => errs.compareAndSet(null, e) }
-        })
-        t.setDaemon(true); t.start(); t
-      }
-      threads.foreach(_.join())
-      if (errs.get() != null) throw errs.get()
-      perShard.iterator.flatMap(_.iterator)
-        .map(r => (r.getDouble(1), r.getLong(0)))
-        .toArray.sorted
-        .take(k)
-        .map { case (score, id) => org.apache.spark.sql.Row(idOf(id), score) }
-    }
-  }
-
-  object ShardedResidentIndex {
-    /** Load one resident handle per shard layout — CONCURRENTLY, one
-      * loader thread per shard (a shard load is a handful of narrow
-      * collect jobs; Spark schedules jobs from multiple threads, so N
-      * shard loads overlap instead of summing — the same fan the
-      * serving path uses). `shardDirs` pairs each adjacency root with
-      * its OWN entry-IVF sidecar (per-shard centroids — entries are
-      * node ids, which only resolve in their shard); every shard is
-      * individually budget-checked, so the refuse-before-collect
-      * contract holds per shard and the total residency is
-      * `shards × maxResidentNodesPerShard` by construction. Shards
-      * load with raw long ids; `idOf` renders the merged winners
-      * once. */
-    def load(spark: org.apache.spark.sql.SparkSession,
-        shardDirs: Seq[(String, Option[String])], ef: Int = 64,
-        maxResidentNodesPerShard: Long =
-          ResidentGraphIndex.DefaultMaxResidentNodes,
-        idOf: Long => Any = identity[Long] _, entryCount: Int = 4,
-        visitBudget: Int = 0): ShardedResidentIndex = {
-      val dirs = shardDirs.toIndexedSeq
-      val handles = new Array[ResidentGraphIndex](dirs.length)
-      val errs = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      val threads = dirs.indices.map { i =>
-        val t = new Thread(() => {
-          try {
-            val (d, ivf) = dirs(i)
-            handles(i) = ResidentGraphIndex.load(spark, d, ivf, ef,
-              maxResidentNodesPerShard, identity[Long] _, entryCount,
-              visitBudget)
-          } catch { case e: Throwable => errs.compareAndSet(null, e) }
-        })
-        t.setDaemon(true); t.start(); t
-      }
-      threads.foreach(_.join())
-      if (errs.get() != null) throw errs.get()
-      new ShardedResidentIndex(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(handles), idOf)
-    }
-
-    /** Build a complete sharded resident deployment from ONE corpus
-      * under `rootDir`: rows route to `shards` disjoint shards by
-      * `pmod(key, shards)` — the rule an append/refresh must replay to
-      * route a delta batch to its shard — and each shard gets its OWN
-      * cell-kNN adjacency (buckets by [[bucketsFor]]), code sidecar,
-      * and entry IVF: exactly the layouts [[load]] consumes, returned
-      * in shard order. Shard builds are INDEPENDENT — this helper runs
-      * them sequentially on one session; at real scale run one build
-      * job per shard (r15 measured 2 × 1 M building in 10.7 + 9.4 min
-      * vs 26–47 min for the unsharded 2 M — per-shard cost shrinks
-      * super-linearly, so sharding is also the build-parallelism
-      * story). */
-    def build(corpus: DataFrame, vecCol: String, keyCol: String,
-        rootDir: String, shards: Int, topK: Int = 10, iters: Int = 2,
-        nprobe: Int = 2, codec: String = "int8", entryCells: Int = 256,
-        attrCols: Seq[String] = Nil)
-        : Seq[(String, Option[String])] = {
-      require(shards >= 1, s"need shards >= 1, got $shards")
-      val spark = corpus.sparkSession
-      val dirs = (0 until shards).map { s =>
-        val dir = s"$rootDir/shard$s"
-        val ivfDir = s"$rootDir/shard$s-ivf"
-        val members = corpus.filter(col(vecCol).isNotNull &&
-          pmod(col(keyCol).cast("long"), lit(shards.toLong)) === s)
-        val n = members.count()
-        require(n > 0, s"shard $s of $shards is empty — shard count " +
-          "exceeds the key spread under pmod")
-        val cells = math.min((n / 800L).max(8L), math.max(1L, n / 4L)).toInt
-        val edges = cellKnnGraph(members, vecCol, keyCol, topK = topK,
-          cells = cells, iters = iters, nprobe = math.min(nprobe, cells))
-          .select(col("id_a"), col("id_b"))
-        buildAdjacencyIndex(edges, members, vecCol, keyCol, dir,
-          buckets = bucketsFor(n * (topK + 1L)), attrCols = attrCols)
-        buildGraphCodes(spark, dir, codec = codec)
-        // entry IVF trains on a ~20 k-row hash sample (geometry only
-        // needs a representative slice — the ivfBuildIndex contract)
-        val every = (n / 20000L).max(1L)
-        ivfBuildIndex(members, vecCol, keyCol, ivfDir,
-          k = math.min(entryCells.toLong, math.max(1L, n / 4L)).toInt,
-          iters = iters,
-          trainFilter = pmod(hash(col(keyCol)), lit(every)) === 0,
-          fp16 = true)
-        (dir, Option(ivfDir))
-      }
-      // gateway manifest LAST — it is the build's completion marker
-      // (ShardedResidentIndex.loadRoot refuses a root whose manifest
-      // is absent, so a crash mid-build reads as absent, never as a
-      // half-sharded gateway)
-      writeManifest(spark, rootDir,
-        dirs.map { case (d, ivf) =>
-          (d.stripPrefix(s"$rootDir/"),
-            ivf.map(_.stripPrefix(s"$rootDir/"))) })
-      dirs
-    }
-
-    /** Write the gateway MANIFEST at a sharded root: one line per shard
-      * in shard order — `<shardDir>` or `<shardDir>\t<entryIvfDir>`,
-      * paths RELATIVE to the root so the whole deployment can move —
-      * committed with the CURRENT pointer's atomic-replace discipline
-      * (readers see the old complete manifest or the new one, never a
-      * torn file). */
-    def writeManifest(spark: org.apache.spark.sql.SparkSession,
-        rootDir: String, dirs: Seq[(String, Option[String])]): Unit = {
-      require(dirs.nonEmpty, "writeManifest: empty shard list")
-      import org.apache.hadoop.fs.{Path => HPath}
-      val rootP = new HPath(rootDir)
-      val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(rootP)
-      val tmp = new HPath(rootP, s".MANIFEST.tmp-${System.nanoTime()}")
-      val body = dirs.map { case (d, ivf) =>
-        ivf.fold(d)(e => s"$d\t$e") }.mkString("\n")
-      scala.util.Using.resource(fs.create(tmp, true))(
-        _.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      graft.sync.FsUtil.atomicReplace(fs,
-        spark.sparkContext.hadoopConfiguration,
-        tmp, new HPath(rootP, "MANIFEST"))
-    }
-
-    /** The shard list a root's MANIFEST declares — (adjacencyDir,
-      * entryIvfDir) pairs with paths resolved against the root — or
-      * None when no manifest exists (callers fall back to explicit
-      * shard lists). */
-    def loadManifest(spark: org.apache.spark.sql.SparkSession,
-        rootDir: String): Option[Seq[(String, Option[String])]] = {
-      import org.apache.hadoop.fs.{Path => HPath}
-      val rootP = new HPath(rootDir)
-      val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val ptr = new HPath(rootP, "MANIFEST")
-      if (!fs.exists(ptr)) None
-      else {
-        val text = scala.util.Using.resource(fs.open(ptr)) { in =>
-          new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8)
-        }
-        def abs(p: String): String =
-          if (p.startsWith("/") || p.contains("://")) p else s"$rootDir/$p"
-        Some(text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-          .map { line =>
-            line.split('\t') match {
-              case Array(d) => (abs(d), None)
-              case Array(d, e) => (abs(d), Some(abs(e)))
-              case _ => throw new IllegalStateException(
-                s"malformed MANIFEST line at $rootDir: '$line'")
-            }
-          })
-      }
-    }
-
-    /** [[load]] via the root's MANIFEST — the one-call serving form of
-      * a `Cli index --type graph --shards N` build. */
-    def loadRoot(spark: org.apache.spark.sql.SparkSession, rootDir: String,
-        ef: Int = 64,
-        maxResidentNodesPerShard: Long =
-          ResidentGraphIndex.DefaultMaxResidentNodes,
-        idOf: Long => Any = identity[Long] _, entryCount: Int = 4,
-        visitBudget: Int = 0): ShardedResidentIndex =
-      load(spark, loadManifest(spark, rootDir).getOrElse(
-          throw new IllegalArgumentException(
-            s"no sharded-gateway MANIFEST at $rootDir — build one with " +
-              "`graft.Cli index --type graph --shards N`")),
-        ef, maxResidentNodesPerShard, idOf, entryCount, visitBudget)
-
-    /** [[load]] behind ONE generation check spanning every shard's
-      * adjacency pointer, code sidecar and entry IVF — any shard's
-      * append/refresh/rebuild swaps the whole gateway handle at the
-      * next request (shard loads are independent, but a half-updated
-      * VIEW must never serve: the fingerprint is the concatenation). */
-    def reloading(spark: org.apache.spark.sql.SparkSession,
-        shardDirs: Seq[(String, Option[String])], ef: Int = 64,
-        maxResidentNodesPerShard: Long =
-          ResidentGraphIndex.DefaultMaxResidentNodes,
-        idOf: Long => Any = identity[Long] _, minCheckIntervalMs: Long = 0L,
-        entryCount: Int = 4, visitBudget: Int = 0)
-        : graft.sync.Reloading[ShardedResidentIndex] =
-      graft.sync.Reloading.withFingerprint(() =>
-        shardDirs.flatMap { case (d, ivf) =>
-          Seq(graft.sync.Reloading.fingerprintOf(spark, d, Seq("meta")),
-            graft.sync.Reloading.fingerprintOf(spark, s"$d/pqcodes", Nil)) ++
-            ivf.map(e => graft.sync.Reloading
-              .fingerprintOf(spark, e, Seq("centroids")))
-        }.mkString("||"),
-        minCheckIntervalMs)(
-        load(spark, shardDirs, ef, maxResidentNodesPerShard, idOf,
-          entryCount, visitBudget))
-  }
 
   /** Exact re-rank of an ADC shortlist (the refinement stage FAISS calls
     * `IndexRefine`): the shortlist — `refine·k` (id)s from [[pqTopK]] or

@@ -43,35 +43,6 @@ object CorpusRefresh {
     * ingest doesn't compact on every batch. */
   val DefaultMaxSegments: Int = 8
 
-  /** pq retrain trigger for the resident-serving code sidecar: rebuild
-    * when an upsert batch reconstructs this many times worse under the
-    * FROZEN codebooks than the recorded HELD-OUT anchor of the corpus
-    * those books trained on — a distribution shift the frozen geometry
-    * no longer covers (the q126 cell-stats shape, applied to codes;
-    * int8 reports 0.0 because per-dimension quantization cannot drift).
-    * Below the threshold the sidecar re-covers in O(delta)
-    * ([[graft.similarity.Knn.appendGraphCodes]]), never by replaying
-    * the corpus build.
-    *
-    * 1.5 is DERIVED FROM MEASUREMENT, not guessed (r15; manifold
-    * fixture, ResidentGraphSpec's drift test pins both sides at default
-    * dials): against a healthy anchor, in-distribution batches measure
-    * ~1.0× by construction, while genuinely off-manifold batches
-    * measure 1.8–2.3× at m=32/ksub=16 and 3.0–3.8× at m=64/ksub=256 —
-    * the ratio's ceiling DEPENDS on the dials, because reconstruction
-    * error saturates on unit vectors (squared L2 ≤ 4), so coarse
-    * codebooks with a large baseline error compress every shift's
-    * ratio. The previous default of 4.0 sat ABOVE the measured ceiling
-    * at coarse dials: no realistic batch could ever fire it, and every
-    * drifted batch would have appended against stale codebooks forever
-    * — the exact silent ADC decay the signal exists to prevent. 1.5 is
-    * the geometric midpoint of in-dist (~1.0) and the WORST measured
-    * true shift (~1.8, mild noise at coarse dials), margined up from
-    * 1.35; a spurious retrain costs one O(corpus) rebuild, a missed
-    * one costs silent quality decay, so the default errs toward
-    * firing. */
-  val DefaultCodesDriftRatio: Double = 1.5
-
   /** The refresh delta between the stored corpus `old` and `newSnap`:
     * one `(keyCol, status)` row per key that differs — `added`,
     * `removed`, `changed` when the text differs, and `metadata` when
@@ -99,8 +70,9 @@ object CorpusRefresh {
       .filter(col("status") =!= "unchanged")
   }
 
-  /** Apply `newSnap` to the store at `storeDir` and any of the
-    * index roots; returns the materialized delta (keyCol, status) so
+  /** Apply `newSnap` to the store at `storeDir` and to the lexical
+    * and IVF index roots given (an IVF root of either cell layout);
+    * returns the materialized delta (keyCol, status) so
     * callers can fan further delta-only work (re-embed, re-dedup)
     * off the same frame. No-op (and no new versions/segments) when the
     * snapshot matches the store. `newSnap` must carry the store's full
@@ -120,10 +92,7 @@ object CorpusRefresh {
       lexIndexDir: Option[String] = None,
       ivfIndexDir: Option[String] = None,
       vecCol: String = "embedding",
-      maxSegments: Int = DefaultMaxSegments,
-      graphIndexDir: Option[String] = None,
-      codesDriftRatio: Double = DefaultCodesDriftRatio,
-      graphShardDirs: Seq[(String, Option[String])] = Nil): DataFrame = {
+      maxSegments: Int = DefaultMaxSegments): DataFrame = {
     val old = HighlightStore.read(spark, storeDir).getOrElse(
       throw new IllegalStateException(
         s"CorpusRefresh.refresh: no store at $storeDir (writeAtomic first)"))
@@ -131,13 +100,12 @@ object CorpusRefresh {
     if (delta.isEmpty) { delta.unpersist(); delta }
     else {
       // a metadata-only row re-applies like a changed one: IVF cells
-      // and adjacency layouts may carry metadata as attr columns
+      // may carry metadata as attr columns
       val deltaKeys = delta.select(col(keyCol))
-      // PERSISTED: every index family below runs 2–4 actions over the
-      // upsert batch (isEmpty, append, sidecar, entry IVF), and the
-      // sharded loop multiplies that by shard count — unpersisted, each
-      // action re-scans the whole snapshot for a batch that is delta-
-      // sized by construction. Released before the store rewrite.
+      // PERSISTED: the index families below and the store rewrite each
+      // read the upsert batch — unpersisted, each action re-scans the
+      // whole snapshot for a batch that is delta-sized by construction.
+      // Released after the store rewrite.
       val upserts = newSnap.join(
         delta.filter(col("status") =!= "removed").select(col(keyCol)),
         Seq(keyCol), "left_semi").persist()
@@ -154,78 +122,6 @@ object CorpusRefresh {
         graft.similarity.Knn.ivfAppendIndex(upserts, vecCol, keyCol, dir)
         if (overThreshold(dir))
           graft.similarity.Knn.ivfCompactIndex(spark, dir)
-      }
-      // the flat adjacency layout under the same delete-then-append
-      // discipline: delta keys tombstone (masking every touching edge),
-      // added+changed nodes re-insert against the LIVE members
-      // (adjInsertIndex — forward + reverse edges, one O(batch)
-      // segment). If a resident-serving code sidecar exists, re-cover
-      // it LAST and in O(delta): encode ONLY the upsert batch into a
-      // new codes segment (int8 needs no training; pq encodes against
-      // the frozen base codebooks) — the ResidentGraphIndex load
-      // contract refuses a sidecar that no longer covers the live set,
-      // so a refresh without this pass would stop --graph-index
-      // serving at the next reload instead of serving stale vectors.
-      // Tombstoned ids need no sidecar work (the resident load keys
-      // codes by the adjacency relation's LIVE set). The O(corpus)
-      // rebuild runs only when the pq drift signal fires or the
-      // sidecar's segment list hits the same fan-out threshold every
-      // other index compacts at — never per delta: a 10-document upsert
-      // against a 10⁹-node graph writes 10 code rows.
-      def graphRefresh(dir: String, dk: DataFrame, ups: DataFrame): Unit = {
-        graft.similarity.Knn.adjDeleteIndex(spark, dir, dk, keyCol)
-        if (!ups.isEmpty)
-          graft.similarity.Knn.adjInsertIndex(ups, vecCol, keyCol, dir)
-        if (overThreshold(dir))
-          graft.similarity.Knn.adjCompactIndex(spark, dir)
-        // adopt a pre-segmentation flat sidecar BEFORE the readiness
-        // check: without this a sidecar built under the r13 flat layout
-        // reads as absent and the refresh silently stops maintaining it
-        // — the next resident load then hard-fails on coverage
-        graft.similarity.Knn.migrateGraphCodes(spark, dir)
-        if (graft.similarity.Knn.graphCodesReady(dir)) {
-          val drift =
-            if (ups.isEmpty) 0.0
-            else graft.similarity.Knn
-              .appendGraphCodes(ups, vecCol, keyCol, dir)
-          if (drift > codesDriftRatio || overThreshold(s"$dir/pqcodes"))
-            graft.similarity.Knn.rebuildGraphCodes(spark, dir)
-        }
-      }
-      graphIndexDir.foreach(graphRefresh(_, deltaKeys, upserts))
-      // sharded deployments ([[graft.similarity.Knn.ShardedResidentIndex
-      // .build]]): the delta routes to shards by the SAME pmod(key,
-      // shards) rule the build routed rows by — dirs must be passed in
-      // shard order — and each shard then runs the exact single-dir
-      // cycle above on its own slice (tombstones, insert against its
-      // OWN live members, O(delta) sidecar re-cover, per-shard drift +
-      // fan-out triggers). A shard the delta never touches is skipped
-      // entirely: no empty tombstone segments, no pointer churn, and
-      // the gateway's reloading fingerprint only swaps when some shard
-      // actually moved.
-      locally {
-        val nsh = graphShardDirs.length
-        graphShardDirs.zipWithIndex.foreach { case ((dir, entryIvf), s) =>
-          val dk = deltaKeys.filter(
-            pmod(col(keyCol).cast("long"), lit(nsh.toLong)) === s)
-          val ups = upserts.filter(
-            pmod(col(keyCol).cast("long"), lit(nsh.toLong)) === s)
-          if (!dk.isEmpty) {
-            graphRefresh(dir, dk, ups)
-            // the shard's entry IVF is an ordinary IVF index over the
-            // same members — maintain it with the routed slice so
-            // entries keep tracking the shard's live set (a stale
-            // entry IVF still SERVES — tombstoned entries drop at
-            // walk seeding — but entry quality decays with churn)
-            entryIvf.foreach { iv =>
-              graft.similarity.Knn.ivfDeleteIndex(spark, iv, dk, keyCol)
-              if (!ups.isEmpty)
-                graft.similarity.Knn.ivfAppendIndex(ups, vecCol, keyCol, iv)
-              if (overThreshold(iv))
-                graft.similarity.Knn.ivfCompactIndex(spark, iv)
-            }
-          }
-        }
       }
       // store LAST: it is the delta's baseline, so a crash anywhere above
       // leaves a re-run deriving the same delta and healing the indexes.

@@ -5,15 +5,17 @@ import org.apache.spark.sql.SparkSession
 /** A serving handle that re-checks its index's on-disk GENERATION before
   * each request and transparently reloads when a maintenance commit
   * moved it — the bridge between the load-once handles
-  * ([[graft.similarity.Knn.IvfIndex]], [[graft.text.TextRank.LexIndex]]
-  * — centroids / codebooks / segment lists / corpus stats all resolve
+  * ([[graft.similarity.Knn.IvfIndex]], [[graft.text.TextRank.LexIndex]],
+  * the warm store — centroids / codebooks / segment lists / corpus
+  * stats all resolve
   * at construction, deliberately, so a request is pure plan execution)
   * and the incremental-maintenance machinery (segment appends,
   * tombstone deletes, compaction, [[CorpusRefresh]]): without this, a
   * long-lived server silently serves the generation it loaded until
   * process restart.
   *
-  * The generation fingerprint is the `CURRENT` pointer's CONTENT (the
+  * Every handle lives under ONE pointer root. The generation
+  * fingerprint is the `CURRENT` pointer's CONTENT (the
   * committed segment list — one small read covering append, delete and
   * compaction in a single token) concatenated with the modification
   * times of any sidecar commit markers (`centroids/_SUCCESS`,
@@ -85,16 +87,6 @@ object Reloading {
     new Reloading(() => fingerprintOf(spark, root, sidecars), () => loadFn,
       minCheckIntervalMs, (_: T) => ())
 
-  /** [[apply]] with a caller-supplied fingerprint — for indexes spread
-    * over SEVERAL pointer roots (e.g. the resident graph walk: the
-    * adjacency pointer, its code-sidecar segment root and the entry
-    * IVF's centroids; or every such root of a sharded gateway), where
-    * one generation token must cover every root. */
-  def withFingerprint[T](fingerprint: () => String,
-      minCheckIntervalMs: Long = 0L)(loadFn: => T): Reloading[T] =
-    new Reloading(fingerprint, () => loadFn, minCheckIntervalMs,
-      (_: T) => ())
-
   /** [[apply]] with a soft-release hook for the superseded handle. */
   def withEvict[T](spark: SparkSession, root: String, sidecars: Seq[String],
       minCheckIntervalMs: Long = 0L)(loadFn: => T)(
@@ -104,7 +96,7 @@ object Reloading {
 
   /** Generation token of an index root — cheap by construction: one
     * small-file read (the pointer) + one file status per sidecar. */
-  def fingerprintOf(spark: SparkSession, root: String,
+  private def fingerprintOf(spark: SparkSession, root: String,
       sidecars: Seq[String]): String = {
     import org.apache.hadoop.fs.{Path => HPath}
     val conf = spark.sparkContext.hadoopConfiguration

@@ -421,9 +421,7 @@ object Sync {
       embedder: Embedder = Embedder.Default,
       now: () => Instant = () => Instant.now(),
       spoolDir: Option[String] = None,
-      pooledChunkWords: Option[Int] = None,
-      graphIndexDir: Option[String] = None,
-      graphShardDirs: Seq[(String, Option[String])] = Nil): Map[String, Long] =
+      pooledChunkWords: Option[Int] = None): Map[String, Long] =
     timed {
       val spool = spoolDir.getOrElse(
         s"$checkpointDir/refresh-spool-${System.nanoTime()}")
@@ -431,9 +429,7 @@ object Sync {
         val snapshot = spooledHighlights(spark, client.export(None), spool,
           embedder, version = now().toEpochMilli, pooledChunkWords)
         val delta = CorpusRefresh.refresh(spark, snapshot, "text", "id",
-          storeDir, lexIndexDir = lexIndexDir, ivfIndexDir = ivfIndexDir,
-          graphIndexDir = graphIndexDir,
-          graphShardDirs = graphShardDirs)
+          storeDir, lexIndexDir = lexIndexDir, ivfIndexDir = ivfIndexDir)
         val counts = delta.groupBy(col("status")).count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         delta.unpersist()

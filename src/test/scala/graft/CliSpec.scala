@@ -83,6 +83,12 @@ class CliSpec extends SparkTestBase {
       Seq("curate", "--docs", s"$dir/docs", "--report-only", "--qualty",
         "0.5"),
       Seq("serve", "--store", s"$dir/store", "--graph-hops", "3"),
+      Seq("serve", "--store", s"$dir/store", "--graph-index", "G"),
+      Seq("serve", "--store", s"$dir/store", "--graph-ef", "20"),
+      Seq("refresh", "--pages-dir", dir, "--store", s"$dir/store",
+        "--ckpt", s"$dir/ckpt", "--graph-index", "G"),
+      Seq("refresh", "--pages-dir", dir, "--store", s"$dir/store",
+        "--ckpt", s"$dir/ckpt", "--graph-entry-ivf", "I"),
       Seq("health", "--verbose"))
     cases.foreach { args =>
       val (c, err) = captureErr(Cli.run(args.toArray, spark))
@@ -224,15 +230,13 @@ class CliSpec extends SparkTestBase {
     assert(cq == 2 && errQ.contains("--pq-index is not a serve option"), errQ)
   }
 
-  test("index --type graph/hnsw/lexical: build → serve → delete → refresh round-trip") {
-    val dir = Files.createTempDirectory("graft-cli-graph").toString
+  test("index --type lexical: build → serve → refresh round-trip") {
+    val dir = Files.createTempDirectory("graft-cli-lex").toString
     val pages1 = s"$dir/pages1"; val pages2 = s"$dir/pages2"
     val store = s"$dir/store"; val ckpt = s"$dir/ckpt"
-    val graph = s"$dir/graph"; val lexi = s"$dir/lex"
+    val lexi = s"$dir/lex"
     Files.createDirectories(java.nio.file.Paths.get(pages1))
     Files.createDirectories(java.nio.file.Paths.get(pages2))
-    // numeric string ids — the Readwise id domain the graph family's
-    // long node keys round-trip through
     val texts = Seq(
       "1" -> "spark joins and shuffles",
       "2" -> "spark shuffles and joins again",
@@ -248,79 +252,24 @@ class CliSpec extends SparkTestBase {
     assert(capture(Cli.run(Array("sync", "--backfill", "--pages-dir", pages1,
       "--store", store, "--ckpt", ckpt), spark))._1 == 0)
 
-    // bad --type fails fast; hnsw is no longer an index type
-    Seq("bogus", "hnsw").foreach { t =>
-      assert(capture(Cli.run(Array("index", "--store", store, "--out", graph,
+    // bad --type fails fast; hnsw, graph and graph-codes are no longer
+    // index types
+    Seq("bogus", "hnsw", "graph", "graph-codes").foreach { t =>
+      assert(capture(Cli.run(Array("index", "--store", store, "--out", lexi,
         "--type", t), spark))._1 == 2, t)
     }
 
-    // graph index via the CLI
-    val (cg, outg) = capture(Cli.run(Array("index", "--store", store,
-      "--out", graph, "--type", "graph", "--graph-k", "3", "--cells", "2",
-      "--buckets", "4"), spark))
-    assert(cg == 0, outg)
-    assert(outg.contains("\"type\":\"graph\""), outg)
-    assert(graft.similarity.Knn.graphIndexReady(graph))
-    // `serve --graph-index` is the resident walk: without the code
-    // sidecar it refuses at start-up and names the sidecar-only build
-    val (cs, errs) = captureErr(Cli.run(Array("serve", "--store", store,
-      "--graph-index", graph), spark))
-    assert(cs == 1 && errs.contains("--type graph-codes"), errs)
+    // lexical index via the CLI serves the synced corpus
+    assert(capture(Cli.run(Array("index", "--store", store, "--out", lexi,
+      "--type", "lexical", "--buckets", "4"), spark))._1 == 0)
+    def lexHits(term: String) = graft.text.TextRank.LexIndex.load(spark, lexi)
+      .search(Seq(term), k = 3)
+      .select(org.apache.spark.sql.functions.col("id"))
+      .collect().map(_.getString(0)).toSeq
+    assert(lexHits("gardening") == Seq("5"))
 
-    // delete: tombstone node 1 before the sidecar exists
-    import spark.implicits._
-    graft.similarity.Knn.adjDeleteIndex(spark, graph,
-      Seq(1L).toDF("id"), "id")
-
-    // sidecar-only build over the EXISTING (tombstoned) layout via
-    // --type graph-codes; then `serve --graph-index G`, with no other
-    // flag, serves through ResidentGraphIndex — store rows keyed by the
-    // STORE's string ids (the idOf round-trip), deleted node gone
-    val (cc, outc) = capture(Cli.run(Array("index", "--store", store,
-      "--out", graph, "--type", "graph-codes", "--pq-m", "8",
-      "--pq-ksub", "4"), spark))
-    assert(cc == 0, outc)
-    assert(outc.contains("\"type\":\"graph-codes\""), outc)
-    assert(graft.similarity.Knn.graphCodesReady(graph))
-    val embedder = graft.embed.Embedder.Default
-    def gw(idx: () => graft.similarity.Knn.DenseIndex) =
-      new graft.serve.SearchGateway(
-        () => graft.sync.HighlightStore.read(spark, store).get, embedder,
-        Some(idx), 4)
-    def ask(g: graft.serve.SearchGateway, q: String, k: Int) = {
-      val Right(p) = graft.serve.SearchParams.fromHttp(q, k): @unchecked
-      g.search(p).toSeq
-    }
-    val Right(Some(served)) = Cli.denseIndex(spark,
-      GraftConfig(store, graphIndexDir = Some(graph), graphEf = 8)): @unchecked
-    assert(served().isInstanceOf[graft.similarity.Knn.ResidentGraphIndex])
-    val rowsR = ask(gw(served), "spark shuffles and joins again", 3)
-    assert(rowsR.nonEmpty && rowsR.head("id") == "2", rowsR.map(_("id")))
-    assert(rowsR.head.contains("score") && rowsR.head.contains("text"))
-    assert(!rowsR.exists(_("id") == "1"), rowsR.map(_("id")))
-    // filtered requests fall back to the store scan (an attr-less
-    // layout) — they still serve, from the one plan that can evaluate
-    // the predicate
-    val Right(fp) = graft.serve.SearchParams.fromHttp(
-      "spark joins and shuffles", 3, sourceType = Some("books")): @unchecked
-    assert(gw(served).search(fp).toSeq.nonEmpty)
-    // graph-codes over a missing layout names the fix
-    assert(capture(Cli.run(Array("index", "--store", store,
-      "--out", s"$graph-none", "--type", "graph-codes"), spark))._1 == 1)
-
-    // sharded --graph-index list (`serve --graph-index a,b`): every
-    // shard must be ready, and the gateway serves through the
-    // fan-and-merge handle with the same string-id round-trip
-    assert(capture(Cli.run(Array("serve", "--store", store,
-      "--graph-index", s"$graph,$graph-none"), spark))._1 == 1)
-    val sh = graft.similarity.Knn.ShardedResidentIndex.load(spark,
-      Seq(graph -> None), ef = 8, idOf = (id: Long) => id.toString)
-    val rowsS = ask(gw(() => sh), "spark shuffles and joins again", 3)
-    assert(rowsS.nonEmpty && rowsS.head("id") == "2", rowsS.map(_("id")))
-    assert(!rowsS.exists(_("id") == "1"), rowsS.map(_("id")))
-
-    // `refresh --graph-index` maintains the layout and its sidecar:
-    // id 5 removed upstream, id 2 edited, id 9 added
+    // `refresh --lex-index` maintains it: id 5 removed upstream, id 2
+    // edited, id 9 added
     val texts2 = texts.filterNot(_._1 == "5").map {
       case ("2", _) => "2" -> "spark shuffles edited zebra content"
       case other => other
@@ -329,134 +278,12 @@ class CliSpec extends SparkTestBase {
       Files.writeString(java.nio.file.Paths.get(pages2, f"page$i%02d.json"),
         pageJson(id, tx)) }
     val (cr, outr) = capture(Cli.run(Array("refresh", "--pages-dir", pages2,
-      "--store", store, "--ckpt", ckpt, "--graph-index", graph), spark))
+      "--store", store, "--ckpt", ckpt, "--lex-index", lexi), spark))
     assert(cr == 0, outr)
     assert(outr.contains("\"added\":1") && outr.contains("\"changed\":1")
       && outr.contains("\"removed\":1"), outr)
-    // entry IVFs pair with --graph-index positionally at ANY dir count —
-    // a mismatch is rejected, never silently dropped
-    assert(capture(Cli.run(Array("refresh", "--pages-dir", pages2,
-      "--store", store, "--ckpt", ckpt, "--graph-index", graph,
-      "--graph-entry-ivf", "a,b"), spark))._1 == 2)
-    // the serving handle follows the refresh: the added doc serves, the
-    // removed one does not
-    val rows9 = ask(gw(served), "brand new quokka highlight", 1)
-    assert(rows9.nonEmpty && rows9.head("id") == "9", rows9.map(_("id")))
-    val rows5 = ask(gw(served), "gardening tips for tomato plants", 8)
-    assert(rows5.nonEmpty && !rows5.exists(_("id") == "5"),
-      rows5.map(_("id")))
-
-    // lexical index via the CLI serves the refreshed corpus
-    assert(capture(Cli.run(Array("index", "--store", store, "--out", lexi,
-      "--type", "lexical", "--buckets", "4"), spark))._1 == 0)
-    val lexHits = graft.text.TextRank.LexIndex.load(spark, lexi)
-      .search(Seq("quokka"), k = 3)
-      .select(org.apache.spark.sql.functions.col("id"))
-      .collect().map(_.getString(0)).toSeq
-    assert(lexHits == Seq("9"), lexHits)
-  }
-
-  test("index --type graph --shards: one-call sharded gateway — " +
-      "manifest, loadRoot serving, serve/refresh routing, auto sizing") {
-    val dir = Files.createTempDirectory("graft-cli-shards").toString
-    val pages = s"$dir/pages"
-    val store = s"$dir/store"; val ckpt = s"$dir/ckpt"
-    val root = s"$dir/gateway"
-    Files.createDirectories(java.nio.file.Paths.get(pages))
-    val texts = Seq(
-      "1" -> "spark joins and shuffles",
-      "2" -> "spark shuffles and joins again",
-      "3" -> "completely different topic words",
-      "4" -> "quantum entanglement and physics",
-      "5" -> "gardening tips for tomato plants",
-      "6" -> "spark partitions and shuffles tuning",
-      "7" -> "tomato garden watering schedule",
-      "8" -> "physics of entangled particles")
-    texts.zipWithIndex.foreach { case ((id, tx), i) =>
-      Files.writeString(java.nio.file.Paths.get(pages, f"page$i%02d.json"),
-        pageJson(id, tx)) }
-    assert(capture(Cli.run(Array("sync", "--backfill", "--pages-dir", pages,
-      "--store", store, "--ckpt", ckpt), spark))._1 == 0)
-    // bad --shards fails fast
-    assert(capture(Cli.run(Array("index", "--store", store, "--out", root,
-      "--type", "graph", "--shards", "0"), spark))._1 == 2)
-    assert(capture(Cli.run(Array("index", "--store", store, "--out", root,
-      "--type", "graph", "--shards", "bogus"), spark))._1 == 2)
-    // ONE call: pmod split, per-shard adjacency + codes + entry IVF,
-    // root MANIFEST
-    val (c, out) = capture(Cli.run(Array("index", "--store", store,
-      "--out", root, "--type", "graph", "--shards", "2",
-      "--graph-k", "3", "--cells", "2"), spark))
-    assert(c == 0, out)
-    assert(out.contains("\"shards\":2") && out.contains("MANIFEST"), out)
-    val dirs = graft.similarity.Knn.ShardedResidentIndex
-      .loadManifest(spark, root).get
-    assert(dirs.length == 2)
-    dirs.foreach { case (d, ivf) =>
-      assert(graft.similarity.Knn.graphIndexReady(d) &&
-        graft.similarity.Knn.graphCodesReady(d), d)
-      assert(ivf.exists(graft.similarity.Knn.ivfIndexReady), ivf.toString)
-    }
-    // the manifest-driven gateway serves through the same
-    // fan-and-merge handle `serve --graph-index <root>` builds
-    val sh = graft.similarity.Knn.ShardedResidentIndex.loadRoot(spark,
-      root, ef = 8, idOf = (id: Long) => id.toString)
-    assert(sh.numShards == 2)
-    val gw = new graft.serve.SearchGateway(
-      () => graft.sync.HighlightStore.read(spark, store).get,
-      graft.embed.Embedder.Default, Some(() => sh), 4)
-    val Right(p) = graft.serve.SearchParams.fromHttp(
-      "spark shuffles and joins again", 3): @unchecked
-    val rows = gw.search(p).toSeq
-    assert(rows.nonEmpty && rows.head("id") == "2", rows.map(_("id")))
-    // `serve --graph-index <root>` expands the manifest to that handle
-    val Right(Some(rootServed)) = Cli.denseIndex(spark,
-      GraftConfig(store, graphIndexDir = Some(root))): @unchecked
-    assert(rootServed().isInstanceOf[
-      graft.similarity.Knn.ShardedResidentIndex])
-    // refresh --graph-index <root> expands the manifest and routes the
-    // delta to its pmod shard; the re-loaded gateway serves the new doc
-    val pages2 = s"$dir/pages2"
-    Files.createDirectories(java.nio.file.Paths.get(pages2))
-    (texts :+ ("9" -> "brand new zebra migration patterns"))
-      .zipWithIndex.foreach { case ((id, tx), i) =>
-        Files.writeString(java.nio.file.Paths.get(pages2, f"page$i%02d.json"),
-          pageJson(id, tx)) }
-    val (cr, outr) = capture(Cli.run(Array("refresh", "--pages-dir", pages2,
-      "--store", store, "--ckpt", ckpt, "--graph-index", root), spark))
-    assert(cr == 0, outr)
-    val sh2 = graft.similarity.Knn.ShardedResidentIndex.loadRoot(spark,
-      root, ef = 8, idOf = (id: Long) => id.toString)
-    val gw2 = new graft.serve.SearchGateway(
-      () => graft.sync.HighlightStore.read(spark, store).get,
-      graft.embed.Embedder.Default, Some(() => sh2), 4)
-    val Right(p9) = graft.serve.SearchParams.fromHttp(
-      "brand new zebra migration patterns", 1): @unchecked
-    assert(gw2.search(p9).toSeq.map(_("id")) == Seq("9"))
-    // loadRoot without a manifest names the build flag
-    val e = intercept[IllegalArgumentException] {
-      graft.similarity.Knn.ShardedResidentIndex.loadRoot(spark,
-        s"$dir/nothing")
-    }
-    assert(e.getMessage.contains("--shards"))
-    // --shards auto sizes from the corpus against the resident budget:
-    // 8 rows → 1 shard
-    val (ca, outa) = capture(Cli.run(Array("index", "--store", store,
-      "--out", s"$dir/auto", "--type", "graph", "--shards", "auto",
-      "--graph-k", "3", "--cells", "2"), spark))
-    assert(ca == 0 && outa.contains("\"shards\":1"), outa)
-  }
-
-  test("index --type graph refuses non-numeric store ids with a specific message") {
-    val dir = Files.createTempDirectory("graft-cli-gnn").toString
-    val pages = s"$dir/pages"
-    Files.createDirectories(java.nio.file.Paths.get(pages))
-    Files.writeString(java.nio.file.Paths.get(pages, "page0.json"),
-      pageJson("h1", "non numeric id content"))
-    assert(capture(Cli.run(Array("sync", "--backfill", "--pages-dir", pages,
-      "--store", s"$dir/store", "--ckpt", s"$dir/ckpt"), spark))._1 == 0)
-    assert(capture(Cli.run(Array("index", "--store", s"$dir/store",
-      "--out", s"$dir/g", "--type", "graph"), spark))._1 == 2)
+    assert(lexHits("quokka") == Seq("9"))
+    assert(lexHits("gardening").isEmpty)
   }
 
   test("export writes shard dirs and prints the manifest; bad flags fail fast") {

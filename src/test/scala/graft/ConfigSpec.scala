@@ -48,49 +48,6 @@ class ConfigSpec extends AnyFunSuite {
       ivfIndexDir = Some("/i"), pqRefine = 1)).isRight)
   }
 
-  test("graph serving matrix: exclusivity, knob gating, flag scoping") {
-    // three-way exclusivity: graph joins the one-dense-index rule
-    val Left(e1) = GraftConfig.validated(GraftConfig("/s",
-      ivfIndexDir = Some("/i"), graphIndexDir = Some("/g"))): @unchecked
-    assert(e1.exists(e => e.contains("mutually exclusive")
-      && e.contains("GRAPH_INDEX_DIR")), e1)
-    // walk knobs validate only when the graph path is selected
-    val Left(e3) = GraftConfig.validated(GraftConfig("/s",
-      graphIndexDir = Some("/g"), graphEf = 0)): @unchecked
-    assert(e3.exists(_.contains("GRAPH_EF")), e3)
-    assert(GraftConfig.validated(GraftConfig("/s", graphEf = 0)).isRight)
-    // entry selection pairs with the graph mode
-    val Left(e4) = GraftConfig.validated(GraftConfig("/s",
-      graphEntryIvfDir = Some("/i"))): @unchecked
-    assert(e4.exists(_.contains("requires")), e4)
-    assert(GraftConfig.validated(GraftConfig("/s",
-      graphIndexDir = Some("/g"), graphEntryIvfDir = Some("/i"))).isRight)
-    // the default shortlist width
-    val c = GraftConfig.orThrow(GraftConfig.validated(
-      GraftConfig("/s", graphIndexDir = Some("/g"))))
-    assert(c.graphEf == 20)
-    // resolve: explicit walk-knob flags without the mode are rejected,
-    // ambient env garbage is not
-    val Left(e5) = GraftConfig.resolve(Map("graph-ef" -> "8"),
-      Map.empty, GraftConfig.Command.Serve): @unchecked
-    assert(e5.exists(_.contains("--graph-ef requires --graph-index")), e5)
-    assert(GraftConfig.resolve(Map("store" -> "/s"),
-      Map("GRAFT_GRAPH_EF" -> "junk-ignored-out-of-mode", // parsed only in scope
-        "GRAFT_STORE_DIR" -> "/s"),
-      GraftConfig.Command.Search).isRight)
-    // graph flags are serve-scoped: rejected for search
-    val Left(e6) = GraftConfig.resolve(
-      Map("store" -> "/s", "graph-index" -> "/g"),
-      Map.empty, GraftConfig.Command.Search): @unchecked
-    assert(e6.exists(_.contains("--graph-index is not a search option")), e6)
-    // env-layered serve config resolves the graph mode end-to-end
-    val Right(r) = GraftConfig.resolve(Map.empty,
-      Map("GRAFT_STORE_DIR" -> "/s", "GRAFT_GRAPH_INDEX_DIR" -> "/g",
-        "GRAFT_GRAPH_EF" -> "40"),
-      GraftConfig.Command.Serve): @unchecked
-    assert(r.graphIndexDir.contains("/g") && r.graphEf == 40)
-  }
-
   test("sync matrix: PAGES_DIR without CHECKPOINT_DIR refuses; with it, validates") {
     val Left(errs) = GraftConfig.validated(
       GraftConfig("/s", pagesDir = Some("/p"))): @unchecked

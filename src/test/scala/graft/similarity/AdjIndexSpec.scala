@@ -28,13 +28,6 @@ class AdjIndexSpec extends SparkTestBase {
   private lazy val qv = emb.filter($"vec_id" === 7).select($"embedding")
     .head().getSeq[Float](0).toArray
 
-  test("bucketsFor: the ~50k rows/bucket density dial, clamped to [16, 4096]") {
-    assert(Knn.bucketsFor(1000L) == 16)
-    // the r15 2M-edge point: 2M nodes x (deg 10 + self) = 22M rows -> 440
-    assert(Knn.bucketsFor(22000000L) == 440)
-    assert(Knn.bucketsFor(1000000000L) == 4096)
-  }
-
   test("fp32 index walk is row-identical to graphBeamSearch; fp16 matches the rounded corpus walk") {
     val d32 = java.nio.file.Files.createTempDirectory("adj32").toString + "/i"
     val d16 = java.nio.file.Files.createTempDirectory("adj16").toString + "/i"
@@ -210,7 +203,8 @@ class AdjIndexSpec extends SparkTestBase {
       val e2 = edges.filter($"id_a" >= 250 || $"id_b" >= 250)
       Knn.buildAdjacencyIndex(e1, emb.filter($"vec_id" < 250),
         "embedding", "vec_id", half, buckets = 8)
-      val handle = Knn.AdjIndex.reloading(spark, half)
+      val handle = graft.sync.Reloading(spark, half, Seq("meta"))(
+        Knn.AdjIndex.load(spark, half))
       Knn.appendAdjacencyIndex(e2, emb, "embedding", "vec_id", half,
         newNodes = Some(emb.filter($"vec_id" >= 250).select($"vec_id")))
       Knn.buildAdjacencyIndex(edges, emb, "embedding", "vec_id", full,
@@ -269,13 +263,13 @@ class AdjIndexSpec extends SparkTestBase {
     }
   }
 
-  test("negative node ids: probe buckets match the writer's pmod — self-rows refine, resident serving finds them") {
+  test("negative node ids: probe buckets match the writer's pmod — frontier reads and the walk find them") {
     val dir = java.nio.file.Files.createTempDirectory("adjneg").toString + "/i"
     try {
       // ids straddling zero: the layout partitions by pmod (always
       // non-negative) while a JVM % maps a negative id to a negative
       // bucket literal — the old probe silently read the wrong bucket
-      // and DROPPED negative ids from the refine
+      // and DROPPED negative ids from the read
       val c = emb.filter($"vec_id" < 40)
         .select(($"vec_id" - 20L).as("vec_id"), $"embedding")
         .localCheckpoint()
@@ -289,15 +283,16 @@ class AdjIndexSpec extends SparkTestBase {
         "vec_id", dir, buckets = 8, fp16 = false)
       val qv = c.filter($"vec_id" === -13L).select($"embedding")
         .head().getSeq[Float](0).toArray
-      val scored = Knn.AdjIndex.load(spark, dir)
-        .selfScores(Seq(-13L, -1L, 7L), qv).collect()
-      assert(scored.map(_.getLong(0)).toSet == Set(-13L, -1L, 7L),
-        scored.toSeq.toString)
-      // end-to-end: the resident mode's one job is exactly that refine —
-      // the query's own (negative) id must come back at distance ~0
-      Knn.buildGraphCodes(spark, dir, codec = "int8")
-      val got = Knn.ResidentGraphIndex.load(spark, dir, ef = 40)
-        .servingTopK(qv, 5, 0, None)
+      val idx = Knn.AdjIndex.load(spark, dir)
+      // every src's self-row (src = dst) comes back from its bucket
+      val selfRows = idx.frontierFrame(Seq(-13L, -1L, 7L), qv).collect()
+        .map(_.getLong(0)).toSet
+      assert(Set(-13L, -1L, 7L).subsetOf(selfRows), selfRows.toString)
+      // end-to-end: a walk entered at the query's own (negative) id reads
+      // its self-row from the pmod bucket, so that id comes back first
+      // at distance ~0 (the wrong bucket would leave the entry unscored)
+      val got = idx.search(qv, k = 5, ef = 40, hops = 3, entryId = -13L)
+        .collect()
       assert(got.head.getLong(0) == -13L && got.head.getDouble(1) < 1e-6,
         got.toSeq.toString)
     } finally rmTree(dir)

@@ -135,234 +135,6 @@ class CorpusRefreshSpec extends SparkTestBase {
     } finally { Seq(store, ivf).foreach(rmrf) }
   }
 
-  test("refresh drives the flat graph + code sidecar: resident serving follows the delta") {
-    val store = tmp("cr6-store"); val g = tmp("cr6-graph") + "/i"
-    try {
-      HighlightStore.writeAtomic(snapA, store)
-      val edges = graft.similarity.Knn.knnGraph(snapA, "embedding",
-        "doc_id", topK = 5).select($"id_a", $"id_b")
-      graft.similarity.Knn.buildAdjacencyIndex(edges, snapA, "embedding",
-        "doc_id", g, buckets = 4)
-      graft.similarity.Knn.buildGraphCodes(spark, g, codec = "int8")
-      // ivf alongside, as `Cli serve --graph-index --graph-entry-ivf`
-      // deploys it: vec() collides mod 13, so this corpus is
-      // exact-duplicate clusters with no inter-cluster gradient, and
-      // entry selection — not the walk — must land queries in their own
-      // cluster; the refresh maintains both artifacts in one pass
-      val ivf = tmp("cr6-ivf") + "/i"
-      graft.similarity.Knn.ivfBuildIndex(snapA, "embedding", "doc_id",
-        ivf, k = 8, iters = 2, trainFilter = col("doc_id") % 5 === 0,
-        fp16 = true)
-      CorpusRefresh.refresh(spark, snapB, "text", "doc_id", store,
-        ivfIndexDir = Some(ivf), graphIndexDir = Some(g)).unpersist()
-      // the sidecar was re-covered in the SAME pass: the resident load
-      // (which refuses stale sidecars) serves the refreshed corpus —
-      // removed doc gone, added doc findable at its own query, changed
-      // doc serving its NEW vector
-      val idx = graft.similarity.Knn.ResidentGraphIndex.load(spark, g,
-        Some(ivf), ef = 16)
-      // 62's cluster holds exact duplicates (10/36/49/62 tie at 0.0 and
-      // break by id) — the add is served if it appears at distance ~0
-      val got62 = idx.servingTopK(vec(62L, 0), 5, 0, None)
-      assert(got62.exists(r => r.getLong(0) == 62L && r.getDouble(1) < 1e-3),
-        got62.toSeq.toString)
-      val got23 = idx.servingTopK(vec(23L, 5), 5, 0, None)
-      assert(got23.exists(r => r.getLong(0) == 23L && r.getDouble(1) < 1e-3),
-        got23.toSeq.toString)
-      val got7 = idx.servingTopK(vec(7L, 0), 10, 0, None)
-      assert(got7.nonEmpty && got7.forall(_.getLong(0) != 7L))
-      // meta replay: the re-covered sidecar kept its codec
-      assert(graft.similarity.Knn.graphCodesMeta(spark, g)
-        .getAs[String]("codec") == "int8")
-    } finally { Seq(store, g).foreach(rmrf) }
-  }
-
-  test("sharded refresh: the delta routes by the build's pmod rule; untouched shards don't churn") {
-    val store = tmp("cr9-store"); val root = tmp("cr9-shards")
-    try {
-      HighlightStore.writeAtomic(snapA, store)
-      // the one-call sharded deployment (adjacency + int8 sidecar +
-      // entry IVF per pmod(doc_id, 2) shard)
-      val dirs = graft.similarity.Knn.ShardedResidentIndex.build(snapA,
-        "embedding", "doc_id", root, shards = 2, topK = 5)
-      CorpusRefresh.refresh(spark, snapB, "text", "doc_id", store,
-        graphShardDirs = dirs).unpersist()
-      // the gateway (which refuses stale sidecars per shard) serves the
-      // refreshed corpus: add 62 (shard 0) findable at ~0, change 23
-      // (shard 1) serves its NEW vector, removal 7 (shard 1) gone
-      val idx = graft.similarity.Knn.ShardedResidentIndex.load(spark, dirs,
-        ef = 16)
-      val got62 = idx.servingTopK(vec(62L, 0), 5, 0, None)
-      assert(got62.exists(r => r.getLong(0) == 62L && r.getDouble(1) < 1e-3),
-        got62.toSeq.toString)
-      val got23 = idx.servingTopK(vec(23L, 5), 5, 0, None)
-      assert(got23.exists(r => r.getLong(0) == 23L && r.getDouble(1) < 1e-3),
-        got23.toSeq.toString)
-      val got7 = idx.servingTopK(vec(7L, 0), 20, 0, None)
-      assert(got7.nonEmpty && got7.forall(_.getLong(0) != 7L))
-      // a delta touching ONLY shard 0 (doc 60 changes) leaves every
-      // shard-1 pointer alone: no tombstone churn, no sidecar segment,
-      // no entry-IVF segment — the gateway fingerprint only moves
-      // because shard 0 moved
-      val s1 = dirs(1)._1; val s1ivf = dirs(1)._2.get
-      def pointers(): (Option[Seq[String]], Option[Seq[String]],
-          Option[Seq[String]]) =
-        (SegmentedIndex.resolve(spark, s1),
-          SegmentedIndex.resolve(spark, s"$s1/pqcodes"),
-          SegmentedIndex.resolve(spark, s1ivf))
-      val before = pointers()
-      val snapC = snap((0L until 60L).filterNot(_ == 7L) ++ (60L to 64L),
-        Set(11L, 23L, 60L))
-      val d2 = CorpusRefresh.refresh(spark, snapC, "text", "doc_id", store,
-        graphShardDirs = dirs)
-      assert(d2.as[(Long, String)].collect().toSet ==
-        Set((60L, "changed")))
-      d2.unpersist()
-      assert(pointers() == before)
-      // ...and shard 0 serves the change through the reloaded gateway
-      val idx2 = graft.similarity.Knn.ShardedResidentIndex.load(spark, dirs,
-        ef = 16)
-      val got60 = idx2.servingTopK(vec(60L, 5), 5, 0, None)
-      assert(got60.exists(r => r.getLong(0) == 60L && r.getDouble(1) < 1e-3),
-        got60.toSeq.toString)
-    } finally { Seq(store, root).foreach(rmrf) }
-  }
-
-  test("sidecar re-cover is O(delta): one new segment of exactly the upsert rows; append == full rebuild byte-for-byte") {
-    val store = tmp("cr7-store"); val g = tmp("cr7-graph") + "/i"
-    try {
-      HighlightStore.writeAtomic(snapA, store)
-      val edges = graft.similarity.Knn.knnGraph(snapA, "embedding",
-        "doc_id", topK = 5).select($"id_a", $"id_b")
-      graft.similarity.Knn.buildAdjacencyIndex(edges, snapA, "embedding",
-        "doc_id", g, buckets = 4)
-      graft.similarity.Knn.buildGraphCodes(spark, g, codec = "int8")
-      val before = SegmentedIndex.resolve(spark, s"$g/pqcodes").get
-      assert(before.size == 1)
-      CorpusRefresh.refresh(spark, snapB, "text", "doc_id", store,
-        graphIndexDir = Some(g)).unpersist()
-      // O(delta): the base segment is UNTOUCHED, exactly one appended
-      // segment holding exactly the upsert rows (2 changed + 5 added) —
-      // never a corpus replay (the r13 re-cover replayed the full build
-      // on every delta)
-      val after = SegmentedIndex.resolve(spark, s"$g/pqcodes").get
-      assert(after.size == 2 && after.head == before.head, after.toString)
-      assert(spark.read.parquet(s"$g/pqcodes/${after(1)}/codes")
-        .count() == 7)
-      // append == rebuild: the O(delta) codes are byte-identical (over
-      // the LIVE set — stale rows for removed/changed ids are never
-      // consulted and compact away) to a full replay over the refreshed
-      // adjacency, so resident serving is row-identical too
-      def liveCodes(): Map[Long, Seq[Byte]] = {
-        val live = graft.similarity.Knn.AdjIndex.load(spark, g).relation
-          .filter($"src" === $"dst").select($"src").as[Long].collect().toSet
-        SegmentedIndex.resolve(spark, s"$g/pqcodes").get
-          .foldLeft(Map.empty[Long, Seq[Byte]]) { (m, seg) =>
-            m ++ spark.read.parquet(s"$g/pqcodes/$seg/codes").collect()
-              .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq)
-          }.filter { case (id, _) => live(id) }
-      }
-      val qv = vec(23L, 5)
-      val servedAppend = graft.similarity.Knn.ResidentGraphIndex
-        .load(spark, g).servingTopK(qv, 10, 0, None).toSeq
-      val codesAppend = liveCodes()
-      graft.similarity.Knn.rebuildGraphCodes(spark, g)
-      // the rebuild COMPACTED: one fresh segment behind the same pointer
-      assert(SegmentedIndex.resolve(spark, s"$g/pqcodes").get.size == 1)
-      assert(liveCodes() == codesAppend)
-      assert(graft.similarity.Knn.ResidentGraphIndex.load(spark, g)
-        .servingTopK(qv, 10, 0, None).toSeq == servedAppend)
-    } finally { Seq(store, g).foreach(rmrf) }
-  }
-
-  test("pq sidecar: in-distribution churn appends; the drift trigger retrains; fan-out compacts") {
-    val store = tmp("cr8-store"); val g = tmp("cr8-graph") + "/i"
-    try {
-      HighlightStore.writeAtomic(snapA, store)
-      val edges = graft.similarity.Knn.knnGraph(snapA, "embedding",
-        "doc_id", topK = 5).select($"id_a", $"id_b")
-      graft.similarity.Knn.buildAdjacencyIndex(edges, snapA, "embedding",
-        "doc_id", g, buckets = 4)
-      graft.similarity.Knn.buildGraphCodes(spark, g, m = 2, ksub = 4)
-      // in-distribution delta (same vec() family): encodes against the
-      // FROZEN base codebooks — appended, not retrained
-      CorpusRefresh.refresh(spark, snapB, "text", "doc_id", store,
-        graphIndexDir = Some(g)).unpersist()
-      assert(SegmentedIndex.resolve(spark, s"$g/pqcodes").get.size == 2)
-      // drift trigger plumbing: a ratio below any batch's drift forces
-      // the retrain — pointer collapses to one fresh segment
-      val snapC = snap((0L until 60L).filterNot(_ == 7L) ++ (60L to 64L),
-        Set(11L, 23L, 40L))
-      CorpusRefresh.refresh(spark, snapC, "text", "doc_id", store,
-        graphIndexDir = Some(g), codesDriftRatio = -1.0).unpersist()
-      assert(SegmentedIndex.resolve(spark, s"$g/pqcodes").get.size == 1)
-      // resident serving follows throughout: the load's coverage check
-      // (refuses any live node without a code) passing after the
-      // retrain proves the fresh segment covers snapC's live set, and
-      // the codec survived the replay. (No walk-reaches-40 assertion:
-      // this corpus is exact-duplicate clusters — the cr6 test's
-      // documented degeneracy — where navigation needs ivf entries.)
-      assert(graft.similarity.Knn.graphCodesMeta(spark, g)
-        .getAs[String]("codec") == "pq")
-      assert(graft.similarity.Knn.ResidentGraphIndex.load(spark, g)
-        .servingTopK(vec(40L, 5), 5, 0, None).length == 5)
-    } finally { Seq(store, g).foreach(rmrf) }
-  }
-
-  test("a pre-segmentation flat sidecar is adopted: refresh migrates it in place, then maintains it O(delta)") {
-    val store = tmp("cr9-store"); val g = tmp("cr9-graph") + "/i"
-    try {
-      HighlightStore.writeAtomic(snapA, store)
-      val edges = graft.similarity.Knn.knnGraph(snapA, "embedding",
-        "doc_id", topK = 5).select($"id_a", $"id_b")
-      graft.similarity.Knn.buildAdjacencyIndex(edges, snapA, "embedding",
-        "doc_id", g, buckets = 4)
-      graft.similarity.Knn.buildGraphCodes(spark, g, m = 2, ksub = 4)
-      // devolve to the r13 flat layout the old writer produced: contents
-      // up one level, no CURRENT pointer, meta WITHOUT the train_err
-      // field (the flat writer never recorded it)
-      val root = s"$g/pqcodes"
-      val seg = SegmentedIndex.resolve(spark, root).get.head
-      val flatMeta = spark.read.parquet(s"$root/$seg/meta")
-        .drop("train_err").collect().head
-      spark.createDataFrame(java.util.List.of(flatMeta),
-          flatMeta.schema)
-        .coalesce(1).write.parquet(s"$root/meta")
-      import java.nio.file.{Files, Paths}
-      Seq("codes", "codebooks").foreach { d =>
-        Files.move(Paths.get(s"$root/$seg/$d"), Paths.get(s"$root/$d")) }
-      rmrf(s"$root/$seg"); Files.delete(Paths.get(s"$root/CURRENT"))
-      assert(graft.similarity.Knn.legacyFlatGraphCodes(g))
-      assert(!graft.similarity.Knn.graphCodesReady(g))
-      // the resident load refuses LOUDLY, naming the adoption path
-      val e = intercept[IllegalArgumentException] {
-        graft.similarity.Knn.ResidentGraphIndex.load(spark, g)
-      }
-      assert(e.getMessage.contains("migrateGraphCodes"), e.getMessage)
-      // a refresh ADOPTS the flat sidecar instead of silently dropping
-      // its maintenance: migrated to one segment + the delta appended
-      // O(delta) against the migrated (frozen) codebooks
-      CorpusRefresh.refresh(spark, snapB, "text", "doc_id", store,
-        graphIndexDir = Some(g)).unpersist()
-      val segs = SegmentedIndex.resolve(spark, root).get
-      assert(segs.size == 2, segs.toString)
-      assert(spark.read.parquet(s"$root/${segs(1)}/codes").count() == 7)
-      // the migrated meta carries a MEASURED train-time anchor (the flat
-      // layout had none), so the drift ratio has a denominator
-      assert(graft.similarity.Knn.graphCodesMeta(spark, g)
-        .getAs[Double]("train_err") > 0.0)
-      // flat dirs are swept by the first segmented commit
-      assert(!new java.io.File(s"$root/codes").exists())
-      assert(!new java.io.File(s"$root/codebooks").exists())
-      // resident serving works off the adopted sidecar (coverage check
-      // passes over migrated base + appended delta)
-      assert(graft.similarity.Knn.ResidentGraphIndex.load(spark, g)
-        .servingTopK(vec(40L, 0), 5, 0, None).length == 5)
-      // idempotent: nothing left to migrate
-      assert(!graft.similarity.Knn.migrateGraphCodes(spark, g))
-    } finally { Seq(store, g).foreach(rmrf) }
-  }
-
   test("churn: the compaction trigger keeps repeated refreshes' segment lists bounded") {
     val store = tmp("cr3-store"); val lex = tmp("cr3-lex"); val ivf = tmp("cr3-ivf")
     val lexRef = tmp("cr3-lexref"); val ivfRef = tmp("cr3-ivfref")
