@@ -230,7 +230,7 @@ class CliSpec extends SparkTestBase {
     assert(cq == 2 && errQ.contains("--pq-index is not a serve option"), errQ)
   }
 
-  test("index --type lexical: build → serve → refresh round-trip") {
+  test("index --type lexical: refresh → build → serve round-trip") {
     val dir = Files.createTempDirectory("graft-cli-lex").toString
     val pages1 = s"$dir/pages1"; val pages2 = s"$dir/pages2"
     val store = s"$dir/store"; val ckpt = s"$dir/ckpt"
@@ -259,17 +259,7 @@ class CliSpec extends SparkTestBase {
         "--type", t), spark))._1 == 2, t)
     }
 
-    // lexical index via the CLI serves the synced corpus
-    assert(capture(Cli.run(Array("index", "--store", store, "--out", lexi,
-      "--type", "lexical", "--buckets", "4"), spark))._1 == 0)
-    def lexHits(term: String) = graft.text.TextRank.LexIndex.load(spark, lexi)
-      .search(Seq(term), k = 3)
-      .select(org.apache.spark.sql.functions.col("id"))
-      .collect().map(_.getString(0)).toSeq
-    assert(lexHits("gardening") == Seq("5"))
-
-    // `refresh --lex-index` maintains it: id 5 removed upstream, id 2
-    // edited, id 9 added
+    // refresh: id 5 removed upstream, id 2 edited, id 9 added
     val texts2 = texts.filterNot(_._1 == "5").map {
       case ("2", _) => "2" -> "spark shuffles edited zebra content"
       case other => other
@@ -278,12 +268,19 @@ class CliSpec extends SparkTestBase {
       Files.writeString(java.nio.file.Paths.get(pages2, f"page$i%02d.json"),
         pageJson(id, tx)) }
     val (cr, outr) = capture(Cli.run(Array("refresh", "--pages-dir", pages2,
-      "--store", store, "--ckpt", ckpt, "--lex-index", lexi), spark))
+      "--store", store, "--ckpt", ckpt), spark))
     assert(cr == 0, outr)
     assert(outr.contains("\"added\":1") && outr.contains("\"changed\":1")
       && outr.contains("\"removed\":1"), outr)
-    assert(lexHits("quokka") == Seq("9"))
-    assert(lexHits("gardening").isEmpty)
+
+    // lexical index via the CLI serves the refreshed corpus
+    assert(capture(Cli.run(Array("index", "--store", store, "--out", lexi,
+      "--type", "lexical", "--buckets", "4"), spark))._1 == 0)
+    val lexHits = graft.text.TextRank.LexIndex.load(spark, lexi)
+      .search(Seq("quokka"), k = 3)
+      .select(org.apache.spark.sql.functions.col("id"))
+      .collect().map(_.getString(0)).toSeq
+    assert(lexHits == Seq("9"), lexHits)
   }
 
   test("export writes shard dirs and prints the manifest; bad flags fail fast") {
