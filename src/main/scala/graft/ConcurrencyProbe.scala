@@ -8,18 +8,16 @@ import org.apache.spark.sql.functions._
 
 /** Serving latency under CONCURRENT load — the reference's gate is
   * P95 < 500 ms for `POST /search` k=10 at 20 concurrent users
-  * (BASELINE.md). [[LatencyProbe]] measures the sequential floor; this
-  * probe runs N user threads against one shared SparkSession with the
-  * FAIR scheduler, one pool per user, so no single request can convoy
-  * the rest behind a FIFO queue.
+  * (BASELINE.md). This probe runs N user threads against one shared
+  * SparkSession with the FAIR scheduler, one pool per user, so no
+  * single request can convoy the rest behind a FIFO queue.
+  * `CONC_MODE=brute CONC_USERS=1 CONC_THINK_MS=0` measures the
+  * sequential floor: one user, back-to-back requests.
   *
-  * Two modes over the same 200 k × 3072-dim fp16 corpus:
+  * Modes over the same 200 k × 3072-dim fp16 corpus:
   *
-  *  - `brute`: every request scores the full corpus through the fused
-  *    kernel (the LatencyProbe plan). Each request costs ~5.5 core-sec of
-  *    distance math, so 32 cores saturate near 6 qps — 20 closed-loop
-  *    users push per-request latency to seconds REGARDLESS of scheduling.
-  *    This mode documents graceful saturation, not the gate.
+  *  - `dense`: the default dense serving mode, IVFADC codes + exact
+  *    fp16 refine through [[graft.similarity.Knn.IvfIndex.asDense]].
   *  - `ivf`: requests go through the resident probe that `serve`
   *    runs for a filterless request,
   *    [[graft.similarity.Knn.IvfIndex.servingTopK]] — the centroid
@@ -28,6 +26,16 @@ import org.apache.spark.sql.functions._
   *    `nprobe/cells` of the corpus over pinned cell blocks. This is
   *    the concurrency dial: per-request work drops ~cells/nprobe×, so
   *    the same 20 users sit far below saturation.
+  *  - `filtered` and `routed`: attribute-filtered requests through
+  *    [[graft.similarity.Knn.IvfIndex.servingTopKRouted]], the call the
+  *    gateway makes for a filtered request, at a plentiful (`filtered`)
+  *    and a narrow (`routed`) predicate.
+  *  - `brute`: every request runs the gateway's store path through
+  *    [[graft.serve.SearchGateway]]: embed → full fp16 store scan →
+  *    decode. Each request costs ~5.5 core-sec of
+  *    distance math, so 32 cores saturate near 6 qps — 20 closed-loop
+  *    users push per-request latency to seconds REGARDLESS of scheduling.
+  *    This mode documents graceful saturation, not the gate.
   *
   * The load shape replicates the reference's locust run exactly
   * (locustfile.py:29-33,58, Makefile:38-41): 20 users spawned at 2/s,
@@ -38,10 +46,9 @@ import org.apache.spark.sql.functions._
   * gates.
   *
   * env: CONC_VECS (default 200000), CONC_USERS (default 20),
-  * CONC_REQS per user (default 10), CONC_MODE (`dense` — the default
-  * serving mode, PQ codes + fp16 cosine refine; `ivf`, `brute`,
-  * `filtered`, `routed`, `hybrid`, `lex`, or `both` =
-  * dense + ivf + hybrid + brute), CONC_CELLS
+  * CONC_REQS per user (default 10), CONC_MODE (comma-separated list of
+  * `dense`, `ivf`, `filtered`, `routed`, `brute`, or `both` =
+  * dense + ivf + brute; default `both`), CONC_CELLS
   * (default 64), CONC_NPROBE (default 4), CONC_DENSE_REFINE (default 64),
   * CONC_THINK_MS (mean think time; default 1000 = locust's
   * between(0.5, 1.5); 0 = closed-loop stress), CONC_SPAWN_RATE
@@ -70,12 +77,12 @@ object ConcurrencyProbe {
     // JVM, one VM phase, so a full serving-menu re-gate is ONE
     // same-phase session instead of per-mode runs stitched across
     // phases (the r10/r11 swing lesson applied to the gate table);
-    // `both` remains the dense+ivf+hybrid+brute shorthand
+    // `both` remains the dense+ivf+brute shorthand
     val modes = sys.env.getOrElse("CONC_MODE", "both")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     def mode(m: String): Boolean = modes.contains(m) ||
       (modes.contains("both") &&
-        Set("dense", "ivf", "hybrid", "brute").contains(m))
+        Set("dense", "ivf", "brute").contains(m))
     // CONC_FIXTURE selects the corpus SHAPE the menu is priced on:
     // `uniform` (Fp16Corpus — quasi-uniform on the sphere, the
     // distance-concentration worst case where graph navigation has no
@@ -137,16 +144,6 @@ object ConcurrencyProbe {
           require(dense.servingTopK(qv, 10, nprobe, None).length == 10)
       }
     }
-    // the lexical leg's scoring agg has one real shuffle; at serving row
-    // counts its reduce stage is pure scheduling overhead, so the modes
-    // that run the sparse leg drop shuffle parallelism to a few tasks
-    // (runtime conf; the dense IvfIndex plan has no shuffle and is
-    // unaffected). AQE stays OFF: its per-stage job materialization
-    // DOUBLES the per-request job count — measured 270 ms vs 180 ms for
-    // the identical search — and job count is the serialized resource
-    // under concurrency
-    if (mode("hybrid") || mode("lex"))
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
     val corpus =
       if (fixture == "manifold") graft.fixtures.ManifoldCorpus.prepared(spark, n)
       else graft.fixtures.Fp16Corpus.prepared(spark, "/root/testdata/sf0.1", n)
@@ -193,14 +190,16 @@ object ConcurrencyProbe {
 
     if (mode("filtered")) {
       // attribute-filtered serving (q132's shape under the gate): the
-      // cells carry a label attr and every request filters on it via
-      // servingTopK's widening ladder. At CONC_FILTER_MOD=10 the predicate keeps ~10%
-      // of each probed cell — selective enough that post-hoc filtering
-      // of 10 winners would starve, dense enough that the adaptive
-      // probe almost never widens: the request stays ONE pruned job
-      // with the predicate evaluated inside the scan, so the p95
-      // should sit on `ivf` mode's, not above it. Raise the modulus to
-      // measure the widening ladder's cost.
+      // cells carry a label attr and every request filters on it through
+      // servingTopKRouted, the gateway's filtered call. The equality
+      // prices from the build-time attr-stats sidecar (no count job);
+      // at CONC_FILTER_MOD=10 the predicate keeps ~10% of each probed
+      // cell — selective enough that post-hoc filtering of 10 winners
+      // would starve, dense enough that the router takes the pruned
+      // probe and it almost never widens: the request stays ONE pruned
+      // job with the predicate evaluated inside the scan, so the p95
+      // should sit on `ivf` mode's, not above it. `routed` prices the
+      // narrow-predicate end.
       val cellsK = sys.env.getOrElse("CONC_CELLS", "64").toInt
       val nprobe = sys.env.getOrElse("CONC_NPROBE", "4").toInt
       val fmod = sys.env.getOrElse("CONC_FILTER_MOD", "10").toLong
@@ -219,20 +218,19 @@ object ConcurrencyProbe {
       run(spark, s"filtered(cells=$cellsK,nprobe=$nprobe,mod=$fmod)", n,
         users, reqsPerUser) { seed =>
           val qv = qvec(seed)
-          index.servingTopK(qv, k = 10, nprobe = nprobe,
-            Some(col("label") === seed % fmod))
+          index.servingTopKRouted(qv, k = 10, nprobe = nprobe,
+            col("label") === seed % fmod)
       }
     }
 
     if (mode("routed")) {
-      // the NARROW-predicate case `filtered` mode's comment prices by
-      // implication (raise the modulus → the widening ladder): a
-      // predicate matching ~n/nmod ≈ 10 rows starves every probe, so
-      // servingTopK's ladder burns log₂(cells) widening jobs per
-      // request to arrive at the exhaustive scan. servingTopKRouted — the
-      // gateway's filtered default — measures the match count (one
-      // column-pruned job) and routes STRAIGHT to the pruned scan: two
-      // jobs flat. Both run here same-phase, so the ladder tax is one
+      // the NARROW-predicate case: a predicate matching ~n/nmod ≈ 10
+      // rows starves every probe, so servingTopK's unpriced ladder
+      // (`routed_ladder`, kept only as the named comparison) burns
+      // log₂(cells) widening jobs per request to arrive at the
+      // exhaustive scan. servingTopKRouted — the gateway's filtered
+      // call — prices the match count and routes STRAIGHT to the pruned
+      // scan. Both run here same-phase, so the ladder tax is one
       // subtraction.
       val cellsK = sys.env.getOrElse("CONC_CELLS", "64").toInt
       val nprobe = sys.env.getOrElse("CONC_NPROBE", "4").toInt
@@ -275,102 +273,6 @@ object ConcurrencyProbe {
           val qv = qvec(seed)
           index.servingTopKRouted(qv, k = 10, nprobe = nprobe,
             col("nlabel").isin(seed % nmod))
-      }
-    }
-
-    if (mode("hybrid")) {
-      // hybrid serving shape: IVF dense leg (one pruned job) + bucket-
-      // pruned lexical-index BM25 leg (one pruned job) + DRIVER-side RRF
-      // fusion (rrfFuseLocal — two 10-row lists, no third job). The
-      // per-request job count is the resource that bounds concurrent
-      // serving (the ~50 ms serialized driver planning path), so hybrid
-      // costs ~2× ivf's planning and its data work stays pruned on both
-      // legs — the gate shape with the sparse leg turned on.
-      val cellsK = sys.env.getOrElse("CONC_CELLS", "64").toInt
-      val nprobe = sys.env.getOrElse("CONC_NPROBE", "4").toInt
-      val indexDir = graft.fixtures.Fp16Corpus.workRoot +
-        s"/ivfserve3072$ftag-n$n-c$cellsK"
-      if (!graft.similarity.Knn.ivfIndexReady(indexDir)) {
-        val fp32 = corpus.select(col("vec_id").as("id"),
-          graft.functions.fp16_decode(col("emb16")).as("embedding"))
-        graft.similarity.Knn.ivfBuildIndex(fp32, "embedding", "id", indexDir,
-          k = cellsK, iters = 2,
-          trainFilter = col("id") % (n / 500).max(1L) === 0, fp16 = true)
-      }
-      val index = graft.similarity.Knn.IvfIndex.load(spark, indexDir)
-      val docs = GraftSession.table(spark, "/root/testdata/sf0.1", "documents")
-      val lexDir = graft.fixtures.Fp16Corpus.workRoot + "/lexserve-sf01"
-      if (!new java.io.File(s"$lexDir/CURRENT").isFile)
-        graft.text.TextRank.buildLexicalIndex(docs, "text", "doc_id", lexDir)
-      // the load-once handle, like IvfIndex: segment list + corpus stats
-      // resolve at load (stats are plan literals), postings relation held
-      // so no per-request file listing — searchLexicalIndex's per-call
-      // re-resolution costs seconds under concurrency
-      val lexIndex = graft.text.TextRank.LexIndex.load(spark, lexDir)
-      // rotate realistic multi-term queries drawn from the corpus itself
-      val termPool = docs.limit(50).select(col("text")).collect()
-        .flatMap(_.getString(0).split(" ").take(6)).distinct.toSeq
-      // steady-state df cache: every pool term's document frequency is
-      // resolved BEFORE the measured run (a production box warms common
-      // terms at deploy) — otherwise the first request per term pays the
-      // one-time df job and those land exactly in the measured tail
-      termPool.grouped(3).foreach(g => lexIndex.search(g.distinct, 1).collect())
-      // default: two CONCURRENT single-leg jobs (critical path =
-      // max(dense, lex)). CONC_HYBRID=fused drives the single-planned-job
-      // HybridIndex plan instead — measured SLOWER here (2026-08-14,
-      // same-day: legs p95 492 ms vs fused 822 ms at nprobe=2, ivf-alone
-      // 543 ms): the fused job's stage barriers (rank windows + fusion
-      // join serialize after the leg scans) cost more than the one saved
-      // planning pass, because FAIR-scheduled independent jobs already
-      // overlap at stage granularity. Kept as the option for deployments
-      // whose bottleneck really is planned-jobs-per-request.
-      if (!sys.env.get("CONC_HYBRID").contains("fused")) {
-        val legPool = Executors.newCachedThreadPool()
-        run(spark, s"hybrid(cells=$cellsK,nprobe=$nprobe,legs)", n, users,
-          reqsPerUser) { seed =>
-            val qv = qvec(seed)
-            val terms = (0 until 3)
-              .map(i => termPool(((seed + i * 7) % termPool.size).toInt)).distinct
-            val pool = spark.sparkContext.getLocalProperty("spark.scheduler.pool")
-            val lexFut = legPool.submit(new java.util.concurrent.Callable[Seq[Long]] {
-              def call(): Seq[Long] = {
-                spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-                lexIndex.search(terms, k = 10)
-                  .select(col("id")).collect().map(_.getLong(0)).toSeq
-              }
-            })
-            val dense = index.search(qv, k = 10, nprobe = nprobe)
-              .select(col("id")).collect().map(_.getLong(0)).toSeq
-            val fused = graft.text.TextRank.rrfFuseLocal(dense, lexFut.get(), 10)
-            require(fused.nonEmpty)
-        }
-        legPool.shutdown()
-      } else {
-        val hybrid = new graft.search.HybridIndex(index, lexIndex)
-        run(spark, s"hybrid(cells=$cellsK,nprobe=$nprobe,fused)", n, users,
-          reqsPerUser) { seed =>
-            val qv = qvec(seed)
-            val terms = (0 until 3)
-              .map(i => termPool(((seed + i * 7) % termPool.size).toInt)).distinct
-            require(hybrid.search(qv, terms, k = 10, nprobe = nprobe)
-              .collect().nonEmpty)
-        }
-      }
-    }
-
-    if (mode("lex")) {
-      // diagnosis mode: the sparse leg alone, for attributing hybrid cost
-      val docs = GraftSession.table(spark, "/root/testdata/sf0.1", "documents")
-      val lexDir = graft.fixtures.Fp16Corpus.workRoot + "/lexserve-sf01"
-      if (!new java.io.File(s"$lexDir/CURRENT").isFile)
-        graft.text.TextRank.buildLexicalIndex(docs, "text", "doc_id", lexDir)
-      val lexIndex = graft.text.TextRank.LexIndex.load(spark, lexDir)
-      val termPool = docs.limit(50).select(col("text")).collect()
-        .flatMap(_.getString(0).split(" ").take(6)).distinct.toSeq
-      run(spark, "lex", n, users, reqsPerUser) { seed =>
-        val terms = (0 until 3)
-          .map(i => termPool(((seed + i * 7) % termPool.size).toInt)).distinct
-        lexIndex.search(terms, k = 10).collect()
       }
     }
 

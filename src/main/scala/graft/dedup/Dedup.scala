@@ -505,9 +505,9 @@ object Dedup {
   /** LSH-candidate generation + EXACT Jaccard verification — the dedup
     * shape that survives 100 TB end-to-end. [[jaccardPairs]] verifies
     * every pair sharing ANY shingle: on a corpus where each document has
-    * ~D near-copies that is Θ(shingles·D²) candidate rows (measured in
-    * `graft.Soak`: 100 k docs in 20-copy cliques → ~140 M candidates,
-    * ~1 M true pairs). Banding first collapses each clique to its
+    * ~D near-copies that is Θ(shingles·D²) candidate rows (measured at
+    * 100 k docs in 20-copy cliques: ~140 M candidates, ~1 M true pairs;
+    * SCALE.md). Banding first collapses each clique to its
     * signature-collision pairs — output-sensitive in the number of NEAR
     * DUPLICATES, not shared shingles — and the exact Jaccard then runs
     * once per candidate PAIR via codegen'd `array_intersect`/

@@ -40,7 +40,7 @@ import graft.functions.Fp16
   * The 3072-component uniform fixture tolerates that affinity; a
   * 8-component latent does not. splitmix64 is bit-deterministic
   * everywhere, which is all this fixture needs — it is a MEASUREMENT
-  * fixture (ConcurrencyProbe / XScaleDescent); the oracle-gated queries
+  * fixture (ConcurrencyProbe); the oracle-gated queries
   * stay on the driver-generated testdata tables, and nothing here needs
   * SQL reproduction.
   */

@@ -898,15 +898,6 @@ object Knn {
     assignCore(corpus, vecCol, keyCol, centroids, centVec, centKey, l2sq,
       attrCols)
 
-  /** Top-k within the query vector's own IVF cell. */
-  def ivfTopK(assigned: DataFrame, queryVec: Array[Float], queryCentroid: Long,
-      k: Int): DataFrame =
-    assigned.filter(col("centroid_id") === queryCentroid)
-      .withColumn("score", cosine_distance(col("v"), typedLit(queryVec)))
-      .orderBy(col("score").asc, col("id").asc)
-      .limit(k)
-      .select(col("id"), col("centroid_id"), col("score"))
-
   /** Top-k over the `nprobe` cells nearest to the query — the recall dial
     * of IVF search. Cell pruning happens *before* any distance work on
     * corpus vectors: only assigned rows in probed cells are scored. */
@@ -2595,76 +2586,6 @@ object Knn {
       selfRows = false, selfFor = newNodes)
   }
 
-  /** Driver-local entry selection for graph-ANN serving — the measured
-    * answer to the layered-descent job tax. The HNSW upper descent buys
-    * a query-near layer-0 entry for maxLevel·upperHops EXTRA planned
-    * point-read jobs per request; on a planner-bound runtime that tax
-    * is the whole game: at the 20-user gate the flat walk from a fixed
-    * entry serves p95 388 ms while the 2-layer descent (4 extra jobs)
-    * serves 1028 ms — twice the gate (SCALE.md §r12, same phase). This
-    * buys the same query-near property for ZERO extra jobs: the IVF
-    * centroid sidecar is already driver-resident arithmetic, and each
-    * cell's stored representative (its centroid-nearest member) seeds
-    * the walk from inside the query's own region.
-    *
-    * Setup is one job (per-cell min over the cells relation, collected
-    * as numCells rows); per request [[GraphEntries.entryFor]] is pure
-    * driver math. Compose with [[AdjIndex.search]]:
-    * `adj.search(qv, k, ef, hops, entries.entryFor(qv))`. */
-  final class GraphEntries private[Knn] (
-      cents: Array[(Long, Array[Float])], reps: Map[Long, Long])
-      extends Serializable {
-    require(cents.nonEmpty, "GraphEntries: no cells with members")
-    /** The representative member of the query's nearest non-empty cell
-      * — 0 Spark jobs, numCells·dim driver flops. */
-    def entryFor(queryVec: Array[Float]): Long =
-      entriesFor(queryVec, 1).head
-
-    /** Representatives of the query's `count` nearest non-empty cells,
-      * nearest first — multi-entry seeding for walks (the nprobe idea
-      * applied to entry selection: one entry can strand a walk in a
-      * region with no path to the target; seeding one per nearby cell
-      * covers the query's neighborhood from `count` sides). Same zero
-      * jobs, same driver flops. */
-    def entriesFor(queryVec: Array[Float], count: Int): Seq[Long] =
-      cents
-        .map { case (cid, cv) =>
-          (cid, graft.functions.VectorMath.cosineDistance(cv, queryVec)) }
-        .sortBy { case (cid, d) => (d, cid) }
-        .take(math.max(1, count))
-        .map(c => reps(c._1)).toSeq
-  }
-
-  /** Build [[GraphEntries]] from a persistent IVF index: per cell, the
-    * member nearest its centroid (ties to min id). Cells emptied by
-    * deletes drop out — their queries route to the nearest surviving
-    * cell. */
-  def ivfGraphEntries(spark: org.apache.spark.sql.SparkSession,
-      ivfIndexDir: String): GraphEntries = {
-    val cents = loadCentroids(spark, ivfIndexDir)
-    import spark.implicits._
-    val centDf = cents.toSeq.toDF("__cid", "cvec")
-    val cells = readCells(spark, ivfIndexDir)
-    val dist =
-      if (cells.columns.contains("emb16"))
-        graft.functions.fp16_cosine_distance(col("emb16"), col("cvec"))
-      else cosine_distance(col("v"), col("cvec"))
-    val reps = cells
-      .join(broadcast(centDf),
-        col("centroid_id").cast("long") === col("__cid"))
-      .select(col("__cid"), col("id").cast("long").as("__id"),
-        dist.as("__d"))
-      .groupBy(col("__cid"))
-      // bounded-heap min, not min(struct(...)): the struct form plans
-      // SortAggregate (not hash-aggregable) and sorts all n member rows
-      // per load — same ordering ((__d, __id) asc; the distance
-      // arithmetic cannot produce -0.0), O(n) instead of O(n log n)
-      .agg(graft.functions.topk_pairs(col("__d"), col("__id"), 1).as("tk"))
-      .select(col("__cid"), col("tk").getItem(0).getField("id").as("__id"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    new GraphEntries(cents.filter(c => reps.contains(c._1)), reps)
-  }
-
   /** Tombstone delete for the adjacency index — the O(batch) takedown
     * the other index families have ([[ivfDeleteIndex]] shape): one
     * `del-` id segment under the atomic pointer. [[AdjIndex.load]]
@@ -3162,8 +3083,7 @@ object Knn {
       * one resolution step per skipped level instead of re-paying the
       * gate-failing job tax. (At 10⁹ nodes with 4× level decay, levels
       * ≥ 3 fit any reasonable budget; skipping levels 2..1 leaves entry
-      * selection at 64-cell granularity — still query-near, like
-      * [[ivfGraphEntries]] with coarser cells.) */
+      * selection at 64-cell granularity — still query-near.) */
     def load(spark: org.apache.spark.sql.SparkSession,
         indexDir: String,
         residentNodes: Long = DefaultResidentNodes): HnswIndex = {

@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions._
   * (SCALE.md §r16): on the manifold fixture (isotropic within-cell
   * residuals — little exploitable structure along r) λ=1 sits within
   * one-hit noise of plain second-nearest under exact AND ADC scoring;
-  * on [[graft.fixtures.AnisoCorpus]] (per-cell principal residual
-  * directions, cells splitting clusters — the paper's target regime)
+  * on an anisotropic fixture (per-cell principal residual directions,
+  * cells splitting clusters — the paper's target regime)
   * λ=1 beats λ=0 by +0.010 recall@10 at every unsaturated point, four
   * conditions same-direction, at equal-or-fewer scanned rows. λ costs
   * nothing at serving time (assignment-time only, identical plans), so

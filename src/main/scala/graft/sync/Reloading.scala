@@ -5,10 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** A serving handle that re-checks its index's on-disk GENERATION before
   * each request and transparently reloads when a maintenance commit
   * moved it — the bridge between the load-once handles
-  * ([[graft.similarity.Knn.IvfIndex]], [[graft.text.TextRank.LexIndex]],
-  * the warm store — centroids / codebooks / segment lists / corpus
-  * stats all resolve
-  * at construction, deliberately, so a request is pure plan execution)
+  * ([[graft.similarity.Knn.IvfIndex]], the warm store — centroids /
+  * codebooks / segment lists all resolve at construction, deliberately,
+  * so a request is pure plan execution)
   * and the incremental-maintenance machinery (segment appends,
   * tombstone deletes, compaction, [[CorpusRefresh]]): without this, a
   * long-lived server silently serves the generation it loaded until

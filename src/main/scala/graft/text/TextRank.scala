@@ -84,21 +84,23 @@ object TextRank {
     graft.sync.SegmentedIndex.commit(df.sparkSession, indexDir, Seq(seg))
   }
 
-  /** One new immutable segment + pointer commit; same contract as
-    * [[appendLexicalIndex]] (matching `buckets`, fresh doc ids). */
+  /** One new immutable segment + pointer commit, bucketed at the count
+    * the index recorded; same contract as [[appendLexicalIndex]] (fresh
+    * doc ids). */
   def appendPositionalIndex(batch: DataFrame, textCol: String,
-      keyCol: String, indexDir: String, buckets: Int = 64): Unit = {
+      keyCol: String, indexDir: String): Unit = {
     val spark = batch.sparkSession
     val existing = graft.sync.SegmentedIndex.resolve(spark, indexDir)
       .getOrElse(throw new IllegalStateException(
         s"appendPositionalIndex: no segmented index at $indexDir (build first)"))
     val seg = graft.sync.SegmentedIndex.newSegmentName()
-    writePositionalSegment(batch, textCol, keyCol, s"$indexDir/$seg", buckets)
+    writePositionalSegment(batch, textCol, keyCol, s"$indexDir/$seg",
+      recordedBuckets(spark, indexDir, existing))
     graft.sync.SegmentedIndex.commit(spark, indexDir, existing :+ seg)
   }
 
   private def writePositionalSegment(df: DataFrame, textCol: String,
-      keyCol: String, segDir: String, buckets: Int): Unit =
+      keyCol: String, segDir: String, buckets: Int): Unit = {
     df.select(col(keyCol).as("id"),
         posexplode(split(col(textCol), " ")).as(Seq("pos", "term")))
       .groupBy(col("id"), col("term"))
@@ -109,6 +111,54 @@ object TextRank {
       .repartition(col("term_bucket")) // one file per bucket per segment
       .write.partitionBy("term_bucket")
       .mode("overwrite").parquet(s"$segDir/postings")
+    recordBuckets(df.sparkSession, segDir, buckets)
+  }
+
+  /** The bucket count a term-bucketed segment's postings were written
+    * at, recorded beside them (`<segment>/buckets`, one decimal line):
+    * readers and appenders probe with the writer's modulus, never a
+    * default that may differ from it. Every segment of a live list
+    * carries the same count — appends and compaction copy it from the
+    * list they extend. */
+  private def recordBuckets(spark: org.apache.spark.sql.SparkSession,
+      segDir: String, buckets: Int): Unit = {
+    val p = new org.apache.hadoop.fs.Path(segDir, "buckets")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    scala.util.Using.resource(fs.create(p, true))(_.write(
+      buckets.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+  }
+
+  /** The count [[recordBuckets]] left in the first data segment of
+    * `list`; 64 — the build default — for a layout written before the
+    * record existed, and for the pre-segment flat layout (`list` empty). */
+  private def recordedBuckets(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, list: Seq[String]): Int =
+    list.find(!graft.sync.SegmentedIndex.isTombstone(_)).flatMap { seg =>
+      val p = new org.apache.hadoop.fs.Path(s"$indexDir/$seg", "buckets")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) None
+      else Some(scala.util.Using.resource(fs.open(p))(in => new String(
+        in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim.toInt))
+    }.getOrElse(64)
+
+  /** The PartitionFilter that prunes a term-bucketed postings relation
+    * to `terms`' buckets under modulus `buckets` — the same polyHash
+    * the writer used, computed on the driver (query-plan state, like a
+    * query vector), with literals typed to how partition discovery
+    * read the `term_bucket` column. */
+  private def bucketFilter(postings: DataFrame, terms: Seq[String],
+      buckets: Int): Column = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val probed = terms
+      .map(t => TextMath.polyHash(UTF8String.fromString(t)) % buckets)
+      .distinct
+    val inList: Seq[Any] = postings.schema("term_bucket").dataType match {
+      case org.apache.spark.sql.types.IntegerType => probed.map(_.toInt)
+      case org.apache.spark.sql.types.LongType => probed
+      case _ => probed.map(_.toString)
+    }
+    col("term_bucket").isin(inList: _*)
+  }
 
   /** Serve a phrase query from a [[buildPositionalIndex]] index: probe
     * the phrase's term buckets (PartitionFilter per segment — un-probed
@@ -119,12 +169,8 @@ object TextRank {
     * Returns (id, n_matches), matching docs only — row-identical to
     * [[phraseMatch]] over the indexed corpus. */
   def searchPhraseIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, phrase: Seq[String], buckets: Int = 64): DataFrame = {
+      indexDir: String, phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "searchPhraseIndex: phrase must be non-empty")
-    import org.apache.spark.unsafe.types.UTF8String
-    val probedBuckets = phrase.distinct
-      .map(t => TextMath.polyHash(UTF8String.fromString(t)) % buckets)
-      .distinct
     val list = graft.sync.SegmentedIndex.resolve(spark, indexDir)
       .getOrElse(throw new IllegalStateException(
         s"searchPhraseIndex: no segmented index at $indexDir"))
@@ -136,13 +182,9 @@ object TextRank {
           readUnion(spark, tombs.map(s => s"$indexDir/$s/ids")),
           Seq("id"), "left_anti")
       }.reduce(_ unionByName _)
-    val inList: Seq[Any] = postings.schema("term_bucket").dataType match {
-      case org.apache.spark.sql.types.IntegerType => probedBuckets.map(_.toInt)
-      case org.apache.spark.sql.types.LongType => probedBuckets
-      case _ => probedBuckets.map(_.toString)
-    }
     val pos = postings
-      .filter(col("term_bucket").isin(inList: _*))
+      .filter(bucketFilter(postings, phrase.distinct,
+        recordedBuckets(spark, indexDir, list)))
       .filter(col("term").isin(phrase.map(x => x: Any): _*))
       .select(col("id"), col("term"), explode(col("positions")).as("pos"))
     val anchors = pos.filter(col("term") === phrase.head)
@@ -171,55 +213,40 @@ object TextRank {
       .filter(col("term").isin(queryTerms.map(x => x: Any): _*))
     val tf = toks.groupBy(col("id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
-    scoreBm25(tf.crossJoin(stats), queryTerms, k,
-      col("n"), col("total_dl"), k1, b)
+    scoreBm25(tf.crossJoin(stats), queryTerms, k, k1, b)
   }
 
-  /** The per-(doc, term) BM25 contribution expression — ONE fixed float
-    * tree shared by every entry point (in-memory, index scan, serving
-    * handle; the DuckDB oracle mirrors it token for token), so the
-    * paths can never drift no matter where `doc_freq`/stats come from
-    * (aggregated columns or plan literals — same values, same tree,
-    * same doubles). */
-  private def bm25Contrib(dfCol: Column, nCol: Column, totalDlCol: Column,
-      k1: Double, b: Double): Column = {
+  /** The shared BM25 scoring tail over a `(id, dl, term, tf, n,
+    * total_dl)` frame of matching postings crossJoined with the one-row
+    * corpus stats. Document frequency aggregates from the postings and
+    * attaches by broadcast join. The per-(doc, term) contribution is
+    * ONE fixed float tree for both entry points (in-memory and index
+    * scan; the DuckDB oracle mirrors it token for token), and
+    * per-document totals add in FIXED term order — never a float
+    * `sum()` whose partial-aggregation order could differ between
+    * engines. */
+  private def scoreBm25(tf: DataFrame, queryTerms: Seq[String], k: Int,
+      k1: Double, b: Double): DataFrame = {
+    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("doc_freq"))
     val lenNorm = col("tf").cast("double") +
       lit(k1) * (lit(1.0 - b) + lit(b) *
-        ((col("dl").cast("double") * nCol.cast("double")) /
-          totalDlCol.cast("double")))
-    val idf = (nCol.cast("double") - dfCol.cast("double") + lit(0.5)) /
-      (dfCol.cast("double") + lit(0.5))
-    idf * ((col("tf").cast("double") * lit(k1 + 1.0)) / lenNorm)
-  }
-
-  /** Per-document totals in FIXED term order over a `(id, term, contrib)`
-    * frame — never a float `sum()` whose partial-aggregation order could
-    * differ between engines. */
-  private def totalsTopK(contrib: DataFrame, queryTerms: Seq[String],
-      k: Int): DataFrame = {
+        ((col("dl").cast("double") * col("n").cast("double")) /
+          col("total_dl").cast("double")))
+    val idf = (col("n").cast("double") - col("doc_freq").cast("double") +
+      lit(0.5)) / (col("doc_freq").cast("double") + lit(0.5))
     val perTerm = queryTerms.zipWithIndex.map { case (t, i) =>
       max(when(col("term") === t, col("contrib"))).as(s"s$i") }
-    contrib.groupBy(col("id"))
+    tf.join(broadcast(dfreq), Seq("term"))
+      .select(col("id"), col("term"),
+        (idf * ((col("tf").cast("double") * lit(k1 + 1.0)) / lenNorm))
+          .as("contrib"))
+      .groupBy(col("id"))
       .agg(perTerm.head, perTerm.tail: _*)
       .select(col("id"),
         queryTerms.indices.map(i => coalesce(col(s"s$i"), lit(0.0)))
           .reduceLeft(_ + _).as("score"))
       .orderBy(col("score").desc, col("id").asc)
       .limit(k)
-  }
-
-  /** The shared BM25 scoring tail over a `(id, dl, term, tf)` frame of
-    * matching postings (+ whatever carries the corpus stats — a
-    * crossJoined one-row frame or plan literals via `nCol`/`totalDlCol`).
-    * Document frequency aggregates from the postings and attaches by
-    * broadcast join. */
-  private def scoreBm25(tf: DataFrame, queryTerms: Seq[String], k: Int,
-      nCol: Column, totalDlCol: Column, k1: Double, b: Double): DataFrame = {
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("doc_freq"))
-    val contrib = tf.join(broadcast(dfreq), Seq("term"))
-      .select(col("id"), col("term"),
-        bm25Contrib(col("doc_freq"), nCol, totalDlCol, k1, b).as("contrib"))
-    totalsTopK(contrib, queryTerms, k)
   }
 
   /** Segments are separate parquet ROOTS (each hive-partitioned by
@@ -238,10 +265,11 @@ object TextRank {
     * distinct tombstone scope, and the steady-state plan (no
     * tombstones) carries no join at all. Stats come from EVERY live
     * entry — tombstone segments carry NEGATIVE correction rows, so
-    * plain integer summation stays exact after deletes. Falls back to
-    * the pre-segment flat layout. */
+    * plain integer summation stays exact after deletes. Also returns
+    * the list's recorded bucket count. Falls back to the pre-segment
+    * flat layout. */
   private def liveRelations(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): (DataFrame, Seq[String]) =
+      indexDir: String): (DataFrame, Seq[String], Int) =
     graft.sync.SegmentedIndex.resolve(spark, indexDir) match {
       case Some(list) =>
         val posts = graft.sync.SegmentedIndex.tombstoneScopes(list)
@@ -252,9 +280,11 @@ object TextRank {
               readUnion(spark, tombs.map(s => s"$indexDir/$s/ids")),
               Seq("id"), "left_anti")
           }.reduce(_ unionByName _)
-        (posts, list.map(s => s"$indexDir/$s/stats"))
+        (posts, list.map(s => s"$indexDir/$s/stats"),
+          recordedBuckets(spark, indexDir, list))
       case None =>
-        (spark.read.parquet(s"$indexDir/postings"), Seq(s"$indexDir/stats"))
+        (spark.read.parquet(s"$indexDir/postings"), Seq(s"$indexDir/stats"),
+          recordedBuckets(spark, indexDir, Nil))
     }
 
   /** Delete documents from a lexical index WITHOUT rewriting it — the
@@ -274,7 +304,7 @@ object TextRank {
     val existing = graft.sync.SegmentedIndex.resolve(spark, indexDir)
       .getOrElse(throw new IllegalStateException(
         s"deleteFromLexicalIndex: no segmented index at $indexDir"))
-    val (livePosts, _) = liveRelations(spark, indexDir)
+    val (livePosts, _, _) = liveRelations(spark, indexDir)
     val del = ids.select(col(idCol).as("id")).distinct()
     // stats correction from docs actually live in the index: one row per
     // affected doc (a doc's dl repeats on every posting row)
@@ -314,6 +344,7 @@ object TextRank {
       .repartition(col("term_bucket"))
       .write.partitionBy("term_bucket")
       .mode("overwrite").parquet(s"$segDir/postings")
+    recordBuckets(df.sparkSession, segDir, buckets)
   }
 
   /** Build a persistent lexical index — the sparse mirror of the IVF
@@ -324,7 +355,9 @@ object TextRank {
     * never listed, opened, or read. A term's entire posting list lives in
     * exactly one bucket (within each segment), so document frequency is
     * computable from the probed partitions alone; corpus-level stats
-    * (N, total_dl) go to a one-row sidecar per segment. At 100 TB the
+    * (N, total_dl) go to a one-row sidecar per segment, and the bucket
+    * count to a one-line record that every later append, compaction and
+    * search reads back. At 100 TB the
     * index is the corpus re-sorted once at write time; each query then
     * touches terms/buckets of it.
     *
@@ -345,19 +378,21 @@ object TextRank {
     * applies per segment) + one atomic pointer commit. Cost scales with
     * the batch; existing segments are never touched, so a reader that
     * resolved the pointer pre-commit still scans a complete, consistent
-    * index. `buckets` must match the build (same polyHash modulus, or a
-    * term's postings would split across bucket ids and df would
-    * double-count); batch doc ids must be new to the index — run the
-    * dedup/decontamination pass first, the same contract as the IVF
-    * append. foreachBatch-ready: call per micro-batch. */
+    * index. The segment is bucketed at the count the index recorded (a
+    * different polyHash modulus would split a term's postings across
+    * bucket ids and df would double-count); batch doc ids must be new to
+    * the index — run the dedup/decontamination pass first, the same
+    * contract as the IVF append. foreachBatch-ready: call per
+    * micro-batch. */
   def appendLexicalIndex(batch: DataFrame, textCol: String, keyCol: String,
-      indexDir: String, buckets: Int = 64): Unit = {
+      indexDir: String): Unit = {
     val spark = batch.sparkSession
     val existing = graft.sync.SegmentedIndex.resolve(spark, indexDir)
       .getOrElse(throw new IllegalStateException(
         s"appendLexicalIndex: no segmented index at $indexDir (build first)"))
     val seg = graft.sync.SegmentedIndex.newSegmentName()
-    writeLexicalSegment(batch, textCol, keyCol, s"$indexDir/$seg", buckets)
+    writeLexicalSegment(batch, textCol, keyCol, s"$indexDir/$seg",
+      recordedBuckets(spark, indexDir, existing))
     graft.sync.SegmentedIndex.commit(spark, indexDir, existing :+ seg)
   }
 
@@ -367,7 +402,8 @@ object TextRank {
     * pointer commit (`foreachBatch`, same rationale as
     * [[graft.dedup.Dedup.incrementalDeduplicateStream]]: the index is
     * far too large for the state store and lives naturally as the sink).
-    * The first micro-batch builds the index if none exists. Caller
+    * The first micro-batch builds the index at `buckets` if none exists;
+    * later ones append at the recorded count. Caller
     * supplies `.option("checkpointLocation", ...)` and `.start()`.
     * At-least-once caveat: a replayed batch appends its postings twice —
     * run the dedup pass upstream (its replay IS self-healing) or compact
@@ -380,7 +416,7 @@ object TextRank {
         val spark = batch.sparkSession
         if (graft.sync.SegmentedIndex.resolve(spark, indexDir).isEmpty)
           buildLexicalIndex(batch, textCol, keyCol, indexDir, buckets)
-        else appendLexicalIndex(batch, textCol, keyCol, indexDir, buckets)
+        else appendLexicalIndex(batch, textCol, keyCol, indexDir)
       }
     }
 
@@ -394,14 +430,14 @@ object TextRank {
     * segments, making both a plain carry; the merge rule keeps
     * compaction total even if that contract was violated upstream). */
   def compactLexicalIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, buckets: Int = 64): Unit = {
+      indexDir: String): Unit = {
     val existing = graft.sync.SegmentedIndex.resolve(spark, indexDir)
       .getOrElse(throw new IllegalStateException(
         s"compactLexicalIndex: no segmented index at $indexDir"))
     if (existing.size <= 1) return
     val seg = graft.sync.SegmentedIndex.newSegmentName()
     val segDir = s"$indexDir/$seg"
-    val (postings, statDirs) = liveRelations(spark, indexDir)
+    val (postings, statDirs, buckets) = liveRelations(spark, indexDir)
     readUnion(spark, statDirs)
       .agg(sum(col("n")).as("n"), sum(col("total_dl")).as("total_dl"))
       .coalesce(1).write.mode("overwrite").parquet(s"$segDir/stats")
@@ -411,6 +447,7 @@ object TextRank {
       .repartition(col("term_bucket"))
       .write.partitionBy("term_bucket")
       .mode("overwrite").parquet(s"$segDir/postings")
+    recordBuckets(spark, segDir, buckets)
     graft.sync.SegmentedIndex.commit(spark, indexDir, Seq(seg))
   }
 
@@ -418,8 +455,8 @@ object TextRank {
     * the postings scan unions all live segments, pruning each to the
     * probed buckets — with fallback to the pre-segment flat layout).
     * The probed buckets are computed on the driver from the query terms
-    * (the same polyHash the writer used — query-plan state, like a query
-    * vector), and the postings scan prunes to them at plan time; df
+    * under the index's recorded bucket count ([[bucketFilter]]), and the
+    * postings scan prunes to them at plan time; df
     * comes from the probed postings themselves, so no global term
     * dictionary is read; corpus stats are the integer SUM of the
     * segment sidecars (exact — order-free). Identical results to
@@ -428,115 +465,17 @@ object TextRank {
     * build + appends. */
   def searchLexicalIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queryTerms: Seq[String], k: Int,
-      buckets: Int = 64, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty && queryTerms.distinct == queryTerms,
       "searchLexicalIndex: queryTerms must be non-empty and distinct")
-    import org.apache.spark.unsafe.types.UTF8String
-    val probedBuckets = queryTerms
-      .map(t => TextMath.polyHash(UTF8String.fromString(t)) % buckets)
-      .distinct
-    val (postings, statDirs) = liveRelations(spark, indexDir)
-    val inList: Seq[Any] = postings.schema("term_bucket").dataType match {
-      case org.apache.spark.sql.types.IntegerType => probedBuckets.map(_.toInt)
-      case org.apache.spark.sql.types.LongType => probedBuckets
-      case _ => probedBuckets.map(_.toString)
-    }
+    val (postings, statDirs, buckets) = liveRelations(spark, indexDir)
     val stats = readUnion(spark, statDirs)
       .agg(sum(col("n")).as("n"), sum(col("total_dl")).as("total_dl"))
     val tf = postings
-      .filter(col("term_bucket").isin(inList: _*))
+      .filter(bucketFilter(postings, queryTerms, buckets))
       .filter(col("term").isin(queryTerms.map(x => x: Any): _*))
       .select(col("id"), col("dl"), col("term"), col("tf"))
-    scoreBm25(tf.crossJoin(broadcast(stats)), queryTerms, k,
-      col("n"), col("total_dl"), k1, b)
-  }
-
-  /** Serving handle over a persistent lexical index — the sparse mirror
-    * of [[graft.similarity.Knn.IvfIndex]]'s Catalyst probe: the segment
-    * list and corpus stats resolve ONCE at load (stats become plan
-    * literals — no per-request sidecar scan), the postings relation is
-    * held so file listings are never repeated per request, and each
-    * search builds one bucket-pruned plan over it.
-    *
-    * Per-term document frequencies are CACHED across requests: df is a
-    * property of the index, not the query, so the first request for a
-    * term pays one tiny counting job and every later request folds the
-    * cached value in as a literal — the steady-state scoring plan is a
-    * single pruned scan → one hash aggregation → TakeOrdered (one
-    * shuffle, no df sub-aggregation, no broadcast build per request).
-    * That is what makes the hybrid serving gate's sparse leg cheap.
-    * Appends committed after load serve through a re-load (df cache
-    * included — stale df would mis-rank). Identical scores to
-    * [[searchLexicalIndex]] — same fixed expression tree, same df
-    * values. Thread-safe: the cache is a concurrent map. */
-  final class LexIndex private (
-      postings: DataFrame, n: Long, totalDl: Long, buckets: Int,
-      k1: Double, b: Double) {
-
-    private val dfCache = scala.collection.concurrent.TrieMap.empty[String, Long]
-
-    private def pruned(queryTerms: Seq[String]): DataFrame = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val probedBuckets = queryTerms
-        .map(t => TextMath.polyHash(UTF8String.fromString(t)) % buckets)
-        .distinct
-      val inList: Seq[Any] = postings.schema("term_bucket").dataType match {
-        case org.apache.spark.sql.types.IntegerType => probedBuckets.map(_.toInt)
-        case org.apache.spark.sql.types.LongType => probedBuckets
-        case _ => probedBuckets.map(_.toString)
-      }
-      postings
-        .filter(col("term_bucket").isin(inList: _*))
-        .filter(col("term").isin(queryTerms.map(x => x: Any): _*))
-        .select(col("id"), col("dl"), col("term"), col("tf"))
-    }
-
-    def search(queryTerms: Seq[String], k: Int): DataFrame = {
-      require(queryTerms.nonEmpty && queryTerms.distinct == queryTerms,
-        "LexIndex.search: queryTerms must be non-empty and distinct")
-      val missing = queryTerms.filterNot(dfCache.contains)
-      if (missing.nonEmpty) {
-        pruned(missing).groupBy(col("term"))
-          .agg(count(lit(1)).as("doc_freq")).collect()
-          .foreach(r => dfCache.put(r.getString(0), r.getLong(1)))
-        missing.foreach(t => dfCache.putIfAbsent(t, 0L)) // absent term
-      }
-      // df as a literal CASE over the (few) query terms — every scanned
-      // row matches one of them, so the otherwise-branch never fires
-      val dfCol = queryTerms.tail.foldLeft(
-        when(col("term") === queryTerms.head, lit(dfCache(queryTerms.head)))) {
-        (acc, t) => acc.when(col("term") === t, lit(dfCache(t)))
-      }
-      val contrib = pruned(queryTerms)
-        .select(col("id"), col("term"),
-          bm25Contrib(dfCol, lit(n), lit(totalDl), k1, b).as("contrib"))
-      totalsTopK(contrib, queryTerms, k)
-    }
-  }
-
-  object LexIndex {
-    def load(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-        buckets: Int = 64, k1: Double = 1.2, b: Double = 0.75): LexIndex = {
-      // tombstones resolve at load like everything else: a tombstoned
-      // index serves through an anti-join per request until compaction
-      // restores the join-free steady-state plan
-      val (postings, statDirs) = liveRelations(spark, indexDir)
-      val stats = readUnion(spark, statDirs)
-        .agg(sum(col("n")).as("n"), sum(col("total_dl")).as("total_dl"))
-        .head()
-      new LexIndex(postings, stats.getLong(0), stats.getLong(1),
-        buckets, k1, b)
-    }
-
-    /** [[load]] behind a per-request generation check
-      * ([[graft.sync.Reloading]]): the pointer content covers appends /
-      * deletes / compactions, and a reload also refreshes the corpus
-      * stats and df cache the load-once handle bakes into plan literals. */
-    def reloading(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-        buckets: Int = 64, k1: Double = 1.2, b: Double = 0.75,
-        minCheckIntervalMs: Long = 0L): graft.sync.Reloading[LexIndex] =
-      graft.sync.Reloading(spark, indexDir, Nil, minCheckIntervalMs)(
-        load(spark, indexDir, buckets, k1, b))
+    scoreBm25(tf.crossJoin(broadcast(stats)), queryTerms, k, k1, b)
   }
 
   /** Reciprocal-rank fusion of two ranked lists keyed by `id` (each with

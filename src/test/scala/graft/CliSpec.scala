@@ -259,7 +259,18 @@ class CliSpec extends SparkTestBase {
         "--type", t), spark))._1 == 2, t)
     }
 
-    // refresh: id 5 removed upstream, id 2 edited, id 9 added
+    // lexical index via the CLI over the synced corpus, at a bucket
+    // count other than the default: the layout records it, so a reader
+    // that passes no count probes the buckets the build wrote
+    assert(capture(Cli.run(Array("index", "--store", store, "--out", lexi,
+      "--type", "lexical", "--buckets", "4"), spark))._1 == 0)
+    def lexHits(index: String, terms: String*): Seq[(String, Double)] =
+      graft.text.TextRank.searchLexicalIndex(spark, index, terms, k = 10)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    assert(lexHits(lexi, "gardening").map(_._1) == Seq("5"))
+
+    // `refresh --lex-index` maintains it: id 5 removed upstream, id 2
+    // edited, id 9 added
     val texts2 = texts.filterNot(_._1 == "5").map {
       case ("2", _) => "2" -> "spark shuffles edited zebra content"
       case other => other
@@ -268,19 +279,24 @@ class CliSpec extends SparkTestBase {
       Files.writeString(java.nio.file.Paths.get(pages2, f"page$i%02d.json"),
         pageJson(id, tx)) }
     val (cr, outr) = capture(Cli.run(Array("refresh", "--pages-dir", pages2,
-      "--store", store, "--ckpt", ckpt), spark))
+      "--store", store, "--ckpt", ckpt, "--lex-index", lexi), spark))
     assert(cr == 0, outr)
     assert(outr.contains("\"added\":1") && outr.contains("\"changed\":1")
       && outr.contains("\"removed\":1"), outr)
+    assert(lexHits(lexi, "quokka").map(_._1) == Seq("9"))
+    assert(lexHits(lexi, "gardening").isEmpty)
 
-    // lexical index via the CLI serves the refreshed corpus
-    assert(capture(Cli.run(Array("index", "--store", store, "--out", lexi,
-      "--type", "lexical", "--buckets", "4"), spark))._1 == 0)
-    val lexHits = graft.text.TextRank.LexIndex.load(spark, lexi)
-      .search(Seq("quokka"), k = 3)
-      .select(org.apache.spark.sql.functions.col("id"))
-      .collect().map(_.getString(0)).toSeq
-    assert(lexHits == Seq("9"), lexHits)
+    // the refreshed store built afresh (at the default count) is the
+    // reference: the maintained index scores every doc the same, the
+    // old docs included
+    assert(capture(Cli.run(Array("index", "--store", store, "--out",
+      s"$dir/lexref", "--type", "lexical"), spark))._1 == 0)
+    val terms = Seq("spark", "shuffles", "joins", "tomato", "physics",
+      "zebra", "quokka")
+    val maintained = lexHits(lexi, terms: _*)
+    assert(maintained.map(_._1).toSet == Set("1", "2", "4", "6", "7", "8", "9"),
+      maintained)
+    assert(maintained == lexHits(s"$dir/lexref", terms: _*))
   }
 
   test("export writes shard dirs and prints the manifest; bad flags fail fast") {
@@ -352,13 +368,13 @@ class CliSpec extends SparkTestBase {
     assert(c3 == 0 && !out3.contains("\"id\":\"h1\""), out3)
 
     // the maintained lexical index serves the delta too
-    val lexHits = graft.text.TextRank.LexIndex.load(spark, lex)
-      .search(Seq("quokka"), k = 3)
+    val lexHits = graft.text.TextRank.searchLexicalIndex(spark, lex,
+      Seq("quokka"), k = 3)
       .select(org.apache.spark.sql.functions.col("id"))
       .collect().map(_.getString(0)).toSeq
     assert(lexHits == Seq("h3"), lexHits)
-    assert(graft.text.TextRank.LexIndex.load(spark, lex)
-      .search(Seq("shuffles"), k = 3).count() == 0)
+    assert(graft.text.TextRank.searchLexicalIndex(spark, lex,
+      Seq("shuffles"), k = 3).count() == 0)
 
     // idempotent: same export again → all-zero delta
     val (c4, out4) = capture(Cli.run(Array("refresh", "--pages-dir", pages2,

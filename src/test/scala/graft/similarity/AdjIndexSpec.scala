@@ -216,53 +216,6 @@ class AdjIndexSpec extends SparkTestBase {
     } finally { rmTree(half); rmTree(full) }
   }
 
-  test("ivfGraphEntries: zero-job query-near entry; walk from it matches fixed-entry recall or better") {
-    val ivf = java.nio.file.Files.createTempDirectory("geivf").toString + "/i"
-    val adj = java.nio.file.Files.createTempDirectory("geadj").toString + "/a"
-    try {
-      Knn.ivfBuildIndex(emb, "embedding", "vec_id", ivf, k = 4, iters = 2,
-        trainFilter = $"vec_id" % 5 === 0, fp16 = true)
-      Knn.buildAdjacencyIndex(edges, emb, "embedding", "vec_id", adj,
-        buckets = 8)
-      val entries = Knn.ivfGraphEntries(spark, ivf)
-      // per-request entry selection runs ZERO Spark jobs (driver math
-      // over the centroid sidecar + the collected rep map)
-      val q = qv // force the lazy fixture's own job outside the count
-      val sc = spark.sparkContext
-      val before = sc.statusTracker.getJobIdsForGroup(null).length
-      val e1 = entries.entryFor(q)
-      assert(sc.statusTracker.getJobIdsForGroup(null).length == before,
-        "entryFor ran a Spark job")
-      assert(e1 == entries.entryFor(q)) // deterministic
-      // the rep is a real corpus member with a self-row — the walk's
-      // entry contract
-      val idx = Knn.AdjIndex.load(spark, adj)
-      assert(idx.relation.filter($"src" === e1 && $"dst" === e1).count() == 1)
-      // entry quality: over corpus-drawn queries, the ivf-entry walk's
-      // recall vs exact is >= the arbitrary fixed-entry walk's (the
-      // query-near entry can only help a hop-budgeted beam)
-      val ids = emb.select($"vec_id").as[Long].collect().sorted.take(15)
-      def recallFrom(entry: Long => Long): Double = ids.map { q =>
-        val v = emb.filter($"vec_id" === q).select($"embedding")
-          .head().getSeq[Float](0).toArray
-        val got = idx.search(v, k = 5, ef = 10, hops = 2,
-          entryId = entry(q)).select($"id").as[Long].collect().toSet
-        val exact = Knn.topK(emb, "embedding", v, 5, "vec_id")
-          .select($"vec_id").as[Long].collect().toSet
-        exact.intersect(got).size.toDouble / exact.size
-      }.sum / ids.length
-      val fixed = recallFrom(_ => 0L)
-      val near = recallFrom { q =>
-        entries.entryFor(emb.filter($"vec_id" === q).select($"embedding")
-          .head().getSeq[Float](0).toArray)
-      }
-      info(f"recall@5 hops=2: fixed-entry $fixed%.2f vs ivf-entry $near%.2f")
-      assert(near >= fixed, s"ivf entry degraded recall: $near < $fixed")
-    } finally {
-      rmTree(ivf.stripSuffix("/i")); rmTree(adj.stripSuffix("/a"))
-    }
-  }
-
   test("negative node ids: probe buckets match the writer's pmod — frontier reads and the walk find them") {
     val dir = java.nio.file.Files.createTempDirectory("adjneg").toString + "/i"
     try {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.similarity.Knn
-import graft.text.TextRank
 
 /** [[Reloading]] — the serving-edge bridge to incremental index
   * maintenance: a live handle must serve a generation committed AFTER it
@@ -124,28 +123,6 @@ class ReloadingSpec extends SparkTestBase {
       assert(entries == 1,
         "the superseded handle's segments must be gone once it is released")
     } finally rmTree(dir)
-  }
-
-  test("lexical handle serves a CorpusRefresh'd doc with refreshed stats") {
-    val docs = table("documents").select($"doc_id", $"text").limit(60)
-    val root = java.nio.file.Files.createTempDirectory("reload-lex").toString
-    val storeDir = s"$root/store"; val lexDir = s"$root/lex"
-    try {
-      HighlightStore.writeAtomic(docs, storeDir)
-      TextRank.buildLexicalIndex(docs, "text", "doc_id", lexDir)
-      val handle = TextRank.LexIndex.reloading(spark, lexDir)
-      val term = "zzyzxreload"
-      assert(handle.get.search(Seq(term), k = 5).count() == 0)
-      val mx = docs.agg(max($"doc_id")).head().getLong(0)
-      val snap = docs.unionByName(
-        Seq((mx + 1, s"the $term document")).toDF("doc_id", "text"))
-      CorpusRefresh.refresh(spark, snap, "text", "doc_id", storeDir,
-        lexIndexDir = Some(lexDir)).unpersist()
-      val hits = handle.get.search(Seq(term), k = 5)
-        .select($"id").as[Long].collect()
-      assert(hits.toSeq == Seq(mx + 1),
-        s"refreshed doc not served: ${hits.toSeq}")
-    } finally rmTree(root)
   }
 
   test("minCheckIntervalMs throttles the probe: stale within the window, fresh after") {

@@ -48,8 +48,7 @@ class TextRankSpec extends SparkTestBase {
     try {
       TextRank.buildLexicalIndex(corpus, "text", "doc_id", dir, buckets = 64)
       val terms = Seq("join", "merge")
-      val served = TextRank.searchLexicalIndex(spark, dir, terms, k = 10,
-        buckets = 64)
+      val served = TextRank.searchLexicalIndex(spark, dir, terms, k = 10)
       val memory = TextRank.bm25TopK(corpus, "text", "doc_id", terms, k = 10)
       assert(served.collect().toSeq == memory.collect().toSeq)
       // plan prunes: only the query terms' buckets are read. AQE wraps
@@ -61,7 +60,7 @@ class TextRankSpec extends SparkTestBase {
         TextMath.polyHash(UTF8String.fromString(t)) % 64).distinct.size
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val scans =
-        try TextRank.searchLexicalIndex(spark, dir, terms, k = 10, buckets = 64)
+        try TextRank.searchLexicalIndex(spark, dir, terms, k = 10)
           .queryExecution.executedPlan.collect {
             case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
         finally spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -143,37 +142,6 @@ class TextRankSpec extends SparkTestBase {
     }
   }
 
-  test("LexIndex serving handle scores row-identically to searchLexicalIndex") {
-    val corpus = (0 until 150).map { i =>
-      val terms = Seq("join", "merge", "scan").filter(t => (i + t.length) % 2 == 0)
-      (i.toLong, (terms ++ Seq(s"pad$i")).mkString(" "))
-    }.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lexhandle").toString
-    TextRank.buildLexicalIndex(corpus.filter($"doc_id" < 100), "text",
-      "doc_id", dir)
-    TextRank.appendLexicalIndex(corpus.filter($"doc_id" >= 100), "text",
-      "doc_id", dir)
-    val handle = TextRank.LexIndex.load(spark, dir)
-    val terms = Seq("join", "merge")
-    // stats resolved at load → plan LITERALS; results bit-identical to
-    // the per-call path (one shared scoring tree)
-    assert(handle.search(terms, k = 10).collect().toSeq ==
-      TextRank.searchLexicalIndex(spark, dir, terms, k = 10).collect().toSeq)
-    // the handle's plan still prunes to the probed buckets per segment
-    import org.apache.spark.unsafe.types.UTF8String
-    val want = terms.map(t =>
-      TextMath.polyHash(UTF8String.fromString(t)) % 64).distinct.size
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val scans =
-      try handle.search(terms, k = 10).queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.metadata("Location").contains("postings") => f }
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    scans.foreach(sc =>
-      assert(sc.selectedPartitions.partitionCount == want,
-        sc.metadata("PartitionFilters")))
-  }
-
   test("tombstone deletes: served BM25 bit-identical to a rebuild without the docs") {
     val corpus = (0 until 150).map { i =>
       val terms = Seq("join", "merge", "scan").filter(t => (i + t.length) % 2 == 0)
@@ -194,9 +162,6 @@ class TextRankSpec extends SparkTestBase {
       // stats corrections + df-after-anti-join make the tombstoned index
       // score EXACTLY like the rebuild — not just exclude the ids
       assert(served(dir) == served(dirRef))
-      // the serving handle sees the same world
-      assert(TextRank.LexIndex.load(spark, dir).search(terms, 10)
-        .collect().toSeq == served(dirRef))
       // re-deleting is an exact no-op (corrections computed over LIVE
       // postings only — no double subtraction)
       TextRank.deleteFromLexicalIndex(spark, dir,
