@@ -63,22 +63,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see GraftSession.builder: ≥cores splits for GB-scale local scans
-      .config("spark.sql.files.maxPartitionBytes", "32m")
-      // keep TypedImperativeAggregates hash-based (see GraftSession)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 21).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // BENCH_ONLY=q48,q49 — LOCAL ITERATION ONLY: restrict the board to
     // queries whose short name is listed, so a single row's stability
@@ -87,60 +73,13 @@ object Bench {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n.takeWhile(_ != '_'))))
-    // warmup: tiny SF, same plans → codegen/JIT compiled before timing
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory)
-      names.foreach { n =>
-        try SparkEntry.queries(n)(spark, warmDir).count()
-        catch { case _: Throwable => () }
-      }
-    // median of 3 timed samples per query, taken across INTERLEAVED
-    // full passes over the query list — single-run local[32] numbers
-    // carry ±0.1s scheduler noise, and back-to-back samples of one
-    // query all land inside the same VM contention window, so a
-    // minutes-long slow phase owned every sample of whichever
-    // alphabetic block it hit (r10: q70/q85–q87 ×3–5; r11: q64/q65/q67
-    // — both diagnosed as phase noise by listener replication). With
-    // pass-major order the three samples of a query are separated by a
-    // full traversal (~minutes), so a contention window can taint at
-    // most one of them and the median stays in band.
-    //
-    // Session state is SWEPT before each query visit (persistent RDDs —
-    // cached relations and localCheckpoint generations — plus the SQL
-    // cache): without the sweep, the tail of a pass inherits every
-    // prior query's pinned blocks and measures accumulated session
-    // memory pressure instead of the operator (round-5 verdict: q52/
-    // q54/q59 benched 2-5x their standalone times). Because the sweep
-    // now runs between a query's samples, each visit first re-primes
-    // the caches the query deliberately uses with an UNTIMED run
-    // (Fp16Corpus, the encoded store — their DATA persists on disk and
-    // is re-read, not rebuilt) and then times one warm run — the same
-    // warm steady state the old back-to-back median reported (its pass
-    // 1 was the priming run; the median discarded it).
     val Runs = 3
-    // blocking = true: async removal would race block cleanup into the
-    // next query's priming run — the sweep exists to make isolation
-    // deterministic, so pay the removal cost HERE, outside any timing
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-    }
-    // phase calibration: the r13 board ran 26% over r12's at identical
-    // code for every untouched query — a whole-run VM contention phase —
-    // and nothing in the protocol could distinguish that from a
-    // board-wide code regression without re-deriving it by hand. One
-    // fixed CPU+shuffle probe (independent of SF_DIR and of every
-    // query's code path: 16M xxhash64 rows, 256k-group partial agg,
-    // shuffle, TakeOrdered) is timed once per pass; its median over the
-    // recorded quiet-phase reference is the run's PHASE FACTOR,
-    // published in the wire line so cross-round per-query deltas divide
-    // the phase out mechanically.
-    // the anchor is IN-BENCH (median probe across a full r14 run), not a
-    // standalone JVM: the probe deliberately shares the bench JVM's heap
-    // and scheduler so it sees the same conditions the queries do (the
-    // same probe measured 1.03 s in a fresh JVM — bench-resident state
-    // costs it ~25%, and that tax is part of what queries pay too)
+    // the calibration probe's anchor is IN-BENCH (median probe across a
+    // full r14 run), not a standalone JVM: the probe deliberately shares
+    // the bench JVM's heap and scheduler so it sees the same conditions
+    // the queries do (the same probe measured 1.03 s in a fresh JVM —
+    // bench-resident state costs it ~25%, and that tax is part of what
+    // queries pay too)
     // the anchor is machine-specific (recorded on the r14 VM/JVM): on any
     // other host, core count, or Spark/JVM build the recorded constant is
     // silently wrong while still looking authoritative — so it's
@@ -148,33 +87,7 @@ object Bench {
     // downstream tooling can re-derive phase against a local anchor
     val CalibRef = sys.env.get("BENCH_CALIB_REF").map(_.toDouble)
       .getOrElse(1.30) // seconds; recorded r14, the cross-round anchor
-    def calibrate(): Double = {
-      sweep()
-      val t0 = System.nanoTime()
-      spark.range(0, 1L << 24, 1, 32)
-        .selectExpr("xxhash64(id) AS h")
-        .selectExpr("pmod(h, 262144) AS b", "h")
-        .groupBy("b").agg(Map("h" -> "max"))
-        .toDF("b", "s")
-        .orderBy("s").limit(7).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // two untimed probe runs: the probe's own JIT/codegen warmup is
-    // measured at ~8s cold vs ~1s steady — timing it cold would fold
-    // compilation into the phase factor
-    calibrate(); calibrate()
-    val samples = scala.collection.mutable.Map.empty[String, List[Double]]
-    var calibSamples = List.empty[Double]
-    (1 to Runs).foreach { _ =>
-      calibSamples = calibrate() :: calibSamples
-      names.foreach { name =>
-        sweep()
-        try SparkEntry.queries(name)(spark, sfDir).count()
-        catch { case _: Throwable => () }
-        val dt = timedRun(name) { SparkEntry.queries(name)(spark, sfDir).count() }
-        samples(name) = dt :: samples.getOrElse(name, Nil)
-      }
-    }
+    val (samples, calibSamples) = timePasses(spark, names, sfDir, Runs)
     val calib = calibSamples.sorted.apply(Runs / 2)
     val phase = calib / CalibRef
     // a row with any failed pass is reported only under `failed`
@@ -307,5 +220,93 @@ object Bench {
     // this the last line of the whole sbt invocation — the form every
     // tail-capture parser sees first
     println(line)
+  }
+
+  /** The timing protocol [[Bench]] and [[XScaleLadder]] share: a warmup
+    * pass at sf0.001, two untimed calibration probes, then `runs`
+    * interleaved passes over `names` at `dataDir`, each pass opening with
+    * one timed probe. Returns every row's samples and the per-pass probe
+    * readings, both newest pass first; a failed timed run is NaN. */
+  private[graft] def timePasses(spark: SparkSession, names: Seq[String],
+      dataDir: String, runs: Int)
+      : (Map[String, List[Double]], List[Double]) = {
+    // warmup: tiny SF, same plans → codegen/JIT compiled before timing
+    val warmDir = "/root/testdata/sf0.001"
+    if (new java.io.File(warmDir).isDirectory)
+      names.foreach { n =>
+        try SparkEntry.queries(n)(spark, warmDir).count()
+        catch { case _: Throwable => () }
+      }
+    // a query's timed samples are taken across INTERLEAVED full
+    // passes over the query list — single-run local[32] numbers
+    // carry ±0.1s scheduler noise, and back-to-back samples of one
+    // query all land inside the same VM contention window, so a
+    // minutes-long slow phase owned every sample of whichever
+    // alphabetic block it hit (r10: q70/q85–q87 ×3–5; r11: q64/q65/q67
+    // — both diagnosed as phase noise by listener replication). With
+    // pass-major order the samples of a query are separated by a
+    // full traversal (~minutes), so a contention window can taint at
+    // most one of them and the median stays in band.
+    //
+    // Session state is SWEPT before each query visit (persistent RDDs —
+    // cached relations and localCheckpoint generations — plus the SQL
+    // cache): without the sweep, the tail of a pass inherits every
+    // prior query's pinned blocks and measures accumulated session
+    // memory pressure instead of the operator (round-5 verdict: q52/
+    // q54/q59 benched 2-5x their standalone times). Because the sweep
+    // now runs between a query's samples, each visit first re-primes
+    // the caches the query deliberately uses with an UNTIMED run
+    // (Fp16Corpus, the encoded store — their DATA persists on disk and
+    // is re-read, not rebuilt) and then times one warm run — the same
+    // warm steady state the old back-to-back median reported (its pass
+    // 1 was the priming run; the median discarded it).
+    //
+    // blocking = true: async removal would race block cleanup into the
+    // next query's priming run — the sweep exists to make isolation
+    // deterministic, so pay the removal cost HERE, outside any timing
+    def sweep(): Unit = {
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      spark.catalog.clearCache()
+    }
+    // phase calibration: the r13 board ran 26% over r12's at identical
+    // code for every untouched query — a whole-run VM contention phase —
+    // and nothing in the protocol could distinguish that from a
+    // board-wide code regression without re-deriving it by hand. One
+    // fixed CPU+shuffle probe (independent of SF_DIR and of every
+    // query's code path: 16M xxhash64 rows, 256k-group partial agg,
+    // shuffle, TakeOrdered) is timed once per pass; its median over the
+    // recorded quiet-phase reference is the run's PHASE FACTOR,
+    // published in the wire line so cross-round per-query deltas divide
+    // the phase out mechanically.
+    def calibrate(): Double = {
+      sweep()
+      val t0 = System.nanoTime()
+      spark.range(0, 1L << 24, 1, 32)
+        .selectExpr("xxhash64(id) AS h")
+        .selectExpr("pmod(h, 262144) AS b", "h")
+        .groupBy("b").agg(Map("h" -> "max"))
+        .toDF("b", "s")
+        .orderBy("s").limit(7).collect()
+      (System.nanoTime() - t0) / 1e9
+    }
+    // two untimed probe runs: the probe's own JIT/codegen warmup is
+    // measured at ~8s cold vs ~1s steady — timing it cold would fold
+    // compilation into the phase factor
+    calibrate(); calibrate()
+    val samples = scala.collection.mutable.Map.empty[String, List[Double]]
+    var calibSamples = List.empty[Double]
+    (1 to runs).foreach { _ =>
+      calibSamples = calibrate() :: calibSamples
+      names.foreach { name =>
+        sweep()
+        try SparkEntry.queries(name)(spark, dataDir).count()
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name prime failed: $e") }
+        val dt = timedRun(name) { SparkEntry.queries(name)(spark, dataDir).count() }
+        samples(name) = dt :: samples.getOrElse(name, Nil)
+      }
+    }
+    (samples.toMap, calibSamples)
   }
 }

@@ -50,25 +50,6 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q16_search_docs")(spark, "/root/testdata/sf0.001")
 
-  /** q145's fixture: the HNSW stack over `base` at `root`, then `batch`
-    * inserted. Each step is guarded on its own commit — the build on the
-    * stack's ready probe, the insertion on layer 0 holding every batch
-    * node (layer 0 commits first; q145 reads it) — so a run that
-    * crashed between the two heals on the next run instead of reading
-    * the base stack alone. */
-  private[graft] def hnswInsertFixture(s: SparkSession, base: DataFrame,
-      batch: DataFrame, root: String): Unit = {
-    // layers build concurrently — guard on the order-independent ready
-    // probe (all layers + meta), not one layer's pointer
-    if (!Knn.hnswIndexReady(s, root))
-      Knn.buildHnswIndex(base, "embedding", "vec_id", root, maxLevel = 2,
-        upperM = 3, k0 = 5, buckets = 8, fp16 = false)
-    val layer0 = Knn.AdjIndex.load(s, s"$root/layer0").relation
-      .filter(col("src") === col("dst")).select(col("dst").as("vec_id"))
-    if (!batch.join(layer0, Seq("vec_id"), "left_anti").isEmpty)
-      Knn.hnswAppendIndex(batch, "embedding", "vec_id", root)
-  }
-
   // ====================================================================
   // Queries — one per implemented operator family from SURVEY.md §2.
   // ====================================================================
@@ -1689,9 +1670,7 @@ object SparkEntry {
     "q118_graph_beam_search" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").filter(col("vec_id") < 300)
       // the walk scans the edge relation once per hop: materialize the
-      // n² graph DERIVATION once (a production walk reads a precomputed
-      // adjacency table — q125's AdjIndex — so this trade is test-form
-      // only)
+      // n² graph DERIVATION once
       val edges = Knn.knnGraph(e, "embedding", "vec_id", topK = 5)
         .select(col("id_a"), col("id_b"))
         .localCheckpoint()
@@ -1699,60 +1678,6 @@ object SparkEntry {
         .head().getSeq[Float](0).toArray
       Knn.graphBeamSearch(e, edges, "embedding", "vec_id", qv,
         k = 10, ef = 20, hops = 4, entryId = 0L)
-    }),
-
-    // ---- q118's walk served from the PERSISTENT adjacency index:
-    //      bucket-partitioned edge rows carrying fp16 dst vectors, beam
-    //      on the driver, one pruned point-read job per hop. The oracle
-    //      is q118's unrolled walk with fp16-rounded candidate vectors —
-    //      index-served must equal the wholesale-graph walk at the
-    //      index's storage precision ----
-    "q125_adj_index_search" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").filter(col("vec_id") < 300)
-      val edges = Knn.knnGraph(e, "embedding", "vec_id", topK = 5)
-        .select(col("id_a"), col("id_b"))
-      val qv = e.filter(col("vec_id") === 299).select(col("embedding"))
-        .head().getSeq[Float](0).toArray
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft-adjidx").toString + "/adj"
-      Knn.buildAdjacencyIndex(edges, e, "embedding", "vec_id", idxDir,
-        buckets = 16, fp16 = true)
-      Knn.AdjIndex.load(s, idxDir)
-        .search(qv, k = 10, ef = 20, hops = 4, entryId = 0L)
-        .select(col("id").as("vec_id"), col("score"))
-    }),
-
-    // ---- graph-index takedown (q110/q111's delete==rebuild gate for
-    //      the adjacency family): adjDeleteIndex tombstones vec_id%7==3
-    //      — masking every edge that touches a deleted node — then
-    //      adjCompactIndex physically erases the masked rows under the
-    //      frozen bucket layout. BOTH phases' walks must equal the walk
-    //      over the graph with those nodes' edges removed, which is
-    //      what the oracle replays (q125's walk + the endpoint mask),
-    //      emitted once per phase ----
-    "q148_adj_delete" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").filter(col("vec_id") < 300)
-      val edges = Knn.knnGraph(e, "embedding", "vec_id", topK = 5)
-        .select(col("id_a"), col("id_b"))
-      val qv = e.filter(col("vec_id") === 299).select(col("embedding"))
-        .head().getSeq[Float](0).toArray
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft-adjdel").toString + "/adj"
-      Knn.buildAdjacencyIndex(edges, e, "embedding", "vec_id", idxDir,
-        buckets = 16, fp16 = true)
-      Knn.adjDeleteIndex(s, idxDir,
-        e.filter(col("vec_id") % 7 === 3).select(col("vec_id")), "vec_id")
-      val deleted = Knn.AdjIndex.load(s, idxDir)
-        .search(qv, k = 10, ef = 20, hops = 4, entryId = 0L)
-        .select(lit("deleted").as("phase"), col("id").as("vec_id"),
-          col("score"))
-      Knn.adjCompactIndex(s, idxDir)
-      val compacted = Knn.AdjIndex.load(s, idxDir)
-        .search(qv, k = 10, ef = 20, hops = 4, entryId = 0L)
-        .select(lit("compacted").as("phase"), col("id").as("vec_id"),
-          col("score"))
-      compacted.unionByName(deleted)
-        .orderBy(col("phase"), col("score"), col("vec_id"))
     }),
 
     // ---- HNSW layered descent: geometric levels (affine hash, nested
@@ -1772,23 +1697,6 @@ object SparkEntry {
       Knn.hnswSearch(e, edges, "embedding", "vec_id", qv,
         k = 10, ef = 20, hops = 4, maxLevel = 2, upperM = 3,
         upperHops = 4)
-    }),
-
-    // ---- q127 served from the PERSISTENT layer stack: one adjacency
-    //      index per layer (fp16 dvecs), meta-pinned entry, greedy
-    //      point-read descent + layer-0 beam. Oracle is q127's walk
-    //      with every score fp16-rounded (the q125 discipline) ----
-    "q128_hnsw_index_search" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").filter(col("vec_id") < 300)
-      val qv = e.filter(col("vec_id") === 299).select(col("embedding"))
-        .head().getSeq[Float](0).toArray
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft-hnswidx").toString + "/hnsw"
-      Knn.buildHnswIndex(e, "embedding", "vec_id", idxDir,
-        maxLevel = 2, upperM = 3, k0 = 5, buckets = 16, fp16 = true)
-      Knn.HnswIndex.load(s, idxDir)
-        .search(qv, k = 10, ef = 20, hops = 4, upperHops = 4)
-        .select(col("id").as("vec_id"), col("score"))
     }),
 
     // ---- exact triangle counting over q95's content-derived link
@@ -2607,27 +2515,6 @@ object SparkEntry {
       graft.search.RankEval.macroAvg(
         graft.search.RankEval.evaluate(sys, gold, "query_id",
           "neighbor_id", "rank"))
-    }),
-
-    // ---- HNSW bulk insertion gated at the EDGE level: build the stack
-    //      on the base 250, hnswAppendIndex the next 50 — layer 0's
-    //      non-self edge relation must equal base-5-NN-graph ∪ each new
-    //      node's 5 nearest base members ∪ the reverse links. The walk
-    //      over the merged graph is spec-verified; this row proves the
-    //      insertion MATH cross-engine ----
-    "q145_hnsw_insert" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val base = e.filter(col("vec_id") < 250)
-        .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      val batch = e.filter(col("vec_id") >= 250 && col("vec_id") < 300)
-        .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      val root = graft.fixtures.Fp16Corpus.workRoot +
-        s"/hnswapp-${new java.io.File(dir).getName}-c${e.count()}"
-      hnswInsertFixture(s, base, batch, root)
-      graft.similarity.Knn.AdjIndex.load(s, s"$root/layer0").relation
-        .filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"))
-        .orderBy(col("src"), col("dst"))
     }),
 
     // ---- hard-negative mining (contrastive training): every anchor's
@@ -4507,92 +4394,6 @@ object SparkEntry {
          |ORDER BY score, vec_id LIMIT 10""".stripMargin
     },
 
-    // q118's oracle with candidate scoring at the INDEX's precision: the
-    // adjacency rows carry fp16 dst vectors, so every beam distance —
-    // including the entry's self-row — computes over the fp16-rounded
-    // vector; the GRAPH itself (edges) and the query stay fp32
-    "q125_adj_index_search" -> {
-      val hops = 4
-      val half = sqlFp16Round
-      val steps = (1 to hops).map { i =>
-        s"""n$i AS (SELECT DISTINCT e.id_b AS id
-           |  FROM edges e JOIN b${i - 1} b ON e.id_a = b.id),
-           |c$i AS (SELECT s.id, s.dist FROM scored s JOIN n$i USING (id)),
-           |b$i AS MATERIALIZED (SELECT DISTINCT id, dist
-           |  FROM (SELECT id, dist FROM b${i - 1}
-           |        UNION ALL SELECT id, dist FROM c$i)
-           |  ORDER BY dist, id LIMIT 20)""".stripMargin
-      }
-      s"""WITH v AS MATERIALIZED (SELECT vec_id AS id,
-         |    CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings WHERE vec_id < 300 AND embedding IS NOT NULL),
-         |hc AS (SELECT vec_id AS id, unnest(range(len(embedding))) AS pos,
-         |    unnest(embedding) AS xf
-         |  FROM embeddings WHERE vec_id < 300 AND embedding IS NOT NULL),
-         |hh AS (SELECT id, pos, $half AS xh FROM hc),
-         |vh AS MATERIALIZED (SELECT id, list(xh ORDER BY pos) AS v
-         |  FROM hh GROUP BY id),
-         |q AS MATERIALIZED (SELECT v AS qv FROM v WHERE id = 299),
-         |scored AS MATERIALIZED (
-         |  SELECT vh.id, ${sqlCosine("vh.v", "q.qv")} AS dist
-         |  FROM vh CROSS JOIN q),
-         |p AS (SELECT a.id AS id_a, b.id AS id_b,
-         |  ${sqlCosine("a.v", "b.v")} AS dist
-         |  FROM v a JOIN v b ON a.id <> b.id),
-         |edges AS MATERIALIZED (SELECT id_a, id_b FROM (
-         |  SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a
-         |    ORDER BY dist, id_b) AS rank FROM p) WHERE rank <= 5),
-         |b0 AS MATERIALIZED (SELECT id, dist FROM scored WHERE id = 0),
-         |${steps.mkString(",\n")}
-         |SELECT id AS vec_id, dist AS score FROM b$hops
-         |ORDER BY score, vec_id LIMIT 10""".stripMargin
-    },
-
-    // q148: q125's walk with every edge touching a deleted node
-    // (id % 7 = 3) masked from the graph BEFORE the walk — the
-    // delete==rebuild semantics both the tombstoned and the compacted
-    // index must serve; the identical top-10 is emitted once per phase
-    "q148_adj_delete" -> {
-      val hops = 4
-      val half = sqlFp16Round
-      val steps = (1 to hops).map { i =>
-        s"""n$i AS (SELECT DISTINCT e.id_b AS id
-           |  FROM edges e JOIN b${i - 1} b ON e.id_a = b.id),
-           |c$i AS (SELECT s.id, s.dist FROM scored s JOIN n$i USING (id)),
-           |b$i AS MATERIALIZED (SELECT DISTINCT id, dist
-           |  FROM (SELECT id, dist FROM b${i - 1}
-           |        UNION ALL SELECT id, dist FROM c$i)
-           |  ORDER BY dist, id LIMIT 20)""".stripMargin
-      }
-      s"""WITH v AS MATERIALIZED (SELECT vec_id AS id,
-         |    CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings WHERE vec_id < 300 AND embedding IS NOT NULL),
-         |hc AS (SELECT vec_id AS id, unnest(range(len(embedding))) AS pos,
-         |    unnest(embedding) AS xf
-         |  FROM embeddings WHERE vec_id < 300 AND embedding IS NOT NULL),
-         |hh AS (SELECT id, pos, $half AS xh FROM hc),
-         |vh AS MATERIALIZED (SELECT id, list(xh ORDER BY pos) AS v
-         |  FROM hh GROUP BY id),
-         |q AS MATERIALIZED (SELECT v AS qv FROM v WHERE id = 299),
-         |scored AS MATERIALIZED (
-         |  SELECT vh.id, ${sqlCosine("vh.v", "q.qv")} AS dist
-         |  FROM vh CROSS JOIN q),
-         |p AS (SELECT a.id AS id_a, b.id AS id_b,
-         |  ${sqlCosine("a.v", "b.v")} AS dist
-         |  FROM v a JOIN v b ON a.id <> b.id),
-         |edges AS MATERIALIZED (SELECT id_a, id_b FROM (
-         |  SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a
-         |    ORDER BY dist, id_b) AS rank FROM p) WHERE rank <= 5
-         |  AND id_a % 7 <> 3 AND id_b % 7 <> 3),
-         |b0 AS MATERIALIZED (SELECT id, dist FROM scored WHERE id = 0),
-         |${steps.mkString(",\n")},
-         |top AS (SELECT id, dist FROM b$hops ORDER BY dist, id LIMIT 10)
-         |SELECT phase, id AS vec_id, dist AS score FROM (
-         |  SELECT 'compacted' AS phase, id, dist FROM top
-         |  UNION ALL SELECT 'deleted' AS phase, id, dist FROM top)
-         |ORDER BY phase, score, vec_id""".stripMargin
-    },
-
     // q127: q118's oracle extended with the layered descent. Levels are
     // the affine-hash CASE chain (nested: h%16=0 ⊆ h%4=0); each upper
     // layer's exact 3-NN graph is a subset pair join + row_number; the
@@ -4638,76 +4439,6 @@ object SparkEntry {
          |scored AS MATERIALIZED (
          |  SELECT v.id, ${sqlCosine("v.v", "q.qv")} AS dist
          |  FROM v CROSS JOIN q),
-         |lv AS MATERIALIZED (SELECT id, v,
-         |  CASE WHEN ((id * 1103515245 + 12345) % 1048576) % 16 = 0 THEN 2
-         |       WHEN ((id * 1103515245 + 12345) % 1048576) % 4 = 0 THEN 1
-         |       ELSE 0 END AS level FROM v),
-         |${greedy(2, "SELECT id, dist FROM scored WHERE id = " +
-            "(SELECT min(id) FROM lv WHERE level >= 2)")},
-         |${greedy(1, s"SELECT id, dist FROM g2_$upperHops")},
-         |p AS (SELECT a.id AS id_a, b.id AS id_b,
-         |  ${sqlCosine("a.v", "b.v")} AS dist
-         |  FROM v a JOIN v b ON a.id <> b.id),
-         |edges AS MATERIALIZED (SELECT id_a, id_b FROM (
-         |  SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a
-         |    ORDER BY dist, id_b) AS rank FROM p) WHERE rank <= 5),
-         |b0 AS MATERIALIZED (SELECT id, dist FROM g1_$upperHops),
-         |${beam.mkString(",\n")}
-         |SELECT id AS vec_id, dist AS score FROM b$hops
-         |ORDER BY score, vec_id LIMIT 10""".stripMargin
-    },
-
-    // q128: q127's layered walk with every SCORE computed over the
-    // fp16-rounded vector (the persisted adjacency rows' dvec precision
-    // — q125's discipline); the level CASE, both upper-layer GRAPHS and
-    // the layer-0 graph stay fp32, exactly what buildHnswIndex persists
-    "q128_hnsw_index_search" -> {
-      val upperHops = 4
-      def greedy(lvl: Int, fromCte: String): String = {
-        val steps = (1 to upperHops).map { i =>
-          s"""n${lvl}_$i AS (SELECT DISTINCT e.id_b AS id
-             |  FROM e$lvl e JOIN g${lvl}_${i - 1} b ON e.id_a = b.id),
-             |c${lvl}_$i AS (SELECT s.id, s.dist
-             |  FROM scored s JOIN n${lvl}_$i USING (id)),
-             |g${lvl}_$i AS MATERIALIZED (SELECT DISTINCT id, dist
-             |  FROM (SELECT id, dist FROM g${lvl}_${i - 1}
-             |        UNION ALL SELECT id, dist FROM c${lvl}_$i)
-             |  ORDER BY dist, id LIMIT 1)""".stripMargin
-        }
-        s"""p$lvl AS (SELECT a.id AS id_a, b.id AS id_b,
-           |  ${sqlCosine("a.v", "b.v")} AS dist
-           |  FROM lv a JOIN lv b ON a.id <> b.id
-           |  WHERE a.level >= $lvl AND b.level >= $lvl),
-           |e$lvl AS MATERIALIZED (SELECT id_a, id_b FROM (
-           |  SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a
-           |    ORDER BY dist, id_b) AS rank FROM p$lvl) WHERE rank <= 3),
-           |g${lvl}_0 AS MATERIALIZED ($fromCte),
-           |${steps.mkString(",\n")}""".stripMargin
-      }
-      val hops = 4
-      val beam = (1 to hops).map { i =>
-        s"""n$i AS (SELECT DISTINCT e.id_b AS id
-           |  FROM edges e JOIN b${i - 1} b ON e.id_a = b.id),
-           |c$i AS (SELECT s.id, s.dist FROM scored s JOIN n$i USING (id)),
-           |b$i AS MATERIALIZED (SELECT DISTINCT id, dist
-           |  FROM (SELECT id, dist FROM b${i - 1}
-           |        UNION ALL SELECT id, dist FROM c$i)
-           |  ORDER BY dist, id LIMIT 20)""".stripMargin
-      }
-      val half = sqlFp16Round
-      s"""WITH v AS MATERIALIZED (SELECT vec_id AS id,
-         |    CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings WHERE vec_id < 300 AND embedding IS NOT NULL),
-         |hc AS (SELECT vec_id AS id, unnest(range(len(embedding))) AS pos,
-         |    unnest(embedding) AS xf
-         |  FROM embeddings WHERE vec_id < 300 AND embedding IS NOT NULL),
-         |hh AS (SELECT id, pos, $half AS xh FROM hc),
-         |vh AS MATERIALIZED (SELECT id, list(xh ORDER BY pos) AS v
-         |  FROM hh GROUP BY id),
-         |q AS MATERIALIZED (SELECT v AS qv FROM v WHERE id = 299),
-         |scored AS MATERIALIZED (
-         |  SELECT vh.id, ${sqlCosine("vh.v", "q.qv")} AS dist
-         |  FROM vh CROSS JOIN q),
          |lv AS MATERIALIZED (SELECT id, v,
          |  CASE WHEN ((id * 1103515245 + 12345) % 1048576) % 16 = 0 THEN 2
          |       WHEN ((id * 1103515245 + 12345) % 1048576) % 4 = 0 THEN 1
@@ -6060,30 +5791,6 @@ object SparkEntry {
       s"""WITH $sqlRankEvalCtes
          |SELECT query_id, n_hits, n_gold, recall, rr, ndcg
          |FROM per ORDER BY query_id""".stripMargin,
-
-    // base 5-NN graph + each new node's 5 nearest base members + the
-    // reverse links — exactly what hnswAppendIndex commits to layer 0
-    "q145_hnsw_insert" ->
-      s"""WITH base AS (
-         |  SELECT vec_id AS id, embedding AS v FROM embeddings
-         |  WHERE embedding IS NOT NULL AND vec_id < 250),
-         |batch AS (
-         |  SELECT vec_id AS id, embedding AS v FROM embeddings
-         |  WHERE embedding IS NOT NULL AND vec_id >= 250 AND vec_id < 300),
-         |g AS (
-         |  SELECT a.id AS src, b.id AS dst FROM base a, base b
-         |  WHERE a.id <> b.id
-         |  QUALIFY row_number() OVER (PARTITION BY a.id
-         |    ORDER BY ${sqlCosine("a.v", "b.v")}, b.id) <= 5),
-         |ins AS (
-         |  SELECT q.id AS src, c.id AS dst FROM batch q, base c
-         |  QUALIFY row_number() OVER (PARTITION BY q.id
-         |    ORDER BY ${sqlCosine("c.v", "q.v")}, c.id) <= 5),
-         |alledges AS (
-         |  SELECT src, dst FROM g
-         |  UNION ALL SELECT src, dst FROM ins
-         |  UNION ALL SELECT dst AS src, src AS dst FROM ins)
-         |SELECT src, dst FROM alledges ORDER BY src, dst""".stripMargin,
 
     // the ≠-label filter precedes the per-anchor rank — same window
     // arithmetic as every knn oracle

@@ -132,13 +132,6 @@ final class SearchGateway(storeFn: () => DataFrame, embedder: Embedder,
     out.result().iterator.map(decode)
   }
 
-  /** Index-served top-k + store rehydration: the probe is ONE Spark job
-    * (a partition-pruned cell scan for fp16 IVF; for the PQ+refine path
-    * a `runJob` over the probed cells held resident, no Catalyst plan);
-    * the fetch reads only the k winners' rows (id IN-list, embedding
-    * column never projected). Scores come from the
-    * index (same cosine the store scan computes), so the two paths
-    * agree wherever the probe's recall does. */
   /** Filterless request through the dense index: on an
     * [[graft.similarity.Knn.IvfIndex]] (either cell layout) one Spark
     * job over its resident cells, then the rehydrate of the k winners. */

@@ -144,11 +144,7 @@ object Knn {
     * query-vector-legitimate), so the corpus and edge tables never
     * shuffle: a hop is two IN-list-pruned jobs (frontier expansion
     * against the edge relation, scoring of the new candidates), each
-    * touching at most ef·degree rows. A production deployment serves
-    * hops from an adjacency store bucketed by source id (the lexical
-    * index's term-bucket layout applied to edges — [[AdjIndex]]),
-    * making each expansion an O(ef) point lookup — the corpus-scan
-    * term disappears entirely, which is the reason graph ANN exists. */
+    * touching at most ef·degree rows. */
   def graphBeamSearch(corpus: DataFrame, edges: DataFrame, vecCol: String,
       keyCol: String, queryVec: Array[Float], k: Int, ef: Int,
       hops: Int, entryId: Long): DataFrame = {
@@ -223,12 +219,7 @@ object Knn {
     *
     * Scale shape: layer ℓ holds ~n/4^ℓ nodes, so upper-layer graphs are
     * geometrically cheaper than layer 0's; this in-plan form rebuilds
-    * them per call as the oracle does ([[knnGraph]] — O((n/4^ℓ)²); at
-    * corpus scale build each layer once with [[nnDescentGraph]] and
-    * serve every layer from its own [[buildAdjacencyIndex]] bucket
-    * layout, making each greedy hop an O(1) point read — the descent
-    * adds maxLevel·upperHops point reads per query, nothing
-    * corpus-sized. */
+    * them per call as the oracle does, with [[knnGraph]] in O((n/4^ℓ)²). */
   def hnswSearch(corpus: DataFrame, edges: DataFrame, vecCol: String,
       keyCol: String, queryVec: Array[Float], k: Int, ef: Int, hops: Int,
       maxLevel: Int = 2, upperM: Int = 3, upperHops: Int = 4): DataFrame = {
@@ -243,8 +234,7 @@ object Knn {
       val sub = lev.filter(col("level") >= l)
         .select(col("id").as(keyCol), col("v").as(vecCol))
       // each greedy hop references this layer's graph — materialize it
-      // once (layers are ~4^-ℓ of the corpus; at production scale the
-      // layers come precomputed from buildHnswIndex, not re-derived)
+      // once (layers are ~4^-ℓ of the corpus)
       val subEdges = knnGraph(sub, vecCol, keyCol, topK = upperM)
         .select(col("id_a"), col("id_b"))
         .localCheckpoint()
@@ -2526,657 +2516,6 @@ object Knn {
       .limit(k)
       .select(col("id"), col("score_adc"))
   }
-
-  // ------------------------------------------- adjacency serving index
-
-  /** Persist a kNN graph ([[knnGraph]] / [[nnDescentGraph]]) as the
-    * SERVING adjacency index the [[graphBeamSearch]] docs promise: edge
-    * rows `(src_bucket, src, dst, dvec)` partitioned by `src_bucket =
-    * pmod(src, buckets)` under the [[graft.sync.SegmentedIndex]] pointer
-    * — a beam's neighbor expansion prunes to ≤ef buckets and reads only
-    * its srcs' rows, an O(ef·K̃) point lookup instead of an edge-table
-    * scan. Each row CARRIES the destination's vector (fp16 by default),
-    * so one pruned scan per hop both expands and SCORES the frontier —
-    * no corpus join anywhere in the walk. Storage is K̃+1 copies of
-    * every vector (the denormalization HNSW implementations avoid by
-    * pointer-chasing RAM; a distributed store buys the one-scan hop
-    * with it). A self-row `(src, src, vec)` per corpus node serves the
-    * entry point's exact score and id→vector point reads. Appends are
-    * O(batch) immutable segments like every index here.
-    *
-    * `buckets` is a serving-latency dial, not just a layout choice —
-    * size it at ~50 k rows/bucket: a probe prunes to
-    * the frontier's ≤ef DISTINCT buckets regardless of the
-    * count, so more buckets never adds tasks, but each task scans its
-    * whole bucket's row groups — measured at the 2 M-node edge
-    * (SCALE.md §r15, same graph re-bucketed): 64 buckets (~344 k
-    * rows each) served p95 882 ms at 20 users / 265 ms at 5, 440
-    * buckets (~50 k rows each) 603 / 165 ms — a 1.5× latency factor
-    * from density alone. */
-  def buildAdjacencyIndex(edges: DataFrame, corpus: DataFrame,
-      vecCol: String, keyCol: String, indexDir: String, buckets: Int = 64,
-      fp16: Boolean = true): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val spark = edges.sparkSession
-    require(graft.sync.SegmentedIndex.resolve(spark, indexDir).isEmpty,
-      s"buildAdjacencyIndex: index already exists at $indexDir (append instead)")
-    // meta first: a crash between the two writes leaves a root load()
-    // rejects (no CURRENT), never a pointer without its self-description
-    spark.range(1)
-      .select(lit(buckets).as("buckets"), lit(fp16).as("fp16"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-    writeAdjSegment(edges, corpus, vecCol, keyCol, indexDir, buckets, fp16,
-      selfRows = true)
-  }
-
-  /** Append a batch of edges (+ self-rows for any NEW nodes in
-    * `newNodes`) as one immutable segment — the maintenance form: a new
-    * node lands with its out-edges and the in-edges its insertion added
-    * to existing nodes' lists (the caller computes both, e.g. one
-    * [[nnDescentGraph]] round over new∪affected). */
-  def appendAdjacencyIndex(edges: DataFrame, corpus: DataFrame,
-      vecCol: String, keyCol: String, indexDir: String,
-      newNodes: Option[DataFrame] = None): Unit = {
-    val spark = edges.sparkSession
-    require(graft.sync.SegmentedIndex.resolve(spark, indexDir).isDefined,
-      s"appendAdjacencyIndex: no index at $indexDir (build first)")
-    val meta = spark.read.parquet(s"$indexDir/meta").head()
-    writeAdjSegment(edges, corpus, vecCol, keyCol, indexDir,
-      meta.getAs[Int]("buckets"), meta.getAs[Boolean]("fp16"),
-      selfRows = false, selfFor = newNodes)
-  }
-
-  /** Tombstone delete for the adjacency index — the O(batch) takedown
-    * the other index families have ([[ivfDeleteIndex]] shape): one
-    * `del-` id segment under the atomic pointer. [[AdjIndex.load]]
-    * masks every edge that TOUCHES a tombstoned node — its out-list
-    * (src), its self-row, and its slots in other nodes' lists (dst) —
-    * in segments committed before it, so the walk never sees the node
-    * from the next reload on. Sequence-scoped: a node re-appended
-    * AFTER its delete serves again. Survivors' shortened lists re-link
-    * at re-append ([[hnswAppendIndex]] adds reverse edges) or rebuild;
-    * [[adjCompactIndex]] physically erases the masked rows. */
-  def adjDeleteIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ids: DataFrame, idCol: String): Unit = {
-    val existing = graft.sync.SegmentedIndex.resolve(spark, indexDir)
-      .getOrElse(throw new IllegalStateException(
-        s"adjDeleteIndex: no adjacency index at $indexDir"))
-    val seg = graft.sync.SegmentedIndex.newTombstoneName()
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/$seg/ids")
-    graft.sync.SegmentedIndex.commit(spark, indexDir, existing :+ seg)
-  }
-
-  /** Merge all live segments into ONE under the frozen bucket layout —
-    * [[ivfCompactIndex]] for edges: the tombstone-subtracted union
-    * rewrites with the build's point-probe discipline (sorted by src
-    * within each bucket, 128 KB row groups), PHYSICALLY erasing
-    * tombstoned nodes' rows and restoring single-segment hop reads
-    * after many append/delete cycles. No re-derivation of neighbor
-    * lists — that is a rebuild's job (frozen-layout compaction, same
-    * contract as the IVF family's). */
-  def adjCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    val existing = graft.sync.SegmentedIndex.resolve(spark, indexDir)
-      .getOrElse(throw new IllegalStateException(
-        s"adjCompactIndex: no adjacency index at $indexDir"))
-    if (existing.size <= 1) return
-    val seg = graft.sync.SegmentedIndex.newSegmentName()
-    AdjIndex.load(spark, indexDir).relation
-      .repartition(col("src_bucket"))
-      .sortWithinPartitions(col("src_bucket"), col("src"))
-      .write.partitionBy("src_bucket")
-      .option("parquet.block.size", 131072)
-      .mode("overwrite").parquet(s"$indexDir/$seg/edges")
-    graft.sync.SegmentedIndex.commit(spark, indexDir, Seq(seg))
-  }
-
-  private def writeAdjSegment(edges: DataFrame, corpus: DataFrame,
-      vecCol: String, keyCol: String, indexDir: String, buckets: Int,
-      fp16: Boolean, selfRows: Boolean,
-      selfFor: Option[DataFrame] = None): Unit = {
-    val spark = edges.sparkSession
-    val v = corpus.filter(col(vecCol).isNotNull)
-      .select(col(keyCol).cast("long").as("dst"), col(vecCol).as("__dv"))
-    val e = edges.select(col("id_a").cast("long").as("src"),
-      col("id_b").cast("long").as("dst"))
-    val self =
-      if (selfRows) v.select(col("dst").as("src"), col("dst"))
-      else selfFor.map(ids =>
-          v.join(ids.select(col(ids.columns.head).cast("long").as("dst")),
-            Seq("dst"), "left_semi")
-          .select(col("dst").as("src"), col("dst")))
-        .getOrElse(spark.emptyDataFrame
-          .select(lit(0L).as("src"), lit(0L).as("dst")).limit(0))
-    val dvec = if (fp16) graft.functions.fp16_encode(col("__dv"))
-      else col("__dv")
-    val seg = graft.sync.SegmentedIndex.newSegmentName()
-    // point-probe layout (the q124 refine lesson applied to edges): rows
-    // SORTED by src within each bucket + 128 KB row groups (~20 fp16
-    // dvec rows each), so a hop's src IN-frontier probe skips on
-    // row-group statistics to the frontier's own rows. Unsorted buckets
-    // made each hop decompress the WHOLE bucket's dvec chunk — measured
-    // p95 6.2 s on the 200 k serving corpus vs 543 ms for the one-scan
-    // ivf mode; sorted groups read ~ef·(K̃+1) rows instead.
-    e.unionByName(self)
-      .join(v, Seq("dst"))
-      .select(pmod(col("src"), lit(buckets.toLong)).as("src_bucket"),
-        col("src"), col("dst"), dvec.as("dvec"))
-      .repartition(col("src_bucket"))
-      .sortWithinPartitions(col("src_bucket"), col("src"))
-      .write.partitionBy("src_bucket")
-      .option("parquet.block.size", 131072)
-      .mode("overwrite").parquet(s"$indexDir/$seg/edges")
-    val existing = graft.sync.SegmentedIndex.resolve(spark, indexDir)
-      .getOrElse(Nil)
-    graft.sync.SegmentedIndex.commit(spark, indexDir, existing :+ seg)
-  }
-
-  /** Serving handle over a [[buildAdjacencyIndex]] layout — the
-    * graph-ANN query walk ([[graphBeamSearch]]'s semantics, verbatim)
-    * re-expressed as index point reads: the ≤ef beam lives on the
-    * DRIVER (it is the algorithm's working set — k dozen (id, score)
-    * pairs), and each hop is ONE partition-pruned scan of the beam's
-    * src buckets filtered to the beam's srcs, scoring carried dst
-    * vectors against the query in the same pass. 1 + hops tiny jobs
-    * per request, none touching more than the frontier's edge rows —
-    * the corpus never scans. */
-  final class AdjIndex private (rel: DataFrame, buckets: Int, fp16: Boolean) {
-
-    /** The resolved edge relation (src_bucket, src, dst, dvec incl.
-      * self-rows) — maintenance code ([[Knn.hnswAppendIndex]]) reads
-      * members and degrees from it, and the q145 gate audits it. */
-    private[graft] def relation: DataFrame = rel
-
-    private def scoreCol(queryVec: Array[Float]): Column =
-      if (fp16) graft.functions.fp16_cosine_distance(col("dvec"),
-        typedLit(queryVec))
-      else cosine_distance(col("dvec"), typedLit(queryVec))
-
-    private[graft] def frontierFrame(srcs: Seq[Long],
-        queryVec: Array[Float]): DataFrame = {
-      // IN-list literals typed to the inferred partition-column type, so
-      // the predicate stays a PartitionFilter (a cast around the column
-      // would defeat pruning — the IvfIndex lesson). floorMod, NOT %:
-      // the writer buckets by pmod (always non-negative), so a JVM %
-      // over a negative node id would probe the wrong bucket and
-      // silently drop the row
-      val bs: Seq[Any] = rel.schema("src_bucket").dataType match {
-        case org.apache.spark.sql.types.IntegerType =>
-          srcs.map(s => Math.floorMod(s, buckets.toLong).toInt).distinct
-        case org.apache.spark.sql.types.LongType =>
-          srcs.map(Math.floorMod(_, buckets.toLong)).distinct
-        case _ => srcs.map(s => Math.floorMod(s, buckets.toLong).toString)
-          .distinct
-      }
-      rel.filter(col("src_bucket").isin(bs: _*)
-          && col("src").isin(srcs.map(x => x: Any): _*))
-        .select(col("dst"), scoreCol(queryVec).as("score"))
-    }
-
-    private def frontier(srcs: Seq[Long],
-        queryVec: Array[Float]): Array[(Long, Double)] =
-      frontierFrame(srcs, queryVec)
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-
-    def search(queryVec: Array[Float], k: Int, ef: Int, hops: Int,
-        entryId: Long): DataFrame = {
-      require(k >= 1 && ef >= k, s"need 1 <= k=$k <= ef=$ef")
-      val spark = rel.sparkSession
-      import spark.implicits._
-      // entry scored exactly off its self-row (one bucket-pruned point
-      // read) — beam semantics identical to graphBeamSearch's b0
-      var beam = frontier(Seq(entryId), queryVec)
-        .filter(_._1 == entryId).toVector
-      require(beam.nonEmpty, s"entry $entryId has no self-row in the index")
-      // expand each src at most once, and stop when the beam holds no
-      // unexpanded member (the walk converged). Results are IDENTICAL to
-      // re-expanding the whole beam every hop (graphBeamSearch's literal
-      // form): the beam's score set only improves, so a candidate cut by
-      // the ef-th score at hop t stays cut at every later hop — a
-      // re-proposal can never re-enter. What it buys: each hop reads only
-      // the NEW frontier's buckets, and a converged walk skips its
-      // remaining hop jobs entirely.
-      var expanded = Set.empty[Long]
-      var hop = 0
-      var frontierLeft = true
-      while (hop < hops && frontierLeft) {
-        val fresh = beam.map(_._1).filterNot(expanded)
-        if (fresh.isEmpty) frontierLeft = false
-        else {
-          expanded ++= fresh
-          val cand = frontier(fresh, queryVec)
-          beam = (beam ++ cand)
-            .groupBy(_._1).map { case (id, xs) => (id, xs.map(_._2).min) }
-            .toVector
-            .sortBy { case (id, d) => (d, id) }
-            .take(ef)
-        }
-        hop += 1
-      }
-      beam.take(k).toDF("id", "score")
-    }
-  }
-
-  object AdjIndex {
-    def load(spark: org.apache.spark.sql.SparkSession,
-        indexDir: String): AdjIndex = {
-      val list = graft.sync.SegmentedIndex.resolve(spark, indexDir)
-        .getOrElse(throw new IllegalStateException(
-          s"no adjacency index at $indexDir"))
-      // tombstones mask EVERY edge that touches a deleted node — its
-      // out-list (src), its self-row, and its slots in other nodes'
-      // lists (dst) — in segments committed before them (sequence
-      // scope, so a node re-appended after its delete is served). The
-      // walk simply never sees the node; re-linking the survivors'
-      // shortened lists is compaction's or a rebuild's job.
-      val rel = graft.sync.SegmentedIndex.tombstoneScopes(list)
-        .map { case (data, tombs) =>
-          val edges = data.map(s => spark.read.parquet(s"$indexDir/$s/edges"))
-            .reduce(_ unionByName _)
-          if (tombs.isEmpty) edges
-          else {
-            val tomb = tombs
-              .map(t => spark.read.parquet(s"$indexDir/$t/ids"))
-              .reduce(_ unionByName _).distinct()
-            edges
-              .join(tomb.select(col("id").as("src")), Seq("src"), "left_anti")
-              .join(tomb.select(col("id").as("dst")), Seq("dst"), "left_anti")
-          }
-        }
-        .reduce(_ unionByName _)
-      val meta = spark.read.parquet(s"$indexDir/meta").head()
-      new AdjIndex(rel, meta.getAs[Int]("buckets"),
-        meta.getAs[Boolean]("fp16"))
-    }
-  }
-
-  /** Persist [[hnswSearch]]'s layer stack as serving indexes: one
-    * [[buildAdjacencyIndex]] layout per layer (layer 0 = the `k0`-NN
-    * graph over the whole corpus; layer ℓ ≥ 1 = the exact `upperM`-NN
-    * graph over the nodes with [[hnswLevel]] ≥ ℓ — geometrically
-    * smaller, so the upper layouts cost a vanishing fraction of layer
-    * 0's), plus a meta sidecar pinning `max_level` and the ENTRY node
-    * (the top layer's min id — resolved once at build, so serving never
-    * scans anything to start a walk). Level sets nest, so the node a
-    * layer-ℓ walk lands on always has a self-row in layer ℓ−1.
-    *
-    * `graphFn` swaps the per-layer graph construction: the default is
-    * the exact [[knnGraph]] (the oracle form — O(subset²)); at corpus
-    * scale pass `(df, m) => nnDescentGraph(df, vecCol, keyCol, k = m,
-    * rounds = …)` so every layer builds in O(n·K̃²·rounds).
-    *
-    * Layer builds OVERLAP from a driver pool, so no single layer's
-    * pointer marks completion — the completion probe is
-    * [[hnswIndexReady]] (meta + EVERY layer's CURRENT), which is
-    * order-independent and therefore also crash-safe. Failure is clean:
-    * the first layer failure cancels the build's outstanding Spark jobs
-    * (shared job group), every in-flight future is then awaited to
-    * completion, and the whole stack (meta + all layer dirs) is removed
-    * before the failure rethrows — no partial `layer*` dir or stale
-    * pointer survives for a later guard to mistake for a built index. */
-  def buildHnswIndex(corpus: DataFrame, vecCol: String, keyCol: String,
-      indexDir: String, maxLevel: Int = 2, upperM: Int = 3, k0: Int = 5,
-      buckets: Int = 16, fp16: Boolean = true,
-      graphFn: Option[(DataFrame, Int) => DataFrame] = None): Unit = {
-    require(maxLevel >= 1, s"buildHnswIndex: need maxLevel >= 1, got $maxLevel")
-    val spark = corpus.sparkSession
-    val v = corpus.filter(col(vecCol).isNotNull)
-      .select(col(keyCol).cast("long").as("id"), col(vecCol).as("v"))
-    val lev = v.withColumn("level", hnswLevel(col("id"), maxLevel))
-    val entry = lev.filter(col("level") >= maxLevel)
-      .agg(min(col("id"))).head().getLong(0)
-    spark.range(1)
-      .select(lit(maxLevel).as("max_level"), lit(entry).as("entry"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-    val build = graphFn.getOrElse(
-      (df: DataFrame, m: Int) => knnGraph(df, vecCol, keyCol, topK = m))
-    // layer builds are independent (disjoint output dirs, no shared
-    // state): overlap them from a small driver pool (guide §2.6) so one
-    // layer's commit/straggler tail back-fills with the next layer's
-    // scan work — upper layers are 4^-l of the corpus, so serially they
-    // were pure fixed-cost (plan + commit floor) appended to layer 0.
-    // Results are unchanged: each layer's graph derivation and segment
-    // content are deterministic and land in their own layer dir.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(maxLevel + 1, 4))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    // one job group per build: the first layer failure cancels the
-    // siblings' ACTIVE jobs instead of letting them run on (and commit)
-    // after the build is already doomed
-    val group = s"hnsw-build-$indexDir"
-    // the ROOT cause: the first failure, which cancels the group — the
-    // siblings it cancels fail too, but later, and only as suppressed
-    val rootCause = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    try {
-      val layers = (0 to maxLevel).map { l =>
-        scala.concurrent.Future {
-          // job group is thread-local: set it on each pool thread
-          spark.sparkContext.setJobGroup(group,
-            s"buildHnswIndex layer $l", interruptOnCancel = true)
-          try {
-            // a sibling already failed: don't start new jobs for a
-            // stack that is about to be deleted (cancelJobGroup only
-            // reaches jobs that are running at cancel time)
-            if (rootCause.get() != null) throw new IllegalStateException(
-              s"buildHnswIndex: sibling layer failed, layer $l aborted")
-            val sub = (if (l == 0) lev else lev.filter(col("level") >= l))
-              .select(col("id").as(keyCol), col("v").as(vecCol))
-            val m = if (l == 0) k0 else upperM
-            val edges = build(sub, m).select(col("id_a"), col("id_b"))
-            buildAdjacencyIndex(edges, sub, vecCol, keyCol,
-              s"$indexDir/layer$l", buckets, fp16)
-          } catch { case e: Throwable =>
-            if (rootCause.compareAndSet(null, e))
-              spark.sparkContext.cancelJobGroup(group)
-            throw e
-          } finally spark.sparkContext.clearJobGroup()
-        }
-      }
-      // QUIESCE before inspecting: every future runs to completion
-      // (success, failure, or cancellation) so nothing is still writing
-      // under indexDir when the failure path cleans it up
-      val done = layers.map(f => scala.util.Try(scala.concurrent.Await
-        .result(f, scala.concurrent.duration.Duration.Inf)))
-      val failures = done.collect { case scala.util.Failure(e) => e }
-      if (failures.nonEmpty) {
-        val root = Option(rootCause.get()).getOrElse(failures.head)
-        failures.filterNot(_ eq root).foreach(root.addSuppressed)
-        // no partial stack survives a failed build: remove meta and every
-        // layer dir (committed or half-written) so ready-probes and
-        // rebuild guards see a clean absence, not a torn index
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
-            .foreach(rm)
-          f.delete(); ()
-        }
-        rm(new java.io.File(s"$indexDir/meta"))
-        (0 to maxLevel).foreach(l =>
-          rm(new java.io.File(s"$indexDir/layer$l")))
-        throw root
-      }
-    } finally pool.shutdown()
-  }
-
-  /** Append a node batch to a [[buildHnswIndex]] stack — HNSW's
-    * insertion rule in BULK: every new node draws its level from the
-    * same affine hash (the level sets keep nesting by construction),
-    * and for each layer ℓ ≤ its level the batch finds its M nearest
-    * among the layer's CURRENT members (the self-row relation, scored
-    * at the layer's storage precision) and appends BOTH edge directions
-    * plus the new nodes' self-rows as one immutable segment
-    * ([[appendAdjacencyIndex]]). M is recovered from the live layer's
-    * max out-degree, so append extends the geometry the build chose.
-    *
-    * One broadcast join per layer (the batch is the broadcast side) —
-    * O(batch·|layer ℓ|) distance work, never a corpus re-sort; upper
-    * layers are 4^-ℓ of the corpus so their joins are noise. The meta
-    * entry point stays — any top-layer node is a valid entry, and the
-    * reverse edges make new nodes reachable from day one. Differences
-    * from a from-scratch rebuild are the documented HNSW trade: a
-    * rebuild re-derives ALL neighborhoods, insertion only links
-    * new↔old (existing lists grow by the reverse edges; compaction or
-    * re-build prunes). Batch ids must be new (dedup upstream). */
-  def hnswAppendIndex(batch: DataFrame, vecCol: String, keyCol: String,
-      indexDir: String): Unit = {
-    val spark = batch.sparkSession
-    val meta = spark.read.parquet(s"$indexDir/meta").head()
-    val maxLevel = meta.getAs[Int]("max_level")
-    val b = batch.filter(col(vecCol).isNotNull)
-      .select(col(keyCol).cast("long").as("id"), col(vecCol).as("v"))
-      .withColumn("level", hnswLevel(col("id"), maxLevel))
-    (0 to maxLevel).foreach { l =>
-      val newAtL = b.filter(col("level") >= l)
-        .select(col("id"), col("v"))
-      if (!newAtL.isEmpty)
-        adjInsertIndex(newAtL, "v", "id", s"$indexDir/layer$l")
-    }
-  }
-
-  /** Bulk insertion into ONE [[buildAdjacencyIndex]] layout — the flat
-    * graph's maintenance form (and [[hnswAppendIndex]]'s per-layer
-    * body): each new node links to its M nearest LIVE members (M = the
-    * layer's max live out-degree, so insertion matches the build's
-    * degree discipline), forward + reverse edges in one O(batch)
-    * segment — reverse edges make new nodes reachable from day one.
-    * Differences from a rebuild are the documented HNSW trade:
-    * insertion links new↔old only. Batch ids must be new. */
-  def adjInsertIndex(batch: DataFrame, vecCol: String, keyCol: String,
-      indexDir: String): Unit = {
-    val spark = batch.sparkSession
-    val newNodes = batch.filter(col(vecCol).isNotNull)
-      .select(col(keyCol).cast("long").as("id"), col(vecCol).as("v"))
-    if (newNodes.isEmpty) return
-    val fp16 = spark.read.parquet(s"$indexDir/meta").head()
-      .getAs[Boolean]("fp16")
-    val rel = AdjIndex.load(spark, indexDir).relation
-    val members = rel.filter(col("src") === col("dst"))
-      .select(col("dst").as("id"),
-        (if (fp16) graft.functions.fp16_decode(col("dvec"))
-         else col("dvec")).as("v"))
-    // M = the live layout's max out-degree; a graph too small to have
-    // edges yet (one member) falls back to linking every member
-    val m = rel.filter(col("src") =!= col("dst"))
-      .groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .agg(max(col("d"))).head() match {
-        case r if r.isNullAt(0) => members.count().toInt.max(1)
-        case r => r.getLong(0).toInt
-      }
-    val fwd = knnJoin(newNodes, members, "v", "id", "v", "id", k = m)
-      .select(col("query_id").as("id_a"), col("neighbor_id").as("id_b"))
-    val edges = fwd.unionByName(
-      fwd.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-    appendAdjacencyIndex(edges,
-      members.unionByName(newNodes), "v", "id", indexDir,
-      newNodes = Some(newNodes.select(col("id"))))
-  }
-
-  /** Structured-Streaming micro-batch maintenance of the HNSW stack:
-    * each batch inserts via [[hnswAppendIndex]] — the same foreachBatch
-    * discipline as the IVF/lexical/LM streams. The stack must exist
-    * (insertion needs members to link to); build from the first corpus
-    * snapshot, stream the rest. At-least-once caveat: a replayed batch
-    * re-appends its edges — dedup upstream. */
-  def hnswAppendIndexStream(batches: DataFrame, vecCol: String,
-      keyCol: String, indexDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    batches.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) hnswAppendIndex(batch, vecCol, keyCol, indexDir)
-    }
-
-  /** One upper layer held driver-side: out-adjacency plus each member's
-    * stored vector (fp16 blob or fp32 array — scored with the SAME
-    * double-accumulation kernels the distributed walk's column
-    * expressions use, so the resident descent is bit-identical to the
-    * per-job one). Memory is nodes · (adjacency + dim · 2 or 4 B) —
-    * the [[HnswIndex.load]] budget bounds it. */
-  private final class ResidentLayer(
-      neighbors: scala.collection.Map[Long, Array[Long]],
-      vecs16: scala.collection.Map[Long, Array[Byte]],
-      vecs32: scala.collection.Map[Long, Array[Float]]) {
-    private def score(id: Long, q: Array[Float], qNorm: Double): Double =
-      if (vecs16.nonEmpty)
-        graft.functions.VectorMath.cosineDistanceHalfPre(vecs16(id), q, qNorm)
-      else graft.functions.VectorMath.cosineDistance(vecs32(id), q)
-
-    /** The ef=1 greedy descent of [[AdjIndex.search]] replayed locally:
-      * move to the best-scoring neighbor under (dist, id) ordering,
-      * stop on convergence or after `hops` moves — identical node
-      * choice, zero Spark jobs. */
-    def descend(q: Array[Float], entry: Long, hops: Int): Long = {
-      val qNorm = {
-        var s = 0.0; var i = 0
-        while (i < q.length) { s += q(i).toDouble * q(i).toDouble; i += 1 }
-        math.sqrt(s)
-      }
-      var cur = entry
-      var curD = score(cur, q, qNorm)
-      var hop = 0
-      var moved = true
-      while (hop < hops && moved) {
-        moved = false
-        var bestId = cur
-        var bestD = curD
-        neighbors.getOrElse(cur, Array.empty[Long]).foreach { nb =>
-          val d = score(nb, q, qNorm)
-          if (d < bestD || (d == bestD && nb < bestId)) {
-            bestD = d; bestId = nb
-          }
-        }
-        if (bestId != cur) { cur = bestId; curD = bestD; moved = true }
-        hop += 1
-      }
-      cur
-    }
-  }
-
-  /** Query handle over a [[buildHnswIndex]] layout — the full HNSW
-    * query behind the q145 batch operator: greedy width-1 descent
-    * through each in-memory upper layer (zero Spark jobs), then
-    * the ef-beam over layer 0's [[AdjIndex]] from wherever the descent
-    * landed — 1 + hops bucket-pruned point reads. Scores carry the
-    * index's storage precision (fp16 by default), exactly
-    * [[AdjIndex.search]]'s contract. */
-  final class HnswIndex private (layers: IndexedSeq[AdjIndex],
-      val entryId: Long, maxLevel: Int,
-      resident: Map[Int, ResidentLayer]) {
-    /** Levels whose descent is driver-resident (contiguous from the
-      * top); levels ≥ 1 outside this set are SKIPPED — see [[load]]. */
-    private[similarity] def residentLevels: Set[Int] = resident.keySet
-
-    def search(queryVec: Array[Float], k: Int, ef: Int, hops: Int,
-        upperHops: Int = 4): DataFrame = {
-      var cur = entryId
-      var l = maxLevel
-      while (l >= 1) {
-        resident.get(l) match {
-          case Some(rl) => cur = rl.descend(queryVec, cur, upperHops)
-          case None => // over budget: skip (level nesting keeps cur valid)
-        }
-        l -= 1
-      }
-      layers(0).search(queryVec, k, ef, hops, entryId = cur)
-    }
-  }
-
-  object HnswIndex {
-    /** Upper-layer residency budget (total nodes across levels ≥ 1)
-      * when [[load]]'s caller does not size it: 250 k nodes ≈ 1.5 GB
-      * of heap at 3072-dim fp16 (32 MB at 64 dims) —
-      * centroid-sidecar-sized state, not a dataset. */
-    val DefaultResidentNodes = 250000L
-
-    /** Load the stack. Upper layers are held RESIDENT in the heap,
-      * top-down, while their cumulative node count fits
-      * `residentNodes`: the upper descent then costs ZERO Spark jobs
-      * per query — the whole query is 1 + hops bucket-pruned reads,
-      * where a per-job descent's maxLevel·upperHops extra point-reads
-      * measured 1028 ms p95 against 388 ms for the flat walk (SCALE.md
-      * §r12 — job count, not bytes, is what a planner-bound runtime
-      * pays for).
-      *
-      * A level past the budget — and every level below it, keeping the
-      * resident set a contiguous top — is SKIPPED during descent, not
-      * walked per-job: level sets nest, so the deepest resident level's
-      * result is a valid entry for layer 0, and entry quality degrades
-      * one resolution step per skipped level instead of re-paying the
-      * gate-failing job tax. (At 10⁹ nodes with 4× level decay, levels
-      * ≥ 3 fit any reasonable budget; skipping levels 2..1 leaves entry
-      * selection at 64-cell granularity — still query-near.) */
-    def load(spark: org.apache.spark.sql.SparkSession,
-        indexDir: String,
-        residentNodes: Long = DefaultResidentNodes): HnswIndex = {
-      val meta = spark.read.parquet(s"$indexDir/meta").head()
-      val maxLevel = meta.getAs[Int]("max_level")
-      val layers = (0 to maxLevel).map(l =>
-        AdjIndex.load(spark, s"$indexDir/layer$l"))
-      var budget = residentNodes
-      val resident = Map.newBuilder[Int, ResidentLayer]
-      var l = maxLevel
-      var fits = true
-      while (l >= 1 && fits) {
-        val rel = layers(l).relation
-        val fp16 = rel.schema("dvec").dataType ==
-          org.apache.spark.sql.types.BinaryType
-        // budget check BEFORE the collect (one cheap count of the
-        // layer's self-rows): a layer past the budget is the exact case
-        // the budget exists to protect against, so it must be SKIPPED
-        // without first materializing its members+edges on the driver —
-        // collect-then-check would OOM at precisely the load the
-        // docstring promises to refuse
-        val memberCount = rel.filter(col("src") === col("dst")).count()
-        if (memberCount > budget) fits = false
-        else {
-          // two narrow jobs per resident layer, at LOAD time, both
-          // collected as PRIMITIVES:
-          // self-rows carry each member's vector, non-self rows ONLY the
-          // 16-byte adjacency pair packed into long chunks — the collect
-          // moves nodes·dim vector bytes + 16 B an edge, never ~100+ B
-          // of boxed Row per edge (bounded here by the 250 k layer
-          // budget, but the transient should price like the steady state
-          // at ANY budget)
-          import spark.implicits._
-          val edgeChunks: Array[Array[Long]] = rel
-            .filter(col("src") =!= col("dst"))
-            .select(col("src"), col("dst")).as[(Long, Long)]
-            .mapPartitions { it =>
-              val b = scala.collection.mutable.ArrayBuilder.make[Long]
-              it.foreach { case (s, d) => b += s; b += d }
-              Iterator.single(b.result())
-            }.collect()
-          val selfRel = rel.filter(col("src") === col("dst"))
-            .select(col("src"), col("dvec"))
-          val (memberCountGot, v16, v32) =
-            if (fp16) {
-              val ms = selfRel.as[(Long, Array[Byte])].collect()
-              (ms.length, ms.toMap, Map.empty[Long, Array[Float]])
-            } else {
-              val ms = selfRel.as[(Long, Array[Float])].collect()
-              (ms.length, Map.empty[Long, Array[Byte]], ms.toMap)
-            }
-          budget -= memberCountGot
-          val nbrsB = new java.util.HashMap[Long,
-            scala.collection.mutable.ArrayBuilder.ofLong]()
-          edgeChunks.foreach { ch =>
-            var i = 0
-            while (i < ch.length) {
-              var b = nbrsB.get(ch(i))
-              if (b == null) {
-                b = new scala.collection.mutable.ArrayBuilder.ofLong
-                nbrsB.put(ch(i), b)
-              }
-              b += ch(i + 1)
-              i += 2
-            }
-          }
-          val nbrs = scala.collection.mutable.HashMap
-            .empty[Long, Array[Long]]
-          nbrsB.forEach { (s, b) =>
-            val a = b.result(); java.util.Arrays.sort(a); nbrs.put(s, a); ()
-          }
-          resident += l -> new ResidentLayer(nbrs, v16, v32)
-          l -= 1
-        }
-      }
-      new HnswIndex(layers, meta.getAs[Long]("entry"), maxLevel,
-        resident.result())
-    }
-  }
-
-  /** Whether a [[buildHnswIndex]] stack has committed at `indexDir`.
-    * The build writes meta FIRST and layer maxLevel last, so the probe
-    * reads meta's level count and requires every layer's pointer — a
-    * build that died mid-stack reports not-ready instead of failing at
-    * the first request. Serve-start-time only (one tiny parquet read). */
-  def hnswIndexReady(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Boolean =
-    new java.io.File(s"$indexDir/meta/_SUCCESS").isFile && {
-      val maxLevel = spark.read.parquet(s"$indexDir/meta")
-        .head().getAs[Int]("max_level")
-      (0 to maxLevel).forall(l =>
-        new java.io.File(s"$indexDir/layer$l/CURRENT").isFile)
-    }
 
   /** Exact re-rank of an ADC shortlist (the refinement stage FAISS calls
     * `IndexRefine`): the shortlist — `refine·k` (id)s from [[pqTopK]] or

@@ -13,29 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object TextRank {
 
-  /** BM25 top-k retrieval for a fixed bag of query terms.
-    *
-    * IDF is the RAW RATIO `(N - df + 0.5) / (df + 0.5)` — the same
-    * no-logarithm policy as [[TextAnalysis.tfIdfTopTerms]]: an integer
-    * ratio evaluated in one IEEE double expression is bit-identical
-    * across engines (`ln` is not guaranteed to be), and the correctness
-    * gate is hash-exact. Per-term idf ordering is unchanged; multi-term
-    * totals weight rare terms more sharply than the log form, which is
-    * the documented semantic of this variant.
-    *
-    * Scale shape: the per-document length `dl` is computed BEFORE the
-    * explode and travels with each token row, so the score needs no
-    * corpus-sized join back to the document table; the explode is
-    * filtered to the query terms at the generator, so the one exchange
-    * (tf groupBy) carries only query-term hits — at 100 TB that is
-    * O(matching postings), never the corpus. The df table is |terms|
-    * rows (broadcast), corpus stats are one row (broadcast), and the
-    * final top-k is `TakeOrderedAndProject`. Per-document totals are
-    * assembled by conditional aggregation in FIXED term order — never a
-    * float `sum()` whose partial-aggregation order could differ between
-    * engines.
-    *
-    * Returns (id, score), score descending, ties broken on id. */
   /** Positional PHRASE match — the capability term-frequency retrieval
     * ([[bm25TopK]], the lexical index) cannot express: a document
     * matches only where the phrase's words occur CONSECUTIVELY. Word
@@ -198,6 +175,29 @@ object TextRank {
     matches.groupBy(col("id")).agg(count(lit(1)).as("n_matches"))
   }
 
+  /** BM25 top-k retrieval for a fixed bag of query terms.
+    *
+    * IDF is the RAW RATIO `(N - df + 0.5) / (df + 0.5)` — the same
+    * no-logarithm policy as [[TextAnalysis.tfIdfTopTerms]]: an integer
+    * ratio evaluated in one IEEE double expression is bit-identical
+    * across engines (`ln` is not guaranteed to be), and the correctness
+    * gate is hash-exact. Per-term idf ordering is unchanged; multi-term
+    * totals weight rare terms more sharply than the log form, which is
+    * the documented semantic of this variant.
+    *
+    * Scale shape: the per-document length `dl` is computed BEFORE the
+    * explode and travels with each token row, so the score needs no
+    * corpus-sized join back to the document table; the explode is
+    * filtered to the query terms at the generator, so the one exchange
+    * (tf groupBy) carries only query-term hits — at 100 TB that is
+    * O(matching postings), never the corpus. The df table is |terms|
+    * rows (broadcast), corpus stats are one row (broadcast), and the
+    * final top-k is `TakeOrderedAndProject`. Per-document totals are
+    * assembled by conditional aggregation in FIXED term order — never a
+    * float `sum()` whose partial-aggregation order could differ between
+    * engines.
+    *
+    * Returns (id, score), score descending, ties broken on id. */
   def bm25TopK(df: DataFrame, textCol: String, keyCol: String,
       queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {

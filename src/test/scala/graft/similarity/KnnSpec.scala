@@ -100,45 +100,6 @@ class KnnSpec extends SparkTestBase {
     assert(scores.sameElements(scores.sorted)) // ranked by distance
   }
 
-  test("hnswAppendIndexStream: MemoryStream batch equals the direct append") {
-    val root = java.nio.file.Files.createTempDirectory("hnswstream").toString
-    try {
-      val base = emb.filter($"vec_id" < 250)
-        .select($"vec_id".cast("long").as("vec_id"), $"embedding")
-      val batch = emb.filter($"vec_id" >= 250 && $"vec_id" < 280)
-      Knn.buildHnswIndex(base, "embedding", "vec_id", s"$root/stream",
-        maxLevel = 2, upperM = 3, k0 = 5, buckets = 8, fp16 = false)
-      Knn.buildHnswIndex(base, "embedding", "vec_id", s"$root/direct",
-        maxLevel = 2, upperM = 3, k0 = 5, buckets = 8, fp16 = false)
-      val rows = batch.select($"vec_id", $"embedding").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1)))
-      implicit val sqlCtx = spark.sqlContext
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Seq[Float])]
-      val df = input.toDF().toDF("vec_id", "embedding")
-        .withColumn("embedding", $"embedding".cast("array<float>"))
-      val q = Knn.hnswAppendIndexStream(df, "embedding", "vec_id",
-          s"$root/stream")
-        .option("checkpointLocation", s"$root/ckpt").start()
-      try { input.addData(rows: _*); q.processAllAvailable() }
-      finally q.stop()
-      Knn.hnswAppendIndex(
-        batch.select($"vec_id".cast("long").as("vec_id"), $"embedding"),
-        "embedding", "vec_id", s"$root/direct")
-      (0 to 2).foreach { l =>
-        val a = Knn.AdjIndex.load(spark, s"$root/stream/layer$l").relation
-          .select($"src", $"dst").as[(Long, Long)].collect().sorted.toSeq
-        val b = Knn.AdjIndex.load(spark, s"$root/direct/layer$l").relation
-          .select($"src", $"dst").as[(Long, Long)].collect().sorted.toSeq
-        assert(a == b, s"layer $l diverged")
-      }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator()
-        .asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
   test("ivfKnnJoinIndex: index-served batch join equals the in-plan join; fp16 sticky; tombstones masked") {
     val dir = java.nio.file.Files.createTempDirectory("ivfjoin").toString
     try {
